@@ -27,14 +27,12 @@ two gaps VERDICT r8 ranked highest:
   n_tables x bucket occupancy x probe count, driver-safe by the same
   occupancy argument as ``auto_n_planes``.
 
-- **Manifest-pointer commits** (``operators/index_manifest.py``): data
-  lands in immutable ``seg-*`` directories; ``MANIFEST.json`` names the
-  live set; appends and compactions commit by one atomic manifest
-  replace instead of the round-8 ``os.rename`` swap (whose two-rename
-  window left the table directory briefly absent, and which object
-  stores cannot do atomically at all). A reader sees only the old or
-  only the new segment set, never a mix; interrupted maintenance leaves
-  only unreferenced orphans that the next ``gc_unreferenced`` removes.
+- **One lifecycle core.** Build, delta-only append, compaction,
+  tombstone deletes and the scheduled/streaming ingest loops are
+  ``operators/index_base.py``'s, driven by this module's ``FAMILY``
+  record (its two writers, its signature pass, and the batched probe
+  that builds each ingest batch's ``probes`` log); the depth REBUILD
+  stages through the same bands writer.
 
 - **Batched multi-query probe** (``query_index_batch_topk``): an ingest
   pipeline ANN-checking a delta of Q vectors runs ONE job — signature
@@ -58,18 +56,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.operators import index_base
-from insight_de_smart_grid_spark.operators.index_base import (
-    live_file_count,
-    next_tag,
-    read_table,
-    write_meta,
-)
 from insight_de_smart_grid_spark.operators.index_manifest import (
-    ManifestConflict,
-    commit,
-    has_mark,
     live_segments,
-    stage_segment,
 )
 from insight_de_smart_grid_spark.operators.similarity import (
     _dot,
@@ -79,15 +67,14 @@ from insight_de_smart_grid_spark.operators.similarity import (
     hyperplane_signatures,
 )
 
-_META = index_base.META
 _BANDS = "bands"
 _VECS = "vectors"
 _PROBES = "probes"
 
-# shared lifecycle core (round-10, VERDICT r9 item 6) — the private names
-# are kept as the family's API surface (tests and plans read through them)
+# the private names are kept as the family's API surface (tests and
+# plans read through them)
 _read_meta = index_base.read_meta
-_read_table = read_table
+_read_table = index_base.read_table
 
 
 def _bucket_spec(meta: dict, table: str) -> "dict | None":
@@ -103,52 +90,93 @@ def _bucket_spec(meta: dict, table: str) -> "dict | None":
     return {"n_buckets": meta["n_buckets"], "keys": [meta["id_col"]]}
 
 
-def _stage_tables(sig: DataFrame, vectors: DataFrame, path: str,
-                  id_col: str, tag: str,
-                  meta: "dict | None" = None) -> dict:
-    """Write one bands segment + one vectors segment (overwrite mode: a
-    retry after a crash-before-commit replaces the orphan) and return the
-    staged paths, NOT yet visible to readers."""
-    meta = meta or {}
-    seg_b = stage_segment(f"{path}/{_BANDS}", tag)
-    seg_v = stage_segment(f"{path}/{_VECS}", tag)
-    bands_frame = sig.select(F.col(id_col), F.col("table"),
-                             F.col("bucket"))
-    if meta.get("layout") == "bucketed":
-        def w_bands() -> None:
-            index_base.write_bucketed_segment(
-                bands_frame, seg_b, **_bucket_spec(meta, _BANDS))
-
-        def w_vecs() -> None:
-            index_base.write_bucketed_segment(
-                vectors, seg_v, **_bucket_spec(meta, _VECS))
+def _write_bands(df: DataFrame, seg: str, meta: dict) -> None:
+    """Partitioned by LSH ``table`` (directory pruning on the probe),
+    sorted by ``bucket`` within each file (row-group pruning)."""
+    spec = _bucket_spec(meta, _BANDS)
+    if spec:
+        index_base.write_bucketed_segment(df, seg, **spec)
     else:
-        def w_bands() -> None:
-            (bands_frame
-             .repartition("table")
-             .sortWithinPartitions("table", "bucket")
-             .write.mode("overwrite").partitionBy("table").parquet(seg_b))
+        (df.repartition("table")
+         .sortWithinPartitions("table", "bucket")
+         .write.mode("overwrite").partitionBy("table").parquet(seg))
 
-        # sorted by CONTENT hash, not id: the candidate fetch is a
-        # broadcast join (id order buys no pruning there), while content
-        # order packs identical/duplicate vectors into adjacent rows where
-        # parquet's page compression collapses them — on a duplicate-heavy
-        # corpus the id-sorted form measured LARGER than the bucket-sorted
-        # round-8 layout, whose sort incidentally adjacency-grouped
-        # duplicates
-        def w_vecs() -> None:
-            (vectors.sortWithinPartitions(F.xxhash64("v"), F.col(id_col))
-             .write.mode("overwrite").parquet(seg_v))
-    # the two segments share no lineage beyond the batch scan — overlap
-    # the fixed-overhead-dominated write jobs (round-11, guide §2.6)
-    index_base.stage_concurrently(w_bands, w_vecs)
-    return {_BANDS: [seg_b], _VECS: [seg_v]}
+
+def _write_vectors(df: DataFrame, seg: str, meta: dict) -> None:
+    """Sorted by CONTENT hash, not id: the candidate fetch is a broadcast
+    join (id order buys no pruning there), while content order packs
+    identical/duplicate vectors into adjacent rows where parquet's page
+    compression collapses them — on a duplicate-heavy corpus the
+    id-sorted form measured LARGER than the bucket-sorted round-8
+    layout, whose sort incidentally adjacency-grouped duplicates."""
+    spec = _bucket_spec(meta, _VECS)
+    if spec:
+        index_base.write_bucketed_segment(df, seg, **spec)
+    else:
+        (df.sortWithinPartitions(F.xxhash64("v"), F.col(meta["id_col"]))
+         .write.mode("overwrite").parquet(seg))
 
 
 def _vectors_frame(embeddings: DataFrame, vec_col: str,
                    id_col: str) -> DataFrame:
     return embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
+
+
+def _bands_frame(vectors: DataFrame, meta: dict,
+                 vec_col: str) -> DataFrame:
+    sig = hyperplane_signatures(vectors, meta["n_tables"], meta["n_planes"],
+                                meta["dim"], vec_col=vec_col,
+                                id_col=meta["id_col"])
+    return sig.select(F.col(meta["id_col"]), F.col("table"), F.col("bucket"))
+
+
+def _frames(spark: "SparkSession | None", delta: DataFrame,
+            path: "str | None", meta: dict) -> dict:
+    """The delta's signature pass (bands) and its single-copy vectors."""
+    return {_BANDS: _bands_frame(delta, meta, meta["vec_col"]),
+            _VECS: _vectors_frame(delta, meta["vec_col"], meta["id_col"])}
+
+
+def _meta(corpus: DataFrame, n_tables: int, n_planes: "int | str",
+          dim: int, vec_col: str, id_col: str, auto_occupancy: int = 32,
+          layout: str = "partitioned",
+          n_buckets: "int | None" = None) -> dict:
+    resolved = n_planes
+    if n_planes == "auto":
+        resolved = auto_n_planes(corpus.count(),
+                                 target_occupancy=auto_occupancy)
+    return {"n_tables": n_tables, "n_planes": int(resolved), "dim": dim,
+            "vec_col": vec_col, "id_col": id_col,
+            "depth_mode": "auto" if n_planes == "auto" else "pinned",
+            **index_base.layout_meta(corpus, layout, n_buckets),
+            # bumped by every geometry change (rebuild) so an append's
+            # expect_meta guard conflicts even when the swapped-in
+            # geometry has identical PARAMETERS (same-depth rebuild:
+            # same meta dict, different band contents)
+            "geom_epoch": 0}
+
+
+def _create(corpus: DataFrame, params: dict) -> "tuple[dict, dict]":
+    meta = _meta(corpus, params["n_tables"], params["n_planes"],
+                 params["dim"], params["vec_col"], params["id_col"])
+    return meta, _frames(None, corpus, None, meta)
+
+
+def _probe_log(spark: SparkSession, batch: DataFrame, path: str,
+               meta: dict, frames: dict, params: dict,
+               first: bool) -> "DataFrame | None":
+    """A batch's top-k against everything ingested before it (one
+    batched probe job); the build-only first batch probes nothing."""
+    if first:
+        return None
+    return query_index_batch_topk(spark, path, batch, k=params["k"],
+                                  probe_radius=params["probe_radius"])
+
+
+FAMILY = index_base.Family(
+    tables={_BANDS: _write_bands, _VECS: _write_vectors},
+    frames=_frames, create=_create, log=_PROBES, log_frame=_probe_log)
 
 
 def build_signature_index(embeddings: DataFrame, path: str,
@@ -172,113 +200,30 @@ def build_signature_index(embeddings: DataFrame, path: str,
     broadcast probes); ``"bucketed"`` (round-10, VERDICT r9 item 3)
     bucket-writes bands on (table, bucket) and vectors on the id so a
     ``mode="shuffle"`` batch probe — the multi-GB-delta deployment
-    path — shuffles only the delta, never the index side."""
-    resolved = n_planes
-    if n_planes == "auto":
-        resolved = auto_n_planes(embeddings.count(),
-                                 target_occupancy=auto_occupancy)
-    sig = hyperplane_signatures(embeddings, n_tables, resolved, dim,
-                                vec_col=vec_col, id_col=id_col)
-    Path(path).mkdir(parents=True, exist_ok=True)
-    meta = {"n_tables": n_tables, "n_planes": int(resolved), "dim": dim,
-            "vec_col": vec_col, "id_col": id_col,
-            "depth_mode": "auto" if n_planes == "auto" else "pinned",
-            "layout": layout,
-            # bumped by every geometry change (rebuild) so an append's
-            # expect_meta guard conflicts even when the swapped-in
-            # geometry has identical PARAMETERS (same-depth rebuild:
-            # same meta dict, different band contents)
-            "geom_epoch": 0}
-    if layout == "bucketed":
-        # default derives from the corpus size estimate (round-12,
-        # VERDICT r11 item 1): buckets sized by bytes, not core count —
-        # frozen in meta with the rest of the geometry
-        meta["n_buckets"] = (n_buckets if n_buckets is not None
-                             else index_base.adaptive_n_buckets(embeddings))
-    staged = _stage_tables(sig, _vectors_frame(embeddings, vec_col, id_col),
-                           path, id_col, "base", meta)
-    write_meta(path, meta)   # human-readable mirror; manifest is authoritative
-    # marks and meta ride the SAME bump so a first-batch ingest is atomic
-    # with its idempotence record and the geometry is atomic with the
-    # segments that encode it
-    commit(path, replaces=staged, marks=marks, meta=meta)
-    index_base.gc_unreferenced(path)
-    return meta
+    path — shuffles only the delta, never the index side. ``marks``
+    ride the build's own commit."""
+    meta = _meta(embeddings, n_tables, n_planes, dim, vec_col, id_col,
+                 auto_occupancy, layout, n_buckets)
+    return index_base.build(FAMILY, path, meta,
+                            _frames(None, embeddings, path, meta), marks)
 
 
 def append_signatures(new_vectors: DataFrame, path: str,
                       tag: "str | None" = None) -> dict:
-    """Append a delta under the creation-time geometry. The job reads
-    ONLY ``new_vectors`` — never the existing index and never the
-    historical corpus (no count(), no auto re-derivation: a frozen auto
-    depth stays frozen; rebuild to re-derive). The delta's bands +
-    vectors segments are staged under a deterministic per-version tag,
-    then made visible by ONE manifest bump — a crash before the bump
-    leaves the index unchanged and the retry overwrites the orphan.
-
-    ``tag`` (round-11, ADVICE r10): CONCURRENT appenders must pass
-    distinct explicit tags — the version-derived default would stage two
-    same-snapshot writers into the same segment directory, silently
-    losing one delta. Single writers (and their crash-retries) keep the
-    deterministic default.
-
-    The commit carries an ``expect_meta`` guard (round-11): a
-    rebuild swapping the LSH geometry between this append's signature
-    pass and its commit would leave the delta's bands keyed at the OLD
-    depth — silently unfindable under the new one. On conflict the
-    append re-reads the geometry and re-signatures."""
-    for _ in range(5):
-        meta, guard = index_base.snapshot_meta(path)
-        t = tag or next_tag(path, "a")
-        sig = hyperplane_signatures(new_vectors, meta["n_tables"],
-                                    meta["n_planes"], meta["dim"],
-                                    vec_col=meta["vec_col"],
-                                    id_col=meta["id_col"])
-        staged = _stage_tables(
-            sig, _vectors_frame(new_vectors, meta["vec_col"],
-                                meta["id_col"]),
-            path, meta["id_col"], t, meta)
-        try:
-            commit(path, adds=staged, expect_meta=guard)
-        except ManifestConflict:
-            continue
-        return meta
-    raise ManifestConflict(
-        f"append to {path} lost the geometry race 5 times")
+    """Signature ONLY the delta under the creation-time geometry (no
+    count(), no auto re-derivation: a frozen auto depth stays frozen;
+    rebuild to re-derive) and commit its bands + vectors segments in
+    one bump (``index_base.append``: ``expect_meta`` guard against a
+    racing rebuild, explicit ``tag`` for concurrent appenders)."""
+    return index_base.append(new_vectors.sparkSession, FAMILY, new_vectors,
+                             path, tag)
 
 
 def compact_signature_index(spark: SparkSession, path: str) -> int:
     """Rewrite the accumulated segments (creation set + one per append)
-    back to ONE sorted segment per table; returns the live parquet file
-    count after compaction. The rewrite stages a new segment pair, one
-    manifest replace makes it live (readers see the old set or the new
-    set, never a mix, and the table is never absent — the round-8
-    two-rename window is gone), then the superseded segments are GC'd."""
-    meta = _read_meta(path)
-    id_col = meta["id_col"]
-
-    if meta.get("layout") == "bucketed":
-        def rw_bands(df: DataFrame, seg: str) -> None:
-            index_base.write_bucketed_segment(
-                df, seg, **_bucket_spec(meta, _BANDS))
-
-        def rw_vecs(df: DataFrame, seg: str) -> None:
-            index_base.write_bucketed_segment(
-                df, seg, **_bucket_spec(meta, _VECS))
-    else:
-        def rw_bands(df: DataFrame, seg: str) -> None:
-            (df.repartition("table")
-             .sortWithinPartitions("table", "bucket")
-             .write.mode("overwrite").partitionBy("table").parquet(seg))
-
-        def rw_vecs(df: DataFrame, seg: str) -> None:
-            (df.sortWithinPartitions(F.xxhash64("v"), F.col(id_col))
-             .write.mode("overwrite").parquet(seg))
-
-    index_base.compact_tables(spark, path,
-                              {_BANDS: rw_bands, _VECS: rw_vecs},
-                              tombstone_col=id_col)
-    return live_file_count(path, (_BANDS, _VECS))
+    back to ONE sorted segment per table through the family writers
+    (``index_base.compact``); returns the live parquet file count."""
+    return index_base.compact(spark, FAMILY, path)
 
 
 def delete_from_signature_index(spark: SparkSession, path: str, ids,
@@ -289,8 +234,7 @@ def delete_from_signature_index(spark: SparkSession, path: str, ids,
     single-copy vectors, clearing the tombstones in the same atomic
     replace — delete + compact equals a rebuild without the deleted
     vectors (the ``sim_ann_index_deleted`` oracle)."""
-    return index_base.delete_ids(spark, path, ids,
-                                 _read_meta(path)["id_col"], tag)
+    return index_base.delete_ids(spark, path, ids, tag)
 
 
 def index_bytes(path: str) -> int:
@@ -368,70 +312,17 @@ def query_index_topk(spark: SparkSession, path: str, query_vec,
     )
 
 
-def _ann_ingest_batch(spark: SparkSession, batch: DataFrame, path: str,
-                      meta: dict, k: int, probe_radius: int,
-                      tag: str, first: bool) -> None:
-    """One ANN ingest step, committed atomically (the dedup loop's
-    ``_ingest_batch`` shape): probe the arriving slice against the
-    STANDING index with one batched job, stage the probe output AND the
-    slice's own bands/vectors segments, publish all three in a single
-    manifest bump. A crash anywhere before the bump leaves index and
-    probe log unchanged; a replay overwrites the same ``seg-{tag}``
-    names and commits once.
-
-    The bump records an idempotence mark for the tag (round-10, ADVICE
-    r9): a micro-batch replayed because the crash hit AFTER the commit
-    but BEFORE the streaming checkpoint committed is detected and
-    skipped outright — without the mark the replay would probe an index
-    that already contains the batch itself (rewriting a probe segment
-    that differs from the batching contract) and overwrite a live,
-    manifest-referenced ``seg-{tag}`` in place."""
-    mark = f"ingested-{tag}"
-    if has_mark(path, mark):
-        return
-    if first:
-        build_signature_index(batch, path, meta["n_tables"],
-                              meta["n_planes"], meta["dim"],
-                              vec_col=meta["vec_col"],
-                              id_col=meta["id_col"], marks=[mark])
-        return
-    # signature and stage with the index's FROZEN manifest meta, not the
-    # caller's (round-11, ADVICE r10): resuming ingest on a bucketed or
-    # differently-parameterized existing index must not mix layouts or
-    # geometries — the IVF twin already read the frozen meta
-    meta = _read_meta(path)
-    probe = query_index_batch_topk(spark, path, batch, k=k,
-                                   probe_radius=probe_radius)
-    seg_p = stage_segment(f"{path}/{_PROBES}", tag)
-    sig = hyperplane_signatures(batch, meta["n_tables"], meta["n_planes"],
-                                meta["dim"], vec_col=meta["vec_col"],
-                                id_col=meta["id_col"])
-    # the probe write reads the index AS-OF now (the staged segments are
-    # invisible until the commit below) — overlap it with the batch's
-    # own table staging (round-11, guide §2.6)
-    _, staged = index_base.stage_concurrently(
-        lambda: probe.write.mode("overwrite").parquet(seg_p),
-        lambda: _stage_tables(
-            sig, _vectors_frame(batch, meta["vec_col"], meta["id_col"]),
-            path, meta["id_col"], tag, meta))
-    commit(path, adds={**staged, _PROBES: [seg_p]}, marks=[mark])
-
-
 def ingest_ann_index(spark: SparkSession, embeddings: DataFrame,
                      path: str, n_batches: int = 4, k: int = 5,
                      n_tables: int = 16, n_planes: int = 4, dim: int = 64,
                      vec_col: str = "embedding", id_col: str = "vec_id",
                      probe_radius: int = 0) -> DataFrame:
-    """The ANN index's whole lifecycle as one scheduled-ingest loop — the
-    reference's Airflow micro-batch mode (SURVEY ST5) recast as
-    embedding-corpus curation, and the ANN twin of
-    ``dedup_index.scheduled_ingest_dedup``. The corpus arrives as
-    ``n_batches`` deterministic slices (slice = ``id % n_batches``),
-    replayed in slice order; slice 0 creates the index, every later
-    slice is ANN-checked against the index of everything ingested BEFORE
-    it (one ``query_index_batch_topk`` job — never a per-vector driver
-    loop) and then appended, probe output and index segments committed
-    in one manifest bump.
+    """The ANN index's whole lifecycle as one scheduled-ingest loop
+    (``index_base.ingest``): slice 0 (``id % n_batches``) creates the
+    index, every later slice is ANN-checked against the index of
+    everything ingested BEFORE it (one ``query_index_batch_topk`` job)
+    and then appended, probe output and index segments committed in one
+    manifest bump.
 
     Unlike the dedup loop's pair set, the probe log is batching-
     DEPENDENT by design (each query ranks only earlier arrivals), which
@@ -439,15 +330,11 @@ def ingest_ann_index(spark: SparkSession, embeddings: DataFrame,
     registers against a DuckDB twin that reproduces "earlier slice"
     as ``cand.id % n < query.id % n`` (``ann_index_ingest_oracle_sql``).
     Returns the committed probe log (query_id, id, cos_sim)."""
-    Path(path).mkdir(parents=True, exist_ok=True)
-    meta = {"n_tables": n_tables, "n_planes": n_planes, "dim": dim,
-            "vec_col": vec_col, "id_col": id_col}
-    for i in range(n_batches):
-        batch = embeddings.filter(
-            F.pmod(F.col(id_col), F.lit(n_batches)) == i)
-        _ann_ingest_batch(spark, batch, path, meta, k, probe_radius,
-                          tag=f"b{i}", first=(i == 0))
-    return _read_table(spark, path, _PROBES)
+    return index_base.ingest(
+        spark, FAMILY, embeddings, path,
+        {"n_tables": n_tables, "n_planes": n_planes, "dim": dim,
+         "vec_col": vec_col, "id_col": id_col, "k": k,
+         "probe_radius": probe_radius}, n_batches)
 
 
 def streaming_ingest_ann(spark: SparkSession, embeddings: DataFrame,
@@ -457,32 +344,14 @@ def streaming_ingest_ann(spark: SparkSession, embeddings: DataFrame,
                          id_col: str = "vec_id",
                          probe_radius: int = 0) -> DataFrame:
     """``ingest_ann_index`` driven by REAL Structured Streaming
-    micro-batches: each slice is staged as its own parquet file with
-    strictly increasing mtimes (the file source orders batches by
-    modification time), a ``maxFilesPerTrigger=1`` stream under
-    ``availableNow`` delivers one slice per micro-batch, and
-    ``foreachBatch`` runs the same probe-then-append body. Because the
-    probe log is batching-dependent, slice order is part of the
-    contract — the mtime staging pins it, and the committed log equals
-    the scheduled loop's (and the static oracle) exactly."""
-    staging = f"{base_dir}/staged"
-    idx_path = f"{base_dir}/index"
-    Path(idx_path).mkdir(parents=True, exist_ok=True)
-    meta = {"n_tables": n_tables, "n_planes": n_planes, "dim": dim,
-            "vec_col": vec_col, "id_col": id_col}
-    index_base.stage_id_slices(embeddings, staging, n_batches, id_col)
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # "first" = no manifest COMMITTED yet (meta alone can predate a
-        # crashed build's commit; see dedup_index's streaming twin)
-        first = index_base.read_manifest(idx_path) is None
-        _ann_ingest_batch(spark, batch_df, idx_path, meta, k,
-                          probe_radius, tag=f"b{batch_id}", first=first)
-
-    index_base.run_slice_stream(spark, staging, f"{base_dir}/ck", ingest)
-    return _read_table(spark, idx_path, _PROBES)
+    micro-batches over mtime-ordered slice files — slice order is part
+    of the contract, so the committed log equals the scheduled loop's
+    (and the static oracle) exactly."""
+    return index_base.ingest(
+        spark, FAMILY, embeddings, f"{base_dir}/index",
+        {"n_tables": n_tables, "n_planes": n_planes, "dim": dim,
+         "vec_col": vec_col, "id_col": id_col, "k": k,
+         "probe_radius": probe_radius}, n_batches, stream_dir=base_dir)
 
 
 def index_cosine_pairs(spark: SparkSession, path: str,
@@ -646,44 +515,23 @@ def rebuild_signature_index(spark: SparkSession, path: str,
     vectors and this commit would otherwise keep its vectors live while
     its BANDS vanished from the stale replace list — silently unfindable
     vectors. On ``ManifestConflict`` the whole re-signature retries from
-    the fresh live set, absorbing the append (the ``compact_tables``
-    contract applied to geometry changes)."""
-    for _ in range(max_attempts):
-        man = index_base.read_manifest(path)
-        version = man["version"] if man else 0
-        meta = dict(_read_meta(path))
-        id_col = meta["id_col"]
-        want_tables = n_tables or meta["n_tables"]
+    the fresh live set, absorbing the append
+    (``index_base.replace_retrying``)."""
+    def step(man: dict):
+        meta = dict(man["meta"])
         vecs = _read_table(spark, path, _VECS)
         resolved = n_planes
         if n_planes == "auto":
             resolved = auto_n_planes(vecs.count(),
                                      target_occupancy=auto_occupancy)
-        sig = hyperplane_signatures(vecs, want_tables, resolved,
-                                    meta["dim"], vec_col="v",
-                                    id_col=id_col)
-        tag = next_tag(path, "r")
-        seg_b = stage_segment(f"{path}/{_BANDS}", tag)
-        bands_frame = sig.select(F.col(id_col), F.col("table"),
-                                 F.col("bucket"))
-        if meta.get("layout") == "bucketed":
-            index_base.write_bucketed_segment(
-                bands_frame, seg_b, **_bucket_spec(meta, _BANDS))
-        else:
-            (bands_frame.repartition("table")
-             .sortWithinPartitions("table", "bucket")
-             .write.mode("overwrite").partitionBy("table").parquet(seg_b))
-        meta.update({"n_tables": want_tables, "n_planes": int(resolved),
+        meta.update({"n_tables": n_tables or meta["n_tables"],
+                     "n_planes": int(resolved),
                      "depth_mode": ("auto" if n_planes == "auto"
                                     else "pinned"),
                      "geom_epoch": meta.get("geom_epoch", 0) + 1})
-        write_meta(path, meta)   # mirror; the manifest copy is authoritative
-        try:
-            commit(path, replaces={_BANDS: [seg_b]}, meta=meta,
-                   expect_version=version)
-        except ManifestConflict:
-            continue
-        index_base.gc_unreferenced(path, [_BANDS])
-        return meta
-    raise ManifestConflict(
-        f"rebuild of {path} lost the commit race {max_attempts} times")
+        staged = index_base.stage(
+            FAMILY, {_BANDS: _bands_frame(vecs, meta, "v")}, path, meta,
+            index_base.next_tag(path, "r"))
+        return staged, meta
+
+    return index_base.replace_retrying(path, "rebuild", step, max_attempts)

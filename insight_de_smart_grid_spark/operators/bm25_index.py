@@ -1,9 +1,9 @@
 """Persisted BM25 posting-list index — the FOURTH index family (round-11,
-VERDICT r10 item 7), and the proof of the round-10 lifecycle-core claim:
-a new family is its segment WRITERS plus registration, nothing else.
-Everything lifecycle-shaped — manifest commits, idempotent staging,
+VERDICT r10 item 7). Like every family it is its ``FAMILY`` record (two
+segment writers and one tokenize pass) plus its probe; everything
+lifecycle-shaped — manifest commits, idempotent staging,
 conflict-retrying compaction, tombstone deletes, GC, snapshot pins —
-comes verbatim from ``operators/index_base.py`` / ``index_manifest.py``.
+runs in ``operators/index_base.py`` / ``index_manifest.py``.
 
 The repo's inline ``text.bm25_topk`` tokenizes the whole corpus per
 query; at 100 TB ranked retrieval runs off a PERSISTED inverted index
@@ -34,22 +34,10 @@ block); this extends the round-8/9/10 index story to term postings.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.operators import index_base
-from insight_de_smart_grid_spark.operators.index_base import (
-    live_file_count,
-    next_tag,
-    read_table,
-    write_meta,
-)
-from insight_de_smart_grid_spark.operators.index_manifest import (
-    commit,
-    stage_segment,
-)
 from insight_de_smart_grid_spark.operators.text import (
     BM25_B,
     BM25_K1,
@@ -60,100 +48,69 @@ _POSTINGS = "postings"
 _DOCLENS = "doclens"
 
 _read_meta = index_base.read_meta
-_read_table = read_table
+_read_table = index_base.read_table
 
 
-def _tokenized(docs: DataFrame, meta: dict) -> DataFrame:
+def _write_postings(df: DataFrame, seg: str, meta: dict) -> None:
+    """Term-repartitioned (all of a term's postings in one file) and
+    (term, id)-sorted for row-group pruning on the probe's term filter."""
+    (df.repartition("term").sortWithinPartitions("term", meta["id_col"])
+     .write.mode("overwrite").parquet(seg))
+
+
+def _write_doclens(df: DataFrame, seg: str, meta: dict) -> None:
+    (df.sortWithinPartitions(meta["id_col"])
+     .write.mode("overwrite").parquet(seg))
+
+
+def _frames(spark: "SparkSession | None", docs: DataFrame,
+            path: "str | None", meta: dict) -> dict:
     """One tokenize pass -> (id, tokens) — the only text-touching step;
     both tables derive from it (the dedup family's shingle-once shape)."""
-    toks = F.filter(tokens(meta["text_col"]), lambda t: t != "")
-    return docs.select(F.col(meta["id_col"]), toks.alias("t"))
-
-
-def _stage_tables(base: DataFrame, path: str, meta: dict, tag: str) -> dict:
-    """The family's entire bespoke surface: two segment writers.
-    ``postings``: term-repartitioned + (term, id)-sorted for row-group
-    pruning on the probe's term filter; ``doclens``: id-sorted."""
     id_col = meta["id_col"]
-    seg_p = stage_segment(f"{path}/{_POSTINGS}", tag)
-    seg_d = stage_segment(f"{path}/{_DOCLENS}", tag)
+    toks = F.filter(tokens(meta["text_col"]), lambda t: t != "")
+    base = docs.select(F.col(id_col), toks.alias("t"))
+    return {_POSTINGS: (base.select(F.col(id_col),
+                                    F.explode("t").alias("term"))
+                        .groupBy("term", id_col)
+                        .agg(F.count(F.lit(1)).alias("tf"))),
+            _DOCLENS: base.select(id_col, F.size("t").alias("dl"))}
 
-    def w_postings() -> None:
-        (base.select(F.col(id_col), F.explode("t").alias("term"))
-         .groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf"))
-         .repartition("term")
-         .sortWithinPartitions("term", id_col)
-         .write.mode("overwrite").parquet(seg_p))
 
-    def w_doclens() -> None:
-        (base.select(id_col, F.size("t").alias("dl"))
-         .sortWithinPartitions(id_col)
-         .write.mode("overwrite").parquet(seg_d))
+def _create(corpus: DataFrame, params: dict) -> "tuple[dict, dict]":
+    meta = {"text_col": params["text_col"], "id_col": params["id_col"],
+            "k1": BM25_K1, "b": BM25_B}
+    return meta, _frames(None, corpus, None, meta)
 
-    # both tables derive from the one tokenize pass and share no other
-    # lineage — overlap the two write jobs (round-11, guide §2.6)
-    index_base.stage_concurrently(w_postings, w_doclens)
-    return {_POSTINGS: [seg_p], _DOCLENS: [seg_d]}
+
+FAMILY = index_base.Family(
+    tables={_POSTINGS: _write_postings, _DOCLENS: _write_doclens},
+    frames=_frames, create=_create)
 
 
 def build_bm25_index(docs: DataFrame, path: str, text_col: str = "text",
                      id_col: str = "doc_id") -> dict:
     """Create the index: one corpus tokenize pass -> postings + doclens,
     visible in one atomic manifest bump."""
-    meta = {"text_col": text_col, "id_col": id_col,
-            "k1": BM25_K1, "b": BM25_B}
-    Path(path).mkdir(parents=True, exist_ok=True)
-    staged = _stage_tables(_tokenized(docs, meta), path, meta, "base")
-    write_meta(path, meta)   # mirror; the manifest copy is authoritative
-    commit(path, replaces=staged, meta=meta)
-    index_base.gc_unreferenced(path)
-    return meta
+    return index_base.build(FAMILY, path, *_create(
+        docs, {"text_col": text_col, "id_col": id_col}))
 
 
 def append_bm25_index(new_docs: DataFrame, path: str,
                       tag: "str | None" = None) -> dict:
     """Tokenize ONLY the delta and commit its postings/doclens segments
-    in one bump — append cost tracks delta size (the index is never
-    read). Per-(term, doc) tf rows from different segments never
-    collide because a doc lives in exactly one delta. ``tag``: the
-    concurrent-appender lever (ADVICE r10) — distinct explicit tags for
-    concurrent writers, deterministic default for a single writer."""
-    from insight_de_smart_grid_spark.operators.index_manifest import (
-        ManifestConflict,
-    )
-
-    for _ in range(5):
-        meta, guard = index_base.snapshot_meta(path)
-        t = tag or next_tag(path, "a")
-        staged = _stage_tables(_tokenized(new_docs, meta), path, meta, t)
-        try:
-            commit(path, adds=staged, expect_meta=guard)
-        except ManifestConflict:
-            continue
-        return meta
-    raise ManifestConflict(
-        f"append to {path} lost the geometry race 5 times")
+    in one bump (``index_base.append``) — append cost tracks delta size.
+    Per-(term, doc) tf rows from different segments never collide
+    because a doc lives in exactly one delta."""
+    return index_base.append(new_docs.sparkSession, FAMILY, new_docs, path,
+                             tag)
 
 
 def compact_bm25_index(spark: SparkSession, path: str) -> int:
-    """Shared skeleton: rewrite both tables to one sorted segment each,
-    physically dropping tombstoned docs and clearing the tombstones in
-    the same atomic replace; conflict-retry absorbs racing appends."""
-    meta = _read_meta(path)
-    id_col = meta["id_col"]
-
-    def rw_postings(df: DataFrame, seg: str) -> None:
-        (df.repartition("term").sortWithinPartitions("term", id_col)
-         .write.mode("overwrite").parquet(seg))
-
-    def rw_doclens(df: DataFrame, seg: str) -> None:
-        (df.sortWithinPartitions(id_col)
-         .write.mode("overwrite").parquet(seg))
-
-    index_base.compact_tables(
-        spark, path, {_POSTINGS: rw_postings, _DOCLENS: rw_doclens},
-        tombstone_col=id_col)
-    return live_file_count(path, (_POSTINGS, _DOCLENS))
+    """Rewrite both tables to one sorted segment each, physically
+    dropping tombstoned docs and clearing the tombstones in the same
+    atomic replace (``index_base.compact``)."""
+    return index_base.compact(spark, FAMILY, path)
 
 
 def delete_from_bm25_index(spark: SparkSession, path: str, ids,
@@ -162,8 +119,7 @@ def delete_from_bm25_index(spark: SparkSession, path: str, ids,
     exclude the docs immediately AND recompute N/avgdl/df without them —
     BM25's global statistics must shrink with the corpus, which is the
     part a candidate-only mask would get wrong."""
-    return index_base.delete_ids(spark, path, ids,
-                                 _read_meta(path)["id_col"], tag)
+    return index_base.delete_ids(spark, path, ids, tag)
 
 
 def query_bm25_index(spark: SparkSession, path: str,

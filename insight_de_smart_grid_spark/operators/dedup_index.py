@@ -4,39 +4,33 @@ The repo's near-dup family (``operators/dedup.py``) computes MinHash band
 signatures inline per query — correct, but at 100 TB the band table is a
 PERSISTED index: a continuously-curated corpus appends new documents daily
 and must near-dup-check each delta against everything already ingested
-without re-shingling the corpus. Round 8 added the lifecycle; round 9
-hardens it with the manifest-pointer commit protocol
-(``operators/index_manifest.py``) and a delta-size-adaptive probe join:
+without re-shingling the corpus. One shingle pass (the shared
+``signature_shingle_sets`` aggregation) feeds two tables:
 
-- ``build_dedup_index``: one corpus pass (the shared
-  ``signature_shingle_sets`` aggregation — one shuffle, two outputs) ->
-  two parquet tables under ``path``, each a set of immutable ``seg-*``
-  directories named by ``MANIFEST.json``:
+* ``bands/`` — long-format band buckets ``(band_idx, p0..p{w-1},
+  doc_id)`` from the SAME ``banded_signatures`` packing the inline
+  candidate join uses, partitioned by ``band_idx`` (directory pruning)
+  and sorted by the packed keys within each file (parquet row-group
+  min/max stats prune bucket probes);
+* ``docs/`` — ``(doc_id, shingles, n_sh)``: each doc's distinct 60-bit
+  shingle-hash set, so the candidate-bounded exact-Jaccard verify runs
+  entirely index-side — the raw corpus text is never re-read.
 
-  * ``bands/`` — long-format band buckets ``(band_idx, p0..p{w-1},
-    doc_id)`` from the SAME ``banded_signatures`` packing the inline
-    candidate join uses, partitioned by ``band_idx`` (directory pruning)
-    and sorted by the packed keys within each file (parquet row-group
-    min/max stats prune bucket probes);
-  * ``docs/`` — ``(doc_id, shingles, n_sh)``: each doc's distinct 60-bit
-    shingle-hash set, so the candidate-bounded exact-Jaccard verify runs
-    entirely index-side — the raw corpus text is never re-read.
+The manifest meta freezes the geometry (n_hashes/bands/ngram, the
+packed-key width, the layout): appended signatures must band identically
+or buckets from different geometries would silently never collide.
 
-  ``meta.json`` freezes the geometry (n_hashes/bands/ngram and the
-  packed-key width): appended signatures must band identically or buckets
-  from different geometries would silently never collide.
-- ``append_dedup_index``: shingle + sign ONLY the delta, stage its file
-  sets (idempotent: deterministic segment names + overwrite), make them
-  visible with ONE atomic manifest bump — the job's input is the delta
-  frame, the index is never read (plan-asserted in tests), so append cost
-  tracks delta size, not corpus size, and a crash before the bump leaves
-  the index unchanged.
-- ``compact_dedup_index``: rewrite the accumulated segments back to one
-  sorted segment per table and swap via a manifest replace — a reader
-  sees only the old set or only the new one (the round-8 two-rename
-  window, during which the table directory was briefly absent, is gone),
-  and interrupted compactions leave only unreferenced orphans that
-  ``gc_unreferenced`` removes.
+The lifecycle — build, delta-only append, compaction, tombstone deletes,
+and the scheduled/streaming ingest loops — is ``operators/index_base.py``'s,
+driven by this module's ``FAMILY`` record. The ingest log is the
+``pairs`` table: each batch's in-batch pairs plus its probe against
+the standing index, all from the batch's one persisted shingle pass. The
+committed union is EXACTLY the full-corpus pair set for ANY disjoint
+slicing (a pair within one slice comes from the in-batch check, a pair
+spanning two slices from the probe when the later slice arrives), which
+is what lets both loops register against the inline pipeline's DuckDB
+oracle. This module keeps the writers, the shingle pass, and the probes:
+
 - ``index_near_dup_pairs``: the full verified near-dup pair query over
   the persisted tables — row-identical to ``minhash_lsh_near_dups`` over
   the same corpus at the same geometry, which is what lets the registered
@@ -52,12 +46,6 @@ hardens it with the manifest-pointer commit protocol
   shuffle-mode probe keeps the corpus-sized index side exchange-free —
   only the delta moves (``index_base.join_each_segment``).
 
-The ingest loops (``scheduled_ingest_dedup``, ``streaming_ingest_dedup``)
-commit each batch's pairs output AND its index segments with a single
-manifest bump, which closes the round-8 crash window ADVICE documented:
-a replayed micro-batch re-stages the same deterministic segment names
-with overwrite and commits once — no double-append, no duplicate pairs.
-
 The reference has no index maintenance at all (its analog is Druid
 segment rebuild + metadata store, ``batch_processing/druid_batch.py`` —
 the same segment + pointer-commit design this follows); this is an
@@ -66,39 +54,26 @@ extension beyond parity, same as the rest of the dedup surface.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from insight_de_smart_grid_spark.operators import index_base
 from insight_de_smart_grid_spark.operators.dedup import (
     banded_signatures,
+    minhash_pairs_from_sigs,
     packed_band_width,
     signature_shingle_sets,
 )
-from insight_de_smart_grid_spark.operators import index_base
-from insight_de_smart_grid_spark.operators.index_base import (
-    live_file_count,
-    next_tag,
-    read_table,
-    write_meta,
-)
-from insight_de_smart_grid_spark.operators.index_manifest import (
-    commit,
-    has_mark,
-    stage_segment,
-)
 
-_META = index_base.META
 _BANDS = "bands"
 _DOCS = "docs"
 _PAIRS = "pairs"
 
-# shared lifecycle core (round-10, VERDICT r9 item 6) — the private names
-# are kept as the family's API surface (tests and plans read through them)
+# the private names are kept as the family's API surface (tests and
+# plans read through them)
 _read_meta = index_base.read_meta
-_read_table = read_table
+_read_table = index_base.read_table
 
 # Above this many delta rows the probe stops broadcasting the delta and
 # switches to shuffled hash joins (mode="auto"). The default is sized for
@@ -124,60 +99,84 @@ def _bucket_spec(meta: dict, table: str) -> "dict | None":
     return {"n_buckets": meta["n_buckets"], "keys": [meta["id_col"]]}
 
 
-def _stage_tables(sig: DataFrame, path: str, meta: dict, tag: str) -> dict:
-    """Stage one docs segment + one bands segment from one (persisted)
-    signature frame; returns {table: [segment]} for a later commit.
-    Overwrite mode makes a retried stage replace its own orphan.
+def _write_docs(df: DataFrame, seg: str, meta: dict) -> None:
+    """The verify sets, sorted by doc_id for row-group pruning on the
+    candidate join (bucketed on the id under the bucketed layout)."""
+    spec = _bucket_spec(meta, _DOCS)
+    if spec:
+        index_base.write_bucketed_segment(df, seg, **spec)
+    else:
+        (df.sortWithinPartitions(meta["id_col"])
+         .write.mode("overwrite").parquet(seg))
 
-    ``bands/``: one sorted file set per band partition — ``band_idx``
-    directory pruning for probes, packed keys sorted within each file so
-    parquet row-group min/max stats skip non-matching buckets.
-    ``docs/``: the verify sets, sorted by doc_id for row-group pruning on
-    the candidate join."""
+
+def _write_bands(df: DataFrame, seg: str, meta: dict) -> None:
+    """One sorted file set per band partition — ``band_idx`` directory
+    pruning for probes, packed keys sorted within each file so parquet
+    row-group min/max stats skip non-matching buckets (bucketed on the
+    probe join keys under the bucketed layout)."""
+    spec = _bucket_spec(meta, _BANDS)
+    if spec:
+        index_base.write_bucketed_segment(df, seg, **spec)
+    else:
+        (df.repartition("band_idx")
+         .sortWithinPartitions("band_idx", *_p_cols(meta))
+         .write.mode("overwrite").partitionBy("band_idx").parquet(seg))
+
+
+def _frames(spark: "SparkSession | None", delta: DataFrame,
+            path: "str | None", meta: dict) -> dict:
+    """The delta's ONE shingle pass, persisted: docs, bands, and an
+    ingest batch's in-batch pairs and probe all read the same ``sig``
+    (released by the core once staged)."""
     id_col = meta["id_col"]
-    seg_d = stage_segment(f"{path}/{_DOCS}", tag)
-    # persist only if the caller doesn't already own a persist: the
-    # ingest body runs this concurrently with its pairs write, and an
-    # unconditional unpersist here would drop the shared cache under a
-    # sibling job mid-flight (forcing a full shingle recompute)
-    owns_persist = not sig.is_cached
-    if owns_persist:
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        docs_frame = sig.select(F.col(id_col), F.col("shingles"),
-                                F.size("shingles").alias("n_sh"))
-        bands_frame = banded_signatures(sig, meta["n_hashes"],
-                                        meta["bands"], id_col)
-        seg_b = stage_segment(f"{path}/{_BANDS}", tag)
-        if meta.get("layout") == "bucketed":
-            # round-10 big-delta layout (VERDICT r9 item 3): both tables
-            # bucket-written on their probe join keys so a shuffle-mode
-            # probe never shuffles the index side
-            def w_docs() -> None:
-                index_base.write_bucketed_segment(
-                    docs_frame, seg_d, **_bucket_spec(meta, _DOCS))
+    sig = signature_shingle_sets(
+        delta, meta["n_hashes"], meta["ngram"], meta["text_col"],
+        id_col).persist(StorageLevel.MEMORY_AND_DISK)
+    return {"sig": sig,
+            _DOCS: sig.select(F.col(id_col), F.col("shingles"),
+                              F.size("shingles").alias("n_sh")),
+            _BANDS: banded_signatures(sig, meta["n_hashes"], meta["bands"],
+                                      id_col)}
 
-            def w_bands() -> None:
-                index_base.write_bucketed_segment(
-                    bands_frame, seg_b, **_bucket_spec(meta, _BANDS))
-        else:
-            def w_docs() -> None:
-                (docs_frame.sortWithinPartitions(id_col)
-                 .write.mode("overwrite").parquet(seg_d))
 
-            def w_bands() -> None:
-                (bands_frame
-                 .repartition("band_idx")
-                 .sortWithinPartitions("band_idx", *_p_cols(meta))
-                 .write.mode("overwrite").partitionBy("band_idx")
-                 .parquet(seg_b))
-        # both segments derive from the persisted sig — overlap the two
-        # fixed-overhead-dominated write jobs (round-11, guide §2.6)
-        index_base.stage_concurrently(w_docs, w_bands)
-    finally:
-        if owns_persist:
-            sig.unpersist()
-    return {_DOCS: [seg_d], _BANDS: [seg_b]}
+def _meta(corpus: DataFrame, n_hashes: int = 32, bands: int = 8,
+          ngram: int = 3, text_col: str = "text", id_col: str = "doc_id",
+          layout: str = "partitioned",
+          n_buckets: "int | None" = None) -> dict:
+    return {"n_hashes": n_hashes, "bands": bands, "ngram": ngram,
+            "text_col": text_col, "id_col": id_col,
+            "n_packed": packed_band_width(n_hashes, bands),
+            **index_base.layout_meta(corpus, layout, n_buckets)}
+
+
+def _create(corpus: DataFrame, params: dict) -> "tuple[dict, dict]":
+    meta = _meta(corpus, text_col=params["text_col"],
+                 id_col=params["id_col"])
+    return meta, _frames(None, corpus, None, meta)
+
+
+def _pairs_log(spark: SparkSession, batch: DataFrame, path: str,
+               meta: dict, frames: dict, params: dict,
+               first: bool) -> DataFrame:
+    """A batch's pairs: within itself, and (once an index stands)
+    against everything ingested before it."""
+    sig, threshold = frames["sig"], params["threshold"]
+    pairs = minhash_pairs_from_sigs(sig, meta["n_hashes"], meta["bands"],
+                                    threshold, meta["id_col"])
+    if first:
+        return pairs
+    # batch-size-adaptive probe join: estimate from the BATCH frame, not
+    # sig — zero jobs, and never re-pays the shingle UDF pass
+    mode = index_base.pick_join_mode(batch,
+                                     default_rows=BROADCAST_DELTA_MAX_ROWS)
+    return pairs.unionByName(
+        _probe_with_sigs(spark, path, sig, threshold, meta, mode=mode))
+
+
+FAMILY = index_base.Family(
+    tables={_DOCS: _write_docs, _BANDS: _write_bands},
+    frames=_frames, create=_create, log=_PAIRS, log_frame=_pairs_log)
 
 
 def build_dedup_index(docs: DataFrame, path: str, n_hashes: int = 32,
@@ -197,100 +196,29 @@ def build_dedup_index(docs: DataFrame, path: str, n_hashes: int = 32,
     docs on the id, so a ``mode="shuffle"`` probe — the multi-GB-delta
     deployment path — shuffles ONLY the delta, never the corpus-sized
     index side (plan-asserted in tests)."""
-    meta = {"n_hashes": n_hashes, "bands": bands, "ngram": ngram,
-            "text_col": text_col, "id_col": id_col,
-            "n_packed": packed_band_width(n_hashes, bands),
-            "layout": layout}
-    if layout == "bucketed":
-        # default derives from the corpus size estimate (round-12,
-        # VERDICT r11 item 1): buckets sized by bytes, not core count —
-        # frozen in meta with the rest of the geometry
-        meta["n_buckets"] = (n_buckets if n_buckets is not None
-                             else index_base.adaptive_n_buckets(docs))
-    sig = signature_shingle_sets(docs, n_hashes, ngram, text_col, id_col)
-    Path(path).mkdir(parents=True, exist_ok=True)
-    staged = _stage_tables(sig, path, meta, "base")
-    write_meta(path, meta)   # mirror; the manifest copy is authoritative
-    commit(path, replaces=staged, meta=meta)
-    index_base.gc_unreferenced(path)
-    return meta
+    meta = _meta(docs, n_hashes, bands, ngram, text_col, id_col, layout,
+                 n_buckets)
+    return index_base.build(FAMILY, path, meta,
+                            _frames(None, docs, path, meta))
 
 
 def append_dedup_index(new_docs: DataFrame, path: str,
                        tag: "str | None" = None) -> dict:
-    """Append a delta's signatures + verify sets under the creation-time
-    geometry. The job reads ONLY ``new_docs`` — never the existing index
-    and never the historical corpus — so append cost tracks delta size;
-    the staged segments become visible in ONE manifest bump. Callers
+    """Shingle + sign ONLY the delta and commit its docs/bands segments
+    in one bump (``index_base.append``: delta-only job, ``expect_meta``
+    guard, explicit ``tag`` for concurrent appenders). Callers
     de-duplicating on ingest run ``dedup_new_against_index`` BEFORE
-    appending (the delta is checked against the index as-of its arrival,
-    then becomes part of the index for the next delta).
-
-    ``tag`` (round-11, ADVICE r10): CONCURRENT appenders must pass
-    distinct explicit tags — the default ``next_tag`` is derived from
-    the snapshot version, so two writers appending from the same
-    snapshot would stage into the same segment directory and one delta
-    would silently overwrite the other before either commits. A single
-    writer (and any crash-retry of it) keeps the deterministic
-    default."""
-    from insight_de_smart_grid_spark.operators.index_manifest import (
-        ManifestConflict,
-    )
-
-    # expect_meta guard (round-11): the dedup geometry is frozen for the
-    # index's lifetime today, but the guard costs nothing and makes a
-    # future geometry-changing op safe against in-flight appends by
-    # construction (the ANN/IVF contract applied uniformly)
-    for _ in range(5):
-        meta, guard = index_base.snapshot_meta(path)
-        t = tag or next_tag(path, "a")
-        sig = signature_shingle_sets(new_docs, meta["n_hashes"],
-                                     meta["ngram"], meta["text_col"],
-                                     meta["id_col"])
-        staged = _stage_tables(sig, path, meta, t)
-        try:
-            commit(path, adds=staged, expect_meta=guard)
-        except ManifestConflict:
-            continue
-        return meta
-    raise ManifestConflict(
-        f"append to {path} lost the geometry race 5 times")
+    appending (the delta is checked against the index as-of its
+    arrival, then becomes part of the index for the next delta)."""
+    return index_base.append(new_docs.sparkSession, FAMILY, new_docs, path,
+                             tag)
 
 
 def compact_dedup_index(spark: SparkSession, path: str) -> int:
-    """Rewrite both tables (creation segment + one per append) back to
-    one sorted segment per table; returns the live parquet file count
-    after compaction. The shared skeleton (``index_base.compact_tables``)
-    stages new segments, makes them live with one manifest replace —
-    readers see the old set or the new set, never a mix, and the tables
-    are never absent — GCs the superseded segments, and retries from a
-    fresh snapshot if an append commits mid-rewrite (ManifestConflict),
-    so racing ingest is absorbed, never dropped. Pairs segments
-    (ingest-loop output) are untouched."""
-    meta = _read_meta(path)
-
-    if meta.get("layout") == "bucketed":
-        def rw_docs(df: DataFrame, seg: str) -> None:
-            index_base.write_bucketed_segment(
-                df, seg, **_bucket_spec(meta, _DOCS))
-
-        def rw_bands(df: DataFrame, seg: str) -> None:
-            index_base.write_bucketed_segment(
-                df, seg, **_bucket_spec(meta, _BANDS))
-    else:
-        def rw_docs(df: DataFrame, seg: str) -> None:
-            (df.sortWithinPartitions(meta["id_col"])
-             .write.mode("overwrite").parquet(seg))
-
-        def rw_bands(df: DataFrame, seg: str) -> None:
-            (df.repartition("band_idx")
-             .sortWithinPartitions("band_idx", *_p_cols(meta))
-             .write.mode("overwrite").partitionBy("band_idx").parquet(seg))
-
-    index_base.compact_tables(spark, path,
-                              {_DOCS: rw_docs, _BANDS: rw_bands},
-                              tombstone_col=meta["id_col"])
-    return live_file_count(path, (_DOCS, _BANDS))
+    """Rewrite both tables back to one sorted segment each, dropping
+    tombstoned docs (``index_base.compact``); returns the live parquet
+    file count. Pairs segments (ingest-loop output) are untouched."""
+    return index_base.compact(spark, FAMILY, path)
 
 
 def delete_from_dedup_index(spark: SparkSession, path: str, ids,
@@ -302,64 +230,7 @@ def delete_from_dedup_index(spark: SparkSession, path: str, ids,
     delete + compact over a corpus equals a rebuild WITHOUT the deleted
     docs (the ``dedup_index_deleted`` oracle), with neither path ever
     re-reading the raw corpus."""
-    return index_base.delete_ids(spark, path, ids,
-                                 _read_meta(path)["id_col"], tag)
-
-
-def _ingest_batch(spark: SparkSession, batch: DataFrame, idx_path: str,
-                  meta: dict, threshold: float, tag: str,
-                  first: bool) -> None:
-    """One ingest step, committed atomically: ONE shingle pass serves the
-    in-batch pair check, the probe against the standing index, and the
-    batch's own append; the batch's pairs segment AND its index segments
-    become visible in a single manifest bump. A crash anywhere before the
-    bump leaves the index AND the pairs log unchanged; a replay re-stages
-    the same deterministic ``seg-{tag}`` names with overwrite and commits
-    once — the round-8 double-append window is closed.
-
-    The commit also records an idempotence mark for the tag (round-10,
-    ADVICE r9): a micro-batch replayed because the crash hit AFTER the
-    manifest bump but BEFORE the streaming checkpoint committed is
-    detected here and skipped outright — without the mark the replay
-    would probe an index that already contains the batch itself (pair
-    set drift) and rewrite a live, manifest-referenced segment in place
-    (immutability violation, racing any concurrent reader)."""
-    from insight_de_smart_grid_spark.operators.dedup import (
-        minhash_pairs_from_sigs,
-    )
-
-    mark = f"ingested-{tag}"
-    if has_mark(idx_path, mark):
-        return
-    sig = signature_shingle_sets(batch, meta["n_hashes"], meta["ngram"],
-                                 meta["text_col"], meta["id_col"])
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        pairs = minhash_pairs_from_sigs(sig, meta["n_hashes"],
-                                        meta["bands"], threshold,
-                                        meta["id_col"])
-        if not first:
-            # batch-size-adaptive probe join (the dedup_new_against_index
-            # lever inside the loop): estimate from the BATCH frame, not
-            # sig — zero jobs, and never re-pays the shingle UDF pass
-            mode = index_base.pick_join_mode(
-                batch, default_rows=BROADCAST_DELTA_MAX_ROWS)
-            pairs = pairs.unionByName(
-                _probe_with_sigs(spark, idx_path, sig, threshold, meta,
-                                 mode=mode))
-        seg_p = stage_segment(f"{idx_path}/{_PAIRS}", tag)
-        # the pairs write (probe reads the standing index, no staged
-        # segment visible yet) and the batch's own table staging share
-        # only the persisted sig — overlap them (round-11, guide §2.6)
-        _, staged = index_base.stage_concurrently(
-            lambda: pairs.write.mode("overwrite").parquet(seg_p),
-            lambda: _stage_tables(sig, idx_path, meta, tag))
-        if first:
-            write_meta(idx_path, meta)
-        commit(idx_path, adds={**staged, _PAIRS: [seg_p]}, marks=[mark],
-               meta=meta if first else None)
-    finally:
-        sig.unpersist()
+    return index_base.delete_ids(spark, path, ids, tag)
 
 
 def scheduled_ingest_dedup(spark: SparkSession, docs: DataFrame,
@@ -368,46 +239,15 @@ def scheduled_ingest_dedup(spark: SparkSession, docs: DataFrame,
                            text_col: str = "text",
                            id_col: str = "doc_id",
                            compact_every: "int | None" = None) -> DataFrame:
-    """The index's whole lifecycle as one scheduled-ingest loop — the
-    reference's Airflow-triggered micro-batch mode
-    (``airflow_schedule/`` DAGs; SURVEY ST5) recast as corpus curation.
-    The corpus arrives as ``n_batches`` deterministic hash slices,
-    replayed in order; each batch is near-dup-checked (a) WITHIN itself
-    via the inline MinHash pipeline and (b) against the index of
-    everything ingested before it, then appended to the index for the
-    next batch. Each batch's pairs land in their own committed segment
-    when the batch runs (a real scheduled job commits its output — and
-    lazy probes would otherwise re-read the index AFTER later appends,
-    double-counting cross-batch pairs).
-
-    The union over batches is EXACTLY the full-corpus pair set — a pair
-    within one slice comes from (a), a pair spanning two slices from (b)
-    when the later slice arrives — so the loop registers against the same
-    DuckDB oracle as the inline full-corpus pipeline: nothing is lost or
-    duplicated by incremental ingest.
-
-    ``compact_every=k`` folds maintenance into the schedule: after every
-    k-th batch the accumulated per-append segments are rewritten to one
-    sorted segment per table (manifest swap) — results are invariant
-    (pinned in tests), only the file count changes, which is the policy a
-    real daily-ingest job runs so probe-side file listings stay flat."""
-    from insight_de_smart_grid_spark.operators.pipeline import _hash_bucket
-
-    idx_path = f"{base_dir}/index"
-    Path(idx_path).mkdir(parents=True, exist_ok=True)
-    bucket = _hash_bucket(F.col(id_col).cast("string"))
-    meta = {"n_hashes": 32, "bands": 8, "ngram": 3,
-            "text_col": text_col, "id_col": id_col,
-            "n_packed": packed_band_width(32, 8)}
-    step = 100 // n_batches
-    for i in range(n_batches):
-        lo, hi = i * step, (i + 1) * step if i < n_batches - 1 else 100
-        batch = docs.filter((bucket >= lo) & (bucket < hi))
-        _ingest_batch(spark, batch, idx_path, meta, threshold,
-                      tag=f"b{i}", first=(i == 0))
-        if compact_every and (i + 1) % compact_every == 0:
-            compact_dedup_index(spark, idx_path)
-    return _read_table(spark, idx_path, _PAIRS)
+    """The index's whole lifecycle as one scheduled-ingest loop over
+    ``n_batches`` id slices under ``{base_dir}/index``
+    (``index_base.ingest``); returns the committed pairs — exactly the
+    full-corpus pair set. ``compact_every=k`` compacts after every k-th
+    batch (result-invariant, fewer live files)."""
+    return index_base.ingest(
+        spark, FAMILY, docs, f"{base_dir}/index",
+        {"text_col": text_col, "id_col": id_col, "threshold": threshold},
+        n_batches, compact_every=compact_every)
 
 
 def streaming_ingest_dedup(spark: SparkSession, docs: DataFrame,
@@ -416,56 +256,14 @@ def streaming_ingest_dedup(spark: SparkSession, docs: DataFrame,
                            text_col: str = "text",
                            id_col: str = "doc_id") -> DataFrame:
     """``scheduled_ingest_dedup`` driven by REAL Structured Streaming
-    micro-batches: the corpus is staged as ``n_files`` parquet files, a
-    file-source stream with ``maxFilesPerTrigger=1`` delivers one file
-    per micro-batch under ``availableNow``, and ``foreachBatch`` runs the
-    same single-shingle-pass batch body (in-batch pairs, probe against
-    the standing index, append). The first non-empty batch creates the
-    index.
-
-    Correctness does NOT depend on which docs land in which micro-batch:
-    the committed union is the full-corpus pair set for ANY disjoint
-    slicing (the two-batchings contract pinned in tests), which is what
-    makes a file-source's unspecified file->batch assignment safe to
-    register against the same DuckDB oracle as the inline pipeline.
-    Each batch commits its pairs segment AND its index segments with ONE
-    manifest bump (round-9): a micro-batch replayed after a crash at any
-    point re-stages the same ``seg-b{batch_id}`` names with overwrite and
-    commits once — the round-8 pairs-write/index-append window that could
-    double-append docs/bands (and therefore emit duplicate pairs from
-    later probes) no longer exists."""
-    staging = f"{base_dir}/staged"
-    idx_path = f"{base_dir}/index"
-    Path(idx_path).mkdir(parents=True, exist_ok=True)
-    # stage the corpus files only once: a RESTART of the stream (crash
-    # recovery) must see the same file set, so the checkpoint's committed
-    # batches stay committed and only the failed micro-batch replays —
-    # re-staging would mint new file names and replay everything
-    if not (Path(staging) / "_SUCCESS").exists():
-        docs.repartition(n_files).write.mode("overwrite").parquet(staging)
-    meta = {"n_hashes": 32, "bands": 8, "ngram": 3,
-            "text_col": text_col, "id_col": id_col,
-            "n_packed": packed_band_width(32, 8)}
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # "first" = no manifest COMMITTED yet (not: meta file present —
-        # meta is written pre-commit, so a crash between the two would
-        # otherwise replay batch 0 down the probe path against an index
-        # with no live segments)
-        first = index_base.read_manifest(idx_path) is None
-        _ingest_batch(spark, batch_df, idx_path, meta, threshold,
-                      tag=f"b{batch_id}", first=first)
-
-    schema = spark.read.parquet(staging).schema
-    stream = (spark.readStream.schema(schema).format("parquet")
-              .option("maxFilesPerTrigger", "1").load(staging))
-    q = (stream.writeStream.foreachBatch(ingest)
-         .option("checkpointLocation", f"{base_dir}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return _read_table(spark, idx_path, _PAIRS)
+    micro-batches, one staged slice file per micro-batch
+    (``index_base.ingest`` with a stream directory). The committed pair
+    set equals the scheduled loop's — the pair union does not depend on
+    the slicing."""
+    return index_base.ingest(
+        spark, FAMILY, docs, f"{base_dir}/index",
+        {"text_col": text_col, "id_col": id_col, "threshold": threshold},
+        n_files, stream_dir=base_dir)
 
 
 def _verify_pairs(cand: DataFrame, docs_a: DataFrame, docs_b: DataFrame,

@@ -1,33 +1,41 @@
-"""Shared lifecycle core for the persisted index families (round-10).
+"""The one lifecycle core of the persisted index families.
 
-The three index families — MinHash dedup (``operators/dedup_index.py``),
-hyperplane ANN (``operators/ann_index.py``), IVF
-(``operators/ivf_index.py``) — each hand-rolled the same ~50 lines of
-meta freeze, manifest-resolved reads, tag derivation, and the
-compact/GC skeleton (VERDICT r9 item 6). This module is that shared
-core, so a fourth family is the family-specific staging writers plus
-registration, nothing else.
+The MinHash dedup (``operators/dedup_index.py``), hyperplane ANN
+(``operators/ann_index.py``), IVF (``operators/ivf_index.py``) and BM25
+(``operators/bm25_index.py``) indexes all keep immutable segments named
+by one manifest (``operators/index_manifest.py``) — the reference's
+Druid segment + metadata-store design. A family is its ``Family`` record
+plus its probes:
 
-Everything here is a thin composition over the manifest-pointer commit
-protocol (``operators/index_manifest.py``); family modules keep their
-own signature/assignment logic and their own segment WRITERS (each
-family's pruning story — directory partitioning, in-file sort keys —
-is its physics and stays local to it).
+- its tables, each with ONE layout-aware segment writer
+  ``write(df, seg, meta)`` — staging, compaction and the geometry
+  changes (rebuild, retrain, split) all write through it, so each
+  table's partitioning/sort/bucket layout exists once;
+- ``frames(spark, delta, path, meta) -> {table: df}``, its one
+  signature or assignment pass over a delta;
+- ``create(corpus, params) -> (meta, frames)``, the hook that freezes
+  the geometry from an ingest loop's first batch (the family's build
+  does the same from its own arguments);
+- for an ingest loop, its log table (``pairs``/``probes``) and the
+  function that builds a batch's log frame against the standing index.
 
-``compact_tables`` adds the round-10 concurrency contract: the rewrite
-snapshots the live segment set, stages, then commits with
-``expect_version`` — an append that lands mid-rewrite raises
-``ManifestConflict`` and the compaction retries from the fresh live
-set, so maintenance racing ingest absorbs the new segments instead of
-silently un-committing them (the read-modify-write hazard VERDICT r9
-item 8 names). At 100 TB compaction and ingest genuinely overlap.
+Everything else runs here, once for every family: ``stage`` (frames
+through the writers, overlapped), ``build``, ``append`` (the
+``expect_meta`` retry loop), ``compact`` (conflict-retrying rewrite
+through the same writers, tombstones dropped), ``replace_retrying``
+(the ``expect_version`` commit of compaction and geometry changes),
+``delete_ids``,
+and the ingest driver — ``ingest_batch`` (idempotence mark, log plan
+built and written overlapped with staging, one commit) fed either by
+the scheduled ``pmod(id, n)`` slices or by ONE ``foreachBatch`` stream
+over ``stage_id_slices`` files (``ingest``).
 """
 
 from __future__ import annotations
 
-import json
 from contextlib import contextmanager
-from functools import reduce
+from dataclasses import dataclass
+from functools import partial, reduce
 from pathlib import Path
 from typing import Callable
 
@@ -39,13 +47,13 @@ from insight_de_smart_grid_spark.operators.index_manifest import (
     commit,
     data_bearing,
     gc_unreferenced,
+    has_mark,
     live_segments,
     pinned_segments,
     read_manifest,
+    read_pin,
     stage_segment,
 )
-
-META = "meta.json"
 
 
 def stage_concurrently(*thunks: "Callable[[], object]") -> list:
@@ -53,8 +61,8 @@ def stage_concurrently(*thunks: "Callable[[], object]") -> list:
     guide §2.6 "overlap independent jobs"): a staged segment write at
     sf0.1 is dominated by fixed per-job cost (scheduling, parquet writer
     init, task commit), so N sequential writes pay the fixed cost N
-    times while most cores idle. The families' per-append writes (docs +
-    bands, vectors + bands, postings + doclens, pairs + tables) share no
+    times while most cores idle. The families' per-batch writes (docs +
+    bands, vectors + bands, postings + doclens, log + tables) share no
     lineage beyond an already-persisted upstream frame — Spark's FIFO
     scheduler back-fills the tail of one job with the next job's tasks.
 
@@ -62,17 +70,11 @@ def stage_concurrently(*thunks: "Callable[[], object]") -> list:
     group/description into each worker thread (pinned-thread mode is the
     PySpark default). Exceptions propagate from ``result()``; overwrite
     staging semantics make a half-written sibling segment a replayable
-    orphan, exactly as in the sequential order."""
-    import os
-
-    if len(thunks) == 1 or os.environ.get("SPARK_GRAFT_SEQ_STAGING"):
-        # SPARK_GRAFT_SEQ_STAGING: measurement/debug escape hatch — run
-        # the stages in their original sequential order (same jobs, same
-        # segments) for interleaved A/B timing of the overlap itself
+    orphan, exactly as in the sequential order. Zero thunks is a no-op."""
+    if len(thunks) <= 1:
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import SparkSession
     from pyspark.util import inheritable_thread_target
 
     session = SparkSession.getActiveSession()
@@ -121,16 +123,7 @@ def adaptive_n_buckets(corpus: DataFrame, target_bytes: int = 64 * 1024,
     per-row verify work (jaccard over shingle sets, cosine re-ranks) is
     CPU-dense relative to its bytes. ``hi`` caps metadata blowup; a
     cluster-sized corpus should pin ``n_buckets`` explicitly (it is a
-    frozen layout property of the index). ``SPARK_GRAFT_N_BUCKETS``
-    overrides for A/B."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_N_BUCKETS")
-    if env:
-        try:
-            return max(1, int(env))
-        except ValueError:
-            pass
+    frozen layout property of the index)."""
     size = None
     try:
         stats = corpus._jdf.queryExecution().optimizedPlan().stats()
@@ -140,6 +133,18 @@ def adaptive_n_buckets(corpus: DataFrame, target_bytes: int = 64 * 1024,
     if size is None or not (0 < size < (1 << 62)):
         return 32  # no estimate: the old fixed default
     return max(lo, min(hi, -(-size // target_bytes)))
+
+
+def layout_meta(corpus: DataFrame, layout: str,
+                n_buckets: "int | None" = None) -> dict:
+    """The layout keys a family freezes in its meta: ``layout``, plus
+    the bucket count of a ``"bucketed"`` index — pinned by the caller,
+    else sized from the corpus bytes (``adaptive_n_buckets``)."""
+    if layout != "bucketed":
+        return {"layout": layout}
+    return {"layout": layout,
+            "n_buckets": (n_buckets if n_buckets is not None
+                          else adaptive_n_buckets(corpus))}
 
 
 def pick_join_mode(delta: DataFrame,
@@ -177,48 +182,18 @@ def pick_join_mode(delta: DataFrame,
 
 
 def read_meta(path: str, pin_id: "str | None" = None) -> dict:
-    """The frozen creation-time geometry. Every maintenance entry point
-    starts here: appends must signature/assign identically to the build
-    or buckets/lists from different geometries silently never collide.
-
-    Round-10: the authoritative copy lives IN the manifest (committed
-    atomically with the segments that encode it — rebuild/retrain change
-    geometry and segments in one bump); ``meta.json`` remains as the
-    human-readable mirror and the pre-round-10 fallback. ``pin_id``
-    (round-11) reads the geometry AS OF the pinned snapshot — a
+    """The frozen creation-time geometry, read from the manifest that
+    commits it atomically with the segments encoding it (rebuild/retrain
+    change geometry and segments in one bump). Every maintenance entry
+    point starts here: appends must signature/assign identically to the
+    build or buckets/lists from different geometries silently never
+    collide. ``pin_id`` reads the geometry AS OF the pinned snapshot — a
     rebuild/retrain landing after the pin must not make a pinned probe
     hash into the new bucket/cluster space over the old segments."""
-    if pin_id:
-        from insight_de_smart_grid_spark.operators.index_manifest import (
-            read_pin,
-        )
-
-        pin = read_pin(path, pin_id)
-        if "meta" in pin:
-            return pin["meta"]
-    man = read_manifest(path)
-    if man and "meta" in man:
-        return man["meta"]
-    return json.loads(Path(path, META).read_text())
-
-
-def write_meta(path: str, meta: dict) -> None:
-    Path(path, META).write_text(json.dumps(meta, indent=1) + "\n")
-
-
-def snapshot_meta(path: str) -> "tuple[dict, dict | None]":
-    """(geometry to use, ``expect_meta`` guard) from ONE manifest read —
-    the append-side half of the round-11 geometry-consistency contract:
-    an append signatures/assigns under the returned geometry and commits
-    with the guard, so a rebuild/retrain/split landing in between
-    conflicts the commit instead of leaving the delta keyed in a space
-    probes no longer rank. The guard is None for a pre-round-10 index
-    whose manifest carries no meta (nothing to compare against — legacy
-    behavior preserved)."""
-    man = read_manifest(path)
-    if man and "meta" in man:
-        return man["meta"], man["meta"]
-    return json.loads(Path(path, META).read_text()), None
+    man = read_pin(path, pin_id) if pin_id else read_manifest(path)
+    if man is None:
+        raise FileNotFoundError(f"no committed index at {path}")
+    return man["meta"]
 
 
 def read_table(spark: SparkSession, path: str, table: str,
@@ -280,16 +255,16 @@ def pinned_index(path: str):
         unpin_snapshot(path, pin)
 
 
-def delete_ids(spark: SparkSession, path: str, ids, id_col: str,
+def delete_ids(spark: SparkSession, path: str, ids,
                tag: "str | None" = None) -> dict:
     """Stage a tombstone segment naming the deleted ids and make it
     visible with ONE atomic manifest bump — the delete path of all index
-    families (round-11). ``ids`` is a DataFrame carrying ``id_col`` or a
-    plain iterable of ids. Cost is the id list's size: no index table is
-    read or rewritten here (probes anti-join the tombstones lazily;
-    ``compact_tables(..., tombstone_col=...)`` is the physical drop).
-    A crash before the bump leaves the index unchanged — the staged
-    orphan is invisible and GC-able.
+    families (round-11). ``ids`` is a DataFrame carrying the index's id
+    column or a plain iterable of ids. Cost is the id list's size: no
+    index table is read or rewritten here (probes anti-join the
+    tombstones lazily; ``compact`` is the physical drop). A crash before
+    the bump leaves the index unchanged — the staged orphan is invisible
+    and GC-able.
 
     ``tag``: the same concurrent-writer lever as the append APIs —
     two deleters snapshotting the same version would stage into the
@@ -297,6 +272,7 @@ def delete_ids(spark: SparkSession, path: str, ids, id_col: str,
     overwrite the other (un-deleting documents); concurrent deleters
     pass distinct explicit tags, a single writer (and its crash-retry)
     keeps the deterministic default."""
+    id_col = read_meta(path)["id_col"]
     if not isinstance(ids, DataFrame):
         from insight_de_smart_grid_spark.sources.local_rows import (
             local_rows_df,
@@ -468,7 +444,7 @@ def join_each_segment(spark: SparkSession, path: str, table: str,
          .join(other, on) for s in segs])
 
 
-def stage_id_slices(embeddings: DataFrame, staging: str, n_batches: int,
+def stage_id_slices(corpus: DataFrame, staging: str, n_batches: int,
                     id_col: str) -> None:
     """Stage ``id % n_batches`` slices as one parquet file each with
     strictly ascending mtimes, so a ``maxFilesPerTrigger=1`` file-source
@@ -476,23 +452,21 @@ def stage_id_slices(embeddings: DataFrame, staging: str, n_batches: int,
     source orders batches by modification time). Staged only once: a
     restart of the stream (crash recovery) must see the same file set so
     the checkpoint replays only the failed micro-batch — re-staging
-    would mint new names and replay everything. Shared by the ANN and
-    IVF streaming ingest twins (their probe logs are batching-dependent
-    by design, so arrival order is part of the contract)."""
+    would mint new names and replay everything. Arrival order is part of
+    the ANN/IVF contract (their probe logs are batching-dependent by
+    design); the dedup pair set is slicing-invariant, so any slicing
+    serves it. Zero batches is a no-op."""
     import os
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
-    if Path(staging, "_STAGED").exists():
+    if n_batches <= 0 or Path(staging, "_STAGED").exists():
         return
     Path(staging).mkdir(parents=True, exist_ok=True)
 
     def stage_slice(i: int) -> None:
         tmp = tempfile.mkdtemp(prefix="slice_")
-        (embeddings.filter(
-            F.pmod(F.col(id_col), F.lit(n_batches)) == i)
+        (corpus.filter(F.pmod(F.col(id_col), F.lit(n_batches)) == i)
          .coalesce(1).write.mode("overwrite").parquet(tmp))
         part = next(Path(tmp).glob("part-*.parquet"))
         shutil.move(str(part), Path(staging) / f"slice_{i}.parquet")
@@ -513,72 +487,254 @@ def stage_id_slices(embeddings: DataFrame, staging: str, n_batches: int,
     Path(staging, "_STAGED").touch()
 
 
-def run_slice_stream(spark: SparkSession, staging: str, ck_dir: str,
-                     ingest) -> None:
-    """Drive ``ingest(batch_df, batch_id)`` over the staged slice files
-    with REAL Structured Streaming micro-batches (availableNow, one file
-    per trigger), blocking until the backlog drains."""
-    schema = spark.read.parquet(f"{staging}/slice_0.parquet").schema
-    stream = (spark.readStream.schema(schema).format("parquet")
-              .option("maxFilesPerTrigger", "1")
-              .option("pathGlobFilter", "slice_*.parquet").load(staging))
-    q = (stream.writeStream.foreachBatch(ingest)
-         .option("checkpointLocation", ck_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-
-def compact_tables(spark: SparkSession, path: str,
-                   rewriters: "dict[str, Callable[[DataFrame, str], None]]",
-                   max_attempts: int = 5,
-                   tombstone_col: "str | None" = None) -> None:
-    """The shared compaction skeleton: for each table, read the live
-    union, hand it to the family's rewriter (which owns partitioning and
-    sort layout) targeting a fresh staged segment, then swap every
-    rewritten table's live list in ONE manifest bump and GC the
-    superseded segments.
-
-    The bump carries ``expect_version`` from the pre-rewrite snapshot:
-    if ingest committed meanwhile, the stale rewrite is abandoned
-    (its segments become GC-able orphans) and the whole rewrite retries
-    against the fresh live set — the appended segments are absorbed into
-    the compacted output instead of being dropped by a stale
-    ``replaces`` list.
-
-    ``tombstone_col`` (round-11): the family's id column. When set and
-    live tombstones exist, every rewritten table is anti-joined against
-    the deleted-id set before its rewrite — the PHYSICAL drop the
-    ``delete_ids`` tombstones defer — and the tombstone table itself is
-    cleared in the SAME manifest replace, so a reader sees either
-    (tombstones live, rows still present but masked) or (tombstones
-    gone, rows gone), never a state that resurrects a deleted id. The
-    expect_version retry covers a delete committing mid-rewrite exactly
-    like it covers an append."""
+def replace_retrying(path: str, what: str, step, max_attempts: int = 5
+                     ) -> dict:
+    """Commit a table REPLACEMENT with ``expect_version`` and retry from
+    a fresh snapshot on conflict — the one concurrency loop behind
+    compaction and every geometry change (rebuild, retrain, split).
+    ``step(manifest)`` stages the replacement from that snapshot and
+    returns ``(replaces, meta)`` (meta None carries the live geometry
+    forward), or None when there is nothing to commit. An append or
+    delete landing between the snapshot and the commit conflicts the
+    stale replacement (its segments become GC-able orphans) and the
+    step re-runs against the fresh live set, absorbing the write instead
+    of dropping it from a stale ``replaces`` list (VERDICT r9 item 8).
+    Returns the committed (or unchanged) meta."""
     for _ in range(max_attempts):
         man = read_manifest(path)
-        version = man["version"] if man else 0
-        tombs = (live_tombstones(spark, path)
-                 if tombstone_col is not None else None)
-        tag = f"c{version + 1:06d}"
+        out = step(man)
+        if out is None:
+            return man["meta"]
+        replaces, meta = out
+        try:
+            man = commit(path, replaces=replaces, meta=meta,
+                         expect_version=man["version"])
+        except ManifestConflict:
+            continue
+        gc_unreferenced(path, list(replaces))
+        return man["meta"]
+    raise ManifestConflict(
+        f"{what} of {path} lost the commit race {max_attempts} times")
+
+
+@dataclass(frozen=True)
+class Family:
+    """One index family's record (see the module docstring).
+    ``tables`` maps each table to its segment writer; ``geometry`` names
+    the tables only a geometry change rewrites (compaction leaves them
+    alone); ``log``/``log_frame`` are the ingest loop's output table and
+    its per-batch builder ``(spark, batch, path, meta, frames, params,
+    first) -> DataFrame | None`` (None: nothing to log this batch)."""
+
+    tables: "dict[str, Callable[[DataFrame, str, dict], None]]"
+    frames: "Callable[[SparkSession, DataFrame, str, dict], dict]"
+    create: "Callable[[DataFrame, dict], tuple[dict, dict]]"
+    log: str = ""
+    log_frame: "Callable[..., DataFrame | None] | None" = None
+    geometry: "tuple[str, ...]" = ()
+
+
+def _release(frames: dict) -> None:
+    """Unpersist the frames a family cached for sharing (dedup's one
+    shingle pass) once every consumer has been staged."""
+    for df in frames.values():
+        if df.is_cached:
+            df.unpersist()
+
+
+def stage(fam: Family, frames: dict, path: str, meta: dict, tag: str,
+          *also: "Callable[[], object]") -> dict:
+    """Write each of the family's tables present in ``frames`` to a
+    fresh ``seg-{tag}`` through the table's writer, overlapped with any
+    ``also`` thunks (an ingest batch's log write — submitted first: its
+    plan-time jobs make it the longest chain); returns the staged
+    ``{table: [segment]}`` for one later commit. Overwrite mode makes a
+    retried stage replace its own orphan; nothing is visible yet."""
+    segs = {t: stage_segment(f"{path}/{t}", tag)
+            for t in fam.tables if t in frames}
+    stage_concurrently(*also, *[partial(fam.tables[t], frames[t], seg, meta)
+                                for t, seg in segs.items()])
+    return {t: [seg] for t, seg in segs.items()}
+
+
+def build(fam: Family, path: str, meta: dict, frames: dict,
+          marks: "list[str] | None" = None) -> dict:
+    """Create (or replace) an index from a corpus's frames: stage every
+    table, then ONE bump carries the segments, the geometry meta and any
+    idempotence marks; superseded segments are GC'd. Returns the meta."""
+    try:
+        staged = stage(fam, frames, path, meta, "base")
+    finally:
+        _release(frames)
+    commit(path, replaces=staged, marks=marks, meta=meta)
+    gc_unreferenced(path)
+    return meta
+
+
+def append(spark: SparkSession, fam: Family, delta: DataFrame, path: str,
+           tag: "str | None" = None, max_attempts: int = 5) -> dict:
+    """Append a delta under the frozen geometry. The job reads ONLY the
+    delta (plus a family's geometry table) — never the index's data
+    tables — so append cost tracks delta size; the staged segments
+    become visible in ONE manifest bump, and a crash before it leaves
+    the index unchanged.
+
+    The bump carries an ``expect_meta`` guard (round-11): a rebuild,
+    retrain or split swapping the geometry between this append's
+    signature/assignment pass and its commit would leave the delta keyed
+    in a space probes no longer rank, so the commit conflicts and the
+    append re-reads the geometry and re-stages.
+
+    ``tag`` (ADVICE r10): CONCURRENT appenders must pass distinct
+    explicit tags — the default ``next_tag`` derives from the snapshot
+    version, so two writers appending from the same snapshot would stage
+    into the same segment directory and one delta would silently
+    overwrite the other. A single writer (and any crash-retry of it)
+    keeps the deterministic default."""
+    for _ in range(max_attempts):
+        meta = read_meta(path)
+        frames = fam.frames(spark, delta, path, meta)
+        try:
+            staged = stage(fam, frames, path, meta,
+                           tag or next_tag(path, "a"))
+        finally:
+            _release(frames)
+        try:
+            commit(path, adds=staged, expect_meta=meta)
+        except ManifestConflict:
+            continue
+        return meta
+    raise ManifestConflict(
+        f"append to {path} lost the geometry race {max_attempts} times")
+
+
+def compact(spark: SparkSession, fam: Family, path: str,
+            max_attempts: int = 5) -> int:
+    """Rewrite every non-geometry table's accumulated segments to ONE
+    segment through the table's own writer and swap them in with one
+    ``expect_version`` bump (``replace_retrying``: an append committing
+    mid-rewrite is absorbed on the retry, never dropped); returns the
+    live parquet file count after.
+
+    Tombstones (round-11): when live ones exist, every rewritten table
+    is anti-joined against the deleted-id set before its rewrite — the
+    PHYSICAL drop ``delete_ids`` defers — and the tombstone table is
+    cleared in the SAME replace, so a reader sees either (tombstones
+    live, rows present but masked) or (tombstones gone, rows gone),
+    never a state that resurrects a deleted id."""
+    meta = read_meta(path)
+    id_col = meta["id_col"]
+
+    def step(man: dict):
+        tombs = live_tombstones(spark, path)
+        tag = f"c{man['version'] + 1:06d}"
         staged = {}
-        for table, rewrite in rewriters.items():
+        for table, write in fam.tables.items():
+            if table in fam.geometry:
+                continue
             seg = stage_segment(f"{path}/{table}", tag)
             df = read_table(spark, path, table)
             if tombs is not None:
-                df = df.join(
-                    F.broadcast(tombs.select(
-                        F.col(tombs.columns[0]).alias(tombstone_col))),
-                    tombstone_col, "left_anti")
-            rewrite(df, seg)
+                df = df.join(F.broadcast(tombs.select(
+                    F.col(tombs.columns[0]).alias(id_col))),
+                    id_col, "left_anti")
+            write(df, seg, meta)
             staged[table] = [seg]
         if tombs is not None:
             staged[TOMBSTONES] = []     # cleared in the same atomic bump
-        try:
-            commit(path, replaces=staged, expect_version=version)
-        except ManifestConflict:
-            continue
-        gc_unreferenced(path, list(rewriters)
-                        + ([TOMBSTONES] if tombs is not None else []))
+        return staged, None
+
+    replace_retrying(path, "compaction", step, max_attempts)
+    return live_file_count(path, tuple(fam.tables))
+
+
+def ingest_batch(spark: SparkSession, fam: Family, batch: DataFrame,
+                 path: str, params: dict, tag: str) -> None:
+    """One ingest step, committed atomically: the batch's log (built
+    against the STANDING index — the staged segments are invisible
+    until the commit) and its own index segments are staged
+    concurrently and published by ONE manifest bump. The log plan is
+    built inside its thunk, so plan-time jobs (the IVF probed-cluster
+    collect) overlap the staging too. A crash anywhere before the bump
+    leaves index and log unchanged; a replay re-stages the same
+    ``seg-{tag}`` names with overwrite and commits once.
+
+    "First" means no manifest committed yet — not "batch 0" — so a
+    crash before the first commit replays down the build path again.
+    The first batch freezes the geometry (``fam.create``) and its meta
+    rides the same bump.
+
+    The bump records an idempotence mark for the tag (ADVICE r9): a
+    micro-batch replayed because the crash hit AFTER the bump but
+    BEFORE the streaming checkpoint committed is skipped outright —
+    without the mark the replay would probe an index that already
+    contains the batch and rewrite a live, manifest-referenced segment
+    in place."""
+    mark = f"ingested-{tag}"
+    if has_mark(path, mark):
         return
-    raise ManifestConflict(
-        f"compaction of {path} lost the commit race {max_attempts} times")
+    man = read_manifest(path)
+    first = man is None
+    if first:
+        meta, frames = fam.create(batch, params)
+    else:
+        meta = man["meta"]
+        frames = fam.frames(spark, batch, path, meta)
+    seg_log = stage_segment(f"{path}/{fam.log}", tag)
+    logged = []
+
+    def write_log() -> None:
+        log = fam.log_frame(spark, batch, path, meta, frames, params, first)
+        if log is not None:
+            log.write.mode("overwrite").parquet(seg_log)
+            logged.append(seg_log)
+
+    try:
+        staged = stage(fam, frames, path, meta, tag, write_log)
+    finally:
+        _release(frames)
+    if logged:
+        staged[fam.log] = logged
+    commit(path, adds=staged, marks=[mark], meta=meta if first else None)
+
+
+def ingest(spark: SparkSession, fam: Family, corpus: DataFrame, path: str,
+           params: dict, n_batches: int, stream_dir: "str | None" = None,
+           compact_every: "int | None" = None) -> DataFrame:
+    """The index's whole lifecycle as one ingest loop over ``n_batches``
+    slices of the corpus (slice = ``id % n_batches``), each run through
+    ``ingest_batch``; returns the committed log.
+
+    Scheduled (``stream_dir`` None): the slices are filters replayed in
+    slice order — the reference's Airflow-triggered micro-batch mode
+    (SURVEY ST5) recast as corpus curation — with ``compact_every=k``
+    compacting after every k-th batch (result-invariant; only the live
+    file count changes). Streaming: the slices are staged once as
+    mtime-ordered files (``stage_id_slices``) and REAL Structured
+    Streaming micro-batches (availableNow, one file per trigger,
+    ``foreachBatch``) deliver them in the same order, checkpointed under
+    ``stream_dir`` so a restart replays only the failed batch."""
+    id_col = params["id_col"]
+    if stream_dir is None:
+        for i in range(n_batches):
+            batch = corpus.filter(
+                F.pmod(F.col(id_col), F.lit(n_batches)) == i)
+            ingest_batch(spark, fam, batch, path, params, f"b{i}")
+            if compact_every and (i + 1) % compact_every == 0:
+                compact(spark, fam, path)
+        return read_table(spark, path, fam.log)
+    staging = f"{stream_dir}/staged"
+    stage_id_slices(corpus, staging, n_batches, id_col)
+
+    def on_batch(batch: DataFrame, batch_id: int) -> None:
+        if not batch.isEmpty():
+            ingest_batch(spark, fam, batch, path, params, f"b{batch_id}")
+
+    schema = spark.read.parquet(f"{staging}/slice_0.parquet").schema
+    (spark.readStream.schema(schema).format("parquet")
+     .option("maxFilesPerTrigger", "1")
+     .option("pathGlobFilter", "slice_*.parquet").load(staging)
+     .writeStream.foreachBatch(on_batch)
+     .option("checkpointLocation", f"{stream_dir}/ck")
+     .trigger(availableNow=True).start().awaitTermination())
+    return read_table(spark, path, fam.log)

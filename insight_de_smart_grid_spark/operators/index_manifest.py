@@ -72,7 +72,7 @@ class ManifestConflict(Exception):
 
 def read_manifest(path: str) -> "dict | None":
     """The live manifest, or None for an index that has never committed
-    one (including round-8 layouts written before this protocol)."""
+    one."""
     p = Path(path, MANIFEST)
     if not p.exists():
         return None
@@ -80,21 +80,13 @@ def read_manifest(path: str) -> "dict | None":
 
 
 def live_segments(path: str, table: str) -> list[str]:
-    """Absolute segment paths a reader may scan for ``table``.
-
-    Falls back to the bare ``{path}/{table}`` directory when no manifest
-    exists (a pre-manifest round-8 index remains readable)."""
+    """Absolute segment paths a reader may scan for ``table`` — empty
+    when no manifest was ever committed (staged segments of a build that
+    crashed before its first commit are NOT live) or the table is
+    absent."""
     man = read_manifest(path)
     if man is None:
-        # pre-manifest round-8 layout only: a directory that already
-        # holds seg-* children is a staged-but-never-committed index —
-        # those segments are NOT live (nothing was ever committed)
-        legacy = Path(path, table)
-        if not legacy.exists():
-            return []
-        if any(c.name.startswith("seg-") for c in legacy.iterdir()):
-            return []
-        return [str(legacy)]
+        return []
     return [str(Path(path, rel)) for rel in man["tables"].get(table, [])]
 
 

@@ -25,8 +25,8 @@ partition pruning.
     quantizer at the cos-0.9 design point.
 
   * ``centroids/`` — the ``n_centroids`` frozen (c_id, cv) rows. This
-    IS the geometry (the meta.json analog, k rows of it): appends read
-    it and nothing else.
+    IS the geometry (the manifest meta's analog, k rows of it): appends
+    read it and nothing else.
   * ``lists/`` — the inverted lists ``(id, v)`` PARTITIONED BY
     ``cluster``: each vector stored once, in its one assigned list —
     IVF is naturally a single-copy index. (Deliberately NOT offered in
@@ -39,13 +39,12 @@ partition pruning.
     corpus before any join. Batch probes bound the driver-side cluster
     union by n_centroids regardless of delta size.)
 
-- ``append_ivf_index``: assign ONLY the delta against the frozen
-  centroid broadcast (never re-derives centroids — re-deriving is what
-  a rebuild is for; a drifted quantizer would strand existing vectors
-  in stale lists) and commit the delta's list segments with one atomic
-  manifest bump.
-- ``compact_ivf_index``: rewrite accumulated segments to one sorted
-  segment, manifest replace, GC — same lifecycle as the other families.
+- The lifecycle — build, delta-only append (assigned against the frozen
+  centroid broadcast; re-deriving centroids is what a retrain is for),
+  compaction of ``lists/`` (centroids are geometry, never compacted),
+  tombstone deletes, and the scheduled/streaming ingest loops — is
+  ``operators/index_base.py``'s, driven by this module's ``FAMILY``
+  record; retrain and hot-cluster splits stage through the same writers.
 - ``query_ivf_topk``: rank the ``n_centroids`` frozen centroids against
   the query (one k-row job), collect the ``nprobe`` winning cluster ids
   (driver-bounded: nprobe ints — the ``query_buckets`` pattern), and
@@ -64,37 +63,22 @@ extension block).
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.operators import index_base
-from insight_de_smart_grid_spark.operators.index_base import (
-    live_file_count,
-    next_tag,
-    read_table,
-    write_meta,
-)
-from insight_de_smart_grid_spark.operators.index_manifest import (
-    ManifestConflict,
-    commit,
-    has_mark,
-    stage_segment,
-)
 from insight_de_smart_grid_spark.operators.similarity import _dot, _norm
 from insight_de_smart_grid_spark.sources.local_rows import local_rows_df
 
-_META = index_base.META
 _CENTS = "centroids"
 _LISTS = "lists"
 _PROBES = "probes"
 
-# shared lifecycle core (round-10, VERDICT r9 item 6) — the private names
-# are kept as the family's API surface (tests and plans read through them)
+# the private names are kept as the family's API surface (tests and
+# plans read through them)
 _read_meta = index_base.read_meta
-_read_table = read_table
+_read_table = index_base.read_table
 
 
 def _nonzero(embeddings: DataFrame, vec_col: str,
@@ -131,13 +115,25 @@ def _assign(emb: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
                        id_col, "v")
 
 
-def _stage_lists(assigned: DataFrame, path: str, id_col: str,
-                 tag: str) -> dict:
-    seg = stage_segment(f"{path}/{_LISTS}", tag)
-    (assigned.repartition("cluster")
-     .sortWithinPartitions("cluster", id_col)
+def _write_lists(df: DataFrame, seg: str, meta: dict) -> None:
+    """The inverted lists, partitioned by ``cluster`` (PartitionFilters
+    prune a probe to its nprobe lists), sorted by id within each."""
+    (df.repartition("cluster")
+     .sortWithinPartitions("cluster", meta["id_col"])
      .write.mode("overwrite").partitionBy("cluster").parquet(seg))
-    return {_LISTS: [seg]}
+
+
+def _write_centroids(df: DataFrame, seg: str, meta: dict) -> None:
+    df.coalesce(1).write.mode("overwrite").parquet(seg)
+
+
+def _frames(spark: SparkSession, delta: DataFrame, path: str,
+            meta: dict) -> dict:
+    """The delta's assignment pass against the FROZEN centroids — the
+    k-row geometry table is the only index table it reads."""
+    return {_LISTS: _assign(_nonzero(delta, meta["vec_col"], meta["id_col"]),
+                            _read_table(spark, path, _CENTS),
+                            meta["id_col"])}
 
 
 def train_kmeans_centroids(embeddings: DataFrame, n_centroids: int,
@@ -232,24 +228,21 @@ def kmeans_centroids_cte_sql(n_centroids: int, n_iter: int = 2,
     return ",\n".join(ctes)
 
 
-def build_ivf_index(embeddings: DataFrame, path: str,
-                    n_centroids: int = 16, vec_col: str = "embedding",
-                    id_col: str = "vec_id", quantizer: str = "portable",
-                    n_iter: int = 2, train_rows: int = 256,
-                    marks: "list[str] | None" = None) -> dict:
-    """Create the index at ``path``; the centroid set is frozen for the
-    index's lifetime (stored as the ``centroids/`` table — the geometry
-    appends read, and the only thing they read).
+def _quantize(embeddings: DataFrame, n_centroids: int, vec_col: str,
+              id_col: str, quantizer: str, n_iter: int,
+              train_rows: int) -> "tuple[dict, dict]":
+    """Freeze a quantizer over ``embeddings``: the geometry meta and the
+    frames of both tables (the centroids and every nonzero vector
+    assigned against them). Shared by the build, an ingest loop's first
+    batch, and the retrain (over the index's own vectors).
 
     ``quantizer="portable"``: centroids are the ``n_centroids``
-    LOWEST-id nonzero corpus vectors (round-10, ADVICE r9: formerly
+    LOWEST-id nonzero vectors (round-10, ADVICE r9: formerly
     ``id < n_centroids``, which silently built an EMPTY quantizer on a
-    corpus whose ids don't start near 0 — every vector then dropped).
-    Raises if the corpus has fewer nonzero vectors than centroids.
+    corpus whose ids don't start near 0 — every vector then dropped);
+    raises if there are fewer nonzero vectors than centroids.
     ``quantizer="kmeans"``: the trained, recall-bearing quantizer
-    (``train_kmeans_centroids``), still frozen at creation and still
-    value-oracled (``kmeans_centroids_cte_sql``)."""
-    spark = embeddings.sparkSession
+    (``train_kmeans_centroids``)."""
     emb = _nonzero(embeddings, vec_col, id_col)
     if quantizer == "kmeans":
         rows = train_kmeans_centroids(embeddings, n_centroids, n_iter,
@@ -259,7 +252,8 @@ def build_ivf_index(embeddings: DataFrame, path: str,
         # partitions whose coalesce(1) staged write pays one SEQUENTIAL
         # Python-worker roundtrip per partition — measured 5.5-6.7 s
         # for this 8-row write vs ~0.2 s through one JVM-held batch
-        cents = local_rows_df(spark, rows, "c_id int, cv array<double>")
+        cents = local_rows_df(embeddings.sparkSession, rows,
+                              "c_id int, cv array<double>")
     else:
         cents = (emb.orderBy(id_col).limit(n_centroids)
                  .select(F.col(id_col).alias("c_id"),
@@ -269,14 +263,6 @@ def build_ivf_index(embeddings: DataFrame, path: str,
             raise ValueError(
                 f"portable quantizer needs >= n_centroids={n_centroids} "
                 f"nonzero corpus vectors, got {n_got}")
-    Path(path).mkdir(parents=True, exist_ok=True)
-    seg_c = stage_segment(f"{path}/{_CENTS}", "base")
-    # the k-row centroid write and the full assignment write share only
-    # the cents plan — overlap them (round-11, guide §2.6)
-    _, staged = index_base.stage_concurrently(
-        lambda: cents.coalesce(1).write.mode("overwrite").parquet(seg_c),
-        lambda: _stage_lists(_assign(emb, cents, id_col), path, id_col,
-                             "base"))
     meta = {"n_centroids": n_centroids, "vec_col": vec_col,
             "id_col": id_col, "quantizer": quantizer,
             # bumped by every geometry change (retrain/split) so an
@@ -286,63 +272,64 @@ def build_ivf_index(embeddings: DataFrame, path: str,
             "geom_epoch": 0}
     if quantizer == "kmeans":
         meta.update({"n_iter": n_iter, "train_rows": train_rows})
-    write_meta(path, meta)   # mirror; the manifest copy is authoritative
-    commit(path, replaces={**staged, _CENTS: [seg_c]}, marks=marks,
-           meta=meta)
-    index_base.gc_unreferenced(path)
-    return meta
+    return meta, {_CENTS: cents, _LISTS: _assign(emb, cents, id_col)}
+
+
+def _create(corpus: DataFrame, params: dict) -> "tuple[dict, dict]":
+    return _quantize(corpus, params["n_centroids"], params["vec_col"],
+                     params["id_col"], "portable", 2, 256)
+
+
+def _probe_log(spark: SparkSession, batch: DataFrame, path: str,
+               meta: dict, frames: dict, params: dict,
+               first: bool) -> "DataFrame | None":
+    """A batch's top-k within its probed lists of everything ingested
+    before it (one batched probe job, whose probed-cluster collect runs
+    at plan-build time — inside the staging overlap); the build-only
+    first batch probes nothing."""
+    if first:
+        return None
+    return query_ivf_batch_topk(spark, path, batch, k=params["k"],
+                                nprobe=params["nprobe"])
+
+
+FAMILY = index_base.Family(
+    tables={_CENTS: _write_centroids, _LISTS: _write_lists},
+    frames=_frames, create=_create, log=_PROBES, log_frame=_probe_log,
+    geometry=(_CENTS,))
+
+
+def build_ivf_index(embeddings: DataFrame, path: str,
+                    n_centroids: int = 16, vec_col: str = "embedding",
+                    id_col: str = "vec_id", quantizer: str = "portable",
+                    n_iter: int = 2, train_rows: int = 256,
+                    marks: "list[str] | None" = None) -> dict:
+    """Create the index at ``path``; the centroid set is frozen for the
+    index's lifetime (stored as the ``centroids/`` table — the geometry
+    appends read, and the only thing they read). ``quantizer`` picks
+    the portable or the trained k-means quantizer (``_quantize``), both
+    value-oracled (``kmeans_centroids_cte_sql`` replays the training)."""
+    meta, frames = _quantize(embeddings, n_centroids, vec_col, id_col,
+                             quantizer, n_iter, train_rows)
+    return index_base.build(FAMILY, path, meta, frames, marks)
 
 
 def append_ivf_index(new_vectors: DataFrame, path: str,
                      tag: "str | None" = None) -> dict:
     """Assign a delta against the FROZEN centroids and commit its list
-    segments in one manifest bump. The job reads the delta plus the
-    k-row centroid table — never the inverted lists (plan-asserted), so
-    append cost tracks delta size.
-
-    ``tag`` (round-11, ADVICE r10): CONCURRENT appenders must pass
-    distinct explicit tags — the version-derived default would stage two
-    same-snapshot writers into one segment directory, silently losing a
-    delta. Single writers (and crash-retries) keep the default.
-
-    The commit carries an ``expect_meta`` guard (round-11): a retrain or
-    hot-cluster split swapping the quantizer between this append's
-    assignment and its commit would leave the delta in obsolete cluster
-    ids probes no longer rank. On conflict the append re-reads the
-    centroids and re-assigns."""
-    spark = new_vectors.sparkSession
-    for _ in range(5):
-        meta, guard = index_base.snapshot_meta(path)
-        t = tag or next_tag(path, "a")
-        emb = _nonzero(new_vectors, meta["vec_col"], meta["id_col"])
-        cents = _read_table(spark, path, _CENTS)
-        staged = _stage_lists(_assign(emb, cents, meta["id_col"]), path,
-                              meta["id_col"], t)
-        try:
-            commit(path, adds=staged, expect_meta=guard)
-        except ManifestConflict:
-            continue
-        return meta
-    raise ManifestConflict(
-        f"append to {path} lost the geometry race 5 times")
+    segments in one bump (``index_base.append``). The job reads the
+    delta plus the k-row centroid table — never the inverted lists
+    (plan-asserted) — and its ``expect_meta`` guard re-assigns the delta
+    if a retrain or split swaps the quantizer before it commits."""
+    return index_base.append(new_vectors.sparkSession, FAMILY, new_vectors,
+                             path, tag)
 
 
 def compact_ivf_index(spark: SparkSession, path: str) -> int:
     """Rewrite the accumulated list segments to one sorted segment per
-    cluster partition; manifest replace + GC via the shared skeleton
-    (retries from a fresh snapshot if an append commits mid-rewrite).
-    Centroids are immutable (one k-row segment for the index's
-    lifetime)."""
-    meta = _read_meta(path)
-
-    def rw_lists(df: DataFrame, seg: str) -> None:
-        (df.repartition("cluster")
-         .sortWithinPartitions("cluster", meta["id_col"])
-         .write.mode("overwrite").partitionBy("cluster").parquet(seg))
-
-    index_base.compact_tables(spark, path, {_LISTS: rw_lists},
-                              tombstone_col=meta["id_col"])
-    return live_file_count(path, (_CENTS, _LISTS))
+    cluster partition (``index_base.compact``). Centroids are immutable
+    geometry (one k-row segment until a retrain or split)."""
+    return index_base.compact(spark, FAMILY, path)
 
 
 def delete_from_ivf_index(spark: SparkSession, path: str, ids,
@@ -353,8 +340,7 @@ def delete_from_ivf_index(spark: SparkSession, path: str, ids,
     tombstones in the same atomic replace. Centroids are geometry, not
     corpus rows — a deleted vector's centroid stays (retrain is the
     geometry lever)."""
-    return index_base.delete_ids(spark, path, ids,
-                                 _read_meta(path)["id_col"], tag)
+    return index_base.delete_ids(spark, path, ids, tag)
 
 
 def auto_nprobe(sims: "list[tuple[int, float]]",
@@ -551,73 +537,26 @@ def query_ivf_batch_topk(spark: SparkSession, path: str,
             .filter(F.col("rn") <= k).drop("rn"))
 
 
-def _ivf_ingest_batch(spark: SparkSession, batch: DataFrame, path: str,
-                      build_kwargs: dict, k: int, nprobe: int,
-                      tag: str, first: bool) -> None:
-    """One IVF ingest step, committed atomically (the ANN loop's
-    ``_ann_ingest_batch`` shape): probe the arriving slice against the
-    STANDING index with one batched job, stage the probe output AND the
-    slice's assigned list segments, publish both in a single manifest
-    bump carrying the batch's idempotence mark — a replay of an
-    already-committed batch (crash after commit, before the streaming
-    checkpoint) is detected and skipped outright."""
-    mark = f"ingested-{tag}"
-    if has_mark(path, mark):
-        return
-    if first:
-        build_ivf_index(batch, path, marks=[mark], **build_kwargs)
-        return
-    meta = _read_meta(path)
-    seg_p = stage_segment(f"{path}/{_PROBES}", tag)
-    emb = _nonzero(batch, meta["vec_col"], meta["id_col"])
-    cents = _read_table(spark, path, _CENTS)
-
-    def w_probe() -> None:
-        # built INSIDE the thunk (round-12): query_ivf_batch_topk runs a
-        # probed-cluster collect job at plan-build time, which previously
-        # serialized ahead of the overlap — both the collect and the
-        # write now back-fill the list staging (guide §2.6). Reads the
-        # index AS-OF now either way: staged lists are invisible until
-        # the commit below.
-        probe = query_ivf_batch_topk(spark, path, batch, k=k,
-                                     nprobe=nprobe)
-        probe.write.mode("overwrite").parquet(seg_p)
-
-    _, staged = index_base.stage_concurrently(
-        w_probe,
-        lambda: _stage_lists(_assign(emb, cents, meta["id_col"]), path,
-                             meta["id_col"], tag))
-    commit(path, adds={**staged, _PROBES: [seg_p]}, marks=[mark])
-
-
 def ingest_ivf_index(spark: SparkSession, embeddings: DataFrame,
                      path: str, n_batches: int = 4, k: int = 5,
                      n_centroids: int = 8, nprobe: int = 2,
                      vec_col: str = "embedding",
                      id_col: str = "vec_id") -> DataFrame:
-    """The IVF index's whole lifecycle as one scheduled-ingest loop —
-    the third family joins the dedup and ANN ingest stories (VERDICT r9
-    item 7). The corpus arrives as ``id % n_batches`` slices in slice
-    order; slice 0 creates the index (portable quantizer — the frozen
+    """The IVF index's whole lifecycle as one scheduled-ingest loop
+    (``index_base.ingest``; VERDICT r9 item 7): slice 0 (``id %
+    n_batches``) creates the index (portable quantizer — the frozen
     geometry is the lowest-``n_centroids`` nonzero ids of slice 0),
     every later slice is IVF-probed against the index of everything
     ingested BEFORE it (one ``query_ivf_batch_topk`` job) and then
     appended, probe output and list segments committed in one manifest
-    bump. The probe log is batching-DEPENDENT by design (each query
-    ranks only earlier arrivals within its probed clusters), so the
-    static slices register against a DuckDB twin that reproduces
-    "earlier slice" as ``cand % n < query % n``
-    (``ivf_index_ingest_oracle_sql``). Returns the committed probe log
-    (query_id, <id_col>, cos_sim)."""
-    Path(path).mkdir(parents=True, exist_ok=True)
-    build_kwargs = {"n_centroids": n_centroids, "vec_col": vec_col,
-                    "id_col": id_col}
-    for i in range(n_batches):
-        batch = embeddings.filter(
-            F.pmod(F.col(id_col), F.lit(n_batches)) == i)
-        _ivf_ingest_batch(spark, batch, path, build_kwargs, k, nprobe,
-                          tag=f"b{i}", first=(i == 0))
-    return _read_table(spark, path, _PROBES)
+    bump. The probe log is batching-DEPENDENT by design, so the static
+    slices register against a DuckDB twin that reproduces "earlier
+    slice" as ``cand % n < query % n`` (``ivf_index_ingest_oracle_sql``).
+    Returns the committed probe log (query_id, <id_col>, cos_sim)."""
+    return index_base.ingest(
+        spark, FAMILY, embeddings, path,
+        {"n_centroids": n_centroids, "vec_col": vec_col, "id_col": id_col,
+         "k": k, "nprobe": nprobe}, n_batches)
 
 
 def streaming_ingest_ivf(spark: SparkSession, embeddings: DataFrame,
@@ -626,26 +565,12 @@ def streaming_ingest_ivf(spark: SparkSession, embeddings: DataFrame,
                          vec_col: str = "embedding",
                          id_col: str = "vec_id") -> DataFrame:
     """``ingest_ivf_index`` driven by REAL Structured Streaming
-    micro-batches — the same mtime-pinned slice staging and
-    one-file-per-trigger drive as the ANN twin
-    (``index_base.stage_id_slices`` / ``run_slice_stream``), the same
-    probe-then-append body, the same static-slice oracle."""
-    staging = f"{base_dir}/staged"
-    idx_path = f"{base_dir}/index"
-    Path(idx_path).mkdir(parents=True, exist_ok=True)
-    build_kwargs = {"n_centroids": n_centroids, "vec_col": vec_col,
-                    "id_col": id_col}
-    index_base.stage_id_slices(embeddings, staging, n_batches, id_col)
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        first = index_base.read_manifest(idx_path) is None
-        _ivf_ingest_batch(spark, batch_df, idx_path, build_kwargs, k,
-                          nprobe, tag=f"b{batch_id}", first=first)
-
-    index_base.run_slice_stream(spark, staging, f"{base_dir}/ck", ingest)
-    return _read_table(spark, idx_path, _PROBES)
+    micro-batches over mtime-ordered slice files — the same body, the
+    same static-slice oracle."""
+    return index_base.ingest(
+        spark, FAMILY, embeddings, f"{base_dir}/index",
+        {"n_centroids": n_centroids, "vec_col": vec_col, "id_col": id_col,
+         "k": k, "nprobe": nprobe}, n_batches, stream_dir=base_dir)
 
 
 def ivf_index_ingest_oracle_sql(n_batches: int = 4, k: int = 5,
@@ -1010,10 +935,8 @@ def split_hot_clusters(spark: SparkSession, path: str,
     cluster once; run it again if a pathological half still exceeds the
     bound (each pass is one lists rewrite, the same cost class as
     compaction). Returns the new meta."""
-    for _ in range(max_attempts):
-        man = index_base.read_manifest(path)
-        version = man["version"] if man else 0
-        meta = dict(_read_meta(path))
+    def step(man: dict):
+        meta = dict(man["meta"])
         id_col = meta["id_col"]
         lists = _read_table(spark, path, _LISTS)
         counts = {r.cluster: r.n for r in
@@ -1023,7 +946,7 @@ def split_hot_clusters(spark: SparkSession, path: str,
         hot = sorted(c for c, n in counts.items()
                      if n > max_share * total)
         if not hot:
-            return meta
+            return None
         cents = _read_table(spark, path, _CENTS)
         c_ids = [r.c_id for r in cents.select("c_id").collect()]  # k rows
         max_id = max(c_ids)
@@ -1062,7 +985,7 @@ def split_hot_clusters(spark: SparkSession, path: str,
                 .agg(F.count_distinct("side").alias("ns"))
                 .filter(F.col("ns") == 2).select("cluster").collect())
             if not survivor_hot:      # every cut was one-sided: no-op
-                return meta
+                return None
             reassigned = (moved.filter(F.col("cluster")
                                        .isin(survivor_hot))
                           .select(F.when(F.col("side"), F.col("new_id"))
@@ -1097,30 +1020,20 @@ def split_hot_clusters(spark: SparkSession, path: str,
                 ~F.col("c_id").isin(survivor_hot))
             cents_out = old_cents.unionByName(new_cents)
 
-            tag = next_tag(path, "s")
-            seg_c = stage_segment(f"{path}/{_CENTS}", tag)
             # the k-row centroid write and the moved-lists write share
-            # only the cents plan — overlap them (round-11, guide §2.6)
-            _, staged = index_base.stage_concurrently(
-                lambda: (cents_out.coalesce(1).write.mode("overwrite")
-                         .parquet(seg_c)),
-                lambda: _stage_lists(new_lists, path, id_col, tag))
+            # only the cents plan — overlapped by the core's stage
+            staged = index_base.stage(
+                FAMILY, {_CENTS: cents_out, _LISTS: new_lists}, path, meta,
+                index_base.next_tag(path, "s"))
             # arithmetic, not a count() job: each surviving hot cluster
             # contributes exactly one extra centroid
             meta["n_centroids"] = len(c_ids) + len(survivor_hot)
             meta["geom_epoch"] = meta.get("geom_epoch", 0) + 1
-            write_meta(path, meta)   # mirror; manifest copy authoritative
         finally:
             moved.unpersist()
-        try:
-            commit(path, replaces={**staged, _CENTS: [seg_c]}, meta=meta,
-                   expect_version=version)
-        except ManifestConflict:
-            continue
-        index_base.gc_unreferenced(path, [_CENTS, _LISTS])
-        return meta
-    raise ManifestConflict(
-        f"split of {path} lost the commit race {max_attempts} times")
+        return staged, meta
+
+    return index_base.replace_retrying(path, "split", step, max_attempts)
 
 
 def ivf_split_topk_oracle_sql(query_vec_id: int, k: int = 10,
@@ -1303,51 +1216,22 @@ def retrain_ivf_index(spark: SparkSession, path: str,
     (round-11, ADVICE r10): an append landing between reading the live
     lists and this commit would otherwise be silently dropped from the
     replaced table and its files GC'd. On ``ManifestConflict`` the whole
-    retrain retries from the fresh live set, absorbing the append — the
-    ``compact_tables`` contract applied to geometry changes."""
-    for _ in range(max_attempts):
-        man = index_base.read_manifest(path)
-        version = man["version"] if man else 0
-        meta = dict(_read_meta(path))
+    retrain retries from the fresh live set, absorbing the append
+    (``index_base.replace_retrying``)."""
+    def step(man: dict):
+        meta = dict(man["meta"])
         id_col = meta["id_col"]
         want = n_centroids or meta["n_centroids"]
         vecs = (_read_table(spark, path, _LISTS)
                 .select(F.col(id_col), F.col("v")))
-        if quantizer == "kmeans":
-            rows = train_kmeans_centroids(vecs, want, n_iter,
-                                          train_rows, vec_col="v",
-                                          id_col=id_col)
-            # Arrow-batch local frame — same rationale as the build
-            # path (a Python-RDD-backed coalesce(1) write costs ~5.5 s)
-            cents = local_rows_df(spark, rows,
-                                  "c_id int, cv array<double>")
-        else:
-            cents = (vecs.orderBy(id_col).limit(int(want))
-                     .select(F.col(id_col).alias("c_id"),
-                             F.col("v").alias("cv")))
-            if cents.count() < want:
-                raise ValueError("portable quantizer needs >= n_centroids "
-                                 "vectors in the index")
-        tag = next_tag(path, "r")
-        seg_c = stage_segment(f"{path}/{_CENTS}", tag)
-        # retrain twin of the build-path overlap: centroid write and
-        # reassigned-lists write share only the cents plan (guide §2.6)
-        _, staged = index_base.stage_concurrently(
-            lambda: cents.coalesce(1).write.mode("overwrite")
-            .parquet(seg_c),
-            lambda: _stage_lists(_assign(vecs, cents, id_col), path,
-                                 id_col, tag))
+        _, frames = _quantize(vecs, want, "v", id_col, quantizer, n_iter,
+                              train_rows)
+        staged = index_base.stage(FAMILY, frames, path, meta,
+                                  index_base.next_tag(path, "r"))
         meta.update({"n_centroids": want, "quantizer": quantizer,
                      "geom_epoch": meta.get("geom_epoch", 0) + 1})
         if quantizer == "kmeans":
             meta.update({"n_iter": n_iter, "train_rows": train_rows})
-        write_meta(path, meta)   # mirror; the manifest copy is authoritative
-        try:
-            commit(path, replaces={**staged, _CENTS: [seg_c]}, meta=meta,
-                   expect_version=version)
-        except ManifestConflict:
-            continue
-        index_base.gc_unreferenced(path, [_CENTS, _LISTS])
-        return meta
-    raise ManifestConflict(
-        f"retrain of {path} lost the commit race {max_attempts} times")
+        return staged, meta
+
+    return index_base.replace_retrying(path, "retrain", step, max_attempts)

@@ -57,8 +57,8 @@ def spread(df: DataFrame, *key_cols: str, force: bool = False) -> DataFrame:
     import os
 
     if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        # measurement/debug escape hatch, mirroring SPARK_GRAFT_SEQ_STAGING:
-        # lets an interleaved A/B time the spread itself in one session
+        # measurement/debug escape hatch: lets an interleaved A/B time
+        # the spread itself in one session
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     # ``force``: a POST-SHUFFLE frame statically reports the full shuffle

@@ -6,13 +6,13 @@ store-vectors-once footprint, and the batched multi-query probe."""
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.operators import ann_index as ai
+from insight_de_smart_grid_spark.operators import index_base as ib
 from tests.conftest import SF_ORACLE, exchange_above_scan
 
 
@@ -143,8 +143,7 @@ def test_auto_depth_freezes_at_creation(spark, emb, tmp_path):
                                     n_planes="auto", auto_occupancy=occ)
     assert meta["n_planes"] == d_created and meta["depth_mode"] == "auto"
     ai.append_signatures(emb.filter(b >= 40), path)
-    meta2 = json.loads(Path(path, "meta.json").read_text())
-    assert meta2["n_planes"] == d_created
+    assert ai._read_meta(path)["n_planes"] == d_created
     # appended buckets live in the creation-depth bucket space
     mx = (ai._read_table(spark, path, "bands")
           .agg(F.max("bucket")).head()[0])
@@ -154,7 +153,7 @@ def test_auto_depth_freezes_at_creation(spark, emb, tmp_path):
 def test_append_plan_reads_only_the_delta(spark, emb, tmp_path):
     """The append job's input is the delta frame alone: its physical plan
     scans no file under the index path and runs no count() over history
-    (the depth comes from meta.json). Asserted on the very plan
+    (the depth comes from the frozen meta). Asserted on the very plan
     append_signatures executes, reconstructed via the same builder."""
     from insight_de_smart_grid_spark.operators.similarity import (
         hyperplane_signatures,
@@ -298,52 +297,6 @@ def test_batch_probe_shuffle_mode_for_big_deltas(spark, emb, tmp_path):
                                    .executedPlan().toString())
 
 
-def test_ann_ingest_crash_between_stage_and_commit_is_retryable(
-        spark, emb, tmp_path, monkeypatch):
-    """The manifest contract on the ANN ingest loop: a step killed
-    between staging (probe segment + index segments) and its single
-    manifest bump is invisible to readers, and the retry converges to
-    the clean state — probes equal a fresh batch probe against the
-    pre-crash index, vectors equal the ingested union."""
-    path = str(tmp_path / "idx")
-    meta = {"n_tables": 4, "n_planes": 8, "dim": 64,
-            "vec_col": "embedding", "id_col": "vec_id"}
-    b0 = emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == 0)
-    b1 = emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == 1)
-    ai._ann_ingest_batch(spark, b0, path, meta, 5, 0, tag="b0",
-                         first=True)
-    n_before = ai._read_table(spark, path, "vectors").count()
-
-    real_commit = ai.commit
-
-    def dying(p, adds=None, replaces=None, **kw):
-        raise RuntimeError("injected crash between stage and commit")
-
-    monkeypatch.setattr(ai, "commit", dying)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ai._ann_ingest_batch(spark, b1, path, meta, 5, 0, tag="b1",
-                             first=False)
-    # staged orphans on disk, nothing visible
-    assert any(Path(path, "vectors").glob("seg-b1*"))
-    assert ai._read_table(spark, path, "vectors").count() == n_before
-    with pytest.raises(FileNotFoundError):
-        ai._read_table(spark, path, "probes")
-
-    monkeypatch.setattr(ai, "commit", real_commit)
-    ai._ann_ingest_batch(spark, b1, path, meta, 5, 0, tag="b1",
-                         first=False)
-    assert (ai._read_table(spark, path, "vectors").count()
-            == n_before + b1.count())
-    clean = str(tmp_path / "clean")
-    ai.build_signature_index(b0, clean, n_tables=4, n_planes=8)
-    want = sorted((r.query_id, r.vec_id, r.cos_sim) for r in
-                  ai.query_index_batch_topk(spark, clean, b1,
-                                            k=5).collect())
-    got = sorted((r.query_id, r.vec_id, r.cos_sim) for r in
-                 ai._read_table(spark, path, "probes").collect())
-    assert got == want and want
-
-
 def test_batch_probe_has_no_index_side_shuffle(spark, emb, tmp_path):
     """The batched probe's plan: the delta-bounded probe set and the
     candidate pairs are the BROADCAST sides; both index scans (bands,
@@ -358,40 +311,6 @@ def test_batch_probe_has_no_index_side_shuffle(spark, emb, tmp_path):
     assert plan.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert out.count() > 0
-
-
-def test_ingest_replay_after_commit_is_skipped(spark, emb, tmp_path):
-    """ADVICE r9 (round-10): a micro-batch whose manifest bump LANDED
-    but whose streaming checkpoint didn't is replayed by the engine;
-    the batch's idempotence mark makes the replay a no-op — no probe
-    against an index that already contains the batch, no in-place
-    rewrite of a live segment, identical probe log."""
-    from insight_de_smart_grid_spark.operators.index_manifest import (
-        read_manifest,
-    )
-
-    path = str(tmp_path / "idx")
-    meta = {"n_tables": 4, "n_planes": 8, "dim": 64,
-            "vec_col": "embedding", "id_col": "vec_id"}
-    probes = ai.ingest_ann_index(spark, emb, path, n_batches=3, k=5,
-                                 n_tables=4, n_planes=8)
-    want = sorted((r.query_id, r.vec_id, r.cos_sim)
-                  for r in probes.collect())
-    v_before = read_manifest(path)["version"]
-    # replay batch 1 (tag b1, already committed) — must skip outright
-    b1 = emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == 1)
-    ai._ann_ingest_batch(spark, b1, path, meta, 5, 0, tag="b1",
-                         first=False)
-    assert read_manifest(path)["version"] == v_before
-    got = sorted((r.query_id, r.vec_id, r.cos_sim) for r in
-                 ai._read_table(spark, path, "probes").collect())
-    assert got == want
-    # replaying the FIRST batch is equally inert (its mark rode the
-    # build's own commit)
-    b0 = emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == 0)
-    ai._ann_ingest_batch(spark, b0, path, meta, 5, 0, tag="b0",
-                         first=True)
-    assert read_manifest(path)["version"] == v_before
 
 
 def test_bucketed_layout_shuffle_probe_keeps_index_unshuffled(
@@ -444,7 +363,7 @@ def test_rebuild_rederives_depth_atomically(spark, emb, tmp_path,
     """Round-10 rebuild path: re-signature the index's own vectors at a
     re-derived auto depth — only bands/ rewritten, geometry + segment in
     ONE manifest bump; a crash before the bump leaves the old depth
-    fully consistent (manifest meta beats the meta.json mirror), and the
+    fully consistent (the geometry lives only in the manifest), and the
     rebuilt index answers like a fresh build at the new geometry."""
     from insight_de_smart_grid_spark.operators.similarity import (
         auto_n_planes,
@@ -463,19 +382,19 @@ def test_rebuild_rederives_depth_atomically(spark, emb, tmp_path,
     ai.append_signatures(emb.filter(b >= 40), path)
     before = _topk(spark, path, emb)
 
-    real_commit = ai.commit
+    real_commit = ib.commit
 
     def dying(p, **kw):
         raise RuntimeError("injected crash before the rebuild bump")
 
-    monkeypatch.setattr(ai, "commit", dying)
+    monkeypatch.setattr(ib, "commit", dying)
     with pytest.raises(RuntimeError, match="injected crash"):
         ai.rebuild_signature_index(spark, path, n_planes="auto",
                                    auto_occupancy=occ)
     assert ai._read_meta(path)["n_planes"] == d0    # old geometry intact
     assert _topk(spark, path, emb) == before
 
-    monkeypatch.setattr(ai, "commit", real_commit)
+    monkeypatch.setattr(ib, "commit", real_commit)
     meta = ai.rebuild_signature_index(spark, path, n_planes="auto",
                                       auto_occupancy=occ)
     assert meta["n_planes"] == d1

@@ -68,9 +68,23 @@ def test_truncated_and_trailing_input_fail_loud():
         decode_record(b"\x20hi", [("s", "string")])
 
 
+# The reference's five-field power-reading record
+# (stream_processing/schema.avsc; field types in SURVEY.md §1.2).
+REFERENCE_SCHEMA = """{
+  "type": "record",
+  "name": "reading",
+  "fields": [
+    {"name": "house_id", "type": "string"},
+    {"name": "appliance_name", "type": "string"},
+    {"name": "appliance_id", "type": "string"},
+    {"name": "timestamp", "type": "long"},
+    {"name": "power", "type": "float"}
+  ]
+}"""
+
+
 def test_reference_schema_parses():
-    sch = Path("/root/reference/stream_processing/schema.avsc").read_text()
-    fields = parse_flat_record_schema(sch)
+    fields = parse_flat_record_schema(REFERENCE_SCHEMA)
     assert [n for n, _ in fields] == [
         "house_id", "appliance_name", "appliance_id", "timestamp", "power"]
     assert dict(fields)["power"] == "float"

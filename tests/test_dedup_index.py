@@ -6,7 +6,6 @@ freezing, and the round-9 manifest-commit crash windows."""
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 import pytest
@@ -14,6 +13,7 @@ from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.operators import dedup as dd
 from insight_de_smart_grid_spark.operators import dedup_index as di
+from insight_de_smart_grid_spark.operators import index_base as ib
 from tests.conftest import SF_ORACLE, exchange_above_scan
 
 
@@ -87,7 +87,7 @@ def test_incremental_probe_matches_spanning_pairs(spark, docs, tmp_path):
 def test_append_plan_reads_only_the_delta(spark, docs, tmp_path):
     """The append job's input is the delta frame alone: the signature pass
     it executes scans no file under the index path (geometry comes from
-    meta.json, never a re-derivation over history)."""
+    the frozen meta, never a re-derivation over history)."""
     path = str(tmp_path / "idx")
     b = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), 100)
     meta = di.build_dedup_index(docs.filter(b < 80), path)
@@ -191,46 +191,6 @@ def test_scheduled_ingest_loop_is_exactly_the_full_pair_set(
         spark, str(tmp_path / "stream" / "index"))) == want
 
 
-def test_crash_between_stage_and_commit_is_invisible_and_retryable(
-        spark, docs, tmp_path, monkeypatch):
-    """Round-9 manifest protocol (VERDICT r8 item 4): kill an ingest step
-    between its segment staging and its manifest bump — readers see ONLY
-    the pre-crash state (no partial batch, no mixed version), and a retry
-    of the same step converges to exactly the clean-run state (the
-    deterministic segment names make the re-stage overwrite its own
-    orphans; the commit is a single atomic pointer replace)."""
-    b = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), 100)
-    base, delta = docs.filter(b < 60), docs.filter(b >= 60)
-    path = str(tmp_path / "idx")
-    meta = di.build_dedup_index(base, path)
-    before_docs = di._read_table(spark, path, "docs").count()
-    before_pairs = _pairs(di.index_near_dup_pairs(spark, path))
-
-    real_commit = di.commit
-
-    def dying_commit(p, adds=None, replaces=None, **kw):
-        raise RuntimeError("injected crash between stage and commit")
-
-    monkeypatch.setattr(di, "commit", dying_commit)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        di._ingest_batch(spark, delta, path, meta, 0.5, tag="b1",
-                         first=False)
-    # the staged orphans exist on disk but NO reader can see them
-    assert any(Path(path, "docs").glob("seg-b1*"))
-    assert di._read_table(spark, path, "docs").count() == before_docs
-    assert _pairs(di.index_near_dup_pairs(spark, path)) == before_pairs
-
-    # retry of the same step (same tag) — converges to the clean state
-    monkeypatch.setattr(di, "commit", real_commit)
-    di._ingest_batch(spark, delta, path, meta, 0.5, tag="b1", first=False)
-    clean = str(tmp_path / "clean")
-    di.build_dedup_index(docs, clean)
-    assert (di._read_table(spark, path, "docs").count()
-            == di._read_table(spark, clean, "docs").count())
-    assert (_pairs(di.index_near_dup_pairs(spark, path))
-            == _pairs(di.index_near_dup_pairs(spark, clean)))
-
-
 def test_streaming_replay_after_crash_commits_each_batch_once(
         spark, docs, tmp_path, monkeypatch):
     """The round-8 ADVICE window, closed: crash a REAL micro-batch
@@ -243,7 +203,7 @@ def test_streaming_replay_after_crash_commits_each_batch_once(
     assert want
     base = str(tmp_path / "crash")
 
-    real_commit = di.commit
+    real_commit = ib.commit
     state = {"commits": 0}
 
     def flaky_commit(p, adds=None, replaces=None, **kw):
@@ -252,7 +212,7 @@ def test_streaming_replay_after_crash_commits_each_batch_once(
             raise RuntimeError("injected crash between stage and commit")
         return real_commit(p, adds=adds, replaces=replaces, **kw)
 
-    monkeypatch.setattr(di, "commit", flaky_commit)
+    monkeypatch.setattr(ib, "commit", flaky_commit)
     with pytest.raises(Exception, match="injected crash"):
         di.streaming_ingest_dedup(spark, docs, base, n_files=3)
     # only the two committed batches are visible
@@ -261,7 +221,7 @@ def test_streaming_replay_after_crash_commits_each_batch_once(
     n_partial = di._read_table(spark, f"{base}/index", "docs").count()
     assert n_partial < docs.count()
 
-    monkeypatch.setattr(di, "commit", real_commit)
+    monkeypatch.setattr(ib, "commit", real_commit)
     got = di.streaming_ingest_dedup(spark, docs, base, n_files=3)
     assert _pairs(got) == want
     assert di._read_table(spark, f"{base}/index", "docs").count() \
@@ -270,9 +230,10 @@ def test_streaming_replay_after_crash_commits_each_batch_once(
 
 
 def test_geometry_is_frozen_at_creation(spark, docs, tmp_path):
-    """meta.json freezes the banding geometry; appends reuse it verbatim
-    (buckets from different geometries never collide, so a drifting
-    append would silently lose recall — the meta is the contract)."""
+    """The manifest meta freezes the banding geometry; appends reuse it
+    verbatim (buckets from different geometries never collide, so a
+    drifting append would silently lose recall — the meta is the
+    contract)."""
     path = str(tmp_path / "idx")
     b = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), 100)
     meta = di.build_dedup_index(docs.filter(b < 50), path,
@@ -280,7 +241,7 @@ def test_geometry_is_frozen_at_creation(spark, docs, tmp_path):
     assert (meta["n_hashes"], meta["bands"], meta["ngram"]) == (16, 4, 2)
     assert meta["n_packed"] == 2  # 4 rows/band -> two packed 62-bit keys
     di.append_dedup_index(docs.filter(b >= 50), path)
-    assert json.loads(Path(path, "meta.json").read_text()) == meta
+    assert di._read_meta(path) == meta
     # appended rows live in the creation geometry's band space
     mx = (di._read_table(spark, path, "bands")
           .agg(F.max("band_idx")).head()[0])

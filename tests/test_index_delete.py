@@ -260,7 +260,7 @@ def test_concurrent_append_tags(spark, tmp_path, monkeypatch):
     # hazard: force both appends to derive the SAME tag (same snapshot)
     lost = str(tmp_path / "lost")
     di.build_dedup_index(base, lost)
-    monkeypatch.setattr(di, "next_tag", lambda p, pre: f"{pre}same")
+    monkeypatch.setattr(ib, "next_tag", lambda p, pre: f"{pre}same")
     di.append_dedup_index(d1, lost)
     di.append_dedup_index(d2, lost)     # same seg name: overwrites d1
     monkeypatch.undo()
@@ -366,17 +366,16 @@ def test_append_committing_after_geometry_swap_conflicts_and_retries(
     iv.build_ivf_index(base, path, n_centroids=8)
 
     state = {"raced": False}
-    real_stage = iv._stage_lists
+    real_write = iv.FAMILY.tables["lists"]
 
-    def racing_stage(assigned, p, id_col, tag):
-        out = real_stage(assigned, p, id_col, tag)
+    def racing_write(df, seg, meta):
+        real_write(df, seg, meta)
         if not state["raced"]:
             state["raced"] = True
             # geometry swaps AFTER the append staged, BEFORE it commits
-            iv.retrain_ivf_index(spark, p, quantizer="kmeans")
-        return out
+            iv.retrain_ivf_index(spark, path, quantizer="kmeans")
 
-    monkeypatch.setattr(iv, "_stage_lists", racing_stage)
+    monkeypatch.setitem(iv.FAMILY.tables, "lists", racing_write)
     iv.append_ivf_index(delta, path)
     monkeypatch.undo()
 
@@ -407,16 +406,15 @@ def test_ann_append_after_rebuild_conflicts_and_retries(
     ai.build_signature_index(base, path, n_tables=4, n_planes=6)
 
     state = {"raced": False}
-    real_stage = ai._stage_tables
+    real_write = ai.FAMILY.tables["vectors"]
 
-    def racing_stage(sig, vectors, p, id_col, tag, meta=None):
-        out = real_stage(sig, vectors, p, id_col, tag, meta)
+    def racing_write(df, seg, meta):
+        real_write(df, seg, meta)
         if not state["raced"]:
             state["raced"] = True
-            ai.rebuild_signature_index(spark, p, n_planes=9)
-        return out
+            ai.rebuild_signature_index(spark, path, n_planes=9)
 
-    monkeypatch.setattr(ai, "_stage_tables", racing_stage)
+    monkeypatch.setitem(ai.FAMILY.tables, "vectors", racing_write)
     ai.append_signatures(delta, path)
     monkeypatch.undo()
 

@@ -1,6 +1,6 @@
 """Manifest-pointer commit protocol (operators/index_manifest.py) — the
 pure-filesystem contracts both index families build on: atomic pointer
-bumps, idempotent re-commits, legacy fallback rules, and GC scope.
+bumps, idempotent re-commits, uncommitted-layout rules, and GC scope.
 No Spark needed."""
 
 from __future__ import annotations
@@ -65,19 +65,13 @@ def test_uncommitted_segments_are_invisible_and_gcd(tmp_path):
 
 
 def test_legacy_layout_fallback_rules(tmp_path):
-    # a pre-manifest round-8 index (bare table dir, no seg-*) stays
-    # readable through the fallback
-    legacy = tmp_path / "old" / "bands"
-    legacy.mkdir(parents=True)
-    (legacy / "part-0.parquet").write_bytes(b"x")
-    assert im.live_segments(str(tmp_path / "old"), "bands") == [str(legacy)]
-    # but a staged-never-committed dir (seg-* children, no manifest) is
-    # NOT live — nothing was ever committed
+    # a staged-never-committed dir (seg-* children, no manifest) is NOT
+    # live — nothing was ever committed
     staged = tmp_path / "new"
     _mk_seg(str(staged), "bands", "base")
     assert im.live_segments(str(staged), "bands") == []
     # and a missing table is simply empty
-    assert im.live_segments(str(tmp_path / "old"), "docs") == []
+    assert im.live_segments(str(staged), "docs") == []
 
 
 def test_commit_is_a_single_pointer_replace(tmp_path, monkeypatch):

@@ -10,6 +10,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from insight_de_smart_grid_spark.operators import index_base as ib
 from insight_de_smart_grid_spark.operators import ivf_index as ii
 from tests.conftest import SF_ORACLE
 
@@ -190,46 +191,13 @@ def test_portable_quantizer_rejects_short_corpus(spark, emb, tmp_path):
                            n_centroids=8)
 
 
-def test_ingest_loop_scheduled_equals_streaming_and_skips_replay(
-        spark, emb, tmp_path, monkeypatch):
-    """Round-10 IVF ingest lifecycle: the scheduled loop and the
-    streaming twin commit identical probe logs; and a batch whose commit
-    LANDED but whose checkpoint didn't (ADVICE r9: replay-after-commit)
-    is detected by its idempotence mark and skipped without touching the
-    index."""
-    sched = str(tmp_path / "sched")
-    a = ii.ingest_ivf_index(spark, emb, sched, n_batches=3, k=5)
-    got_a = sorted((r.query_id, r.vec_id, r.cos_sim) for r in a.collect())
-    assert got_a
-
-    stream = str(tmp_path / "stream")
-    b = ii.streaming_ingest_ivf(spark, emb, stream, n_batches=3, k=5)
-    got_b = sorted((r.query_id, r.vec_id, r.cos_sim) for r in b.collect())
-    assert got_a == got_b
-
-    # replay-after-commit: re-running an already-committed tag must be a
-    # no-op — same manifest version, same probe log, no segment rewrite
-    from insight_de_smart_grid_spark.operators.index_manifest import (
-        read_manifest,
-    )
-    v_before = read_manifest(sched)["version"]
-    batch1 = emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == 1)
-    ii._ivf_ingest_batch(spark, batch1, sched,
-                         {"n_centroids": 8, "vec_col": "embedding",
-                          "id_col": "vec_id"}, 5, 2, tag="b1", first=False)
-    assert read_manifest(sched)["version"] == v_before
-    replay = sorted((r.query_id, r.vec_id, r.cos_sim) for r in
-                    ii._read_table(spark, sched, "probes").collect())
-    assert replay == got_a
-
-
 def test_retrain_swaps_quantizer_atomically(spark, emb, tmp_path,
                                             monkeypatch):
     """Round-10 rebuild path: retraining re-derives the quantizer from
     the index's OWN vectors (the corpus is never re-read) and equals a
     fresh build of that quantizer; geometry + segments swap in ONE bump
     (manifest meta), so a crash between staging and commit leaves the
-    OLD quantizer fully consistent — meta.json mirror drift included."""
+    OLD quantizer fully consistent."""
     path, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
     cut = int(emb.agg(F.floor(0.8 * (F.max("vec_id") + 1))).head()[0])
     ii.build_ivf_index(emb.filter(F.col("vec_id") < cut), path,
@@ -237,22 +205,22 @@ def test_retrain_swaps_quantizer_atomically(spark, emb, tmp_path,
     ii.append_ivf_index(emb.filter(F.col("vec_id") >= cut), path)
     before = _topk(spark, path, emb, nprobe=4)
 
-    real_commit = ii.commit
+    real_commit = ib.commit
 
     def dying(p, **kw):
         raise RuntimeError("injected crash before the retrain bump")
 
-    monkeypatch.setattr(ii, "commit", dying)
+    monkeypatch.setattr(ib, "commit", dying)
     with pytest.raises(RuntimeError, match="injected crash"):
         ii.retrain_ivf_index(spark, path, n_centroids=8,
                              quantizer="kmeans")
-    # the manifest meta is authoritative: the crashed retrain updated
-    # only the meta.json mirror, so readers still see the OLD geometry
-    # and the OLD lists — answers unchanged
+    # the crashed retrain staged its segments but never bumped the
+    # manifest: readers still see the OLD geometry and the OLD lists —
+    # answers unchanged
     assert ii._read_meta(path)["n_centroids"] == 16
     assert _topk(spark, path, emb, nprobe=4) == before
 
-    monkeypatch.setattr(ii, "commit", real_commit)
+    monkeypatch.setattr(ib, "commit", real_commit)
     meta = ii.retrain_ivf_index(spark, path, n_centroids=8,
                                 quantizer="kmeans")
     assert meta["quantizer"] == "kmeans" and meta["n_centroids"] == 8
