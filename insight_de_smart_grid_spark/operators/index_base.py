@@ -41,6 +41,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from insight_de_smart_grid_spark.operators.index_manifest import (
     ManifestConflict,
@@ -572,7 +573,7 @@ def build(fam: Family, path: str, meta: dict, frames: dict,
 
 
 def append(spark: SparkSession, fam: Family, delta: DataFrame, path: str,
-           tag: "str | None" = None, max_attempts: int = 5) -> dict:
+           tag: "str | None" = None) -> dict:
     """Append a delta under the frozen geometry. The job reads ONLY the
     delta (plus a family's geometry table) — never the index's data
     tables — so append cost tracks delta size; the staged segments
@@ -591,7 +592,7 @@ def append(spark: SparkSession, fam: Family, delta: DataFrame, path: str,
     into the same segment directory and one delta would silently
     overwrite the other. A single writer (and any crash-retry of it)
     keeps the deterministic default."""
-    for _ in range(max_attempts):
+    for _ in range(5):
         meta = read_meta(path)
         frames = fam.frames(spark, delta, path, meta)
         try:
@@ -605,7 +606,7 @@ def append(spark: SparkSession, fam: Family, delta: DataFrame, path: str,
             continue
         return meta
     raise ManifestConflict(
-        f"append to {path} lost the geometry race {max_attempts} times")
+        f"append to {path} lost the geometry race 5 times")
 
 
 def compact(spark: SparkSession, fam: Family, path: str,
@@ -702,7 +703,8 @@ def ingest(spark: SparkSession, fam: Family, corpus: DataFrame, path: str,
            params: dict, n_batches: int, stream_dir: "str | None" = None,
            compact_every: "int | None" = None) -> DataFrame:
     """The index's whole lifecycle as one ingest loop over ``n_batches``
-    slices of the corpus (slice = ``id % n_batches``), each run through
+    slices of the corpus (slice = ``id % n_batches``; the id column must
+    be integral, else a ``TypeError``), each run through
     ``ingest_batch``; returns the committed log.
 
     Scheduled (``stream_dir`` None): the slices are filters replayed in
@@ -715,6 +717,11 @@ def ingest(spark: SparkSession, fam: Family, corpus: DataFrame, path: str,
     ``foreachBatch``) deliver them in the same order, checkpointed under
     ``stream_dir`` so a restart replays only the failed batch."""
     id_col = params["id_col"]
+    if not isinstance(corpus.schema[id_col].dataType, IntegralType):
+        # a non-integral id would make pmod null and silently drop rows
+        raise TypeError(f"ingest slices by pmod({id_col}, n): the id "
+                        f"column must be integral, got "
+                        f"{corpus.schema[id_col].dataType.simpleString()}")
     if stream_dir is None:
         for i in range(n_batches):
             batch = corpus.filter(
