@@ -112,80 +112,6 @@ def previous_round_tip(repo: str) -> "str | None":
     return None
 
 
-def _subprocess_measure(worktree: str, names: list, sf_dir: str) -> dict:
-    """Run the previous tip's OWN bench methodology (its run_query, its
-    registry, one warmup + median-of-3 / 1-for-streaming) in a fresh
-    interpreter rooted at the worktree; returns {name: seconds}. A name
-    the old tree doesn't know (query added this round) is skipped — a
-    brand-new query has no cross-tree baseline to attribute against."""
-    import subprocess
-    import sys as _sys
-
-    code = r"""
-import json, sys, time
-wt, sf_dir = sys.argv[1], sys.argv[2]
-names = json.loads(sys.argv[3])
-sys.path.insert(0, wt)
-from insight_de_smart_grid_spark.session import get_spark
-from bench import run_query
-from insight_de_smart_grid_spark.plans.registry import QUERIES
-spark = get_spark(app_name="bench_ab")
-res = {}
-for name in names:
-    if name not in QUERIES:
-        continue
-    try:
-        run_query(spark, name, sf_dir)  # warmup
-        runs = []
-        for _ in range(1 if name.startswith("streaming_") else 3):
-            t0 = time.perf_counter()
-            run_query(spark, name, sf_dir)
-            runs.append(time.perf_counter() - t0)
-        res[name] = round(sorted(runs)[len(runs) // 2], 3)
-    except Exception as exc:
-        print(f"ab: {name} failed on prev tip: {exc}", file=sys.stderr)
-print("AB_RESULT " + json.dumps(res))
-"""
-    out = subprocess.run(
-        [_sys.executable, "-c", code, worktree, sf_dir,
-         json.dumps(list(names))],
-        cwd=worktree, capture_output=True, text=True, timeout=1800)
-    for line in out.stdout.splitlines():
-        if line.startswith("AB_RESULT "):
-            return json.loads(line[len("AB_RESULT "):])
-    print(f"ab: no result from prev-tip run (rc={out.returncode}): "
-          f"{out.stderr[-500:]}", file=sys.stderr)
-    return {}
-
-
-def crosstree_measure(repo: str, commit: str, names: list, sf_dir: str,
-                      runner=_subprocess_measure) -> dict:
-    """Measure ``names`` on ``commit`` in a throwaway ``git worktree`` —
-    the automated form of the round-7 text_winnow_fingerprint triage
-    (SCALE.md): same measurement, same machine, same session, previous
-    round's code. The worktree is always removed, even on failure."""
-    import subprocess
-    import tempfile
-
-    if not commit:
-        # no committed bench artifact to attribute against (fresh repo, or
-        # previous_round_tip found nothing) — the flag stands unattributed;
-        # never hand None to `git worktree add` (round-8 TypeError)
-        print("ab: no previous-tip commit to measure against",
-              file=sys.stderr)
-        return {}
-
-    wt = tempfile.mkdtemp(prefix="bench_ab_")
-    try:
-        subprocess.run(["git", "worktree", "add", "--detach", "--force",
-                        wt, commit], cwd=repo, check=True,
-                       capture_output=True, timeout=120)
-        return runner(wt, names, sf_dir)
-    finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt],
-                       cwd=repo, capture_output=True, timeout=120)
-
-
 def ab_verdict(prev_time: "float | None", baseline: float,
                cur_time: "float | None" = None) -> str:
     """Attribute a confirmed regression by how the PREVIOUS tip measures
@@ -361,9 +287,12 @@ class _PrevTipWorker:
 
 def crosstree_interleaved(repo: str, commit: "str | None", names: list,
                           sf_dir: str, cur_once, rounds: int = 3) -> dict:
-    """Same worktree plumbing as crosstree_measure, but measurements of
-    the previous tip and the current tree alternate run-by-run in the
-    same window (round-9: the star_stats_agg lesson). Returns
+    """Measure ``names`` on ``commit`` in a throwaway ``git worktree``
+    (removed even when measuring raises), alternating run-by-run with the
+    current tree in the same window (round-9: the star_stats_agg lesson;
+    the automated form of the round-7 text_winnow_fingerprint triage in
+    SCALE.md). A None/empty commit never reaches ``git worktree add``
+    (round-8 TypeError). Returns
     ``{name: {"prev": sec | None, "cur": sec | None}}``; empty dict when
     there is no commit to measure against."""
     import subprocess

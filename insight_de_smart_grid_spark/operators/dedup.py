@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.operators.staging import stage
 from insight_de_smart_grid_spark.operators.text import fingerprint, tokens
+from insight_de_smart_grid_spark.session import shuffle_width
 
 
 # ---------------------------------------------------------------------------
@@ -310,25 +311,15 @@ def dup_clusters(pairs: DataFrame, max_rounds: int = 15) -> DataFrame:
     # metadata-cheap (blocks are already materialized) and the width rule
     # is the cluster-correct one too: a billion-edge graph gets
     # ceil(rows/500k) partitions however many cores the host has.
-    import os
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if os.environ.get("SPARK_GRAFT_NO_LOOP_WIDTH"):
-        # measurement/debug escape hatch (the SPARK_GRAFT_NO_SPREAD
-        # convention): keep the inherited widths so an interleaved A/B
-        # can time the width rule itself in one session
-        w = int(prev_parts)
-    else:
-        n_edges = edges.count()
-        width_cap = max(spark.sparkContext.defaultParallelism,
-                        int(prev_parts))
-        w = max(1, min(width_cap, -(-n_edges // 500_000)))
+    n_edges = edges.count()
+    width_cap = max(spark.sparkContext.defaultParallelism,
+                    int(spark.conf.get("spark.sql.shuffle.partitions")))
+    w = max(1, min(width_cap, -(-n_edges // 500_000)))
     if w < edges.rdd.getNumPartitions():
         # narrow coalesce over the pinned blocks: every round's edge scan
         # becomes w tasks instead of the inherited post-AQE width
         edges = edges.coalesce(w)
-    spark.conf.set("spark.sql.shuffle.partitions", str(w))
-    try:
+    with shuffle_width(spark, w):
         # lazy checkpoint: the first round's convergence count is the
         # materializing action, so init costs no job of its own (round-11
         # optimization — each eager checkpoint at this scale is a whole
@@ -363,10 +354,6 @@ def dup_clusters(pairs: DataFrame, max_rounds: int = 15) -> DataFrame:
             raise RuntimeError(
                 f"dup_clusters did not converge in {max_rounds} rounds "
                 f"({changed} labels still moving)")
-    finally:
-        # the scoped width is session conf (this operator runs on the
-        # driver's query thread, never inside stage_concurrently pools)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return labels.select(F.col("node").alias("doc_id"),
                          F.col("lbl").alias("cluster_id"))
 

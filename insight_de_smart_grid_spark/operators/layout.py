@@ -54,12 +54,6 @@ def spread(df: DataFrame, *key_cols: str, force: bool = False) -> DataFrame:
     that exchange. No-op when the input already has at least that many
     partitions (the 100 TB case: scans arrive with thousands of splits;
     never repartition DOWN)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        # measurement/debug escape hatch: lets an interleaved A/B time
-        # the spread itself in one session
-        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     # ``force``: a POST-SHUFFLE frame statically reports the full shuffle
     # width here, but AQE coalesces its exchange to ~1 partition at

@@ -101,22 +101,18 @@ def backfill_rollup(rollup_slice: DataFrame, path: str) -> None:
     day never rewrites the other N-1 days of a 100 TB cube, and re-running
     the same backfill is a no-op-equivalent (same rows -> same partitions).
     Static overwrite (the default) would instead DELETE the whole table.
+    The mode is a per-write option, so the session conf is never touched.
     """
-    spark = rollup_slice.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            rollup_slice
-            .withColumn("date", F.to_date("window_start"))
-            .withColumn("hour", F.hour("window_start"))
-            .repartition("date", "hour")
-            .write.mode("overwrite")
-            .partitionBy("date", "hour")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        rollup_slice
+        .withColumn("date", F.to_date("window_start"))
+        .withColumn("hour", F.hour("window_start"))
+        .repartition("date", "hour")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("date", "hour")
+        .parquet(path)
+    )
 
 
 # ---------------------------------------------------------------------------

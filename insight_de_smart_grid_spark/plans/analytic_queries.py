@@ -262,8 +262,7 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (two sides x keyWithIndex/keyToNumValues), so per-store fixed cost
     # is 4x an aggregation's — interleaved A/B at sf0.1 read the join
     # replays 0.75-0.83x at width 4 vs 8 while the agg/stateful-map
-    # replays prefer 8. Results are width-invariant (same oracle row);
-    # SPARK_GRAFT_STATE_PARTITIONS still overrides for cluster sizing.
+    # replays prefer 8. Results are width-invariant (same oracle row).
     out = replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet", purchase_click_left_stream_plan,
         query_name=f"slj_{uuid.uuid4().hex[:8]}", flush_sentinel=True,

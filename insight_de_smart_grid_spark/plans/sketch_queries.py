@@ -410,7 +410,9 @@ def q_streaming_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the same ms-precision duty cycle DuckDB computes from raw
     events, so streamed state must agree exactly with batch."""
     import tempfile
+    import time
 
+    from insight_de_smart_grid_spark.session import shuffle_width
     from insight_de_smart_grid_spark.sources.avro_codec import (
         decode_avro_records,
     )
@@ -425,9 +427,7 @@ def q_streaming_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_mock_kafka(spark)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         env = (spark.readStream.format("mockkafka")
                .option("path", f"{sf_dir}/events.parquet")
                .option("flush_sentinel", "true")
@@ -453,16 +453,11 @@ def q_streaming_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # what emits the finalized windows under the advanced watermark).
         # The cadence is dead time between the replay's few micro-batches
         # (the aggregation is slicing-invariant and watermark-gated, so
-        # the result does not depend on it); env-overridable for A/B and
-        # for hosts where a slower poll is kinder.
-        import os
-        import time
-
-        trig_ms = os.environ.get("SPARK_GRAFT_KAFKA_TRIGGER_MS", "200")
+        # the result does not depend on it).
         q = (plan.writeStream.outputMode("append")
              .format("parquet").option("path", f"{base}/out")
              .option("checkpointLocation", f"{base}/ckpt")
-             .trigger(processingTime=f"{trig_ms} milliseconds").start())
+             .trigger(processingTime="200 milliseconds").start())
         deadline = time.time() + 180
         while time.time() < deadline:
             time.sleep(0.15)
@@ -473,8 +468,6 @@ def q_streaming_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
         q.stop()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (spark.read.parquet(f"{base}/out")
             .filter(F.col("house_id") != "-1"))
 

@@ -1,17 +1,30 @@
-"""SparkSession factory.
+"""SparkSession factory and the one scoped shuffle width.
 
 Defaults are chosen for correctness-vs-DuckDB (UTC session timezone, ANSI off
 so divisions by zero yield NULL like the reference's tolerant pipeline) and for
 scale (AQE on with skew-join handling, Arrow for any pandas exchange). On a real
 cluster the same session config holds; only master/memory flow from the
-environment.
+environment. These are the only environment variables the package reads:
+
+* ``SPARK_GRAFT_CPUS``: local parallelism (default: the host's core count);
+* ``SPARK_GRAFT_DRIVER_MEM``: driver heap (default: ``default_driver_mem``);
+* ``SPARK_MASTER_SET``: when set, ``get_spark`` leaves the master to the
+  launcher instead of pinning ``local[cpus]``.
+
+``shuffle_width`` is the one place that changes
+``spark.sql.shuffle.partitions`` after the session is built.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_width_lock = threading.RLock()  # held by the thread inside a scope
 
 
 def default_parallelism() -> int:
@@ -64,7 +77,7 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
     builder = (
         SparkSession.builder
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
+        .config(_SHUFFLE, str(n))
         # local mode runs driver+executors in ONE JVM: the 1g default heap
         # divided by 32 task slots starves sort/window buffers long before
         # the machine does (measured: UNABLE_TO_ACQUIRE_MEMORY on a 1M-row
@@ -111,10 +124,9 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
     # only binds when a shuffle carries less than cores x 1 MB — a large
     # job's exchanges never feel it. Interleaved A/B on a 10-query mixed
     # batch subset: 25.6 -> 17.5 s (0.68x), no batch regressions,
-    # streaming neutral. Env-overridable for A/B and cluster tuning.
+    # streaming neutral.
     spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     # AQE sort-merge -> shuffled-hash rewrite (round-11, guide §3.1/§9):
     # a post-shuffle partition under this threshold builds a hash table
     # instead of paying the two sort passes. Runtime-only (AQE
@@ -130,13 +142,40 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
     # cluster, joins whose build side exceeds the broadcast cap but whose
     # post-shuffle partitions fit in task memory skip the sorts; the
     # rewrite only fires when EVERY build partition is under the
-    # threshold, so large exchanges keep sort-merge. Env-overridable.
+    # threshold, so large exchanges keep sort-merge.
     spark.conf.set(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "128m"))
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
     # tolerant arithmetic (NULL on div-by-zero / overflow), matching the
     # reference's coerce-don't-fail ingestion policy (producer_GREEND_avro.py:
     # 138-146); Spark 4 defaults ANSI on
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def shuffle_width(spark: SparkSession, n: "int | None"):
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n`` and
+    restore the previous value on exit. ``None`` leaves the conf alone.
+
+    The width is session-global conf, so a query on another thread would
+    inherit it. Same-thread nesting is fine (each scope restores what it
+    found, innermost first); a second thread entering while another thread
+    holds a scope raises ``RuntimeError`` instead of silently sharing the
+    width."""
+    if n is None:
+        yield
+        return
+    if not _width_lock.acquire(blocking=False):
+        raise RuntimeError(
+            f"shuffle_width: another thread holds a scoped {_SHUFFLE}; "
+            "concurrent queries would share its width")
+    try:
+        prev = spark.conf.get(_SHUFFLE)
+        spark.conf.set(_SHUFFLE, str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set(_SHUFFLE, prev)
+    finally:
+        _width_lock.release()

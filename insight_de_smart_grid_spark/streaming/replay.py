@@ -15,27 +15,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def resolve_state_partitions(requested: "int | None") -> "int | None":
-    """Stateful-shuffle width with an env override
-    (``SPARK_GRAFT_STATE_PARTITIONS``) for A/B measurement and cluster
-    sizing. ``None`` stays ``None`` (the caller opted out of touching the
-    shuffle width); an unset or unparsable env returns ``requested``
-    unchanged. The width = the number of state-store instances a stateful
-    query opens/commits per micro-batch, fixed at first start — per-store
-    overhead dominates when state is small (local replays), key
-    cardinality when it is not (cluster), which is why it is a parameter
-    and not a constant."""
-    if requested is None:
-        return None
-    import os
-    v = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if v:
-        try:
-            return max(1, int(v))
-        except ValueError:
-            pass
-    return requested
+from insight_de_smart_grid_spark.session import shuffle_width
 
 
 def parquet_stream_source(spark: SparkSession, parquet_path: str,
@@ -120,16 +100,23 @@ def _stage_flush_sentinel(spark: SparkSession, staged_dir: str,
     metadata work. That is also the scale-correct algorithm: footer
     min/max stats bound the work by one row group however large the
     table. Any surprise (missing stats, nested ts, unexpected type)
-    falls back to the original Spark path; ``SPARK_GRAFT_SPARK_SENTINEL``
-    forces the fallback for A/B."""
-    import os as _os
+    falls back to the Spark path."""
+    try:
+        return _stage_flush_sentinel_arrow(staged_dir, margin_s, seq,
+                                           all_types)
+    except Exception:
+        return _stage_flush_sentinel_spark(spark, staged_dir, margin_s, seq,
+                                           all_types, schema)
 
-    if not _os.environ.get("SPARK_GRAFT_SPARK_SENTINEL"):
-        try:
-            return _stage_flush_sentinel_arrow(staged_dir, margin_s, seq,
-                                               all_types)
-        except Exception:
-            pass  # fall through to the Spark path
+
+def _stage_flush_sentinel_spark(spark: SparkSession, staged_dir: str,
+                                margin_s: int, seq: int = 0,
+                                all_types: bool = False,
+                                schema=None) -> str:
+    """Spark-job sentinel staging (see ``_stage_flush_sentinel``): a
+    TakeOrdered scan for the max-``ts`` row plus a one-row write. The
+    fallback for inputs the Arrow path rejects, and the reference its
+    parity test compares against."""
     from pyspark.sql import functions as F
 
     batch = (spark.read.schema(schema).parquet(staged_dir) if schema
@@ -186,7 +173,7 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
     ``user_id`` -1, coalesce a NULL ``value`` to 0, optionally fan out
     one row per distinct ``event_type``; write after the real files with
     a strictly increasing mtime. Raises on anything unexpected — the
-    caller falls back to the Spark path."""
+    caller falls back to ``_stage_flush_sentinel_spark``."""
     import os
 
     import pyarrow as pa
@@ -264,6 +251,43 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
     return staged_dir
 
 
+def drain(spark: SparkSession, plan_fn: Callable[[], DataFrame], *,
+          query_name: str, output_mode: str = "append",
+          out_dir: str | None = None, checkpoint_dir: str | None = None,
+          partition_by: tuple[str, ...] = (),
+          state_partitions: int | None = 8,
+          progress_out: "list | None" = None) -> DataFrame:
+    """The one ``trigger(availableNow=True)`` drain: build ``plan_fn()``,
+    run it to the end of its sources, and return the sink contents as a
+    batch DataFrame — a memory sink named ``query_name`` by default, a
+    fault-tolerant parquet sink (optionally ``partition_by``) when
+    ``out_dir`` is given.
+
+    ``state_partitions`` sizes the stateful shuffle (= number of state store
+    instances, fixed at first start). Per-store open/commit overhead
+    dominates when state is small, so default low; on a cluster size it to
+    the key cardinality; ``None`` keeps the session width. The plan (source
+    staging included) is built and run inside ``session.shuffle_width``, so
+    the session conf is restored after.
+
+    ``progress_out``: a caller-supplied list that receives the drained
+    query's ``recentProgress`` dicts — the per-micro-batch state-operator
+    metrics (numRowsUpdated, numRowsTotal, operator name) that let tests
+    assert HOW MUCH the state store ingested, not just what came out
+    (the pane-vs-explode state-input contract)."""
+    with shuffle_width(spark, state_partitions):
+        writer = plan_fn().writeStream.trigger(availableNow=True)
+        if checkpoint_dir:
+            writer = writer.option("checkpointLocation", checkpoint_dir)
+        q = writer.start(out_dir, format="parquet" if out_dir else "memory",
+                         outputMode=output_mode, queryName=query_name,
+                         partitionBy=list(partition_by) or None)
+        q.awaitTermination()
+    if progress_out is not None:
+        progress_out.extend(p for p in q.recentProgress if p)
+    return spark.read.parquet(out_dir) if out_dir else spark.table(query_name)
+
+
 def replay_parquet_stream(spark: SparkSession, parquet_path: str,
                           plan_fn: Callable[[DataFrame], DataFrame],
                           query_name: str,
@@ -277,53 +301,16 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
                           sentinel_all_types: bool = False,
                           progress_out: "list | None" = None
                           ) -> DataFrame:
-    """Build ``plan_fn(stream)`` over a parquet file source and drain it with
-    ``trigger(availableNow=True)``; returns the sink contents as a batch
-    DataFrame (memory sink by default, fault-tolerant parquet sink when
-    ``out_dir`` is given).
-
-    ``progress_out``: a caller-supplied list that receives the drained
-    query's ``recentProgress`` dicts — the per-micro-batch state-operator
-    metrics (numRowsUpdated, numRowsTotal, operator name) that let tests
-    assert HOW MUCH the state store ingested, not just what came out
-    (the pane-vs-explode state-input contract).
-
-    ``state_partitions`` sizes the stateful shuffle (= number of state store
-    instances, fixed at first start). Per-store open/commit overhead dominates
-    when state is small, so default low; on a cluster size it to the key
-    cardinality. Scoped to this query — the session conf is restored after.
-    """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    state_partitions = resolve_state_partitions(state_partitions)
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    plan = plan_fn(parquet_stream_source(
-        spark, parquet_path, flush_sentinel=flush_sentinel,
-        sentinel_margin_s=sentinel_margin_s,
-        sentinel_count=sentinel_count,
-        max_files_per_trigger=max_files_per_trigger,
-        sentinel_all_types=sentinel_all_types))
-    try:
-        if out_dir:
-            writer = (plan.writeStream.outputMode("append")
-                      .format("parquet").option("path", out_dir)
-                      .trigger(availableNow=True))
-            if checkpoint_dir:
-                writer = writer.option("checkpointLocation", checkpoint_dir)
-            q = writer.start()
-            q.awaitTermination()
-            if progress_out is not None:
-                progress_out.extend(p for p in q.recentProgress if p)
-            return spark.read.parquet(out_dir)
-        writer = (plan.writeStream.outputMode("append")
-                  .format("memory").queryName(query_name)
-                  .trigger(availableNow=True))
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        q = writer.start()
-        q.awaitTermination()
-        if progress_out is not None:
-            progress_out.extend(p for p in q.recentProgress if p)
-        return spark.table(query_name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    """``drain`` of ``plan_fn(stream)`` over a parquet file source (see
+    ``parquet_stream_source`` for the sentinel and trigger options)."""
+    return drain(
+        spark,
+        lambda: plan_fn(parquet_stream_source(
+            spark, parquet_path, flush_sentinel=flush_sentinel,
+            sentinel_margin_s=sentinel_margin_s,
+            sentinel_count=sentinel_count,
+            max_files_per_trigger=max_files_per_trigger,
+            sentinel_all_types=sentinel_all_types)),
+        query_name=query_name, out_dir=out_dir,
+        checkpoint_dir=checkpoint_dir, state_partitions=state_partitions,
+        progress_out=progress_out)

@@ -20,11 +20,10 @@ live cluster the same query runs with a processing-time trigger unchanged.
 
 from __future__ import annotations
 
-from insight_de_smart_grid_spark.streaming.replay import (
-    resolve_state_partitions,
-)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from insight_de_smart_grid_spark.streaming import replay
 
 
 def rollup_stream_plan(readings_stream: DataFrame,
@@ -60,27 +59,15 @@ def materialize_rollup_stream(spark: SparkSession, parquet_path: str,
     the cube as (date, hour)-partitioned parquet; returns the table read
     back. Incremental: a second run with the same checkpoint processes only
     new files and appends only newly-finalized windows."""
-    from insight_de_smart_grid_spark.streaming.replay import (
-        parquet_stream_source,
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    state_partitions = resolve_state_partitions(state_partitions)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream = parquet_stream_source(spark, parquet_path,
-                                       flush_sentinel=flush_sentinel)
-        plan = (rollup_stream_plan(to_readings(stream), **plan_kwargs)
-                .repartition("date", "hour"))
-        q = (plan.writeStream.outputMode("append")
-             .format("parquet").option("path", out_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .partitionBy("date", "hour")
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.read.parquet(out_dir)
+    return replay.drain(
+        spark,
+        lambda: rollup_stream_plan(
+            to_readings(replay.parquet_stream_source(
+                spark, parquet_path, flush_sentinel=flush_sentinel)),
+            **plan_kwargs).repartition("date", "hour"),
+        query_name="rollup_stream", out_dir=out_dir,
+        checkpoint_dir=checkpoint_dir, partition_by=("date", "hour"),
+        state_partitions=state_partitions)
 
 
 def hll_rollup_stream_plan(events_stream: DataFrame,
@@ -117,22 +104,12 @@ def materialize_hll_rollup_stream(spark: SparkSession, parquet_path: str,
     finalizes every real window) and persist (bucket_ts, sketch, cnt) as
     parquet — binary sketch columns store like any other column."""
     from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
-    from insight_de_smart_grid_spark.streaming.replay import (
-        parquet_stream_source,
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    state_partitions = resolve_state_partitions(state_partitions)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream = normalize_event_ts(
-            parquet_stream_source(spark, parquet_path, flush_sentinel=True))
-        plan = hll_rollup_stream_plan(stream, **plan_kwargs)
-        q = (plan.writeStream.outputMode("append")
-             .format("parquet").option("path", out_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.read.parquet(out_dir)
+
+    return replay.drain(
+        spark,
+        lambda: hll_rollup_stream_plan(
+            normalize_event_ts(replay.parquet_stream_source(
+                spark, parquet_path, flush_sentinel=True)),
+            **plan_kwargs),
+        query_name="hll_rollup_stream", out_dir=out_dir,
+        checkpoint_dir=checkpoint_dir, state_partitions=state_partitions)

@@ -19,13 +19,11 @@ Scale notes:
 
 from __future__ import annotations
 
-from insight_de_smart_grid_spark.streaming.replay import (
-    resolve_state_partitions,
-)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
+from insight_de_smart_grid_spark.streaming.replay import drain
 
 DEDUP_KEY = ("user_id", "event_type", "ts", "value")
 
@@ -167,19 +165,9 @@ def run_complete_mode(spark, plan_fn, query_name: str,
                       state_partitions: int = 8) -> DataFrame:
     """Drain any complete-mode plan into a memory sink (it holds the last
     full result) with the state shuffle sized and the session conf
-    restored — the one shared copy of the drain boilerplate."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    state_partitions = resolve_state_partitions(state_partitions)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (plan_fn().writeStream.outputMode("complete")
-             .format("memory").queryName(query_name)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(query_name)
+    restored."""
+    return drain(spark, plan_fn, query_name=query_name,
+                 output_mode="complete", state_partitions=state_partitions)
 
 
 def run_complete_mode_topk(spark, parquet_path: str, to_readings,

@@ -18,7 +18,6 @@ from bench import (  # noqa: E402
     ab_verdict,
     confirmed_regressions,
     crosstree_interleaved,
-    crosstree_measure,
     interleaved_measure,
     is_ingest_regression,
     is_regression,
@@ -171,15 +170,8 @@ def test_previous_round_tip_skips_untracked_driver_artifact(tmp_path):
 def test_crosstree_measure_rejects_missing_commit(tmp_path, capsys):
     """A None/empty previous tip must degrade to 'unattributed' ({} from
     the measurer), never reach `git worktree add None` (round-8 bug)."""
-    def never(wt, names, sf_dir):
-        raise AssertionError("runner must not be called without a commit")
-
-    assert crosstree_measure(str(tmp_path), None, ["q"], "sf",
-                             runner=never) == {}
     assert crosstree_interleaved(str(tmp_path), None, ["q"], "sf",
                                  cur_once=lambda n: 1.0) == {}
-    assert crosstree_measure(str(tmp_path), "", ["q"], "sf",
-                             runner=never) == {}
 
 
 def test_interleaved_measure_alternates_and_medians():
@@ -254,38 +246,52 @@ def test_previous_round_tip_resolves_bench_commit():
     assert previous_round_tip("/tmp") is None  # no artifacts -> no tip
 
 
-def test_crosstree_measure_checks_out_and_cleans_up():
-    """crosstree_measure hands the runner a real worktree of the requested
-    commit (the previous tip's bench.py is present) and removes it even
-    when the runner raises."""
+def test_crosstree_interleaved_checks_out_and_cleans_up(monkeypatch):
+    """crosstree_interleaved hands the prev-tip worker a real worktree of
+    the requested commit (the previous tip's bench.py is present) and
+    removes it even when measuring raises."""
     import subprocess
+
+    import bench
 
     tip = previous_round_tip(str(REPO))
     seen = {}
 
-    def fake_runner(wt, names, sf_dir):
-        seen["wt"] = wt
-        seen["head"] = subprocess.run(
-            ["git", "rev-parse", "HEAD"], cwd=wt,
-            capture_output=True, text=True).stdout.strip()
-        assert (Path(wt) / "bench.py").exists()
-        return {n: 0.5 for n in names}
+    class FakeWorker:
+        def __init__(self, wt, sf_dir):
+            seen["wt"] = wt
+            seen["head"] = subprocess.run(
+                ["git", "rev-parse", "HEAD"], cwd=wt,
+                capture_output=True, text=True).stdout.strip()
+            assert (Path(wt) / "bench.py").exists()
 
-    out = crosstree_measure(str(REPO), tip, ["q1"], "unused",
-                            runner=fake_runner)
-    assert out == {"q1": 0.5} and seen["head"] == tip
+        def measure_once(self, name):
+            return 0.5
+
+        def close(self):
+            seen["closed"] = True
+
+    monkeypatch.setattr(bench, "_PrevTipWorker", FakeWorker)
+    out = crosstree_interleaved(str(REPO), tip, ["q1"], "unused",
+                                cur_once=lambda n: 0.7, rounds=1)
+    assert out == {"q1": {"prev": 0.5, "cur": 0.7}}
+    assert seen["head"] == tip and seen["closed"]
     assert not Path(seen["wt"]).exists()
 
-    def raising_runner(wt, names, sf_dir):
-        seen["wt2"] = wt
-        raise RuntimeError("boom")
+    class RaisingWorker(FakeWorker):
+        def measure_once(self, name):
+            raise RuntimeError("boom")
 
+    monkeypatch.setattr(bench, "_PrevTipWorker", RaisingWorker)
+    seen.clear()
     try:
-        crosstree_measure(str(REPO), tip, ["q1"], "unused",
-                          runner=raising_runner)
+        crosstree_interleaved(str(REPO), tip, ["q1"], "unused",
+                              cur_once=lambda n: 0.7, rounds=1)
     except RuntimeError:
         pass
-    assert not Path(seen["wt2"]).exists()
+    else:
+        raise AssertionError("measuring error must propagate")
+    assert seen["closed"] and not Path(seen["wt"]).exists()
 
 
 def test_prev_tip_worker_enforces_read_deadline():

@@ -1116,12 +1116,9 @@ def test_dup_clusters_loop_width_is_data_sized_and_scoped(spark):
     """Round-12 (VERDICT r11 item 1): the convergence loop's shuffle width
     derives from edge count, not core count — a KB-scale pair graph must
     not schedule core-count tasks per round — and the scoped
-    ``spark.sql.shuffle.partitions`` override is restored afterwards.
-    Results must be identical with the width rule disabled
-    (SPARK_GRAFT_NO_LOOP_WIDTH), including on a chain-shaped graph that
-    needs several propagation rounds."""
-    import os
-
+    ``spark.sql.shuffle.partitions`` override is restored afterwards,
+    including on a chain-shaped graph that needs several propagation
+    rounds."""
     # chain 0-1-2-...-9 (worst-case diameter) plus a dense triangle
     chain = [(i, i + 1) for i in range(9)]
     tri = [(20, 21), (21, 22), (20, 22)]
@@ -1131,9 +1128,3 @@ def test_dup_clusters_loop_width_is_data_sized_and_scoped(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert got == [(i, 0) for i in range(10)] + [(i, 20) for i in
                                                  (20, 21, 22)]
-    os.environ["SPARK_GRAFT_NO_LOOP_WIDTH"] = "1"
-    try:
-        unsized = sorted(map(tuple, dd.dup_clusters(pairs).collect()))
-    finally:
-        del os.environ["SPARK_GRAFT_NO_LOOP_WIDTH"]
-    assert unsized == got

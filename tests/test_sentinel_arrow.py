@@ -8,7 +8,6 @@ sentinel files under the replay's own reader."""
 
 from __future__ import annotations
 
-import os
 import tempfile
 from pathlib import Path
 
@@ -16,8 +15,8 @@ import pytest
 
 from insight_de_smart_grid_spark.sources.pq import parquet_schema
 from insight_de_smart_grid_spark.streaming.replay import (
-    _stage_flush_sentinel,
     _stage_flush_sentinel_arrow,
+    _stage_flush_sentinel_spark,
 )
 from tests.conftest import SF_SMOKE
 
@@ -49,13 +48,9 @@ def test_arrow_sentinel_matches_spark_path(spark, all_types, count):
     for i in range(count):
         _stage_flush_sentinel_arrow(d_arrow, 3600 * (i + 1), seq=i,
                                     all_types=all_types)
-    os.environ["SPARK_GRAFT_SPARK_SENTINEL"] = "1"
-    try:
-        for i in range(count):
-            _stage_flush_sentinel(spark, d_spark, 3600 * (i + 1), seq=i,
-                                  all_types=all_types, schema=schema)
-    finally:
-        del os.environ["SPARK_GRAFT_SPARK_SENTINEL"]
+    for i in range(count):
+        _stage_flush_sentinel_spark(spark, d_spark, 3600 * (i + 1), seq=i,
+                                    all_types=all_types, schema=schema)
 
     a = _sentinel_rows(spark, d_arrow, schema)
     s = _sentinel_rows(spark, d_spark, schema)
