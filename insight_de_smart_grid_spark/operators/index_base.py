@@ -228,8 +228,29 @@ def read_table(spark: SparkSession, path: str, table: str,
     # COMMITTED segment per batch (fresh paths can never hit the
     # (path, mtime) schema cache).
     schema = parquet_schema(spark, segs[0])
+    # an explicit-schema read null-fills a column a file lacks, so a
+    # drifted segment (version skew, bad compaction) must fail here: the
+    # newest segment's part-file footer names must match the example's
+    if len(segs) > 1:
+        want, got = _field_names(segs[0]), _field_names(segs[-1])
+        if got != want:
+            raise ValueError(
+                f"index table {table}: segment {segs[-1]} has fields "
+                f"{sorted(got)}, the example segment {segs[0]} has "
+                f"{sorted(want)}")
     return reduce(DataFrame.unionByName,
                   [read_parquet(spark, s, schema=schema) for s in segs])
+
+
+def _field_names(segment: str) -> "frozenset[str]":
+    """Column names in the footer of one part file of a data-bearing
+    ``segment`` — a metadata read, no Spark job; partition columns live in
+    the directory names, so segments of one layout compare like for
+    like."""
+    import pyarrow.parquet as pq
+
+    part = next(Path(segment).rglob("*.parquet"))
+    return frozenset(pq.read_schema(part).names)
 
 
 @contextmanager

@@ -484,11 +484,9 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchase_click_stream_plan,
     )
 
-    # width 4: a stream-stream join opens 4 state stores per partition —
-    # see the streaming_left_join call site for the round-12 A/B
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet", purchase_click_stream_plan,
-        query_name=f"ssj_{uuid.uuid4().hex[:8]}", state_partitions=4)
+        query_name=f"ssj_{uuid.uuid4().hex[:8]}")
 
 
 @register("streaming_range_join_bucketed", STREAM_INTERVAL_JOIN_SQL)
@@ -512,12 +510,10 @@ def q_streaming_range_join_bucketed(spark: SparkSession,
         purchase_click_bucketed_stream_plan,
     )
 
-    # width 4: a stream-stream join opens 4 state stores per partition —
-    # see the streaming_left_join call site for the round-12 A/B
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         purchase_click_bucketed_stream_plan,
-        query_name=f"ssjb_{uuid.uuid4().hex[:8]}", state_partitions=4)
+        query_name=f"ssjb_{uuid.uuid4().hex[:8]}")
 
 
 # The streamed dedup projects ONLY the business-key columns, so its result

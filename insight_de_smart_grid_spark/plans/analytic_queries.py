@@ -257,16 +257,10 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # correctness gain. -1 guard drops the sentinels' own outer rows.
     from pyspark.sql import functions as _F
 
-    # state_partitions=4 (round-12, VERDICT r11 items 1/3): a
-    # stream-stream join opens FOUR state-store instances per partition
-    # (two sides x keyWithIndex/keyToNumValues), so per-store fixed cost
-    # is 4x an aggregation's — interleaved A/B at sf0.1 read the join
-    # replays 0.75-0.83x at width 4 vs 8 while the agg/stateful-map
-    # replays prefer 8. Results are width-invariant (same oracle row).
     out = replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet", purchase_click_left_stream_plan,
         query_name=f"slj_{uuid.uuid4().hex[:8]}", flush_sentinel=True,
-        sentinel_all_types=True, state_partitions=4)
+        sentinel_all_types=True)
     return out.where(_F.col("user_id") != -1)
 
 
@@ -575,9 +569,6 @@ GROUP BY 1
 def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
-    from insight_de_smart_grid_spark.streaming.replay import (
-        parquet_stream_source,
-    )
     from insight_de_smart_grid_spark.streaming.stream_ops import (
         static_enrich_totals_plan,
     )
@@ -591,10 +582,8 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return run_complete_mode(
-        spark,
-        lambda: static_enrich_totals_plan(
-            parquet_stream_source(spark, f"{sf_dir}/events.parquet"),
-            labels),
+        spark, f"{sf_dir}/events.parquet",
+        lambda s: static_enrich_totals_plan(s, labels),
         query_name=f"sse_{uuid.uuid4().hex[:8]}")
 
 

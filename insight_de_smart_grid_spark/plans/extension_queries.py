@@ -979,8 +979,7 @@ def q_streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return replay_parquet_stream(
         spark, f"{sf_dir}/documents.parquet",
         lambda s: mm.decode_audio(mm.attach_audio_payload(s)),
-        query_name=f"smd_{uuid.uuid4().hex[:8]}",
-        state_partitions=None)
+        query_name=f"smd_{uuid.uuid4().hex[:8]}")
 
 
 @register("pipeline_model_score", tx.MODEL_QUALITY_SQL)

@@ -1322,14 +1322,12 @@ def q_streaming_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into its own stateful micro-batch — a 2x slowdown for no
     # correctness gain. Sentinel rows carry user_id = -1 and are dropped
     # after the join.
-    # width 4: a stream-stream join opens 4 state stores per partition —
-    # see the streaming_left_join call site for the round-12 A/B
     out = replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         purchase_click_full_stream_plan,
         query_name="unused", checkpoint_dir=f"{base}/ck",
         out_dir=f"{base}/sink", flush_sentinel=True,
-        sentinel_all_types=True, state_partitions=4)
+        sentinel_all_types=True)
     return out.where(F.col("user_id") != -1)
 
 

@@ -9,13 +9,66 @@ operators driver-checkable and batch≡stream testable.
 
 from __future__ import annotations
 
+import math
+import os
 import tempfile
+from functools import lru_cache
 from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from insight_de_smart_grid_spark.session import shuffle_width
+from insight_de_smart_grid_spark.session import (
+    default_parallelism,
+    shuffle_width,
+)
+
+# Source rows one state store takes per micro-batch before the stateful
+# shuffle widens by another partition. Each store pays a fixed open/commit
+# cost every batch, so stores beyond the data's needs only add CPU. On
+# 4 cores: 5k-row batches run best at width 1 (CPU 7.7 s vs 15.5 s at 8,
+# wall no worse); 100k-row batches need width 4 to keep wall (28.2 s vs
+# 27.9 s at 8, 38.1 s at 2). Any value in (5k, 33k] gives both widths.
+ROWS_PER_STORE = 25_000
+
+
+@lru_cache(maxsize=512)
+def _footer_at(path: str, mtime_ns: int, size: int):
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(path)
+
+
+def _footer(path):
+    """Parquet footer metadata of ``path`` (symlinks resolved), read once
+    per (file, mtime, size) per process: the width rule and the Arrow
+    sentinel pass open the same footers."""
+    real = os.path.realpath(path)
+    st = os.stat(real)
+    return _footer_at(real, st.st_mtime_ns, st.st_size)
+
+
+def state_width(parquet_path: str,
+                max_files_per_trigger: int | None = None) -> int:
+    """Stateful shuffle width for a replay of ``parquet_path``:
+    ``ceil(rows_per_batch / ROWS_PER_STORE)`` clamped to
+    ``[1, default_parallelism()]``. ``rows_per_batch`` is the largest row
+    sum over the files one trigger takes (``max_files_per_trigger`` files
+    in mtime order, name breaking ties; all files when unset), read from
+    the parquet footers only — no Spark job. The rule only decides a
+    query's first start: a restart keeps the width stored in its
+    checkpoint."""
+    p = Path(parquet_path)
+    files = [p] if p.is_file() else sorted(
+        (f for f in p.rglob("*") if f.is_file() and not any(
+            part.startswith(("_", ".")) for part in f.relative_to(p).parts)),
+        key=lambda f: (os.stat(f).st_mtime_ns, f.name))
+    rows = [_footer(f).num_rows for f in files]
+    step = max_files_per_trigger or len(rows) or 1
+    per_batch = max((sum(rows[i:i + step])
+                     for i in range(0, len(rows), step)), default=0)
+    return max(1, min(math.ceil(per_batch / ROWS_PER_STORE),
+                      default_parallelism()))
 
 
 def parquet_stream_source(spark: SparkSession, parquet_path: str,
@@ -158,7 +211,6 @@ def _stage_flush_sentinel_spark(spark: SparkSession, staged_dir: str,
     part.rename(dest)
     # strictly increasing mtimes: the file source orders batches by
     # modification time, and sentinel N must process after sentinel N-1
-    import os
     now = os.stat(staged_dir).st_mtime + 10 * (seq + 1)
     os.utime(dest, (now, now))
     return staged_dir
@@ -174,8 +226,6 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
     one row per distinct ``event_type``; write after the real files with
     a strictly increasing mtime. Raises on anything unexpected — the
     caller falls back to ``_stage_flush_sentinel_spark``."""
-    import os
-
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -187,8 +237,7 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
     # 1. locate the row group holding the global max ts (metadata only)
     best = None  # (max_stat, file, rg_index)
     for f in files:
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
+        md = _footer(f)
         for rg in range(md.num_row_groups):
             rgm = md.row_group(rg)
             col = next((rgm.column(ci) for ci in range(rgm.num_columns)
@@ -255,7 +304,7 @@ def drain(spark: SparkSession, plan_fn: Callable[[], DataFrame], *,
           query_name: str, output_mode: str = "append",
           out_dir: str | None = None, checkpoint_dir: str | None = None,
           partition_by: tuple[str, ...] = (),
-          state_partitions: int | None = 8,
+          state_partitions: int,
           progress_out: "list | None" = None) -> DataFrame:
     """The one ``trigger(availableNow=True)`` drain: build ``plan_fn()``,
     run it to the end of its sources, and return the sink contents as a
@@ -263,12 +312,14 @@ def drain(spark: SparkSession, plan_fn: Callable[[], DataFrame], *,
     fault-tolerant parquet sink (optionally ``partition_by``) when
     ``out_dir`` is given.
 
-    ``state_partitions`` sizes the stateful shuffle (= number of state store
-    instances, fixed at first start). Per-store open/commit overhead
-    dominates when state is small, so default low; on a cluster size it to
-    the key cardinality; ``None`` keeps the session width. The plan (source
-    staging included) is built and run inside ``session.shuffle_width``, so
-    the session conf is restored after.
+    ``state_partitions`` sizes the stateful shuffle (= number of state
+    store instances and of sink files per trigger). Callers over a parquet
+    source compute it with ``state_width``: one store per
+    ``ROWS_PER_STORE`` rows a micro-batch brings, at most one per core,
+    because every store pays a fixed open/commit cost each batch. It only
+    takes effect at first start; a restart keeps the width in its
+    checkpoint. The plan (source staging included) is built and run inside
+    ``session.shuffle_width``, so the session conf is restored after.
 
     ``progress_out``: a caller-supplied list that receives the drained
     query's ``recentProgress`` dicts — the per-micro-batch state-operator
@@ -293,7 +344,6 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
                           query_name: str,
                           checkpoint_dir: str | None = None,
                           out_dir: str | None = None,
-                          state_partitions: int | None = 8,
                           flush_sentinel: bool = False,
                           sentinel_margin_s: int = 3600,
                           sentinel_count: int = 1,
@@ -302,7 +352,8 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
                           progress_out: "list | None" = None
                           ) -> DataFrame:
     """``drain`` of ``plan_fn(stream)`` over a parquet file source (see
-    ``parquet_stream_source`` for the sentinel and trigger options)."""
+    ``parquet_stream_source`` for the sentinel and trigger options), at
+    the ``state_width`` of that source."""
     return drain(
         spark,
         lambda: plan_fn(parquet_stream_source(
@@ -312,5 +363,6 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
             max_files_per_trigger=max_files_per_trigger,
             sentinel_all_types=sentinel_all_types)),
         query_name=query_name, out_dir=out_dir,
-        checkpoint_dir=checkpoint_dir, state_partitions=state_partitions,
+        checkpoint_dir=checkpoint_dir,
+        state_partitions=state_width(parquet_path, max_files_per_trigger),
         progress_out=progress_out)

@@ -52,7 +52,6 @@ def rollup_stream_plan(readings_stream: DataFrame,
 def materialize_rollup_stream(spark: SparkSession, parquet_path: str,
                               to_readings, out_dir: str,
                               checkpoint_dir: str,
-                              state_partitions: int = 8,
                               flush_sentinel: bool = False,
                               **plan_kwargs) -> DataFrame:
     """Replay a parquet events table through the streaming rollup and persist
@@ -67,7 +66,7 @@ def materialize_rollup_stream(spark: SparkSession, parquet_path: str,
             **plan_kwargs).repartition("date", "hour"),
         query_name="rollup_stream", out_dir=out_dir,
         checkpoint_dir=checkpoint_dir, partition_by=("date", "hour"),
-        state_partitions=state_partitions)
+        state_partitions=replay.state_width(parquet_path))
 
 
 def hll_rollup_stream_plan(events_stream: DataFrame,
@@ -98,7 +97,6 @@ def hll_rollup_stream_plan(events_stream: DataFrame,
 
 def materialize_hll_rollup_stream(spark: SparkSession, parquet_path: str,
                                   out_dir: str, checkpoint_dir: str,
-                                  state_partitions: int = 8,
                                   **plan_kwargs) -> DataFrame:
     """Replay an events table through the sketch rollup (flush-sentinel
     finalizes every real window) and persist (bucket_ts, sketch, cnt) as
@@ -112,4 +110,5 @@ def materialize_hll_rollup_stream(spark: SparkSession, parquet_path: str,
                 spark, parquet_path, flush_sentinel=True)),
             **plan_kwargs),
         query_name="hll_rollup_stream", out_dir=out_dir,
-        checkpoint_dir=checkpoint_dir, state_partitions=state_partitions)
+        checkpoint_dir=checkpoint_dir,
+        state_partitions=replay.state_width(parquet_path))

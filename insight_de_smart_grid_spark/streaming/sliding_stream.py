@@ -69,7 +69,6 @@ def run_sliding_stats_stream(spark: SparkSession, parquet_path: str,
                              query_name: str = "sliding_stream",
                              checkpoint_dir: str | None = None,
                              out_dir: str | None = None,
-                             state_partitions: int | None = 8,
                              flush_sentinel: bool = True,
                              progress_out: "list | None" = None,
                              panes: "bool | str" = True,
@@ -119,5 +118,5 @@ def run_sliding_stats_stream(spark: SparkSession, parquet_path: str,
             (pre or (lambda s: s))(normalize_event_ts(stream)),
             panes=panes, **plan_kwargs),
         query_name=query_name, checkpoint_dir=checkpoint_dir,
-        out_dir=out_dir, state_partitions=state_partitions,
-        flush_sentinel=flush_sentinel, progress_out=progress_out)
+        out_dir=out_dir, flush_sentinel=flush_sentinel,
+        progress_out=progress_out)

@@ -131,6 +131,34 @@ def test_degenerate_staging_inputs_are_noops(spark, tmp_path):
     assert not staging.exists()
 
 
+def test_read_table_rejects_a_drifted_segment(spark, tmp_path):
+    """ADVICE r12: schema-by-example reads every segment with the first
+    segment's schema, which would null-fill a column a drifted segment
+    lacks. The newest segment's footer names are checked against the
+    example's, and a mismatch fails naming that segment."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from insight_de_smart_grid_spark.operators.index_manifest import commit
+
+    def segment(name: str, **cols) -> str:
+        seg = tmp_path / "idx" / "t" / name
+        seg.mkdir(parents=True)
+        pq.write_table(pa.table(cols), seg / "part-0.parquet")
+        return str(seg)
+
+    idx = str(tmp_path / "idx")
+    commit(idx, adds={"t": [segment("seg-a", id=[1, 2], x=[1.0, 2.0]),
+                            segment("seg-b", x=[3.0], id=[3])]})
+    assert sorted(tuple(r) for r in ib.read_table(spark, idx, "t")
+                  .select("id", "x").collect()) == [
+        (1, 1.0), (2, 2.0), (3, 3.0)]
+    drifted = segment("seg-c", id=[4], y=[4.0])
+    commit(idx, adds={"t": [drifted]})
+    with pytest.raises(ValueError, match="seg-c"):
+        ib.read_table(spark, idx, "t")
+
+
 def test_one_ingest_driver():
     """One ingest driver for the index families: no operator module but
     the core names the streaming driver, the idempotence-mark check or a

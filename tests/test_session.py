@@ -138,7 +138,9 @@ def test_env_knobs_and_shuffle_width_live_in_session():
     """Only ``session.py`` reads the environment, names a
     ``SPARK_GRAFT_*`` variable (just ``CPUS`` and ``DRIVER_MEM``) or sets
     ``spark.sql.shuffle.partitions`` at runtime; everything else goes
-    through ``get_spark`` and ``shuffle_width``."""
+    through ``get_spark`` and ``shuffle_width``. No module passes a
+    literal ``state_partitions=`` (a number or ``None``): the state width
+    has one source, ``streaming.replay.state_width``."""
     allowed = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
     hits = []
     for f in sorted(Path(session.__file__).parent.rglob("*.py")):
@@ -159,4 +161,9 @@ def test_env_knobs_and_shuffle_width_live_in_session():
                   and isinstance(node.args[0], ast.Constant)
                   and node.args[0].value == SHUFFLE):
                 hits.append(f"{where}:conf.set({SHUFFLE})")
+            elif isinstance(node, ast.Call):
+                hits.extend(f"{where}:state_partitions=literal"
+                            for kw in node.keywords
+                            if kw.arg == "state_partitions"
+                            and isinstance(kw.value, ast.Constant))
     assert not hits

@@ -863,3 +863,103 @@ def test_exactly_once_after_midstream_crash(spark, tmp_path):
                str(root / pointer.read_text().strip())).collect()}
     want = {tuple(r) for r in latest_compaction(ev).collect()}
     assert got == want and len(want) > 0
+
+
+def _write_rows(path, n: int, mtime: "int | None" = None, first: int = 0):
+    """A parquet file of ``n`` (user_id, event_type) rows, optionally
+    stamped with ``mtime`` (the file source orders triggers by it)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({
+        "user_id": pa.array(range(first, first + n), pa.int64()),
+        "event_type": pa.array(["click", "purchase"] * (n // 2)
+                               + ["click"] * (n % 2))}), path)
+    if mtime is not None:
+        os.utime(path, (mtime, mtime))
+
+
+def test_state_width_rule(spark, tmp_path, monkeypatch):
+    """``state_width``: one state store per ``ROWS_PER_STORE`` rows of
+    the largest trigger, clamped to [1, cores]; triggers group
+    ``max_files_per_trigger`` files in mtime order; bookkeeping files
+    don't count; sizing reads footers only, so no Spark job runs."""
+    from insight_de_smart_grid_spark.session import default_parallelism
+    from insight_de_smart_grid_spark.streaming import replay as rp
+
+    tiny = tmp_path / "tiny"
+    tiny.mkdir()
+    _write_rows(tiny / "a.parquet", 3)
+    (tiny / "_SUCCESS").write_text("")
+    assert rp.state_width(str(tiny)) == 1
+    assert rp.state_width(str(tiny / "a.parquet")) == 1
+
+    cores = default_parallelism()
+    big = tmp_path / "big"
+    big.mkdir()
+    _write_rows(big / "a.parquet", 8 * cores + 1)
+    monkeypatch.setattr(rp, "ROWS_PER_STORE", 8)
+    assert 8 * cores + 1 > rp.ROWS_PER_STORE * cores
+    assert rp.state_width(str(big)) == cores
+
+    # mtime order b, c, a differs from name order a, b, c
+    grouped = tmp_path / "grouped"
+    grouped.mkdir()
+    _write_rows(grouped / "a.parquet", 6, mtime=1_700_000_300)
+    _write_rows(grouped / "b.parquet", 4, mtime=1_700_000_100)
+    _write_rows(grouped / "c.parquet", 4, mtime=1_700_000_200)
+    monkeypatch.setattr(rp, "ROWS_PER_STORE", 1)
+    monkeypatch.setattr(rp, "default_parallelism", lambda: 64)
+    assert rp.state_width(str(grouped)) == 14
+    assert rp.state_width(str(grouped), 1) == 6
+    assert rp.state_width(str(grouped), 2) == 8  # [b, c] then [a]
+    assert rp.state_width(str(grouped), 3) == 14
+
+    fresh = tmp_path / "fresh"  # footers no cache has seen
+    fresh.mkdir()
+    for i in range(3):
+        _write_rows(fresh / f"p{i}.parquet", 5)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    assert rp.state_width(str(fresh), 1) == 5
+    assert set(tracker.getJobIdsForGroup()) == before
+
+
+def test_restart_keeps_checkpointed_state_width(spark, tmp_path,
+                                                monkeypatch):
+    """The width rule decides a query's first start only: after a file
+    that would size a wider shuffle lands, the restarted query keeps the
+    width stored in its checkpoint and the sink still equals the batch
+    answer."""
+    from insight_de_smart_grid_spark.streaming import replay as rp
+
+    monkeypatch.setattr(rp, "ROWS_PER_STORE", 4)
+    monkeypatch.setattr(rp, "default_parallelism", lambda: 4)
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_rows(src / "a.parquet", 3)
+    assert rp.state_width(str(src)) == 1
+
+    def run():
+        prog = []
+        out = rp.replay_parquet_stream(
+            spark, str(src),
+            lambda s: s.select("user_id", "event_type").dropDuplicates(),
+            query_name=f"rw_{uuid.uuid4().hex[:8]}",
+            checkpoint_dir=str(tmp_path / "ck"),
+            out_dir=str(tmp_path / "sink"), progress_out=prog)
+        widths = {so["numShufflePartitions"] for p in prog
+                  for so in p.get("stateOperators", [])}
+        return out, widths
+
+    _, widths1 = run()
+    assert widths1 == {1}
+    _write_rows(src / "b.parquet", 12, first=2)
+    assert rp.state_width(str(src)) == 4
+    out2, widths2 = run()
+    assert widths2 == widths1
+    want = {tuple(r) for r in spark.read.parquet(str(src))
+            .select("user_id", "event_type").distinct().collect()}
+    assert {tuple(r) for r in out2.collect()} == want and len(want) == 14
