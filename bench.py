@@ -26,11 +26,12 @@ from insight_de_smart_grid_spark.operators.staging import (  # noqa: E402
 
 
 def run_query(spark, name: str, sf_dir: str) -> None:
-    """One fully-consumed noop execution inside a checkpoint_scope: any
-    localCheckpoint blocks a staging operator pins are released as soon as
-    the query's sink finishes, so the 202-query loop holds at most one
-    query's staged blocks at a time instead of accumulating all of them
-    for the session (operators/staging.py lifecycle contract)."""
+    """One fully-consumed noop execution inside a checkpoint_scope: the
+    localCheckpoint blocks a staging operator pins and the scratch dirs a
+    replay or index query creates are released as soon as the query's
+    sink finishes, so the loop over every registered query holds at most
+    one query's leftovers at a time and leaves none behind
+    (operators/staging.py lifecycle contract)."""
     with checkpoint_scope(spark):
         QUERIES[name].fn(spark, sf_dir).write.mode("overwrite").format(
             "noop").save()
@@ -379,7 +380,7 @@ def main() -> None:
             print(f"bench: {name} failed in warmup: {exc}", file=sys.stderr)
     # lifecycle check: the scoped loop must not leak pinned blocks — a
     # staging operator whose blocks survive its scope would accumulate
-    # across 202 queries and distort every later timing
+    # across the whole query loop and distort every later timing
     leaked = pinned_rdd_ids(spark) - pins_before
     if leaked:
         print(f"bench: WARNING {len(leaked)} RDDs stayed pinned after the "

@@ -93,8 +93,7 @@ def word_ngrams(docs: DataFrame, n: int = 3, text_col: str = "text",
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.1,
                         text_col: str = "text",
-                        id_col: str = "doc_id",
-                        materialize: bool = True) -> DataFrame:
+                        id_col: str = "doc_id") -> DataFrame:
     """Exact Jaccard over word-n-gram shingle sets, inverted on shingles so
     only docs sharing >= 1 shingle ever pair. Output: (doc_a, doc_b, jaccard).
 
@@ -104,11 +103,9 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.1,
     # join on a 64-bit shingle hash, not the string: halves shuffle width and
     # makes the equi-join key fixed-size (collision odds ~(n_shingles^2)/2^64)
     # three consumers (both join sides + the size table) — tokenize once
-    # (at scale: the staged shingle table; see SCALE.md; pass
-    # materialize=False to keep pure lineage — staging.py contract)
+    # (at scale: the staged shingle table; see SCALE.md)
     sh = stage(word_ngrams(docs, n, text_col, id_col)
-               .select(F.col(id_col), F.xxhash64("g").alias("g")),
-               materialize)
+               .select(F.col(id_col), F.xxhash64("g").alias("g")))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -900,8 +897,7 @@ FROM clus c JOIN qual q ON c.doc_id = q.doc_id""")
 def duplicate_spans(docs: DataFrame, k: int = 20,
                     text_col: str = "text",
                     id_col: str = "doc_id",
-                    skew_safe: bool = False,
-                    materialize: bool = True) -> DataFrame:
+                    skew_safe: bool = False) -> DataFrame:
     """Exact duplicate-substring statistics per document (the
     exact-substring dedup of Lee et al., "Deduplicating Training Data
     Makes Language Models Better", reduced from suffix arrays to k-gram
@@ -929,8 +925,7 @@ def duplicate_spans(docs: DataFrame, k: int = 20,
     map-side BEFORE the wire, and the remaining pos-by-g join is a plain
     equi-join AQE's skew-join splitting can rebalance (windows it
     cannot). The exploded stream feeds both the aggregate and the
-    join-back, so it is staged once (``materialize=False`` keeps pure
-    lineage and recomputes it per side); identical
+    join-back, so it is staged once; identical
     output (same oracle row, `dedup_duplicate_spans_skew_safe`), and
     `tests/test_scale_stress.py` measures the crossover on a hot-gram
     corpus. On the benign bench corpus the window form measured 2.8x
@@ -946,9 +941,8 @@ def duplicate_spans(docs: DataFrame, k: int = 20,
                    .alias("pos0", "g")))
     if skew_safe:
         # two consumers of the scan-speed explode (the df aggregate and
-        # the join-back left side) — stage it once (staging.py contract;
-        # materialize=False keeps pure lineage and recomputes per side)
-        pos = stage(pos, materialize)
+        # the join-back left side) — stage it once
+        pos = stage(pos)
         dfreq = (pos.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
                  .filter(F.col("df") > 1).select("g"))
         # SHUFFLE_HASH, never broadcast: dfreq is the corpus's distinct
@@ -1025,8 +1019,7 @@ GROUP BY 1
 
 def containment_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.25,
                       text_col: str = "text",
-                      id_col: str = "doc_id",
-                      materialize: bool = True) -> DataFrame:
+                      id_col: str = "doc_id") -> DataFrame:
     """Asymmetric near-dup: containment = |A ∩ B| / min(|A|, |B|) over word
     n-gram shingle sets — catches a document EMBEDDED in a larger one,
     which symmetric Jaccard dilutes toward 0 as the host grows (the
@@ -1035,11 +1028,9 @@ def containment_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.25,
     only docs sharing a shingle ever pair); the ratio of integers is
     bit-stable cross-engine."""
     # three consumers (both join sides + the size table) — tokenize once
-    # (at scale: the staged shingle table; see SCALE.md; pass
-    # materialize=False to keep pure lineage — staging.py contract)
+    # (at scale: the staged shingle table; see SCALE.md)
     sh = stage(word_ngrams(docs, n, text_col, id_col)
-               .select(F.col(id_col), F.xxhash64("g").alias("g")),
-               materialize)
+               .select(F.col(id_col), F.xxhash64("g").alias("g")))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -1091,8 +1082,7 @@ def containment_pairs_lsh(docs: DataFrame, n: int = 3,
                           n_hashes: int = 32, bands: int = 8,
                           max_df: int = 5,
                           text_col: str = "text",
-                          id_col: str = "doc_id",
-                          materialize: bool = True) -> DataFrame:
+                          id_col: str = "doc_id") -> DataFrame:
     """Corpus-scale BLOCKED tier for containment (round-7; the
     ``dedup_clusters_lsh`` pattern applied to the last two output-bound
     exact tiers): exact containment verified only on a bounded candidate
@@ -1130,13 +1120,11 @@ def containment_pairs_lsh(docs: DataFrame, n: int = 3,
     staged shingle-hash table is the persisted index at 100 TB)."""
     gh_tbl = stage(
         word_ngrams(docs, n, text_col, id_col)
-        .select(F.col(id_col), portable_hash60(F.col("g")).alias("gh")),
-        materialize)
+        .select(F.col(id_col), portable_hash60(F.col("g")).alias("gh")))
     sig_sets = stage(
         gh_tbl.groupBy(id_col)
         .agg(F.collect_set("gh").alias("shingles"),
-             *_min_hash_exprs(n_hashes, f"(gh % {_MINHASH_P})")),
-        materialize)
+             *_min_hash_exprs(n_hashes, f"(gh % {_MINHASH_P})")))
     band_cands = lsh_candidate_pairs(sig_sets, n_hashes, bands, id_col)
     rare = (gh_tbl.groupBy("gh").agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") <= F.lit(max_df))
@@ -1202,8 +1190,7 @@ def winnow_near_dups_lsh(docs: DataFrame, k: int = 8, w: int = 4,
                          n_hashes: int = 32, bands: int = 8,
                          ngram: int = 3,
                          text_col: str = "text",
-                         id_col: str = "doc_id",
-                         materialize: bool = True) -> DataFrame:
+                         id_col: str = "doc_id") -> DataFrame:
     """Corpus-scale blocked tier for winnow near-dups (round-7): the
     exact MOSS scoring (shared rare winnowed fingerprints, identical
     rare rule and counts) computed only on MinHash+LSH band candidates
@@ -1238,7 +1225,7 @@ def winnow_near_dups_lsh(docs: DataFrame, k: int = 8, w: int = 4,
             .filter(F.col("df") <= F.greatest(F.lit(max_df),
                                               F.floor(F.col("__n") / 100)))
             .select("fp"))
-    rare_fps = stage(fps.join(rare, "fp"), materialize)
+    rare_fps = stage(fps.join(rare, "fp"))
     fa = rare_fps.select(F.col(id_col).alias("doc_a"), "fp")
     fb = rare_fps.select(F.col(id_col).alias("doc_b"), "fp")
     return (cands
@@ -1290,8 +1277,7 @@ HAVING count(*) >= {min_shared}
 
 def source_overlap(docs: DataFrame, n: int = 3, text_col: str = "text",
                    id_col: str = "doc_id",
-                   source_col: str = "source",
-                   materialize: bool = True) -> DataFrame:
+                   source_col: str = "source") -> DataFrame:
     """Pairwise n-gram overlap between SOURCES — the corpus-provenance
     report behind "how much of source B is already in source A"
     (mirror-site detection, licensing audits, contamination triage before
@@ -1308,7 +1294,7 @@ def source_overlap(docs: DataFrame, n: int = 3, text_col: str = "text",
     src = docs.select(F.col(id_col), F.col(source_col).alias("src"))
     sg = stage(sh.join(src, id_col)
                .select("src", F.xxhash64("g").alias("h"))
-               .distinct(), materialize)
+               .distinct())
     sizes = sg.groupBy("src").agg(F.count(F.lit(1)).alias("sz"))
     a, b = sg.alias("a"), sg.alias("b")
     inter = (a.join(b, (F.col("a.h") == F.col("b.h"))
@@ -1446,8 +1432,7 @@ def incremental_dedup_bloom(incoming: DataFrame, corpus: DataFrame,
 def jaccard_pairs_prefix_filtered(docs: DataFrame, n: int = 3,
                                   threshold: float = 0.5,
                                   text_col: str = "text",
-                                  id_col: str = "doc_id",
-                                  materialize: bool = True) -> DataFrame:
+                                  id_col: str = "doc_id") -> DataFrame:
     """Exact Jaccard >= threshold via PREFIX FILTERING (the AllPairs/PPJoin
     recipe, Bayardo et al. WWW'07 / Xiao et al. WWW'08): invert only each
     document's prefix tokens instead of its whole shingle set.
@@ -1479,11 +1464,9 @@ def jaccard_pairs_prefix_filtered(docs: DataFrame, n: int = 3,
     # parquet scans, 0 reused exchanges). At cluster scale this is the
     # "write the shingle table, then join against it" step every AllPairs
     # implementation stages; locally localCheckpoint keeps it in block
-    # storage without lineage (materialize=False keeps pure lineage —
-    # staging.py contract).
+    # storage without lineage.
     sh = stage(word_ngrams(docs, n, text_col, id_col)
-               .select(F.col(id_col), F.xxhash64("g").alias("g")),
-               materialize)
+               .select(F.col(id_col), F.xxhash64("g").alias("g")))
     dfreq = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     sized = sh.join(dfreq, "g")
     w = Window.partitionBy(id_col).orderBy("df", "g")
@@ -1599,15 +1582,13 @@ GROUP BY doc_id
 def jaccard_threshold_sweep(docs: DataFrame, n: int = 3,
                             min_jaccard: float = 0.02, buckets: int = 20,
                             text_col: str = "text",
-                            id_col: str = "doc_id",
-                            materialize: bool = True) -> DataFrame:
+                            id_col: str = "doc_id") -> DataFrame:
     """Pair-count histogram over Jaccard buckets in ONE inversion pass —
     the threshold-tuning view: before committing a dedup threshold to a
     100 TB run, see how many pairs each candidate threshold would sweep
     in. Bucket = floor(jaccard * buckets) / buckets; Jaccard is a ratio of
     identical integers in both engines, so bucket edges cannot drift."""
-    pairs = ngram_jaccard_pairs(docs, n, min_jaccard, text_col, id_col,
-                                materialize=materialize)
+    pairs = ngram_jaccard_pairs(docs, n, min_jaccard, text_col, id_col)
     bucket = F.round(F.floor(F.col("jaccard") * buckets)
                      / F.lit(float(buckets)), 6)
     return (pairs.select(bucket.alias("bucket"))

@@ -22,6 +22,8 @@ in whole-stage codegen.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -164,6 +166,23 @@ def _probe_frame(readings: DataFrame, slide_seconds: int, time_col: str,
     return base.agg(F.count("*").alias("n"), g_expr)
 
 
+def use_panes(panes: "bool | str", window: str, slide: "str | None",
+              probe_frame: Callable[[], DataFrame], time_col: str,
+              keys: tuple[str, ...]) -> bool:
+    """The one explode-vs-panes decision, batch and streaming: panes
+    only when the window splits into more than one whole slide pane, and
+    for ``panes="auto"`` only when ``pane_density`` over
+    ``probe_frame()`` reaches ``PANE_DENSITY_CROSSOVER``. The probe frame
+    is built only when that measurement runs."""
+    w_s = _interval_seconds(window)
+    s_s = _interval_seconds(slide) if slide else None
+    if not (panes and w_s and s_s and w_s % s_s == 0 and w_s != s_s):
+        return False
+    return panes != "auto" or pane_density(
+        probe_frame(), s_s, time_col, keys,
+        sample_fraction=PROBE_SAMPLE_FRACTION) >= PANE_DENSITY_CROSSOVER
+
+
 def duty_cycle(readings: DataFrame,
                window: str = "10 minutes",
                slide: str | None = None,
@@ -211,16 +230,9 @@ def duty_cycle(readings: DataFrame,
     sparse fixture keeps the single-shuffle plan. Registered as
     ``duty_cycle_sliding_auto`` against the same oracle SQL; the choice
     is plan-asserted on both corpora in the stress sweep."""
-    w_s = _interval_seconds(window)
-    s_s = _interval_seconds(slide) if slide else None
-    decomposable = (slide is not None and w_s and s_s
-                    and w_s % s_s == 0 and w_s != s_s)
-    if panes == "auto":
-        panes = bool(decomposable) and (
-            pane_density(readings, s_s, time_col, keys,
-                         sample_fraction=PROBE_SAMPLE_FRACTION)
-            >= PANE_DENSITY_CROSSOVER)
-    if slide is not None and not (panes and decomposable):
+    panes = use_panes(panes, window, slide, lambda: readings, time_col,
+                      keys)
+    if slide is not None and not panes:
         # spread the raw readings before the window/slide EXPLOSION
         # (round-11, guide §2.2/§3.3): a single-split scan otherwise
         # runs the w/s-fold explode and the partial aggregate serially
@@ -233,7 +245,8 @@ def duty_cycle(readings: DataFrame,
         from insight_de_smart_grid_spark.operators.layout import spread
 
         readings = spread(readings, time_col, *keys)
-    if panes and decomposable:
+    if panes:
+        w_s, s_s = _interval_seconds(window), _interval_seconds(slide)
         n_panes = w_s // s_s
         pane = (
             readings

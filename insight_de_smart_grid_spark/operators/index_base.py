@@ -55,6 +55,7 @@ from insight_de_smart_grid_spark.operators.index_manifest import (
     read_pin,
     stage_segment,
 )
+from insight_de_smart_grid_spark.operators.staging import scratch_dir
 
 
 def stage_concurrently(*thunks: "Callable[[], object]") -> list:
@@ -480,14 +481,13 @@ def stage_id_slices(corpus: DataFrame, staging: str, n_batches: int,
     serves it. Zero batches is a no-op."""
     import os
     import shutil
-    import tempfile
 
     if n_batches <= 0 or Path(staging, "_STAGED").exists():
         return
     Path(staging).mkdir(parents=True, exist_ok=True)
 
     def stage_slice(i: int) -> None:
-        tmp = tempfile.mkdtemp(prefix="slice_")
+        tmp = scratch_dir("slice_")
         (corpus.filter(F.pmod(F.col(id_col), F.lit(n_batches)) == i)
          .coalesce(1).write.mode("overwrite").parquet(tmp))
         part = next(Path(tmp).glob("part-*.parquet"))

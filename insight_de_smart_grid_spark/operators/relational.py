@@ -167,8 +167,7 @@ def fuzzy_match(dirty: DataFrame, clean: DataFrame,
 def passjoin_fuzzy_match(dirty: DataFrame, clean: DataFrame,
                          dirty_col: str = "dirty_name",
                          clean_col: str = "clean_name",
-                         max_dist: int = 2,
-                         materialize: bool = True) -> DataFrame:
+                         max_dist: int = 2) -> DataFrame:
     """LOSSLESS blocked fuzzy matching via PassJoin segment inversion
     (Li/Deng/Feng ICDE'11): the tier-2 scheme ``fuzzy_match`` documents.
 
@@ -210,8 +209,7 @@ def passjoin_fuzzy_match(dirty: DataFrame, clean: DataFrame,
     # substring explode AND the probe join serially in one task.
     cl = stage(spread(clean.select(clean_col).distinct(), clean_col,
                       force=True)
-               .withColumn("l", F.length(clean_col).cast("int")),
-               materialize)
+               .withColumn("l", F.length(clean_col).cast("int")))
     idx_parts = []
     for i in range(n_seg):
         s, ln = seg_bounds(F.col("l"), i)
@@ -235,7 +233,7 @@ def passjoin_fuzzy_match(dirty: DataFrame, clean: DataFrame,
         idx = idx.unionByName(p)
 
     base_dirty = stage(spread(dirty.select(dirty_col).distinct(),
-                              dirty_col, force=True), materialize)
+                              dirty_col, force=True))
     dr = base_dirty.withColumn("m", F.length(dirty_col).cast("int"))
     # candidate clean lengths l in [m-d, m+d]
     dr = dr.select(dirty_col, "m",

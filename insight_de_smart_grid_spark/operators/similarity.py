@@ -90,8 +90,7 @@ def cosine_pairs_blocked(embeddings: DataFrame, threshold: float = 0.9,
                          n_tables: int = 16, n_planes: "int | str" = 10,
                          dim: int = 64,
                          vec_col: str = "embedding",
-                         id_col: str = "vec_id",
-                         materialize: bool = True) -> DataFrame:
+                         id_col: str = "vec_id") -> DataFrame:
     """All-pairs cosine >= threshold via LSH-bucket blocking — the 100 TB
     shape: nothing ever passes through the driver.
 
@@ -120,8 +119,7 @@ def cosine_pairs_blocked(embeddings: DataFrame, threshold: float = 0.9,
     # bucket self-join (and nothing else) read it, and recomputing it
     # means running the Arrow matmul + corpus scan twice (at scale this
     # is the persisted index; locally localCheckpoint stands in for it)
-    slim = stage(sig.select(F.col(id_col), "table", "bucket"),
-                 materialize)
+    slim = stage(sig.select(F.col(id_col), "table", "bucket"))
     cands = (slim.alias("sa")
              .join(slim.alias("sb"), ["table", "bucket"])
              .filter(F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}"))
@@ -225,7 +223,7 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.95,
         # both the rep filter and the star edges read it
         members = stage(
             keyed.select("vec_id", F.min("vec_id").over(
-                Window.partitionBy("vkey")).alias("rep_id")), True)
+                Window.partitionBy("vkey")).alias("rep_id")))
         rep_vecs = embeddings.join(
             members.filter(F.col("vec_id") == F.col("rep_id"))
             .select("vec_id"), "vec_id")
@@ -885,8 +883,7 @@ LIMIT {k}
 def lsh_hard_negatives(embeddings: DataFrame, k: int = 3,
                        n_tables: int = 16, n_planes: int = 8, dim: int = 64,
                        vec_col: str = "embedding", id_col: str = "vec_id",
-                       label_col: str = "label",
-                       materialize: bool = True) -> DataFrame:
+                       label_col: str = "label") -> DataFrame:
     """Per anchor: the k most-similar vectors with a DIFFERENT label —
     hard-negative mining for contrastive/metric training, restricted to
     LSH-bucket candidates so it is never an all-pairs scan.
@@ -907,8 +904,7 @@ def lsh_hard_negatives(embeddings: DataFrame, k: int = 3,
     # bucket self-join (and nothing else) read it, and recomputing it
     # means running the Arrow matmul + corpus scan twice (at scale this
     # is the persisted index; locally localCheckpoint stands in for it)
-    slim = stage(sig.select(F.col(id_col), "table", "bucket"),
-                 materialize)
+    slim = stage(sig.select(F.col(id_col), "table", "bucket"))
     cands = (slim.alias("sa")
              .join(slim.alias("sb"), ["table", "bucket"])
              .filter(F.col(f"sa.{id_col}") != F.col(f"sb.{id_col}"))
@@ -1313,7 +1309,7 @@ LIMIT {k}
 
 def _bucket_scored_pairs(embeddings: DataFrame, n_tables: int,
                          n_planes: "int | str", dim: int, vec_col: str,
-                         id_col: str, materialize: bool) -> DataFrame:
+                         id_col: str) -> DataFrame:
     """All LSH-bucket candidate pairs with exact rounded cosine —
     (anchor_id, nbr_id, cos_sim), both directions, deduplicated. The
     narrow (id, table, bucket) signature table is staged once: both sides
@@ -1322,8 +1318,7 @@ def _bucket_scored_pairs(embeddings: DataFrame, n_tables: int,
     is the persisted index; locally localCheckpoint stands in for it)."""
     sig = hyperplane_signatures(embeddings, n_tables, n_planes, dim,
                                 vec_col=vec_col, id_col=id_col)
-    slim = stage(sig.select(F.col(id_col), "table", "bucket"),
-                 materialize)
+    slim = stage(sig.select(F.col(id_col), "table", "bucket"))
     cands = (slim.alias("sa")
              .join(slim.alias("sb"), ["table", "bucket"])
              .filter(F.col(f"sa.{id_col}") != F.col(f"sb.{id_col}"))
@@ -1345,7 +1340,6 @@ def knn_graph(embeddings: DataFrame, k: int = 3,
               n_tables: int = 16, n_planes: "int | str" = 8, dim: int = 64,
               vec_col: str = "embedding",
               id_col: str = "vec_id",
-              materialize: bool = True,
               precollapse: bool = True) -> DataFrame:
     """Approximate k-nearest-neighbor GRAPH: for every vector, its top-k
     most-cosine-similar LSH-bucket candidates — the substrate for graph
@@ -1422,7 +1416,7 @@ def knn_graph(embeddings: DataFrame, k: int = 3,
                            .filter(F.col("count") >= 2).isEmpty())
     if not precollapse:
         scored = _bucket_scored_pairs(embeddings, n_tables, n_planes, dim,
-                                      vec_col, id_col, materialize)
+                                      vec_col, id_col)
         w = Window.partitionBy("anchor_id").orderBy(F.desc("cos_sim"),
                                                     F.asc("nbr_id"))
         return (scored.withColumn("rnk", F.row_number().over(w).cast("int"))
@@ -1436,13 +1430,12 @@ def knn_graph(embeddings: DataFrame, k: int = 3,
             F.min(id_col).over(Window.partitionBy("vkey")).alias("rep")),
             id_col, "left")
         .select(F.col(id_col), F.coalesce("rep", F.col(id_col))
-                .alias("rep_id")),
-        materialize)
+                .alias("rep_id")))
     reps = embeddings.join(
         rep_map.filter(F.col(id_col) == F.col("rep_id")).select(id_col),
         id_col)
     scored_rep = (_bucket_scored_pairs(reps, n_tables, n_planes, dim,
-                                       vec_col, id_col, materialize)
+                                       vec_col, id_col)
                   .withColumnRenamed("anchor_id", "anchor_rep")
                   .withColumnRenamed("nbr_id", "nbr_rep"))
     # fan the NEIGHBOR side to members, rank once per anchor group
@@ -1512,8 +1505,7 @@ def label_propagation(embeddings: DataFrame, k: int = 3, iters: int = 2,
                       n_tables: int = 16, n_planes: int = 8, dim: int = 64,
                       vec_col: str = "embedding",
                       id_col: str = "vec_id",
-                      label_col: str = "label",
-                      materialize: bool = True) -> DataFrame:
+                      label_col: str = "label") -> DataFrame:
     """Semi-supervised label spreading over the approximate kNN graph:
     vectors with ``vec_id % seed_mod == 0`` keep their label (clamped
     seeds); every other vector takes the majority label of its kNN
@@ -1537,9 +1529,8 @@ def label_propagation(embeddings: DataFrame, k: int = 3, iters: int = 2,
     # the edge list is read every round — materialize it once (at scale:
     # the persisted kNN index table)
     edges = stage(knn_graph(embeddings, k, n_tables, n_planes, dim,
-                            vec_col=vec_col, id_col=id_col,
-                            materialize=materialize)
-                  .select("anchor_id", "nbr_id"), materialize)
+                            vec_col=vec_col, id_col=id_col)
+                  .select("anchor_id", "nbr_id"))
     verts = embeddings.select(F.col(id_col).alias("vec_id"))
     lab0 = embeddings.select(
         F.col(id_col).alias("vec_id"),
@@ -1549,7 +1540,7 @@ def label_propagation(embeddings: DataFrame, k: int = 3, iters: int = 2,
              .withColumnRenamed("label", "seed_label"))
     # the seed-clamped vertex frame is loop-invariant — build it once
     # instead of re-joining verts with seeds inside every round
-    clamped = stage(verts.join(seeds, "vec_id", "left"), materialize)
+    clamped = stage(verts.join(seeds, "vec_id", "left"))
     lab = lab0
     for _ in range(iters):
         votes = (edges
@@ -1652,8 +1643,7 @@ FROM lab{iters} l LEFT JOIN seeds s ON l.vec_id = s.vec_id
 def pagerank_knn(embeddings: DataFrame, k: int = 3, iters: int = 3,
                  n_tables: int = 16, n_planes: int = 8, dim: int = 64,
                  vec_col: str = "embedding",
-                 id_col: str = "vec_id",
-                 materialize: bool = True) -> DataFrame:
+                 id_col: str = "vec_id") -> DataFrame:
     """PageRank centrality over the approximate kNN graph — "which
     documents sit at the center of their similarity neighborhood" (the
     representativeness signal curation pipelines use to pick canonical
@@ -1676,25 +1666,22 @@ def pagerank_knn(embeddings: DataFrame, k: int = 3, iters: int = 3,
     # the edge list is read every round — materialize it once (at scale:
     # the persisted kNN index table)
     edges = stage(knn_graph(embeddings, k, n_tables, n_planes, dim,
-                            vec_col=vec_col, id_col=id_col,
-                            materialize=materialize)
+                            vec_col=vec_col, id_col=id_col)
                   .select(F.col("anchor_id").alias("src"),
-                          F.col("nbr_id").alias("dst")), materialize)
+                          F.col("nbr_id").alias("dst")))
     verts = embeddings.select(F.col(id_col).alias("vec_id"))
-    return pagerank_iterations(verts, edges, iters,
-                               materialize=materialize)
+    return pagerank_iterations(verts, edges, iters)
 
 
 def pagerank_iterations(verts: DataFrame, edges: DataFrame,
-                        iters: int,
-                        materialize: bool = True) -> DataFrame:
+                        iters: int) -> DataFrame:
     """The iteration core of ``pagerank_knn`` over an explicit
     (src, dst) edge list — also the unit-testable surface for
     known-answer graphs."""
     # outdegree is per-edge loop-invariant — attach it to the edge list
     # once instead of re-joining inside every round
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    edges_deg = stage(edges.join(outdeg, "src"), materialize)
+    edges_deg = stage(edges.join(outdeg, "src"))
     rank = verts.select("vec_id", F.lit(1_000_000).cast("long")
                         .alias("rank_micro"))
     for _ in range(iters):

@@ -39,9 +39,9 @@ every remaining mergeable-partial aggregate the repo ships:
   ``within_tol`` pattern (``rollup_hll_distinct``), never a raw-value
   oracle.
 
-``panes="auto"`` reuses the duty-cycle density probe
-(``duty_cycle.pane_density``): pane form above the measured crossover,
-explode below.
+The pane choice is the duty-cycle one (``duty_cycle.use_panes``):
+``panes="auto"`` takes the pane form above the measured density
+crossover, explode below.
 """
 
 from __future__ import annotations
@@ -50,10 +50,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.operators.duty_cycle import (
-    PANE_DENSITY_CROSSOVER,
-    PROBE_SAMPLE_FRACTION,
     _interval_seconds,
-    pane_density,
+    use_panes,
 )
 
 SLIDING_KMV_K = 64     # k-minimum-values sketch size for kmv_distinct
@@ -204,16 +202,9 @@ def sliding_agg(df: DataFrame,
     averages / variance of variances)."""
     w_s = _interval_seconds(window)
     s_s = _interval_seconds(slide) if slide else None
-    decomposable = (slide is not None and w_s and s_s
-                    and w_s % s_s == 0 and w_s != s_s)
-    if panes == "auto":
-        panes = bool(decomposable) and (
-            pane_density(df, s_s, time_col, keys,
-                         sample_fraction=PROBE_SAMPLE_FRACTION)
-            >= PANE_DENSITY_CROSSOVER)
     needed = expand_needed(aggs)
 
-    if panes and decomposable:
+    if use_panes(panes, window, slide, lambda: df, time_col, keys):
         pane = (df.groupBy(F.window(F.col(time_col), slide).alias("pane"),
                            *[F.col(k) for k in keys])
                 .agg(*partial_exprs(needed)))

@@ -1,53 +1,63 @@
-"""Cache-lifecycle helpers for operators that stage a shared subplan.
+"""One lifecycle for what a query leaves behind: ``checkpoint_scope``.
 
-Several operators materialize a shared intermediate — the hashed shingle
-table (``dedup.ngram_jaccard_pairs``), the LSH signature table
-(``similarity.cosine_pairs_blocked`` / ``knn_graph``), the kNN edge list
-(``label_propagation`` / ``pagerank_knn``), the segment index sides
-(``relational.passjoin_fuzzy_match``) — with ``localCheckpoint`` so
-multiple downstream consumers read it from block storage instead of
-recomputing the whole lineage per consumer. ``localCheckpoint`` TRUNCATES
-lineage and PINS the RDD blocks; Spark's ContextCleaner only releases them
-when the JVM-side plan is garbage collected, so a long-lived session that
-invokes these operators repeatedly (a threshold sweep, a dashboard
-refresh loop) accumulates pinned blocks.
+A query leaves two kinds of leftovers. Staging operators pin RDD blocks:
+the hashed shingle table (``dedup.ngram_jaccard_pairs``), the LSH
+signature table (``similarity.cosine_pairs_blocked`` / ``knn_graph``),
+the kNN edge list (``label_propagation`` / ``pagerank_knn``), the segment
+index sides (``relational.passjoin_fuzzy_match``) go through ``stage``,
+a ``localCheckpoint`` that truncates lineage so several consumers read
+one copy from block storage. Streaming replays, index roots and staged
+sources take scratch dirs from ``scratch_dir``.
 
-Two escape hatches, composable:
+The contract: run the query inside ``checkpoint_scope(spark)`` and fully
+consume its result (collect / write) before the scope closes. On exit
+the scope unpersists every RDD pinned inside it, then removes every
+scratch dir created inside it. Lineage was truncated and the dirs hold
+the sinks a result may be read back from, so a frame used after the
+scope cannot be recomputed. Scopes nest: each releases only its own pins
+and dirs. A scratch dir made outside any scope belongs to its caller.
 
-- every staging operator takes ``materialize: bool = True``. Pass
-  ``False`` to keep pure lineage — no pinned blocks, at the cost of
-  recomputing the shared subplan per consumer. Right when the caller
-  stages its own shared input once, or calls the operator in a tight
-  loop where staging cost exceeds reuse benefit.
-- ``checkpoint_scope(spark)`` releases, on exit, every RDD block newly
-  pinned inside the scope — the consume-then-release contract for
-  multi-call drivers. The caller must FULLY consume results (collect /
-  write) before the scope closes: lineage was truncated, so once the
-  blocks are dropped the checkpointed frames cannot be recomputed.
-
-``tests/test_staging.py`` pins both contracts (bounded
-``getPersistentRDDs`` growth under repeated invocation; identical results
-with ``materialize=False``).
+``tests/test_staging.py`` pins both halves (bounded
+``getPersistentRDDs`` growth under repeated invocation; no dir left
+behind by a replay, an index root or an ingest stream).
 """
 from __future__ import annotations
 
+import shutil
+import tempfile
+import threading
 from contextlib import contextmanager
-from typing import Iterator, Set
+from typing import Iterator, List, Set
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Open scopes' dir lists, innermost last. Process-wide rather than
+# thread-local: slice staging runs on worker threads and ``foreachBatch``
+# on the py4j callback thread, both inside the caller's scope.
+_LOCK = threading.Lock()
+_SCOPES: List[List[str]] = []
 
-def stage(df: DataFrame, materialize: bool = True,
-          eager: bool = False) -> DataFrame:
-    """Stage a shared subplan: ``localCheckpoint`` when ``materialize``
-    (lineage truncated, blocks pinned until released), identity otherwise.
+
+def stage(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Stage a shared subplan with ``localCheckpoint``: lineage truncated,
+    blocks pinned until the enclosing ``checkpoint_scope`` exits.
 
     ``eager=False`` (default) defers the materializing job to the first
     action — the extra job is only paid if a consumer actually runs.
     Iterative operators that re-read the frame every round want
     ``eager=True`` so the cut happens before the loop fans out.
     """
-    return df.localCheckpoint(eager=eager) if materialize else df
+    return df.localCheckpoint(eager=eager)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp dir, owned by the innermost open ``checkpoint_scope``
+    (removed when it exits), or by the caller outside any scope."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    with _LOCK:
+        if _SCOPES:
+            _SCOPES[-1].append(d)
+    return d
 
 
 def pinned_rdd_ids(spark: SparkSession) -> Set[int]:
@@ -60,7 +70,8 @@ def pinned_rdd_ids(spark: SparkSession) -> Set[int]:
 
 @contextmanager
 def checkpoint_scope(spark: SparkSession) -> Iterator[None]:
-    """Release every RDD pinned inside the scope on exit.
+    """Release every RDD pinned and every scratch dir created inside the
+    scope on exit.
 
     Usage::
 
@@ -70,14 +81,22 @@ def checkpoint_scope(spark: SparkSession) -> Iterator[None]:
 
     Non-blocking unpersist: the persistent-RDD registry drops the entries
     synchronously (what ``pinned_rdd_ids`` reads); block eviction proceeds
-    in the background. Safe to nest — inner scopes release only their own
-    pins.
+    in the background. The dirs go after the unpersist.
     """
     before = pinned_rdd_ids(spark)
+    owned: List[str] = []
+    with _LOCK:
+        _SCOPES.append(owned)
     try:
         yield
     finally:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for e in jmap.entrySet().toArray():
-            if e.getKey() not in before:
-                e.getValue().unpersist(False)
+        try:
+            jmap = spark.sparkContext._jsc.getPersistentRDDs()
+            for e in jmap.entrySet().toArray():
+                if e.getKey() not in before:
+                    e.getValue().unpersist(False)
+        finally:
+            with _LOCK:
+                _SCOPES[:] = [s for s in _SCOPES if s is not owned]
+            for d in owned:
+                shutil.rmtree(d, ignore_errors=True)

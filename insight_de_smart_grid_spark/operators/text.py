@@ -964,8 +964,7 @@ _SIG = "(500000 * {s}) DIV (1000000 + abs({s}))"
 
 def train_quality_classifier(docs: DataFrame, epochs: int = 3,
                              lr_micro: int = 500_000,
-                             text_col: str = "text",
-                             materialize: bool = True) -> DataFrame:
+                             text_col: str = "text") -> DataFrame:
     """Distributed batch-gradient trainer for the linear quality model —
     the stage that PRODUCES weights like ``MODEL_W`` (closing the loop
     with ``model_quality_score``, which consumes them at scan speed).
@@ -994,7 +993,7 @@ def train_quality_classifier(docs: DataFrame, epochs: int = 3,
     from insight_de_smart_grid_spark.operators.staging import stage
 
     spark = docs.sparkSession
-    feats = stage(_feature_micros(docs, text_col), materialize)
+    feats = stage(_feature_micros(docs, text_col))
     w = spark.range(1).select(
         *[F.lit(0).cast("long").alias(n)
           for n in ("b", "w1", "w2", "w3", "w4")])
@@ -1025,8 +1024,7 @@ def train_quality_classifier(docs: DataFrame, epochs: int = 3,
                 .alias("b"),
                 *[(F.col(f"w{j}")
                    - F.expr(f"({lr_micro} * g{j}) DIV 1000000"))
-                  .alias(f"w{j}") for j in (1, 2, 3, 4)]),
-            materialize)
+                  .alias(f"w{j}") for j in (1, 2, 3, 4)]))
     ev = (feats.join(F.broadcast(w))
           .withColumn("s", F.expr(score))
           .withColumn("p", F.lit(500_000) + F.expr(_SIG.format(s="s")))

@@ -27,6 +27,7 @@ from insight_de_smart_grid_spark.operators.text import (
     BPE_TOKENS_SQL,
     with_bpe_token_stats,
 )
+from insight_de_smart_grid_spark.operators.staging import scratch_dir
 from insight_de_smart_grid_spark.plans.registry import register
 from insight_de_smart_grid_spark.sources.tables import (
     READINGS_SQL_VIEW,
@@ -302,15 +303,13 @@ SELECT house_id, appliance_id, ts, power, ewma FROM r
 
 @register("streaming_ewma", STREAM_EWMA_SQL)
 def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import events_to_readings
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
     from insight_de_smart_grid_spark.streaming.stateful import ewma_stream
 
-    base = tempfile.mkdtemp(prefix="ewma_")
+    base = scratch_dir("ewma_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda stream: ewma_stream(events_to_readings(stream)),
@@ -371,8 +370,6 @@ GROUP BY user_id, session_seq
 
 @register("streaming_sessions", STREAM_SESSIONS_SQL)
 def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from insight_de_smart_grid_spark.operators.sessionize import (
         session_stream_plan,
     )
@@ -381,7 +378,7 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_parquet_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="sess_")
+    base = scratch_dir("sess_")
     out = replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda stream: session_stream_plan(normalize_event_ts(stream)),
@@ -525,8 +522,6 @@ def q_streaming_range_join_bucketed(spark: SparkSession,
 @register("streaming_dedup",
           "SELECT DISTINCT user_id, event_type, ts, value FROM events")
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
@@ -534,7 +529,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_stream_plan,
     )
 
-    base = tempfile.mkdtemp(prefix="sdd_")
+    base = scratch_dir("sdd_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet", dedup_stream_plan,
         query_name="unused", checkpoint_dir=f"{base}/ck",

@@ -24,6 +24,7 @@ from insight_de_smart_grid_spark.operators.text import (
     pmi_bigrams,
     pmi_bigrams_oracle_sql,
 )
+from insight_de_smart_grid_spark.operators.staging import scratch_dir
 from insight_de_smart_grid_spark.plans.registry import register
 from insight_de_smart_grid_spark.sources.tables import load_table
 
@@ -599,8 +600,6 @@ def q_streaming_upsert_compaction(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """The foreachBatch-maintained snapshot equals batch latest-compaction
     over the full feed."""
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.stream_ops import (
         upsert_compaction_stream,
     )
@@ -609,7 +608,7 @@ def q_streaming_upsert_compaction(spark: SparkSession,
         read_upsert_snapshot,
     )
 
-    base = tempfile.mkdtemp(prefix="upsert_")
+    base = scratch_dir("upsert_")
     upsert_compaction_stream(spark, f"{sf_dir}/events.parquet",
                              snapshot_dir=f"{base}/snapshot",
                              checkpoint_dir=f"{base}/ck")

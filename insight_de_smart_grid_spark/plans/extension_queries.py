@@ -19,6 +19,7 @@ from insight_de_smart_grid_spark.operators import pipeline as pl
 from insight_de_smart_grid_spark.operators import similarity as sim
 from insight_de_smart_grid_spark.operators import sliding as sl
 from insight_de_smart_grid_spark.operators import text as tx
+from insight_de_smart_grid_spark.operators.staging import scratch_dir
 from insight_de_smart_grid_spark.plans.registry import register
 from insight_de_smart_grid_spark.sources.tables import load_table
 
@@ -81,13 +82,11 @@ def q_streaming_sliding_stats_panes(spark: SparkSession, sf_dir: str
     sliding combine of pane partials, append mode, flush sentinel —
     value-checked against the SAME oracle as the batch twins, closing
     the batch≡stream contract for the generalized decomposition."""
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.sliding_stream import (
         run_sliding_stats_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="sssp_")
+    base = scratch_dir("sssp_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
         query_name="unused", checkpoint_dir=f"{base}/ck",
@@ -159,13 +158,11 @@ def q_streaming_sliding_distinct_panes(spark: SparkSession, sf_dir: str
     bounded KMV sketch, the second stateful operator merges pane sketches
     — state input bounded by #keys x #panes, never event cardinality (the
     1 Hz sliding-distinct shape VERDICT r7 ranked the top miss)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.sliding_stream import (
         run_sliding_stats_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="ssdp_")
+    base = scratch_dir("ssdp_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
         query_name="unused", checkpoint_dir=f"{base}/ck",
@@ -215,13 +212,11 @@ def q_streaming_sliding_stddev_panes(spark: SparkSession, sf_dir: str
     three algebraic pane partials (sum, sumsq, count) into the bounded
     second operator, value-checked against the same oracle as the batch
     twins."""
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.sliding_stream import (
         run_sliding_stats_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="ssvp_")
+    base = scratch_dir("ssvp_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
         query_name="unused", checkpoint_dir=f"{base}/ck",
@@ -283,13 +278,11 @@ def q_streaming_sliding_hll_panes(spark: SparkSession, sf_dir: str
     into the same ``within_tol`` contract as the batch pane form (a
     UNIONED sketch's estimate can legitimately differ from a direct
     build, so HLL never registers a raw-value oracle)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.sliding_stream import (
         run_sliding_stats_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="sshp_")
+    base = scratch_dir("sshp_")
     est = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
         query_name="unused", checkpoint_dir=f"{base}/ck",
@@ -355,15 +348,13 @@ def q_streaming_sliding_topk_panes(spark: SparkSession, sf_dir: str
     batch pass over the watermark-finalized append rows, exactly how a
     Druid topN consumes its ingested rollup — ranking inside the stream
     would buffer whole windows for no benefit."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from insight_de_smart_grid_spark.streaming.sliding_stream import (
         run_sliding_stats_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="sstk_")
+    base = scratch_dir("sstk_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
         query_name="unused", checkpoint_dir=f"{base}/ck",
@@ -428,8 +419,6 @@ def q_streaming_sliding_p95_panes(spark: SparkSession, sf_dir: str
     per-(window, user, bin) counts, and the interpolation folds the
     watermark-finalized histogram rows output-side, like the top-k
     rank."""
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.sliding_stream import (
         run_sliding_stats_stream,
     )
@@ -460,7 +449,7 @@ def q_streaming_sliding_p95_panes(spark: SparkSession, sf_dir: str
                                     / F.lit(width)).cast("int"),
                             F.lit(bins - 1))))
 
-    base = tempfile.mkdtemp(prefix="ssqp_")
+    base = scratch_dir("ssqp_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
         query_name="unused", checkpoint_dir=f"{base}/ck",
@@ -526,13 +515,11 @@ def q_dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     query over the persisted tables. The result must equal the inline
     pipeline over the full corpus, so it registers against the SAME
     oracle as ``dedup_minhash_lsh`` (`operators/dedup_index.py`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import dedup_index as di
 
     docs = load_table(spark, sf_dir, "documents")
     b = pl._hash_bucket(F.col("doc_id").cast("string"))
-    path = tempfile.mkdtemp(prefix="dedupidx_")
+    path = scratch_dir("dedupidx_")
     di.build_dedup_index(docs.filter(b < 80), path)
     di.append_dedup_index(docs.filter((b >= 80) & (b < 90)), path)
     di.append_dedup_index(docs.filter(b >= 90), path)
@@ -563,13 +550,11 @@ def q_dedup_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     other 80% — the delta's band buckets broadcast against the pruned
     index scan (no index-side shuffle), exact-Jaccard verify from the
     index's stored shingle sets (`operators/dedup_index.py`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import dedup_index as di
 
     docs = load_table(spark, sf_dir, "documents")
     b = pl._hash_bucket(F.col("doc_id").cast("string"))
-    path = tempfile.mkdtemp(prefix="dedupidx_")
+    path = scratch_dir("dedupidx_")
     di.build_dedup_index(docs.filter(b < _IDX_BASE_PCT), path)
     return di.dedup_new_against_index(spark, path,
                                       docs.filter(b >= _IDX_BASE_PCT))
@@ -585,13 +570,11 @@ def q_dedup_index_ingest_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus pair set — same oracle as the inline pipeline — proving
     incremental ingest neither loses nor duplicates a pair
     (`operators/dedup_index.py`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import dedup_index as di
 
     return di.scheduled_ingest_dedup(
         spark, load_table(spark, sf_dir, "documents"),
-        tempfile.mkdtemp(prefix="dedupingest_"), n_batches=4)
+        scratch_dir("dedupingest_"), n_batches=4)
 
 
 @register("streaming_dedup_index_ingest",
@@ -606,13 +589,11 @@ def q_streaming_dedup_index_ingest(spark: SparkSession, sf_dir: str
     slicing-invariant — the contract that makes a file source's
     unspecified file->batch assignment safe
     (`operators/dedup_index.py::streaming_ingest_dedup`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import dedup_index as di
 
     return di.streaming_ingest_dedup(
         spark, load_table(spark, sf_dir, "documents"),
-        tempfile.mkdtemp(prefix="dedupstream_"), n_files=4)
+        scratch_dir("dedupstream_"), n_files=4)
 
 
 @register("dedup_simhash", dd.simhash_oracle_sql(3))
@@ -708,13 +689,11 @@ def q_sim_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal a from-scratch index over the full corpus, so it registers
     against the SAME oracle as ``sim_ann_lsh_topk``
     (`operators/ann_index.py`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
     b = pl._hash_bucket(F.col("vec_id").cast("string"))
-    path = tempfile.mkdtemp(prefix="annidx_")
+    path = scratch_dir("annidx_")
     ai.build_signature_index(emb.filter(b < 80), path,
                              n_tables=16, n_planes=8)
     ai.append_signatures(emb.filter((b >= 80) & (b < 90)), path)
@@ -735,12 +714,10 @@ def q_sim_ann_index_multiprobe(spark: SparkSession, sf_dir: str
     one stored 4-table index answers with 4x(8+1)-probe recall at 1/9 of
     the footprint. Registers against the SAME oracle as the inline
     ``sim_ann_multiprobe_topk`` (`operators/ann_index.py`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="annidx_mp_")
+    path = scratch_dir("annidx_mp_")
     ai.build_signature_index(emb, path, n_tables=4, n_planes=8)
     qv = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     return ai.query_index_topk(spark, path, qv, k=10, exclude_id=0,
@@ -762,12 +739,10 @@ def q_sim_ann_index_batch_probe(spark: SparkSession, sf_dir: str
     test_ann_index.py); the DuckDB twin generalizes
     ``lsh_ann_topk_oracle_sql`` to the id set
     (`operators/ann_index.py:query_index_batch_topk`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="annidx_bp_")
+    path = scratch_dir("annidx_bp_")
     ai.build_signature_index(emb, path, n_tables=4, n_planes=8)
     queries = emb.filter(F.col("vec_id").isin([0, 7, 23]))
     return ai.query_index_batch_topk(spark, path, queries, k=10)
@@ -786,12 +761,10 @@ def q_sim_ann_index_ingest_loop(spark: SparkSession, sf_dir: str
     manifest bump. The DuckDB twin reproduces "the standing index at
     arrival" as the static earlier-slice predicate
     (`operators/ann_index.py:ingest_ann_index`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="annidx_loop_")
+    path = scratch_dir("annidx_loop_")
     return ai.ingest_ann_index(spark, emb, path, n_batches=4, k=5,
                                n_tables=4, n_planes=8)
 
@@ -805,12 +778,10 @@ def q_streaming_ann_index_ingest(spark: SparkSession, sf_dir: str
     arrival order — the probe log is batching-dependent by design, so
     order is part of the contract). Same oracle as the scheduled loop
     (`operators/ann_index.py:streaming_ingest_ann`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix="annidx_sing_")
+    base = scratch_dir("annidx_sing_")
     return ai.streaming_ingest_ann(spark, emb, base, n_batches=4, k=5,
                                    n_tables=4, n_planes=8)
 
@@ -828,13 +799,11 @@ def q_sim_ivf_index_maintained(spark: SparkSession, sf_dir: str
     nprobe cluster ids pushed into the cluster-partitioned lists scan as
     PartitionFilters. Result equals the inline ``ivf_portable_topk`` —
     same oracle SQL verbatim (`operators/ivf_index.py`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
     cut = int(emb.agg(F.floor(0.8 * (F.max("vec_id") + 1))).head()[0])
-    path = tempfile.mkdtemp(prefix="ivfidx_")
+    path = scratch_dir("ivfidx_")
     ii.build_ivf_index(emb.filter(F.col("vec_id") < cut), path)
     ii.append_ivf_index(emb.filter(F.col("vec_id") >= cut), path)
     ii.compact_ivf_index(spark, path)
@@ -853,12 +822,10 @@ def q_sim_ivf_index_batch_probe(spark: SparkSession, sf_dir: str
     pushed into the cluster-partitioned lists scan as PartitionFilters,
     exact re-rank ranked per query — one job for the whole delta
     (`operators/ivf_index.py:query_ivf_batch_topk`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfidx_bp_")
+    path = scratch_dir("ivfidx_bp_")
     ii.build_ivf_index(emb, path)
     queries = emb.filter(F.col("vec_id").isin([0, 7, 23]))
     return ii.query_ivf_batch_topk(spark, path, queries, k=10, nprobe=4)
@@ -875,13 +842,11 @@ def q_sim_ann_index_cosine_pairs(spark: SparkSession, sf_dir: str
     the maintained index answers row-identically to the inline
     ``cosine_pairs_blocked`` and shares its oracle verbatim
     (`operators/ann_index.py:index_cosine_pairs`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
     b = pl._hash_bucket(F.col("vec_id").cast("string"))
-    path = tempfile.mkdtemp(prefix="annidx_cp_")
+    path = scratch_dir("annidx_cp_")
     ai.build_signature_index(emb.filter(b < 80), path,
                              n_tables=16, n_planes=10)
     ai.append_signatures(emb.filter((b >= 80) & (b < 90)), path)
@@ -1333,13 +1298,11 @@ def q_sim_ivf_trained_maintained(spark: SparkSession, sf_dir: str
     (`operators/ivf_index.py::kmeans_centroids_cte_sql`), then the
     standard assignment/probe/re-rank — the trained family is
     value-checked cross-engine, training included."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
     cut = int(emb.agg(F.floor(0.8 * (F.max("vec_id") + 1))).head()[0])
-    path = tempfile.mkdtemp(prefix="ivfidx_km_")
+    path = scratch_dir("ivfidx_km_")
     ii.build_ivf_index(emb.filter(F.col("vec_id") < cut), path,
                        n_centroids=8, quantizer="kmeans")
     ii.append_ivf_index(emb.filter(F.col("vec_id") >= cut), path)
@@ -1358,12 +1321,10 @@ def q_sim_ivf_index_ingest_loop(spark: SparkSession, sf_dir: str
     slice 0's lowest ids), each later slice is probed against the
     standing index in ONE batched job and appended, probe + lists in one
     atomic bump (`operators/ivf_index.py::ingest_ivf_index`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfidx_loop_")
+    path = scratch_dir("ivfidx_loop_")
     # n_centroids=4: slice 0 must hold at least n_centroids nonzero
     # vectors on EVERY oracle corpus (the edge fixture's slice 0 has 5)
     return ii.ingest_ivf_index(spark, emb, path, n_batches=4, k=5,
@@ -1378,12 +1339,10 @@ def q_streaming_ivf_index_ingest(spark: SparkSession, sf_dir: str
     micro-batches (mtime-pinned slice files, one per availableNow
     trigger) — same static-slice oracle as the scheduled loop
     (`operators/ivf_index.py::streaming_ingest_ivf`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix="ivfidx_sing_")
+    base = scratch_dir("ivfidx_sing_")
     return ii.streaming_ingest_ivf(spark, emb, base, n_batches=4, k=5,
                                    n_centroids=4)
 
@@ -1399,13 +1358,11 @@ def q_dedup_index_incremental_bucketed(spark: SparkSession, sf_dir: str
     Same oracle as ``dedup_index_incremental``
     (`operators/dedup_index.py::_probe_with_sigs`,
     `operators/index_base.py::join_each_segment`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import dedup_index as di
 
     docs = load_table(spark, sf_dir, "documents")
     b = pl._hash_bucket(F.col("doc_id").cast("string"))
-    path = tempfile.mkdtemp(prefix="dedupidx_bk_")
+    path = scratch_dir("dedupidx_bk_")
     di.build_dedup_index(docs.filter(b < _IDX_BASE_PCT), path,
                          layout="bucketed")
     return di.dedup_new_against_index(spark, path,
@@ -1427,12 +1384,10 @@ def q_sim_ann_index_batch_probe_bucketed(spark: SparkSession, sf_dir: str
     ``sim_ann_index_batch_probe``
     (`operators/ann_index.py::query_index_batch_topk`,
     `operators/index_base.py::join_each_segment`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="annidx_bpbk_")
+    path = scratch_dir("annidx_bpbk_")
     ai.build_signature_index(emb, path, n_tables=4, n_planes=8,
                              layout="bucketed")
     queries = emb.filter(F.col("vec_id").isin([0, 7, 23]))
@@ -1452,12 +1407,10 @@ def q_sim_ivf_trained_batch_probe(spark: SparkSession, sf_dir: str
     every arriving delta) is value-checked end-to-end
     (`operators/ivf_index.py::query_ivf_batch_topk`,
     `ivf_trained_batch_topk_oracle_sql`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfidx_kmbp_")
+    path = scratch_dir("ivfidx_kmbp_")
     ii.build_ivf_index(emb, path, n_centroids=8, quantizer="kmeans")
     queries = emb.filter(F.col("vec_id").isin([0, 7, 23]))
     return ii.query_ivf_batch_topk(spark, path, queries, k=10, nprobe=4)
@@ -1476,12 +1429,10 @@ def q_sim_ivf_index_retrained(spark: SparkSession, sf_dir: str
     build over the same corpus, so the query shares the trained oracle
     (training replayed in SQL) verbatim
     (`operators/ivf_index.py::retrain_ivf_index`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfidx_rt_")
+    path = scratch_dir("ivfidx_rt_")
     ii.build_ivf_index(emb, path, n_centroids=16)
     ii.retrain_ivf_index(spark, path, n_centroids=8, quantizer="kmeans")
     qv = emb.filter(F.col("vec_id") == 7).select("embedding").head()[0]
@@ -1502,12 +1453,10 @@ def q_sim_ann_index_rebuilt(spark: SparkSession, sf_dir: str
     auto-depth query over the full corpus, whose oracle derives the same
     depth in a scalar CTE
     (`operators/ann_index.py::rebuild_signature_index`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="annidx_rb_")
+    path = scratch_dir("annidx_rb_")
     b = F.pmod(F.xxhash64(F.col("vec_id").cast("string")), 100)
     ai.build_signature_index(emb.filter(b < 40), path, n_tables=4,
                              n_planes="auto", auto_occupancy=4)
@@ -1551,12 +1500,10 @@ def q_dedup_index_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered to surviving endpoints
     (`operators/dedup_index.py::delete_from_dedup_index`,
     `operators/index_base.py::delete_ids`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import dedup_index as di
 
     docs = load_table(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="dedupidx_del_")
+    path = scratch_dir("dedupidx_del_")
     di.build_dedup_index(docs, path)
     di.delete_from_dedup_index(
         spark, path, docs.filter(F.col("doc_id") % 7 == 3)
@@ -1575,12 +1522,10 @@ def q_sim_ann_index_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     then run the full pair query — must equal the inline blocked-cosine
     pair set filtered to surviving endpoints
     (`operators/ann_index.py::delete_from_signature_index`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="annidx_del_")
+    path = scratch_dir("annidx_del_")
     ai.build_signature_index(emb, path, n_tables=16, n_planes=10)
     ai.delete_from_signature_index(
         spark, path, emb.filter((F.col("vec_id") % 9 == 4)
@@ -1611,12 +1556,10 @@ def q_sim_ivf_index_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact: list rows dropped, tombstones cleared, centroids untouched
     (geometry, not corpus rows)
     (`operators/ivf_index.py::delete_from_ivf_index`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfidx_del_")
+    path = scratch_dir("ivfidx_del_")
     ii.build_ivf_index(emb, path, n_centroids=16)
     ii.delete_from_ivf_index(
         spark, path, emb.filter((F.col("vec_id") % 9 == 4)
@@ -1638,12 +1581,10 @@ def q_sim_ivf_auto_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB twin replays the derivation itself in a windowed CTE
     (the IVF twin of the ANN family's auto depth / auto radius)
     (`operators/ivf_index.py::auto_nprobe`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfidx_anp_")
+    path = scratch_dir("ivfidx_anp_")
     ii.build_ivf_index(emb, path, n_centroids=16)
     qv = emb.filter(F.col("vec_id") == 7).select("embedding").head()[0]
     return ii.query_ivf_topk(spark, path, qv, k=10, nprobe="auto",
@@ -1660,12 +1601,10 @@ def q_sim_ivf_auto_nprobe_batch(spark: SparkSession, sf_dir: str
     arriving delta gets its own probe count; the probed-cluster union
     pushed into the lists scan stays bounded by n_centroids
     (`operators/ivf_index.py::query_ivf_batch_topk`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfidx_anpb_")
+    path = scratch_dir("ivfidx_anpb_")
     ii.build_ivf_index(emb, path, n_centroids=16)
     queries = emb.filter(F.col("vec_id").isin([0, 7, 23]))
     return ii.query_ivf_batch_topk(spark, path, queries, k=10,
@@ -1702,13 +1641,11 @@ def q_text_bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim — because per-(term, doc) tf rows are segment-local and
     the (N, avgdl, df) statistics are recomputed over the live doclens
     (`operators/bm25_index.py`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import bm25_index as bi
 
     docs = load_table(spark, sf_dir, "documents")
     b = pl._hash_bucket(F.col("doc_id").cast("string"))
-    path = tempfile.mkdtemp(prefix="bm25idx_")
+    path = scratch_dir("bm25idx_")
     bi.build_bm25_index(docs.filter(b < 80), path)
     bi.append_bm25_index(docs.filter((b >= 80) & (b < 90)), path)
     bi.append_bm25_index(docs.filter(b >= 90), path)
@@ -1732,12 +1669,10 @@ def q_text_bm25_index_deleted(spark: SparkSession, sf_dir: str
     Checked both masked (tombstones live) and physical (post-compact)
     by the shared oracle (`operators/bm25_index.py::query_bm25_index` —
     stats aggregate runs after the tombstone anti-join)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import bm25_index as bi
 
     docs = load_table(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="bm25idx_del_")
+    path = scratch_dir("bm25idx_del_")
     bi.build_bm25_index(docs, path)
     bi.delete_from_bm25_index(
         spark, path,
@@ -1763,12 +1698,10 @@ def q_sim_ivf_index_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassignment, and the replacement centroids — the rebalance
     decision itself is value-checked
     (`operators/ivf_index.py::split_hot_clusters`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfidx_sp_")
+    path = scratch_dir("ivfidx_sp_")
     ii.build_ivf_index(emb, path, n_centroids=4)
     ii.split_hot_clusters(spark, path, max_share=0.2)
     qv = emb.filter(F.col("vec_id") == 7).select("embedding").head()[0]

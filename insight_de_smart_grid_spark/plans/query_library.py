@@ -20,6 +20,7 @@ from insight_de_smart_grid_spark.operators.cleanse import (
     synth_key,
 )
 from insight_de_smart_grid_spark.operators.enrich import enrich_with_labels
+from insight_de_smart_grid_spark.operators.staging import scratch_dir
 from insight_de_smart_grid_spark.plans.registry import register
 from insight_de_smart_grid_spark.sources.tables import (
     READINGS_SQL_VIEW,
@@ -259,8 +260,6 @@ def q_streaming_duty_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — checkable against the same oracle as the batch
     ``duty_cycle_sliding``. Sentinel windows are never finalized (their end
     lies past the watermark); the marker filter is defense in depth."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import events_to_readings
     from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
         run_stream_over_parquet,
@@ -268,7 +267,7 @@ def q_streaming_duty_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # parquet sink (S9): scales past the driver-memory sink and measures the
     # production write path
-    base = tempfile.mkdtemp(prefix="sdc_")
+    base = scratch_dir("sdc_")
     out = run_stream_over_parquet(
         spark, f"{sf_dir}/events.parquet", events_to_readings,
         query_name="unused", checkpoint_dir=f"{base}/ck",
@@ -290,14 +289,12 @@ def q_streaming_duty_cycle_panes(spark: SparkSession, sf_dir: str
     registered against the identical oracle SQL so both streaming forms
     are value-checked row-identical. See
     ``streaming/duty_cycle_stream.py::duty_cycle_stream_panes_plan``."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import events_to_readings
     from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
         run_stream_over_parquet,
     )
 
-    base = tempfile.mkdtemp(prefix="sdcp_")
+    base = scratch_dir("sdcp_")
     out = run_stream_over_parquet(
         spark, f"{sf_dir}/events.parquet", events_to_readings,
         query_name="unused", checkpoint_dir=f"{base}/ck",
@@ -316,14 +313,12 @@ def q_streaming_duty_cycle_auto(spark: SparkSession, sf_dir: str
     the pane-decomposed chained-stateful plan above the crossover, the
     explode plan below. Same oracle SQL as every other sliding form —
     whichever plan runs must emit identical rows."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import events_to_readings
     from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
         run_stream_over_parquet,
     )
 
-    base = tempfile.mkdtemp(prefix="sdca_")
+    base = scratch_dir("sdca_")
     out = run_stream_over_parquet(
         spark, f"{sf_dir}/events.parquet", events_to_readings,
         query_name="unused", checkpoint_dir=f"{base}/ck",
@@ -339,14 +334,12 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cube. The flush sentinel finalizes every real window, so the streamed
     cube equals the batch ``rollup_1s`` and shares its oracle (the driver
     shape drops the (date, hour) partition columns)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import events_to_readings
     from insight_de_smart_grid_spark.streaming.rollup_stream import (
         materialize_rollup_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_rollup_")
+    base = scratch_dir("stream_rollup_")
     cube = materialize_rollup_stream(
         spark, f"{sf_dir}/events.parquet", events_to_readings,
         out_dir=f"{base}/cube", checkpoint_dir=f"{base}/ckpt",

@@ -41,6 +41,7 @@ from insight_de_smart_grid_spark.operators.text import (
     pii_counts,
     redact_pii,
 )
+from insight_de_smart_grid_spark.operators.staging import scratch_dir
 from insight_de_smart_grid_spark.plans.registry import register
 from insight_de_smart_grid_spark.sources.tables import load_table
 
@@ -200,13 +201,11 @@ def q_streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver check fails) if the sketch survives the state store wrong. The
     flush sentinel finalizes every real window; its own far-future bucket
     drops at the inner join with the exact side."""
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.rollup_stream import (
         materialize_hll_rollup_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_hll_")
+    base = scratch_dir("stream_hll_")
     cube = materialize_hll_rollup_stream(
         spark, f"{sf_dir}/events.parquet",
         out_dir=f"{base}/cube", checkpoint_dir=f"{base}/ckpt")
@@ -409,7 +408,6 @@ def q_streaming_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (after the aggregation — filtering before it would starve the flush).
     Oracle: the same ms-precision duty cycle DuckDB computes from raw
     events, so streamed state must agree exactly with batch."""
-    import tempfile
     import time
 
     from insight_de_smart_grid_spark.session import shuffle_width
@@ -445,7 +443,7 @@ def q_streaming_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "house_id", "appliance_id",
             F.col("power").cast("double").alias("power"))
         plan = duty_cycle_stream_plan(readings, slide=None)
-        base = tempfile.mkdtemp(prefix="stream_kafka_")
+        base = scratch_dir("stream_kafka_")
         # Python stream sources don't support availableNow (Spark falls
         # back to ONE batch, so the post-watermark emission batch never
         # runs); drive with a fast processing-time trigger and stop once a
@@ -572,14 +570,12 @@ def q_streaming_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator (closed buckets emit when a later observation closes them;
     each key's newest bucket stays open). Oracle = batch gap fill minus
     every key's final bucket, value-checked through the state store."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="gapfill_")
+    base = scratch_dir("gapfill_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda stream: gap_fill_stream(normalize_event_ts(stream)),
@@ -608,14 +604,12 @@ def q_streaming_counter_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Meter deltas computed live: state carries each key's last reading;
     every subsequent reading emits its consumption contribution exactly
     once. Streamed result equals the batch lag() formulation row for row."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="cdeltas_")
+    base = scratch_dir("cdeltas_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda stream: counter_deltas_stream(normalize_event_ts(stream)),
@@ -657,14 +651,12 @@ def q_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live Type-2 dimension maintenance: closed validity intervals emit as
     state changes arrive; each key's open (current) interval stays in
     state. Oracle = batch SCD2 history minus the current rows."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="scd2s_")
+    base = scratch_dir("scd2s_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda stream: scd2_stream(normalize_event_ts(stream)),
@@ -1006,14 +998,12 @@ def q_streaming_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     `streaming_gap_fill`). Oracle = batch interpolation cut at each key's
     second-largest observed bucket, value-checked through the state
     machine."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="interp_")
+    base = scratch_dir("interp_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda stream: interpolate_stream(normalize_event_ts(stream)),
@@ -1104,14 +1094,12 @@ def q_streaming_sequence_detect(spark: SparkSession,
     EXACTLY — this query shares `events_sequence_detect`'s oracle verbatim
     (the strongest batch≡stream statement in the suite: same rows, same
     values, through the state store)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="seqdet_")
+    base = scratch_dir("seqdet_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda stream: sequence_detect_stream(normalize_event_ts(stream)),
@@ -1303,13 +1291,11 @@ def q_streaming_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-extended rows on BOTH sides as the watermark closes them —
     value-checked against the batch FULL JOIN
     (`streaming/stream_ops.py::purchase_click_full_stream_plan`)."""
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="fulljoin_")
+    base = scratch_dir("fulljoin_")
     # ONE PER-TYPE sentinel, all files in one micro-batch: the join sides
     # collect event-time stats AFTER their type filters, so the sentinel
     # must exist as a click AND a purchase or one side's watermark stalls
@@ -1507,14 +1493,12 @@ def q_streaming_kmv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel's 3-day margin pushes the final watermark past every real
     day's end, so the streamed output equals the batch per-day sketch
     table exactly."""
-    import tempfile
-
     from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="kmvd_")
+    base = scratch_dir("kmvd_")
     # margin must exceed a DAY (the window granularity) for the final
     # day's event-time timeout to fire — the default 1h margin crosses the
     # last midnight only by data luck; availableNow's final commit batch

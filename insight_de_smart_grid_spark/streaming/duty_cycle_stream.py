@@ -150,42 +150,35 @@ def run_stream_over_parquet(spark: SparkSession, parquet_path: str,
     testable without brokers.
 
     The shared runner ``replay_parquet_stream`` sizes the state width
-    from the input (``streaming.replay.state_width``). ``panes=True``
-    routes through the pane-decomposed chained-stateful plan
-    (``duty_cycle_stream_panes_plan``); ``panes="auto"`` runs the
-    batch density probe (``operators.duty_cycle.pane_density``) over the
-    SAME parquet input before starting the stream — an unbounded live
+    from the input (``streaming.replay.state_width``). The plan choice is
+    ``operators.duty_cycle.use_panes``, the same as the batch form:
+    ``panes=True`` routes through the pane-decomposed chained-stateful
+    plan (``duty_cycle_stream_panes_plan``) when the window splits into
+    whole slide panes; ``panes="auto"`` runs the batch density probe over
+    the SAME parquet input before starting the stream — an unbounded live
     stream can't be probed, but this runner is the ST5 scheduled
     micro-batch mode (availableNow over a bounded replay source), where
     the input is exactly the history the probe should read; a live
     deployment would probe yesterday's table the same way.
     ``progress_out`` collects the drained query's progress objects
     (state-operator metrics)."""
-    if panes == "auto":
-        from insight_de_smart_grid_spark.operators.duty_cycle import (
-            PANE_DENSITY_CROSSOVER,
-            PROBE_SAMPLE_FRACTION,
-            _interval_seconds,
-            pane_density,
-            probe_kwargs,
-        )
-        # fallbacks come from the pane plan's OWN signature defaults, so a
-        # changed plan default can never desynchronize the probe (advisory)
-        pk = probe_kwargs(duty_cycle_stream_panes_plan, plan_kwargs)
-        w_s = _interval_seconds(pk["window"])
-        s_s = _interval_seconds(pk["slide"]) if pk["slide"] else None
-        panes = bool(pk["slide"] and w_s and s_s and w_s % s_s == 0
-                     and w_s != s_s)
-        if panes:
-            from insight_de_smart_grid_spark.sources.pq import read_parquet
+    from insight_de_smart_grid_spark.operators.duty_cycle import (
+        probe_kwargs,
+        use_panes,
+    )
+    from insight_de_smart_grid_spark.sources.pq import read_parquet
 
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            readings = to_readings(read_parquet(spark, parquet_path))
-            panes = (pane_density(
-                readings, s_s, time_col=pk["time_col"], keys=pk["keys"],
-                sample_fraction=PROBE_SAMPLE_FRACTION)
-                >= PANE_DENSITY_CROSSOVER)
-    plan = duty_cycle_stream_panes_plan if panes else duty_cycle_stream_plan
+    def probe():
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return to_readings(read_parquet(spark, parquet_path))
+
+    # fallbacks come from the pane plan's OWN signature defaults, so a
+    # changed plan default can never desynchronize the probe (advisory)
+    pk = probe_kwargs(duty_cycle_stream_panes_plan, plan_kwargs)
+    plan = (duty_cycle_stream_panes_plan
+            if use_panes(panes, pk["window"], pk["slide"], probe,
+                         pk["time_col"], pk["keys"])
+            else duty_cycle_stream_plan)
     return replay_parquet_stream(
         spark, parquet_path,
         lambda stream: plan(to_readings(stream), **plan_kwargs),

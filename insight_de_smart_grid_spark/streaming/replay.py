@@ -11,13 +11,14 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
+import shutil
 from functools import lru_cache
 from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from insight_de_smart_grid_spark.operators.staging import scratch_dir
 from insight_de_smart_grid_spark.session import (
     default_parallelism,
     shuffle_width,
@@ -74,7 +75,6 @@ def state_width(parquet_path: str,
 def parquet_stream_source(spark: SparkSession, parquet_path: str,
                           flush_sentinel: bool = False,
                           sentinel_margin_s: int = 3600,
-                          sentinel_count: int = 1,
                           max_files_per_trigger: int | None = None,
                           sentinel_all_types: bool = False
                           ) -> DataFrame:
@@ -91,19 +91,16 @@ def parquet_stream_source(spark: SparkSession, parquet_path: str,
     windows end after the watermark and are never emitted — the marker key is
     only a belt-and-braces filter for callers. This is the standard
     end-of-replay flush for finite sources; a live deployment doesn't need it
-    (the next real event plays the same role).
+    (the next real event plays the same role). One sentinel suffices: a
+    watermark update takes effect in the NEXT batch, and availableNow
+    finishes with a no-data micro-batch (``noDataMicroBatches``, on by
+    default) where the advanced watermark evicts state and emits
+    watermark-gated output (outer-join rows, closed windows) —
+    regression-tested for both outer joins in tests/test_sketch_topn.py.
 
-    ``sentinel_count`` > 1 (with ``max_files_per_trigger=1`` so each
-    sentinel lands in its OWN micro-batch) forces an extra DATA batch
-    after the watermark advance. It is normally unnecessary: a watermark
-    update takes effect in the NEXT batch, and availableNow finishes with
-    a no-data micro-batch (``noDataMicroBatches``, on by default) where
-    the advanced watermark evicts state and emits watermark-gated output
-    (outer-join rows, closed windows) — regression-tested for both outer
-    joins in tests/test_sketch_topn.py. Keep the knob for engines/configs
-    without no-data batches, but note ``max_files_per_trigger=1`` also
-    puts every REAL file in its own stateful micro-batch — measured 2x
-    slower on the outer joins at sf0.1."""
+    The staging dir and the sentinel's write dir come from
+    ``staging.scratch_dir``, so an enclosing ``checkpoint_scope`` removes
+    them."""
     from insight_de_smart_grid_spark.sources.pq import parquet_schema
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -117,15 +114,13 @@ def parquet_stream_source(spark: SparkSession, parquet_path: str,
     if p.is_file() or flush_sentinel:
         # always stage when adding a sentinel: the source dir may be
         # read-only and must never be mutated
-        staged = Path(tempfile.mkdtemp(prefix="stream_src_"))
+        staged = Path(scratch_dir("stream_src_"))
         for src in ([p] if p.is_file() else sorted(p.iterdir())):
             (staged / src.name).symlink_to(src)
         parquet_path = str(staged)
     if flush_sentinel:
-        for i in range(sentinel_count):
-            parquet_path = _stage_flush_sentinel(
-                spark, parquet_path, sentinel_margin_s * (i + 1), seq=i,
-                all_types=sentinel_all_types, schema=schema)
+        _stage_flush_sentinel(spark, parquet_path, sentinel_margin_s,
+                              all_types=sentinel_all_types, schema=schema)
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger",
@@ -134,9 +129,8 @@ def parquet_stream_source(spark: SparkSession, parquet_path: str,
 
 
 def _stage_flush_sentinel(spark: SparkSession, staged_dir: str,
-                          margin_s: int, seq: int = 0,
-                          all_types: bool = False,
-                          schema=None) -> str:
+                          margin_s: int, all_types: bool = False,
+                          schema=None) -> None:
     """Write the watermark-flush sentinel row beside the staged source files.
 
     ``ts`` at this layer is whatever the parquet surfaces: a nanos-since-epoch
@@ -155,17 +149,15 @@ def _stage_flush_sentinel(spark: SparkSession, staged_dir: str,
     table. Any surprise (missing stats, nested ts, unexpected type)
     falls back to the Spark path."""
     try:
-        return _stage_flush_sentinel_arrow(staged_dir, margin_s, seq,
-                                           all_types)
+        _stage_flush_sentinel_arrow(staged_dir, margin_s, all_types)
     except Exception:
-        return _stage_flush_sentinel_spark(spark, staged_dir, margin_s, seq,
-                                           all_types, schema)
+        _stage_flush_sentinel_spark(spark, staged_dir, margin_s, all_types,
+                                    schema)
 
 
 def _stage_flush_sentinel_spark(spark: SparkSession, staged_dir: str,
-                                margin_s: int, seq: int = 0,
-                                all_types: bool = False,
-                                schema=None) -> str:
+                                margin_s: int, all_types: bool = False,
+                                schema=None) -> None:
     """Spark-job sentinel staging (see ``_stage_flush_sentinel``): a
     TakeOrdered scan for the max-``ts`` row plus a one-row write. The
     fallback for inputs the Arrow path rejects, and the reference its
@@ -204,27 +196,26 @@ def _stage_flush_sentinel_spark(spark: SparkSession, staged_dir: str,
         # at its own real maximum and tail outer rows never flush
         types = batch.select("event_type").distinct()
         sentinel = sentinel.drop("event_type").crossJoin(types)
-    tmp = tempfile.mkdtemp(prefix="sentinel_")
+    tmp = scratch_dir("sentinel_")
     sentinel.coalesce(1).write.mode("overwrite").parquet(tmp)
     part = next(Path(tmp).glob("part-*.parquet"))
-    dest = Path(staged_dir) / f"zz_flush_sentinel_{seq}.parquet"
+    dest = Path(staged_dir) / "zz_flush_sentinel.parquet"
     part.rename(dest)
-    # strictly increasing mtimes: the file source orders batches by
-    # modification time, and sentinel N must process after sentinel N-1
-    now = os.stat(staged_dir).st_mtime + 10 * (seq + 1)
+    shutil.rmtree(tmp, ignore_errors=True)
+    # the file source orders batches by modification time: land after
+    # every real file
+    now = os.stat(staged_dir).st_mtime + 10
     os.utime(dest, (now, now))
-    return staged_dir
 
 
 def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
-                                seq: int = 0,
-                                all_types: bool = False) -> str:
+                                all_types: bool = False) -> None:
     """Driver-side sentinel staging via parquet footer statistics (see
     ``_stage_flush_sentinel``). Semantics are identical to the Spark
     path: copy the max-``ts`` row, bump ``ts`` by ``margin_s``, mark
     ``user_id`` -1, coalesce a NULL ``value`` to 0, optionally fan out
     one row per distinct ``event_type``; write after the real files with
-    a strictly increasing mtime. Raises on anything unexpected — the
+    a later mtime. Raises on anything unexpected — the
     caller falls back to ``_stage_flush_sentinel_spark``."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -292,12 +283,11 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
         types = sorted(vals) + ([None] if has_null else [])
         one = pa.concat_tables(
             [put(one, "event_type", pa.array([v], type=et)) for v in types])
-    # 4. land it after the real data with a strictly increasing mtime
-    dest = Path(staged_dir) / f"zz_flush_sentinel_{seq}.parquet"
+    # 4. land it after the real data
+    dest = Path(staged_dir) / "zz_flush_sentinel.parquet"
     pq.write_table(one, dest, version="2.6")
-    now = os.stat(staged_dir).st_mtime + 10 * (seq + 1)
+    now = os.stat(staged_dir).st_mtime + 10
     os.utime(dest, (now, now))
-    return staged_dir
 
 
 def drain(spark: SparkSession, plan_fn: Callable[[], DataFrame], *,
@@ -346,7 +336,6 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
                           out_dir: str | None = None,
                           flush_sentinel: bool = False,
                           sentinel_margin_s: int = 3600,
-                          sentinel_count: int = 1,
                           max_files_per_trigger: int | None = None,
                           sentinel_all_types: bool = False,
                           progress_out: "list | None" = None
@@ -359,7 +348,6 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
         lambda: plan_fn(parquet_stream_source(
             spark, parquet_path, flush_sentinel=flush_sentinel,
             sentinel_margin_s=sentinel_margin_s,
-            sentinel_count=sentinel_count,
             max_files_per_trigger=max_files_per_trigger,
             sentinel_all_types=sentinel_all_types)),
         query_name=query_name, out_dir=out_dir,

@@ -80,43 +80,33 @@ def run_sliding_stats_stream(spark: SparkSession, parquet_path: str,
     bounded replay input with the shared density probe (the ST5
     scheduled-micro-batch mode can be probed; a live stream can't — probe
     yesterday's history instead), same contract as the duty-cycle runner."""
+    from insight_de_smart_grid_spark.operators.duty_cycle import (
+        probe_kwargs,
+        use_panes,
+    )
+    from insight_de_smart_grid_spark.sources.pq import read_parquet
     from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
 
-    if panes == "auto":
-        from insight_de_smart_grid_spark.operators.duty_cycle import (
-            PANE_DENSITY_CROSSOVER,
-            PROBE_SAMPLE_FRACTION,
-            _interval_seconds,
-            pane_density,
-            probe_kwargs,
-        )
-        # fallbacks from the plan's own signature defaults (advisory): the
-        # probe always measures the pane width the plan will execute
-        pk = probe_kwargs(sliding_agg_stream_plan, plan_kwargs)
-        w_s = _interval_seconds(pk["window"])
-        s_s = _interval_seconds(pk["slide"]) if pk["slide"] else None
-        panes = bool(pk["slide"] and w_s and s_s and w_s % s_s == 0
-                     and w_s != s_s)
-        if panes:
-            from insight_de_smart_grid_spark.sources.pq import read_parquet
-
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            panes = (pane_density(
-                (pre or (lambda s: s))(
-                    normalize_event_ts(read_parquet(spark, parquet_path))),
-                s_s, time_col=pk["time_col"], keys=pk["keys"],
-                sample_fraction=PROBE_SAMPLE_FRACTION)
-                >= PANE_DENSITY_CROSSOVER)
     # ``pre``: optional narrow (stateless) transform applied between ts
     # normalization and the stateful plan — e.g. the quantile family's
     # bin projection, whose (lo, width) literals come from static stats
     # (a bounded-replay batch pass here; catalog column stats at cluster
     # scale). Must not add stateful operators.
+    pre = pre or (lambda s: s)
+
+    def probe():
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return pre(normalize_event_ts(read_parquet(spark, parquet_path)))
+
+    # fallbacks from the plan's own signature defaults (advisory): the
+    # probe always measures the pane width the plan will execute
+    pk = probe_kwargs(sliding_agg_stream_plan, plan_kwargs)
+    panes = use_panes(panes, pk["window"], pk["slide"], probe,
+                      pk["time_col"], pk["keys"])
     return replay_parquet_stream(
         spark, parquet_path,
         lambda stream: sliding_agg_stream_plan(
-            (pre or (lambda s: s))(normalize_event_ts(stream)),
-            panes=panes, **plan_kwargs),
+            pre(normalize_event_ts(stream)), panes=panes, **plan_kwargs),
         query_name=query_name, checkpoint_dir=checkpoint_dir,
         out_dir=out_dir, flush_sentinel=flush_sentinel,
         progress_out=progress_out)

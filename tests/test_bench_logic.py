@@ -107,8 +107,8 @@ def test_run_query_releases_staged_blocks(spark):
     """The bench loop's consume-then-release contract: a query that stages
     shared subplans (sim_knn_graph localCheckpoints its signature table
     and rep map) must leave the persistent-RDD registry exactly as it
-    found it once run_query returns — 202 queries in one session must not
-    accumulate pinned blocks (operators/staging.py lifecycle)."""
+    found it once run_query returns — the whole query loop in one session
+    must not accumulate pinned blocks (operators/staging.py lifecycle)."""
     from bench import run_query
     from insight_de_smart_grid_spark.operators.staging import (
         pinned_rdd_ids,

@@ -369,7 +369,7 @@ def test_auto_probe_is_sampled_with_small_corpus_fallback(
     assert "Sample" not in (full._jdf.queryExecution().executedPlan()
                             .toString())
 
-    # both sliding_agg's and duty_cycle's auto paths thread the fraction
+    # the shared auto decision (duty_cycle.use_panes) threads the fraction
     seen = []
     real = dc.pane_density
 
@@ -378,7 +378,7 @@ def test_auto_probe_is_sampled_with_small_corpus_fallback(
         seen.append(kw.get("sample_fraction"))
         return real(df, s_s, time_col, keys, **kw)
 
-    monkeypatch.setattr(sl, "pane_density", spy)
+    monkeypatch.setattr(dc, "pane_density", spy)
     ev = spark.read.parquet(f"{SF_ORACLE}/events.parquet")
     from insight_de_smart_grid_spark.sources.tables import (
         normalize_event_ts,

@@ -2,7 +2,9 @@
 runtime shuffle width: ``shuffle_width`` scopes
 ``spark.sql.shuffle.partitions`` (LIFO on one thread, loud on a second),
 and a structural guard keeps env knobs and hand-rolled width set/restore
-copies from coming back anywhere else in the package."""
+copies from coming back anywhere else in the package. A second guard
+keeps temp-dir creation in ``operators/staging.py``, the owner of a
+query's leftovers."""
 
 from __future__ import annotations
 
@@ -167,3 +169,28 @@ def test_env_knobs_and_shuffle_width_live_in_session():
                             if kw.arg == "state_partitions"
                             and isinstance(kw.value, ast.Constant))
     assert not hits
+
+
+def scratch_and_pin_knob_sites(package: Path) -> list:
+    """``mkdtemp`` references outside ``operators/staging.py`` and
+    ``materialize`` parameters anywhere in ``package``."""
+    hits = []
+    for f in sorted(package.rglob("*.py")):
+        own = f == package / "operators" / "staging.py"
+        for node in ast.walk(ast.parse(f.read_text())):
+            where = f"{f.name}:{getattr(node, 'lineno', '?')}"
+            if not own and (
+                    isinstance(node, ast.Attribute) and node.attr == "mkdtemp"
+                    or isinstance(node, ast.alias) and node.name == "mkdtemp"):
+                hits.append(f"{where}:mkdtemp")
+            elif isinstance(node, ast.arg) and node.arg == "materialize":
+                hits.append(f"{where}:materialize")
+    return hits
+
+
+def test_scratch_dirs_and_pins_have_one_owner():
+    """Only ``operators/staging.py`` makes temp dirs: everything else asks
+    ``scratch_dir``, which hands the dir to the open ``checkpoint_scope``.
+    No function takes a ``materialize`` switch: staging always pins, and
+    the scope releases."""
+    assert scratch_and_pin_knob_sites(Path(session.__file__).parent) == []
