@@ -17,7 +17,10 @@ REPO = str(Path(__file__).resolve().parent)
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-from insight_de_smart_grid_spark.session import get_spark  # noqa: E402
+from insight_de_smart_grid_spark.session import (  # noqa: E402
+    default_parallelism,
+    get_spark,
+)
 from insight_de_smart_grid_spark.plans.registry import QUERIES  # noqa: E402
 from insight_de_smart_grid_spark.operators.staging import (  # noqa: E402
     checkpoint_scope,
@@ -49,6 +52,21 @@ def is_ingest_regression(now_rate: float, base_rate: float) -> bool:
     rows/sec vs the frozen baseline. Same shape as the query gate but
     inverted — lower is worse for a rate."""
     return base_rate > 0 and now_rate > 0 and now_rate * 1.5 < base_rate
+
+
+def gate_baseline(base_doc: dict, out: dict) -> dict:
+    """``base_doc`` when it was frozen at this run's scale factor and core
+    count, else ``{}`` with a note on stderr. The frozen medians are
+    per-(sf, cpus) facts: an sf0.01 run against sf0.1 medians flags noise
+    (streaming replays have scale-independent overhead), and a 4-core run
+    against ``local[32]`` medians flags the core count."""
+    for key in ("sf", "cpus"):
+        if base_doc.get(key) != out.get(key):
+            print(f"bench: baseline frozen at {key}={base_doc.get(key)}, "
+                  f"run is {key}={out.get(key)} — regression gate skipped",
+                  file=sys.stderr)
+            return {}
+    return base_doc
 
 
 def round_number(repo: str) -> int:
@@ -413,6 +431,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": default_parallelism(),
         # embedded so a snapshot is self-identifying even if the filename
         # inference and the driver's artifact numbering ever disagree
         "round": round_number(REPO),
@@ -437,16 +456,7 @@ def main() -> None:
     # one line.
     base_path = Path(REPO) / "BENCH_BASELINE.json"
     if base_path.exists():
-        base_doc = json.loads(base_path.read_text())
-        # the frozen medians are per-SF facts: comparing an sf0.01 run
-        # against sf0.1 medians flags noise (streaming replays have
-        # scale-independent overhead), so the gate only arms at the
-        # baseline's own scale factor
-        if base_doc.get("sf") is not None and out["sf"] != base_doc["sf"]:
-            print(f"bench: baseline frozen at sf={base_doc['sf']}, run is "
-                  f"sf={out['sf']} — regression gate skipped",
-                  file=sys.stderr)
-            base_doc = {}
+        base_doc = gate_baseline(json.loads(base_path.read_text()), out)
         base = base_doc.get("queries", {})
 
         def remeasure(name: str) -> float:

@@ -9,15 +9,11 @@ intervals, stamped with the run time. Scheduling moves from Airflow
 The deterministic 'now' is the dataset's max event time, carried as a
 broadcast scalar so the whole plan stays declarative (no driver collect).
 
-Scale notes: with the test-friendly anchor (``max(ts)`` via a broadcast
+Scale notes: with the data-derived anchor (``max(ts)`` via a broadcast
 scalar join) the OR-of-ranges predicate references a runtime column, so it is
-evaluated early (right after the 1-row broadcast) but CANNOT become a static
-parquet PushedFilter. The production form takes a literal clock time
-(``lookback_intervals_filter_literal``) — there the same predicate is pure
-literals, reaches the scan as PushedFilters (row-group min/max skipping), and
-on a partitioned rollup cube prunes (date, hour) partitions, which is exactly
-Druid's interval -> segment pruning. The final aggregation shuffles only the
-few surviving rows.
+evaluated early (right after the 1-row broadcast) but cannot become a static
+parquet PushedFilter. The final aggregation shuffles only the few surviving
+rows.
 """
 
 from __future__ import annotations
@@ -48,25 +44,6 @@ def lookback_intervals_filter(df: DataFrame, days: int = 5,
         .filter(reduce(or_, conds))
         .drop("__now")
     )
-
-
-def lookback_intervals_filter_literal(df: DataFrame, now: str,
-                                      days: int = 5,
-                                      window_minutes: int = 20,
-                                      time_col: str = "ts") -> DataFrame:
-    """Production form of P7: the anchor is a LITERAL clock time (the
-    scheduler's run timestamp, Airflow's ``{{ ts }}``), so every range bound
-    folds to a constant and the OR-of-disjoint-ranges predicate reaches the
-    parquet scan as PushedFilters / partition pruning — the test form above
-    trades that for a deterministic data-derived anchor."""
-    anchor = F.to_timestamp(F.lit(now))
-    conds = [
-        (F.col(time_col) >= anchor - F.expr(f"INTERVAL {d} DAYS")
-         - F.expr(f"INTERVAL {window_minutes} MINUTES"))
-        & (F.col(time_col) < anchor - F.expr(f"INTERVAL {d} DAYS"))
-        for d in range(days)
-    ]
-    return df.filter(reduce(or_, conds))
 
 
 def history(readings: DataFrame, days: int = 5,

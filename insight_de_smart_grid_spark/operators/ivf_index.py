@@ -142,8 +142,8 @@ def train_kmeans_centroids(embeddings: DataFrame, n_centroids: int,
                            id_col: str = "vec_id") -> list:
     """Deterministic, SQL-replayable spherical k-means — the round-10
     trained quantizer (VERDICT r9 item 2). Driver-side NumPy over a
-    BOUNDED sample (the lowest ``train_rows`` ids — the same
-    deterministic sampling ``similarity.ivf_assignments`` uses), init =
+    BOUNDED sample (the lowest ``train_rows`` ids — deterministic, no
+    RNG in the data path), init =
     the first ``n_centroids`` sample vectors, a FIXED ``n_iter`` Lloyd
     iterations. Every vector is L2-normalized and every intermediate
     centroid re-normalized, with each coordinate snapped to a 6-decimal
@@ -343,41 +343,24 @@ def delete_from_ivf_index(spark: SparkSession, path: str, ids,
     return index_base.delete_ids(spark, path, ids, tag)
 
 
-def auto_nprobe(sims: "list[tuple[int, float]]",
-                target_mass: float = 0.8) -> int:
-    """Smallest nprobe whose probed centroids hold ``target_mass`` of
-    the query's total positive centroid-similarity mass — the IVF twin
-    of the ANN family's derived probe radius (round-11, VERDICT r10
-    item 3: ANN derives depth from occupancy and radius from the
-    binomial collision model; IVF's ``nprobe`` was caller-pinned).
+def auto_probe_prefix(sims: "list[tuple[int, float]]",
+                      target_mass: float = 0.8) -> "list[int]":
+    """The derived probe set: the shortest prefix of the centroids ranked
+    by (sim desc, c_id asc) that holds ``target_mass`` of the query's
+    total positive centroid-similarity mass.
 
     Model: under the soft-assignment view of a coarse quantizer, the
     chance that a query's true neighbor lives in cluster ``c`` grows
     with the query-centroid similarity q·c (clipped at 0 — an
     anti-aligned centroid holds no mass for this query), so the
     normalized cumulative similarity mass of the probed set is a
-    recall-coverage proxy: probe the smallest prefix of the
-    similarity-ranked centroids whose mass share clears the target. A
-    concentrated query (one dominant centroid) probes 1 list; a query
-    near a cluster boundary automatically probes more — nprobe adapts
-    per query instead of being a global constant that must be sized for
-    the worst query.
+    recall-coverage proxy. A concentrated query probes 1 list; a query
+    near a cluster boundary automatically probes more.
 
     Every sum is rounded to the shared 6-decimal grid before the ratio
-    compare, so a DuckDB windowed-CTE replays the identical derivation
-    (``ivf_auto_nprobe_oracle_sql``) — the portable-planes determinism
-    trick applied to the probe-count decision. Input: (c_id, q_sim
-    rounded to 6dp) for ALL centroids; driver cost is k ints — bounded
-    by n_centroids regardless of corpus size."""
-    return len(auto_probe_prefix(sims, target_mass))
-
-
-def auto_probe_prefix(sims: "list[tuple[int, float]]",
-                      target_mass: float = 0.8) -> "list[int]":
-    """The derived probe SET: the (sim desc, c_id asc)-ranked centroid
-    prefix ``auto_nprobe`` counts — single source of truth for both the
-    ordering and the count, so a caller can never pair the derived
-    count with a differently-ordered prefix."""
+    compare, so a DuckDB windowed CTE replays the identical derivation
+    (``ivf_auto_nprobe_oracle_sql``). Input: (c_id, q_sim rounded to
+    6dp) for ALL centroids; driver cost is bounded by n_centroids."""
     order = sorted(sims, key=lambda t: (-t[1], t[0]))
     tot = round(sum(max(s, 0.0) for _, s in order), 6)
     if tot <= 0:
@@ -405,8 +388,8 @@ def query_ivf_topk(spark: SparkSession, path: str, query_vec,
     the creation corpus at the same (n_centroids, nprobe).
 
     ``nprobe="auto"`` (round-11) derives the probe count per query from
-    the measured centroid-similarity mass (``auto_nprobe`` — smallest
-    prefix clearing ``target_mass``); the collect is still bounded by
+    the measured centroid-similarity mass (``auto_probe_prefix`` —
+    smallest prefix clearing ``target_mass``); the collect is still bounded by
     n_centroids rows and the pruning plan is unchanged."""
     qv = F.array(*[F.lit(float(x)) for x in query_vec])
     cents = _read_table(spark, path, _CENTS, pin_id)
@@ -490,7 +473,7 @@ def query_ivf_batch_topk(spark: SparkSession, path: str,
                                        * _norm("cv")), 6))
                 .withColumn("rn", F.row_number().over(wq)))
     if nprobe == "auto":
-        # per-query derived nprobe (round-11): the auto_nprobe mass rule
+        # per-query derived nprobe (round-11): the auto_probe_prefix mass rule
         # expressed as window aggregates — one window pass per query, no
         # driver loop, Q-independent of n_centroids collects. Columns
         # are materialized BEFORE the filter (window exprs re-evaluate
@@ -749,7 +732,7 @@ def ivf_auto_nprobe_oracle_sql(query_vec_id: int, k: int = 10,
                                n_centroids: int = 16,
                                target_mass: float = 0.8) -> str:
     """DuckDB twin of a ``nprobe="auto"`` probe through a portable-
-    quantizer IVF index: the ``m``/``np`` CTEs replay ``auto_nprobe``'s
+    quantizer IVF index: the ``m``/``np`` CTEs replay ``auto_probe_prefix``'s
     derivation — cumulative positive similarity mass over the ranked
     centroids on the shared 6-decimal grid, smallest prefix clearing
     ``target_mass`` (fallback: all centroids; zero total mass: 1) —
@@ -1151,51 +1134,6 @@ WHERE e.vec_id != {query_vec_id}
 ORDER BY cos_sim DESC, e.vec_id ASC
 LIMIT {k}
 """
-
-
-def rebalance_ivf_index(spark: SparkSession, path: str,
-                        max_share: float = 0.5,
-                        max_passes: int = 6) -> dict:
-    """The monitor-facing rebalance loop: run ``split_hot_clusters``
-    passes until no cluster exceeds ``max_share`` (each pass halves the
-    hot clusters at their median cut, so convergence needs
-    ~log2(share/max_share) passes) or ``max_passes`` is hit — the
-    latter fails LOUDLY rather than leaving the operator believing the
-    bound holds. Each pass is one atomic lists+centroids rewrite; the
-    deployment cadence is 'when the share monitor trips', not per
-    ingest. Convergence is detected from the geometry epoch — a pass
-    that commits nothing (no cluster over the bound, or only
-    unsplittable ones) leaves the epoch unchanged, and one counts scan
-    then distinguishes 'converged' from 'stuck'. Returns the final
-    meta."""
-    def shares_ok() -> "tuple[bool, float]":
-        counts = [r.n for r in
-                  _read_table(spark, path, _LISTS).groupBy("cluster")
-                  .agg(F.count(F.lit(1)).alias("n")).collect()]
-        share = max(counts) / sum(counts)
-        return share <= max_share, share
-
-    meta = _read_meta(path)
-    for _ in range(max_passes):
-        before = meta.get("geom_epoch", 0)
-        meta = split_hot_clusters(spark, path, max_share=max_share)
-        if meta.get("geom_epoch", 0) == before:
-            # nothing committed: either the bound already holds, or a
-            # hot cluster's every projection is identical (one-sided cut)
-            ok, share = shares_ok()
-            if not ok:
-                raise RuntimeError(
-                    f"rebalance of {path} is stuck at max cluster share "
-                    f"{share:.3f} > {max_share} — a cluster of "
-                    "near-identical vectors cannot be median-split; "
-                    "dedup it or raise the bound")
-            return meta
-    ok, share = shares_ok()
-    if not ok:
-        raise RuntimeError(
-            f"rebalance of {path} still exceeds max_share={max_share} "
-            f"after {max_passes} passes (max cluster share {share:.3f})")
-    return meta
 
 
 def retrain_ivf_index(spark: SparkSession, path: str,

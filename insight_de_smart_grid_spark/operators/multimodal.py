@@ -245,34 +245,13 @@ def _fake_unit_vec(payload: bytes, dim: int) -> list[float]:
     return [x / inv for x in ks]
 
 
-def extract_features(binary_df: DataFrame, dim: int = 16,
-                     fake: bool = False) -> DataFrame:
-    """Feature-extraction stage: payload -> fixed-dim ``array<float>``
-    embedding, the bridge from media columns into the similarity operators
-    (`operators/similarity.py` consumes exactly this shape). ``fake=True``
-    derives a deterministic unit-norm vector from the payload sha256;
-    ``fake=False`` raises (a real build would run a vision encoder)."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pb in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "real feature extraction needs a vision model; "
-                    "not in this container")
-            ids, vecs = [], []
-            for doc_id, payload in zip(pb["doc_id"], pb["payload"]):
-                ids.append(doc_id)
-                vecs.append(_fake_unit_vec(bytes(payload), dim))
-            yield pd.DataFrame({"doc_id": ids, "embedding": vecs})
-
-    return (binary_df.select("doc_id", "payload")
-            .mapInPandas(extract, "doc_id long, embedding array<float>"))
-
-
 def extract_features_exploded(binary_df: DataFrame, dim: int = 16,
                               fake: bool = False) -> DataFrame:
-    """Driver-facing twin of :func:`extract_features`: one scalar row per
-    embedding component, ``(doc_id, dim_idx, value)``. Array cells break
+    """Feature-extraction stage: payload -> fixed-dim embedding, one scalar
+    row per component, ``(doc_id, dim_idx, value)``. ``fake=True`` derives
+    a deterministic unit-norm vector from the payload sha256;
+    ``fake=False`` raises (a real build would run a vision encoder). Array
+    cells break
     order-insensitive hashing harnesses (pandas can't sort/factorize list
     cells), so the checked shape is exploded; all values are full-precision
     doubles reproduced exactly by FEATURE_EXTRACT_SQL."""

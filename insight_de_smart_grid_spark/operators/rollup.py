@@ -90,31 +90,6 @@ def write_rollup(rollup: DataFrame, path: str, mode: str = "overwrite") -> None:
     )
 
 
-def backfill_rollup(rollup_slice: DataFrame, path: str) -> None:
-    """Idempotent partition backfill: rewrite ONLY the (date, hour)
-    partitions present in ``rollup_slice``, leaving every other partition's
-    files untouched (Druid analog: re-ingesting one interval replaces just
-    those segments, ``database/Druid_conf_power_raw_avro`` interval spec).
-
-    Uses dynamic partition-overwrite mode — the write claims exactly the
-    partitions it produces rows for, so a late-data correction job over one
-    day never rewrites the other N-1 days of a 100 TB cube, and re-running
-    the same backfill is a no-op-equivalent (same rows -> same partitions).
-    Static overwrite (the default) would instead DELETE the whole table.
-    The mode is a per-write option, so the session conf is never touched.
-    """
-    (
-        rollup_slice
-        .withColumn("date", F.to_date("window_start"))
-        .withColumn("hour", F.hour("window_start"))
-        .repartition("date", "hour")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date", "hour")
-        .parquet(path)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Oracle twins
 # ---------------------------------------------------------------------------

@@ -17,7 +17,6 @@ absorbs the last-ulp jitter.
 
 from __future__ import annotations
 
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -384,82 +383,6 @@ def hyperplane_signatures(embeddings: DataFrame, n_tables: int = 16,
     return (emb.withColumn("bks", buckets_udf("v"))
             .select(F.col(id_col), F.col("v"),
                     F.posexplode("bks").alias("table", "bucket")))
-
-
-def ivf_assignments(embeddings: DataFrame, n_centroids: int = 16,
-                    n_iter: int = 5, seed: int = 7, train_rows: int = 2048,
-                    vec_col: str = "embedding",
-                    id_col: str = "vec_id"):
-    """IVF coarse quantizer: spherical k-means centroids trained on a
-    driver-side sample, then one Arrow-batched pass assigns every vector to
-    its nearest centroid (cosine).
-
-    Returns (centroids ndarray (C, dim) L2-normalized, assigned DataFrame
-    with a ``cluster`` column). At 100 TB: train on a ~1M-row sample (cheap,
-    driver/NumPy), broadcast the centroid matrix (KBs), and write the
-    assigned table partitioned by ``cluster`` — a query then scans only the
-    probed partitions. Training sample is taken by ascending id — fully
-    deterministic, no RNG in the data path."""
-    spark = embeddings.sparkSession
-    train = (embeddings.select(id_col, vec_col).orderBy(id_col)
-             .limit(train_rows).toPandas())
-    mat = np.array([np.asarray(v, dtype=np.float64) for v in train[vec_col]])
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    rng = np.random.RandomState(seed)
-    cents = mat[rng.choice(len(mat), n_centroids, replace=False)]
-    for _ in range(n_iter):
-        assign = (mat @ cents.T).argmax(axis=1)
-        for c in range(n_centroids):
-            members = mat[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-        cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    b_cents = spark.sparkContext.broadcast(cents)
-
-    @F.pandas_udf("int")
-    def cluster_udf(vs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vs])
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        return pd.Series((m @ b_cents.value.T).argmax(axis=1).astype("int32"))
-
-    emb = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-    return cents, emb.withColumn("cluster", cluster_udf("v"))
-
-
-def ivf_ann_topk(embeddings: DataFrame, query_vec_id: int, k: int = 10,
-                 n_centroids: int = 16, nprobe: int = 4,
-                 vec_col: str = "embedding",
-                 id_col: str = "vec_id") -> DataFrame:
-    """IVF approximate top-K: probe the ``nprobe`` centroids nearest the
-    query, exact cosine re-rank within those inverted lists only. The scan
-    touches nprobe/n_centroids of the corpus — the IVF scale contract."""
-    cents, assigned = ivf_assignments(embeddings, n_centroids,
-                                      vec_col=vec_col, id_col=id_col)
-    # query vector read from the BASE table: going through `assigned`
-    # would run the whole-corpus cluster UDF just to fetch one row
-    qrow = (embeddings.filter(F.col(id_col) == query_vec_id)
-            .select(F.col(vec_col).cast("array<double>")).head())
-    if qrow is None:
-        raise ValueError(f"query_vec_id {query_vec_id} not found")
-    qv = np.asarray(qrow[0], dtype=np.float64)
-    qn = qv / np.linalg.norm(qv)
-    probes = [int(c) for c in (cents @ qn).argsort()[::-1][:nprobe]]
-    q = (assigned.filter(F.col(id_col) == query_vec_id)
-         .select(F.col("v").alias("qv")))
-    return (
-        assigned
-        .filter(F.col("cluster").isin(probes)
-                & (F.col(id_col) != query_vec_id))
-        .join(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.round(_dot("v", "qv")
-                    / (_norm("v") * _norm("qv")), 6)
-            .alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 def lsh_ann_topk(embeddings: DataFrame, query_vec_id: int, k: int = 10,
@@ -1005,8 +928,8 @@ def ivf_portable_topk(embeddings: DataFrame, query_vec_id: int, k: int = 10,
     pairs (rounded score + id tie-break -> deterministic cross-engine), and
     the re-rank is the usual fold + TakeOrderedAndProject. At 100 TB the
     assigned table is written partitioned by ``cluster`` and a query scans
-    nprobe/n_centroids of it — identical physical story to ``ivf_ann_topk``,
-    with the trained-quantizer variant kept for recall quality.
+    nprobe/n_centroids of it — the persisted ``ivf_index`` family carries
+    the trained-quantizer variant for recall quality.
 
     ``n_centroids="auto"`` sizes the quantizer by the sqrt rule
     (``auto_n_centroids``) — per-query cost O(sqrt(n)) as the corpus grows.
@@ -1845,7 +1768,8 @@ def kmeans_portable(embeddings: DataFrame, k: int = 4, iters: int = 2,
                     dim: int = 64, vec_col: str = "embedding",
                     id_col: str = "vec_id") -> DataFrame:
     """Fully DISTRIBUTED Lloyd k-means — no driver-side training sample
-    (contrast ``ivf_assignments``, which fits on a bounded driver sample).
+    (contrast ``ivf_index.train_kmeans_centroids``, which fits on a
+    bounded driver sample).
     Deterministic and bit-exact cross-engine by construction:
 
     - vectors quantize to BIGINT micro-units (round(x*1e6)) once;

@@ -161,10 +161,7 @@ def kmv_pair_estimates(a_kmv: Column, a_sz: Column, b_kmv: Column,
     estimates, as one multiply+divide on identical operands cross-engine."""
     big = F.lit(int(_KMV_SCALE))  # sentinel: sketch complete, theta = 1
     u = F.slice(F.array_sort(F.array_union(a_kmv, b_kmv)), 1, k)
-    u_sz = F.size(u)
-    est_union = F.when(u_sz < k, u_sz.cast("double")) \
-                 .otherwise(F.lit(float(k - 1)) * F.lit(_KMV_SCALE)
-                            / F.element_at(u, k).cast("double"))
+    est_union = kmv_estimate(u, F.size(u), k)
     cut_a = F.when(a_sz < k, big).otherwise(F.element_at(a_kmv, k))
     cut_b = F.when(b_sz < k, big).otherwise(F.element_at(b_kmv, k))
     cut = F.least(cut_a, cut_b)

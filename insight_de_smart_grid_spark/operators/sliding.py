@@ -53,10 +53,13 @@ from insight_de_smart_grid_spark.operators.duty_cycle import (
     _interval_seconds,
     use_panes,
 )
+from insight_de_smart_grid_spark.operators.sketches import (
+    _KMV_SCALE,
+    kmv_estimate,
+)
 
 SLIDING_KMV_K = 64     # k-minimum-values sketch size for kmv_distinct
 SLIDING_HLL_LGK = 12   # DataSketches lg_k for approx_distinct
-_KMV_SCALE = float(2 ** 60)  # 60-bit md5 hashes normalized to [0, 1)
 
 
 def _kmv_hash(col: Column) -> Column:
@@ -144,10 +147,7 @@ def _final_expr(fn: str, partial_of, col: str) -> Column:
                                         F.lit(0.0))))
     if fn == "kmv_distinct":
         kmv = partial_of("kmv", col)
-        k = SLIDING_KMV_K
-        return (F.when(F.size(kmv) < k, F.size(kmv).cast("double"))
-                .otherwise(F.lit(float(k - 1)) * F.lit(_KMV_SCALE)
-                           / F.element_at(kmv, k).cast("double")))
+        return kmv_estimate(kmv, F.size(kmv), SLIDING_KMV_K)
     if fn == "approx_distinct":
         return F.hll_sketch_estimate(partial_of("hll", col))
     return partial_of(fn, col)

@@ -360,40 +360,10 @@ GROUP BY 1
 
 
 # ---------------------------------------------------------------------------
-# Winnowing fingerprints (rolling-hash document fingerprinting, MOSS-style)
+# Winnowing fingerprints (rolling-hash document fingerprinting, MOSS-style):
+# keep the minimum k-gram of each w-wide sliding window, dedupe — any shared
+# substring of length >= k+w-1 yields a shared fingerprint (Schleimer et al.)
 # ---------------------------------------------------------------------------
-
-def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
-                        k: int = 8, w: int = 4) -> DataFrame:
-    """Rolling-hash fingerprinting: hash every k-gram, keep the minimum of
-    each w-wide sliding window, dedupe — the winnowing scheme (Schleimer et
-    al., MOSS) guaranteeing any shared substring of length >= k+w-1 yields a
-    shared fingerprint. All higher-order functions (sequence / transform /
-    slice / array_min), zero UDFs, one pass at scan speed; md5 keeps the
-    k-gram hash portable across engines for the oracle.
-
-    The raw docs are spread before the per-position md5 pass (round-11,
-    guide §2.2): one md5 per character position makes this the repo's
-    densest per-row expression, and a single-split scan would run all of
-    it in one task (measured 2 tasks/1.5 s at sf0.1)."""
-    from insight_de_smart_grid_spark.operators.layout import spread
-
-    docs = spread(docs, "doc_id").select(
-        "doc_id", kgram_hashes(text_col, k).alias("grams"))
-    winnowed = winnowed_of(F.col("grams"), w)
-    return docs.select(
-        "doc_id",
-        F.size(winnowed).alias("n_fp"),
-        F.array_min(F.col("grams")).alias("min_fp"))
-
-
-def kgram_hashes(text_col: str, k: int = 8) -> Column:
-    """Portable rolling k-gram hash array (md5 per k-char window)."""
-    c = F.col(text_col)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(1))),
-        lambda i: F.md5(c.substr(i, F.lit(k))))
-
 
 def kgrams(text_col: str, k: int = 8) -> Column:
     """Raw rolling k-gram array (no hash). Winnowing's shared-substring
@@ -487,9 +457,9 @@ def winnow_fps_arrow(docs: DataFrame, text_col: str = "text",
 def winnow_stats_arrow(docs: DataFrame, text_col: str = "text",
                        k: int = 8, w: int = 4) -> DataFrame:
     """Per-doc winnow summary (n_fp, min_fp) over the Arrow-vectorized
-    fingerprint pass — measured 2.7x faster than the pure-HOF
-    ``winnow_fingerprints`` at sf0.1 (1.2s vs 3.3s; the per-position
-    slice/array_min HOFs run interpreted). Costs one extra uniform shuffle
+    fingerprint pass — measured 2.7x faster than a pure higher-order-
+    function form at sf0.1 (1.2s vs 3.3s; the per-position slice/array_min
+    HOFs run interpreted). Costs one extra uniform shuffle
     for the per-doc aggregate, which the numpy compute savings dwarf.
 
     ``min_fp`` is the raw minimum k-gram: the global-min gram is the min of
@@ -515,23 +485,6 @@ SELECT doc_id,
            range(1, greatest(len(grams) - {w} + 1, 1) + 1),
            j -> list_min(grams[CAST(j AS INT):CAST(j AS INT)+{w - 1}]))))
          AS BIGINT) AS n_fp,
-       list_min(grams) AS min_fp
-FROM g
-"""
-
-
-def winnow_oracle_sql(k: int = 8, w: int = 4) -> str:
-    return f"""
-WITH g AS (
-  SELECT doc_id,
-         list_transform(range(1, greatest(length(text) - {k} + 1, 1) + 1),
-                        i -> md5(substring(text, CAST(i AS INT), {k}))) AS grams
-  FROM documents
-)
-SELECT doc_id,
-       len(list_distinct(list_transform(
-           range(1, greatest(len(grams) - {w} + 1, 1) + 1),
-           j -> list_min(grams[CAST(j AS INT):CAST(j AS INT)+{w - 1}])))) AS n_fp,
        list_min(grams) AS min_fp
 FROM g
 """

@@ -256,16 +256,6 @@ def q_array_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF approximate nearest neighbors (scale path beside the LSH variant).
-# The TRAINED-quantizer variant (similarity.py::ivf_ann_topk) is
-# deliberately NOT a registered query: its index is engine-specific, so it
-# has no cross-engine value oracle — recall is asserted in
-# tests/test_advanced.py instead, and the registered, fully-oracled IVF
-# surface is sim_ivf_portable_topk (deterministic quantizer).
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
 # Custom stateful streaming operator (applyInPandasWithState EWMA). The
 # oracle replays the exact recurrence pandas ewm(adjust=False) computes —
 # y_0 = x_0, y_i = (1-a)*y_{i-1} + a*x_i — as a recursive CTE stepping rank

@@ -996,8 +996,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-extraction stub, exploded to one scalar row per embedding
     component so the comparison harness can sort/hash it (array<float>
-    cells crash pandas factorize); the array-returning bridge op
-    ``mm.extract_features`` is what similarity search consumes."""
+    cells crash pandas factorize)."""
     docs = load_table(spark, sf_dir, "documents")
     return mm.extract_features_exploded(mm.attach_binary_payload(docs),
                                         fake=True)
@@ -1006,8 +1005,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("text_winnow_fingerprint", tx.winnow_stats_oracle_sql())
 def q_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash (winnowing) fingerprints per document — Arrow-vectorized
-    pass (same fingerprint set as the pure-HOF ``winnow_fingerprints``,
-    measured 2.7x faster; see ``winnow_stats_arrow``)."""
+    pass (see ``winnow_stats_arrow``)."""
     docs = load_table(spark, sf_dir, "documents")
     return tx.winnow_stats_arrow(docs)
 
@@ -1580,7 +1578,7 @@ def q_sim_ivf_auto_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid-similarity mass, derived on the shared 6-decimal grid so
     the DuckDB twin replays the derivation itself in a windowed CTE
     (the IVF twin of the ANN family's auto depth / auto radius)
-    (`operators/ivf_index.py::auto_nprobe`)."""
+    (`operators/ivf_index.py::auto_probe_prefix`)."""
     from insight_de_smart_grid_spark.operators import ivf_index as ii
 
     emb = load_table(spark, sf_dir, "embeddings")

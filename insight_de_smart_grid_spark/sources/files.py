@@ -26,7 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from insight_de_smart_grid_spark.operators.cleanse import try_double
+from insight_de_smart_grid_spark.operators.cleanse import (
+    skip_embedded_headers,
+    try_double,
+)
 
 REDD_SCHEMA = T.StructType([
     T.StructField("ts_raw", T.StringType()),
@@ -62,8 +65,7 @@ def read_greend_csv(spark: SparkSession, path_glob: str,
            .option("header", True).option("mode", "PERMISSIVE")
            .csv(path_glob)
            .withColumn("src", F.input_file_name()))
-    # skip embedded repeated headers (P11): rows whose ts cell is the header
-    clean = raw.filter(F.col("timestamp") != F.lit("timestamp"))
+    clean = skip_embedded_headers(raw, "timestamp", "timestamp")
     channels = F.array(*[
         F.struct(F.lit(i).alias("channel_idx"),
                  try_double(f"c{i}").alias("power"))

@@ -141,91 +141,3 @@ def ewma_stream(readings_stream: DataFrame, alpha: float = 0.3) -> DataFrame:
     return prepared.groupBy("house_id").applyInPandasWithState(
         fn, OUT_SCHEMA, STATE_SCHEMA, "append",
         GroupStateTimeout.NoTimeout)
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API): per-house
-# running energy register
-# ---------------------------------------------------------------------------
-
-def tws_available() -> bool:
-    """transformWithStateInPandas speaks a protobuf protocol to its state
-    server; absent protobuf (this container), the feature is gated exactly
-    like Kafka/Avro — operator present, live path xfailed."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_energy_stream(readings_stream: DataFrame) -> DataFrame:
-    """Continuously-maintained per-house register — total energy, reading
-    count, first/last event time — via ``transformWithStateInPandas``, the
-    Spark 4 successor to ``applyInPandasWithState`` (typed state handles,
-    timers, TTL). State is ONE small row per house regardless of input
-    volume; each micro-batch emits the updated register for the houses it
-    touched (update semantics — a dashboard upsert sink).
-
-    The final emission per house equals the batch aggregate over the whole
-    replay, which is what the oracle checks (last-emission selection keys
-    on the monotone reading count)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    state_schema = StructType([
-        StructField("sum_power", DoubleType()),
-        StructField("n", LongType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-    ])
-    out_schema = StructType([
-        StructField("house_id", StringType()),
-        StructField("sum_power", DoubleType()),
-        StructField("n", LongType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-    ])
-
-    class RunningEnergy(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._reg = handle.getValueState("register", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._reg.exists():
-                total, n, first_ts, last_ts = self._reg.get()
-            else:
-                total, n, first_ts, last_ts = 0.0, 0, None, None
-            for pdf in rows:
-                total += float(pdf["power"].sum())
-                n += len(pdf)
-                lo = pdf["ts"].min()
-                hi = pdf["ts"].max()
-                first_ts = lo if first_ts is None else min(first_ts, lo)
-                last_ts = hi if last_ts is None else max(last_ts, hi)
-            self._reg.update((total, n, first_ts, last_ts))
-            yield pd.DataFrame({"house_id": [key[0]], "sum_power": [total],
-                                "n": [n], "first_ts": [first_ts],
-                                "last_ts": [last_ts]})
-
-        def close(self) -> None:
-            pass
-
-    return (readings_stream
-            .select("house_id", "power", "ts")
-            .groupBy("house_id")
-            .transformWithStateInPandas(
-                RunningEnergy(), outputStructType=out_schema,
-                outputMode="Update", timeMode="None"))

@@ -68,9 +68,20 @@ def compare(spark_df, duck_con, sql):
     assert not mismatches, f"{len(mismatches)} row mismatches; first: {mismatches[0]}"
 
 
+def check_query(spark, duck, q, sf_dir):
+    """Run registered query ``q`` over ``sf_dir`` and compare it with its
+    oracle inside one ``checkpoint_scope``: the result is collected before
+    the scope exits, which then releases the query's pinned blocks and
+    removes its scratch dirs."""
+    from insight_de_smart_grid_spark.operators.staging import checkpoint_scope
+
+    with checkpoint_scope(spark):
+        compare(q.fn(spark, sf_dir), duck, q.sql)
+
+
 def check_registered(spark, duck, name, sf_dir="/root/testdata/sf0.01"):
     from insight_de_smart_grid_spark.plans.registry import QUERIES
 
     q = QUERIES[name]
     assert q.sql is not None, f"{name} has no oracle SQL"
-    compare(q.fn(spark, sf_dir), duck, q.sql)
+    check_query(spark, duck, q, sf_dir)

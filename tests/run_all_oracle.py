@@ -17,7 +17,7 @@ import duckdb
 from pyspark.sql import SparkSession
 
 from insight_de_smart_grid_spark.plans.registry import QUERIES
-from tests.oracle import compare
+from tests.oracle import check_query
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -54,7 +54,7 @@ def main() -> int:
                 n = q.fn(spark, sf_dir).count()
                 print(f"ROWS-ONLY {name}: {n} rows ({time.time()-t0:.1f}s)")
                 continue
-            compare(q.fn(spark, sf_dir), duck, q.sql)
+            check_query(spark, duck, q, sf_dir)
             print(f"PASS {name} ({time.time()-t0:.1f}s)")
         except Exception as e:  # noqa: BLE001
             failed.append(name)

@@ -76,18 +76,6 @@ def test_approx_agg_within_tolerance_of_exact(spark):
         assert r.approx_parts_ok and r.approx_median_ok
 
 
-def test_ivf_recall_against_exact_topk(spark):
-    """IVF with nprobe=4/16 must recover a majority of the exact top-10."""
-    from insight_de_smart_grid_spark.operators.similarity import (
-        cosine_topk,
-        ivf_ann_topk,
-    )
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-    exact = {r.vec_id for r in cosine_topk(emb, 0, k=10).collect()}
-    approx = {r.vec_id for r in ivf_ann_topk(emb, 0, k=10).collect()}
-    assert len(exact & approx) >= 5
-
-
 def test_ewma_stream_equals_batch(spark):
     """The applyInPandasWithState EWMA must equal the batch applyInPandas
     run over the same input (state carried across micro-batches)."""

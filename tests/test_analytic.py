@@ -472,13 +472,3 @@ def test_dup_clusters_raises_when_unconverged(spark):
         [(i, i + 1) for i in range(1, 5)], "doc_a long, doc_b long")
     with pytest.raises(RuntimeError, match="converge"):
         dd.dup_clusters(pairs, max_rounds=1)
-
-
-def test_ivf_missing_query_id_raises(spark):
-    import pytest
-
-    from insight_de_smart_grid_spark.operators.similarity import ivf_ann_topk
-
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-    with pytest.raises(ValueError, match="not found"):
-        ivf_ann_topk(emb, query_vec_id=10 ** 9)

@@ -18,6 +18,7 @@ from bench import (  # noqa: E402
     ab_verdict,
     confirmed_regressions,
     crosstree_interleaved,
+    gate_baseline,
     interleaved_measure,
     is_ingest_regression,
     is_regression,
@@ -79,6 +80,19 @@ def test_ingest_gate_fires_on_synthetic_slowdown():
     assert not is_ingest_regression(base * 2, base)     # faster: silent
     assert not is_ingest_regression(0, base)            # no measurement
     assert not is_ingest_regression(base, 0)            # no baseline
+
+
+def test_gate_skips_a_baseline_from_another_core_count(capsys):
+    """The frozen medians arm the gate only at the run's own sf AND cpus:
+    a 4-core run must not be compared against ``local[32]`` medians."""
+    base = {"sf": 0.1, "cpus": 32, "queries": {"q": 1.0}}
+    assert gate_baseline(base, {"sf": 0.1, "cpus": 32}) is base
+    assert gate_baseline(base, {"sf": 0.1, "cpus": 4}) == {}
+    assert "cpus=32, run is cpus=4" in capsys.readouterr().err
+    assert gate_baseline(base, {"sf": 0.01, "cpus": 32}) == {}
+    assert "sf=0.1, run is sf=0.01" in capsys.readouterr().err
+    assert gate_baseline({"sf": 0.1, "queries": {}},
+                         {"sf": 0.1, "cpus": 32}) == {}
 
 
 def test_round_number_from_artifacts(tmp_path, monkeypatch):

@@ -18,7 +18,7 @@ import pytest
 
 from insight_de_smart_grid_spark.plans.registry import QUERIES
 from tests.edge_fixture import build_edge_sf
-from tests.oracle import compare
+from tests.oracle import check_query
 
 ORACLED = sorted(n for n, q in QUERIES.items() if q.sql is not None)
 
@@ -43,5 +43,4 @@ def edge_duck(edge_dir):
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle_on_edge_corpus(spark, edge_dir, edge_duck,
                                              name):
-    q = QUERIES[name]
-    compare(q.fn(spark, edge_dir), edge_duck, q.sql)
+    check_query(spark, edge_duck, QUERIES[name], edge_dir)

@@ -259,37 +259,6 @@ def test_frame_sample_real_path_raises(spark):
         mm.sample_frames(mm.attach_binary_payload(docs), fake=False).collect()
 
 
-def test_multimodal_resize_and_features_are_deterministic(spark):
-    """The resize and feature-extract stubs must be deterministic across
-    runs, emit the declared schema, and the embeddings must be unit-norm and
-    directly consumable by the similarity operator."""
-    from insight_de_smart_grid_spark.operators import multimodal as mm
-    from insight_de_smart_grid_spark.operators.similarity import cosine_topk
-
-    docs = load_table(spark, SF_ORACLE, "documents").limit(50)
-    payload = mm.attach_binary_payload(docs)
-
-    r1 = {(r.doc_id, r.width, r.height, r.n_bytes)
-          for r in mm.resize_media(payload, fake=True).collect()}
-    r2 = {(r.doc_id, r.width, r.height, r.n_bytes)
-          for r in mm.resize_media(payload, fake=True).collect()}
-    assert r1 == r2 and len(r1) == 50
-    assert all(w == 64 and h == 64 for _, w, h, _ in r1)
-
-    feats = mm.extract_features(payload, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 50
-    for r in rows:
-        assert len(r.embedding) == 16
-        norm = sum(x * x for x in r.embedding) ** 0.5
-        assert abs(norm - 1.0) < 1e-3
-    # schema-compatible with similarity search: vec_id + embedding
-    from pyspark.sql import functions as F2
-    emb = feats.select(F2.col("doc_id").alias("vec_id"), "embedding")
-    top = cosine_topk(emb, query_vec_id=rows[0].doc_id, k=3)
-    assert top.count() == 3
-
-
 def test_embedding_cosine_pairs_never_touch_driver(spark, monkeypatch):
     """The all-pairs near-dup path must stay fully distributed: building AND
     executing dedup_embedding_cosine may not call DataFrame.toPandas (the

@@ -493,33 +493,6 @@ def test_pinned_family_probe_is_a_consistent_snapshot(spark, tmp_path):
     assert _pairs(spark, path) == live
 
 
-def test_rebalance_loop_converges_or_fails_loudly(spark, tmp_path):
-    """``rebalance_ivf_index``: converges to the bound in
-    ~log2(share/bound) passes on a splittable corpus; on an
-    UNSPLITTABLE hot cluster (identical vectors — every projection
-    equal, the median cut is one-sided) it raises instead of silently
-    reporting the bound holds."""
-    emb = _emb(spark)
-    path = str(tmp_path / "ok")
-    iv.build_ivf_index(emb, path, n_centroids=4)
-    iv.rebalance_ivf_index(spark, path, max_share=0.2)
-    counts = [r.n for r in
-              iv._read_table(spark, path, "lists").groupBy("cluster")
-              .agg(F.count(F.lit(1)).alias("n")).collect()]
-    assert max(counts) <= 0.2 * sum(counts)
-
-    same = emb.limit(1).select("embedding").head()[0]
-    rows = [(i, list(same)) for i in range(60)] + \
-        [(100 + i, [float(i + 1)] + [0.0] * (len(same) - 1))
-         for i in range(4)]
-    clone = spark.createDataFrame(rows,
-                                  "vec_id bigint, embedding array<double>")
-    bad = str(tmp_path / "bad")
-    iv.build_ivf_index(clone, bad, n_centroids=4)
-    with pytest.raises(RuntimeError, match="cannot be median-split"):
-        iv.rebalance_ivf_index(spark, bad, max_share=0.5, max_passes=2)
-
-
 def test_split_preserves_tombstone_masking(spark, tmp_path):
     """Geometry maintenance must not resurrect deleted ids: a split
     reads the live lists (tombstoned rows included — they are dropped

@@ -504,28 +504,6 @@ def test_persisted_ann_index_multiprobe_without_index_shuffle(spark,
         spark.sql("DROP TABLE IF EXISTS ann_sig_idx_mp")
 
 
-def test_literal_lookback_anchor_pushes_to_scan(spark):
-    """The production history form (literal clock anchor) must fold the
-    OR-of-ranges predicate to constants that reach the parquet scan as
-    PushedFilters — the data-derived-anchor test form cannot (runtime
-    column), which is why the literal variant exists."""
-    import re
-
-    from insight_de_smart_grid_spark.operators.history import (
-        lookback_intervals_filter_literal,
-    )
-    from insight_de_smart_grid_spark.sources.tables import load_table
-
-    ev = load_table(spark, SF_ORACLE, "events")
-    out = lookback_intervals_filter_literal(
-        ev, "2024-06-01 12:00:00", days=3, window_minutes=20)
-    p = out._jdf.queryExecution().executedPlan().toString()
-    # toString() truncates long filter lists without a closing bracket, so
-    # match the opening only and require a ts range predicate inside
-    m = re.search(r"PushedFilters: \[(.{0,120})", p)
-    assert m and "ts" in m.group(1), p
-
-
 def test_scan_speed_ops_have_zero_shuffle(spark):
     """The scan-speed families must stay pure projections: the model-based
     quality scorer and the audio encode+decode pipeline carry no Exchange

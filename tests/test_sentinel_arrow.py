@@ -8,7 +8,6 @@ sentinel files under the replay's own reader."""
 
 from __future__ import annotations
 
-import tempfile
 from pathlib import Path
 
 import pytest
@@ -21,8 +20,8 @@ from insight_de_smart_grid_spark.streaming.replay import (
 from tests.conftest import SF_SMOKE
 
 
-def _staged_copy(src: str) -> str:
-    d = Path(tempfile.mkdtemp(prefix="sent_par_"))
+def _staged_copy(d: Path, src: str) -> str:
+    d.mkdir()
     (d / Path(src).name).symlink_to(src)
     return str(d)
 
@@ -38,12 +37,14 @@ def _sentinel_rows(spark, staged: str, schema):
 
 
 @pytest.mark.parametrize("all_types,margin_h", [(False, 1), (True, 1)])
-def test_arrow_sentinel_matches_spark_path(spark, all_types, margin_h):
+def test_arrow_sentinel_matches_spark_path(spark, tmp_path, all_types,
+                                           margin_h):
     src = f"{SF_SMOKE}/events.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = parquet_schema(spark, src)
 
-    d_arrow, d_spark = _staged_copy(src), _staged_copy(src)
+    d_arrow = _staged_copy(tmp_path / "arrow", src)
+    d_spark = _staged_copy(tmp_path / "spark", src)
     _stage_flush_sentinel_arrow(d_arrow, 3600 * margin_h,
                                 all_types=all_types)
     _stage_flush_sentinel_spark(spark, d_spark, 3600 * margin_h,
@@ -62,7 +63,7 @@ def test_arrow_sentinel_matches_spark_path(spark, all_types, margin_h):
     assert mt == sorted(mt) and len(set(mt)) == len(mt)
 
 
-def test_arrow_sentinel_raises_without_ts_column(spark):
-    staged = _staged_copy(f"{SF_SMOKE}/nation.parquet")
+def test_arrow_sentinel_raises_without_ts_column(spark, tmp_path):
+    staged = _staged_copy(tmp_path / "staged", f"{SF_SMOKE}/nation.parquet")
     with pytest.raises(Exception):
         _stage_flush_sentinel_arrow(staged, 3600)

@@ -114,28 +114,6 @@ def test_scope_restores_on_error(spark):
     assert _in_thread(lambda: _enter(spark, 5)) is None
 
 
-def test_backfill_leaves_session_overwrite_mode(spark, tmp_path):
-    """``backfill_rollup`` overwrites dynamically through a per-write
-    option; the session conf it would otherwise leak stays as found."""
-    from insight_de_smart_grid_spark.operators.rollup import (
-        backfill_rollup,
-        write_rollup,
-    )
-
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key)
-    cube = spark.sql(
-        "SELECT to_timestamp(t) AS window_start, c AS cnt FROM VALUES "
-        "('2024-01-05 01:00:00', 1), ('2024-01-06 02:00:00', 2) AS v(t, c)")
-    path = str(tmp_path / "cube")
-    write_rollup(cube, path)
-    backfill_rollup(cube.where("cnt = 1").selectExpr("window_start",
-                                                     "10 AS cnt"), path)
-    assert spark.conf.get(key) == before
-    got = sorted(r.cnt for r in spark.read.parquet(path).collect())
-    assert got == [2, 10]  # the other partition survived the overwrite
-
-
 def test_env_knobs_and_shuffle_width_live_in_session():
     """Only ``session.py`` reads the environment, names a
     ``SPARK_GRAFT_*`` variable (just ``CPUS`` and ``DRIVER_MEM``) or sets

@@ -163,48 +163,6 @@ def test_balanced_shards_equalizes_totals(spark):
     assert max(totals) < 1.06 * mean and min(totals) > 0.94 * mean
 
 
-def test_jsonl_corpus_roundtrip_with_quarantine(spark, tmp_path):
-    """Write the corpus as gzip'd JSONL, corrupt two lines, read back:
-    clean rows byte-match the original; malformed + schema-violating rows
-    land in quarantine with the raw line preserved."""
-    import gzip
-    import json as js
-
-    from insight_de_smart_grid_spark.sources.corpus import (
-        read_jsonl_corpus, write_jsonl_corpus)
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    out = str(tmp_path / "corpus")
-    write_jsonl_corpus(docs, out, compression="gzip",
-                       target_rows_per_file=200)
-
-    # append a file with one truncated line and one missing-text record
-    extra = tmp_path / "corpus" / "part-extra.json.gz"
-    with gzip.open(extra, "wt") as f:
-        f.write('{"doc_id": 999999, "text": "ok extra", "lang": "en", '
-                '"source": "srcX", "n_chars": 8}\n')
-        f.write('{"doc_id": 999998, "text": "truncat')   # malformed
-        f.write("\n")
-        f.write(js.dumps({"doc_id": 999997, "lang": "en",
-                          "source": "srcX", "n_chars": 1}) + "\n")
-
-    clean, quarantine = read_jsonl_corpus(spark, out)
-    n = docs.count()
-    assert clean.count() == n + 1
-    orig = {(r.doc_id, r.text) for r in docs.collect()}
-    back = {(r.doc_id, r.text) for r in clean.collect()}
-    assert orig <= back and (999999, "ok extra") in back
-    q = quarantine.collect()
-    assert len(q) == 2
-    raws = [r._corrupt_record for r in q if r._corrupt_record is not None]
-    assert any("truncat" in (r or "") for r in raws)
-
-    # file sizing: the 500-doc corpus at 200 rows/file -> >= 3 data files
-    files = [p for p in (tmp_path / "corpus").iterdir()
-             if p.name.startswith("part-") and p.name != "part-extra.json.gz"]
-    assert len(files) >= 3
-
-
 def test_setops_all_matches_oracle(spark, duck):
     check_registered(spark, duck, "star_setops_all")
 
@@ -335,12 +293,12 @@ def test_sequence_detect_matches_oracle(spark, duck):
     check_registered(spark, duck, "events_sequence_detect")
 
 
-def test_sequence_detect_on_planted_chain(spark):
+def test_sequence_detect_on_planted_chain(spark, tmp_path):
     """Planted: a valid click->view->purchase chain, a broken one (no view),
     and one with a stale click outside the 30m hop — only the valid chain
     may fire, and it must pick the MOST RECENT qualifying view/click."""
     from insight_de_smart_grid_spark.plans.registry import QUERIES
-    import tempfile, os
+    import os
 
     rows = [
         # user 1: valid chain, with an older click that must NOT be chosen
@@ -360,7 +318,7 @@ def test_sequence_detect_on_planted_chain(spark):
         rows, "event_id: long, user_id: long, ts: string, event_type: string")
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withColumn("value", F.lit(1.0)).withColumn("props", F.lit("{}")))
-    d = tempfile.mkdtemp(prefix="seq_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
 
     out = QUERIES["events_sequence_detect"].fn(spark, d).collect()

@@ -130,21 +130,19 @@ def test_kafka_option_specs():
     }
 
 
-def test_duty_cycle_kafka_pipeline_composes(spark):
+def test_duty_cycle_kafka_pipeline_composes(spark, tmp_path):
     """The reference's full Kafka->avro->window->Kafka shape
     (duty_cycle_avro.py:63-89) must compose; only the two known environment
     gaps (connector jar, avro jar) may stop it, and then as an xfail. Any
     Python-level wiring break (bad kwargs, renamed column, broken builder)
     raises a different error and fails the test."""
-    import tempfile
-
     import pytest
     from pyspark.errors.exceptions.base import AnalysisException
 
     try:
         writer = fs.duty_cycle_kafka_pipeline(
             spark, "localhost:9092", "power_raw", "duty_out",
-            tempfile.mkdtemp(prefix="kck_"))
+            str(tmp_path / "ckpt"))
     except AnalysisException as exc:
         assert "kafka" in str(exc).lower()
         pytest.xfail("no spark-sql-kafka connector jar on the classpath")
@@ -285,53 +283,6 @@ def test_ignore_corrupt_files_skips_garbage(spark, tmp_path):
     ok = (spark.read.option("ignoreCorruptFiles", "true")
           .parquet(str(tmp_path / "t")))
     assert ok.agg(F.sum("id")).first()[0] == 45
-
-
-def test_jsonl_manifest_sink_commit_protocol(spark, tmp_path):
-    """The manifest IS the dataset: task files round-trip exactly, a planted
-    orphan file (the debris a failed-then-retried task leaves) is invisible
-    to readers, and the manifest's row accounting matches."""
-    import json as _json
-
-    from insight_de_smart_grid_spark.sources.jsonl_sink import (
-        MANIFEST,
-        register_jsonl_sink,
-    )
-    from insight_de_smart_grid_spark.sources.tables import load_table
-    from tests.conftest import SF_ORACLE
-
-    register_jsonl_sink(spark)
-    docs = load_table(spark, SF_ORACLE, "documents")
-    out = str(tmp_path / "jl")
-    (docs.repartition(4).write.format("jsonl_manifest")
-     .option("path", out).mode("append").save())
-
-    man = _json.loads((tmp_path / "jl" / MANIFEST).read_text())
-    assert man["n_rows"] == docs.count()
-    assert len(man["files"]) == 4
-
-    (tmp_path / "jl" / "part-orphan.jsonl").write_text(
-        '{"doc_id": 999999, "text": "x", "lang": "xx", '
-        '"source": "zz", "n_chars": 1}\n')
-    back = (spark.read.format("jsonl_manifest").schema(docs.schema)
-            .option("path", out).load())
-    assert back.filter("doc_id = 999999").count() == 0
-    assert ({tuple(r) for r in back.collect()}
-            == {tuple(r) for r in docs.collect()})
-
-
-def test_jsonl_manifest_abort_removes_task_files(tmp_path):
-    """abort() must delete the files its tasks wrote (no debris committed)."""
-    from insight_de_smart_grid_spark.sources.jsonl_sink import (
-        JsonlCommit,
-        JsonlWriter,
-    )
-
-    w = JsonlWriter({"path": str(tmp_path)})
-    f1 = tmp_path / "part-aaa.jsonl"
-    f1.write_text("{}\n")
-    w.abort([JsonlCommit(file_name="part-aaa.jsonl", n_rows=1), None])
-    assert not f1.exists()
 
 
 def test_kafka_batch_sink_option_spec():

@@ -275,33 +275,10 @@ def test_mock_kafka_envelope_contract(spark):
     assert offs and all(r.lo == 0 and r.m == r.c - 1 for r in offs)
 
 
-def test_chunk_udtf_matches_expression_twin(spark):
-    """The Python UDTF path (SURVEY §2.9 extension point) must produce
-    byte-identical rows to the codegen chunk_documents expressions."""
-    from insight_de_smart_grid_spark.functions.udtfs import register_udtfs
-    from insight_de_smart_grid_spark.operators.pipeline import (
-        chunk_documents,
-    )
-
-    register_udtfs(spark)
-    docs = load_table(spark, SF_ORACLE, "documents")
-    docs.createOrReplaceTempView("udtf_docs")
-    via_udtf = spark.sql("""
-        SELECT d.doc_id, c.chunk_idx, c.chunk, c.n_chunk_chars
-        FROM udtf_docs d, LATERAL chunk_docs(d.text, 256, 192) c
-    """)
-    twin = chunk_documents(docs)
-    assert via_udtf.exceptAll(twin).count() == 0
-    assert twin.exceptAll(via_udtf).count() == 0
-    assert twin.count() == via_udtf.count() > 0
-
-
-def test_streaming_gap_fill_closed_bucket_contract(spark):
+def test_streaming_gap_fill_closed_bucket_contract(spark, tmp_path):
     """Planted stream: key observes hours 0 and 3 then hour 5. Hours 0-2
     close when hour 3 arrives; hours 3-4 close when hour 5 arrives; hour 5
     stays open and must NOT be emitted."""
-    import tempfile
-
     from insight_de_smart_grid_spark.streaming.gap_fill_stream import (
         gap_fill_stream,
     )
@@ -309,7 +286,7 @@ def test_streaming_gap_fill_closed_bucket_contract(spark):
         replay_parquet_stream,
     )
 
-    base = tempfile.mkdtemp()
+    base = str(tmp_path)
     src = spark.createDataFrame(
         [(1, "2024-01-01 00:30:00", 10.0),
          (1, "2024-01-01 03:10:00", 40.0),
