@@ -22,6 +22,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from insight_de_smart_grid_spark.plans import registry as _registry
+from insight_de_smart_grid_spark.session import runtime_conf
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -34,14 +35,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _pinned(fn: Callable[[SparkSession, str], DataFrame]
             ) -> Callable[[SparkSession, str], DataFrame]:
-    """Pin the two confs every oracle comparison depends on, whatever
-    session the driver hands us: UTC (timestamp hashes) and ANSI off (the
-    library's arithmetic/cast semantics — session.py does the same for
-    sessions we create ourselves)."""
+    """Pin the engine's runtime confs, whatever session the driver hands
+    us: among them UTC (timestamp hashes), ANSI off (the library's
+    arithmetic/cast semantics) and nanos-as-long parquet timestamps
+    (``session.runtime_conf``, which ``get_spark`` applies too)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.ansi.enabled", "false")
+        runtime_conf(spark)
         return fn(spark, sf_dir)
 
     return run

@@ -804,14 +804,13 @@ def q_pipeline_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from insight_de_smart_grid_spark.operators.sketches import (  # noqa: E402
+    _KMV_SCALE,
     kmv_pair_estimates,
     kmv_sketches,
     kmv_sketches_sql,
 )
 
 _KMV_K = 64
-_KMV_SCALE_INT = 2 ** 60
-_KMV_SCALE_F = float(2 ** 60)
 
 _KMV_RETENTION_SQL = f"""
 WITH {kmv_sketches_sql("events", "user_id",
@@ -825,20 +824,20 @@ cuts AS (
   SELECT day, next_day, ka, kb,
          list_slice(list_sort(list_distinct(list_concat(ka, kb))),
                     1, {_KMV_K}) AS u,
-         least(CASE WHEN sza < {_KMV_K} THEN {_KMV_SCALE_INT}
+         least(CASE WHEN sza < {_KMV_K} THEN {int(_KMV_SCALE)}
                     ELSE ka[{_KMV_K}] END,
-               CASE WHEN szb < {_KMV_K} THEN {_KMV_SCALE_INT}
+               CASE WHEN szb < {_KMV_K} THEN {int(_KMV_SCALE)}
                     ELSE kb[{_KMV_K}] END) AS cut
   FROM pairs
 ),
 est AS (
   SELECT day, next_day,
          CASE WHEN len(u) < {_KMV_K} THEN CAST(len(u) AS DOUBLE)
-              ELSE {float(_KMV_K - 1)} * {_KMV_SCALE_F}
+              ELSE {float(_KMV_K - 1)} * {_KMV_SCALE}
                    / CAST(u[{_KMV_K}] AS DOUBLE) END AS est_union,
          CAST(len(list_intersect(list_filter(ka, x -> x < cut),
                                  list_filter(kb, x -> x < cut)))
-              AS DOUBLE) * {_KMV_SCALE_F} / CAST(cut AS DOUBLE) AS est_inter
+              AS DOUBLE) * {_KMV_SCALE} / CAST(cut AS DOUBLE) AS est_inter
   FROM cuts
 ),
 exact AS (

@@ -102,8 +102,16 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
     elif not os.environ.get("SPARK_MASTER_SET"):
         builder = builder.master(f"local[{default_parallelism()}]")
     spark = builder.getOrCreate()
-    # Runtime-settable confs, applied even on an inherited session so oracle
-    # comparisons stay stable.
+    runtime_conf(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def runtime_conf(spark: SparkSession) -> None:
+    """Set the engine's runtime-settable SQL confs on ``spark``. Both
+    ``get_spark`` and the driver-contract wrapper call it, so an inherited
+    or harness-made session gets the same confs, and oracle comparisons
+    stay stable."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # FileOutputCommitter v2: task outputs promote at task commit instead
     # of a serial job-commit rename pass — measured ~20% off every staged
@@ -149,8 +157,10 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
     # reference's coerce-don't-fail ingestion policy (producer_GREEND_avro.py:
     # 138-146); Spark 4 defaults ANSI on
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    # TIMESTAMP(NANOS) parquet surfaces as nanos-since-epoch longs, which
+    # sources.tables.normalize_event_ts folds to timestamps; without it
+    # Spark refuses to read such files at all
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 @contextmanager

@@ -30,7 +30,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.ts`` arrives in one of three physical forms depending on the
     writer generation: TIMESTAMP(NANOS) (surfaced as nanos-since-epoch longs
-    via ``spark.sql.legacy.parquet.nanosAsLong``), TIMESTAMP(MICROS)
+    via ``spark.sql.legacy.parquet.nanosAsLong``, which
+    ``session.runtime_conf`` sets), TIMESTAMP(MICROS)
     without UTC adjustment (Spark ``timestamp_ntz``), or a session-local
     timestamp. ``normalize_event_ts`` folds all three to ``TimestampType``
     (session tz is pinned to UTC, so NTZ wall-time == the same instant) —
@@ -40,7 +41,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # the normalized relation is a pure lazy plan over an immutable
     # fixture — memoized per session (round-11 optimization) so the
     # ~100 ms/scan footer sniff + projection build is paid once per

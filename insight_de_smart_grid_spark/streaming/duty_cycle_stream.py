@@ -169,7 +169,6 @@ def run_stream_over_parquet(spark: SparkSession, parquet_path: str,
     from insight_de_smart_grid_spark.sources.pq import read_parquet
 
     def probe():
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return to_readings(read_parquet(spark, parquet_path))
 
     # fallbacks come from the pane plan's OWN signature defaults, so a

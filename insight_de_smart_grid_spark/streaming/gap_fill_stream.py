@@ -9,20 +9,23 @@ fill minus each key's final bucket — exactly what the oracle states, so
 the state machine is value-checked, not just row-counted.
 
 State per key is four scalars (open bucket, running sum/count, last filled
-value) — O(keys) total regardless of volume, the applyInPandasWithState
-shape that survives any input size. Out-of-order ACROSS micro-batches
-(an observation older than the open bucket) is dropped like a
-watermark-expired row; within a batch order doesn't matter (buckets are
-aggregated then walked in order).
+value) — O(keys) total regardless of volume — carried by
+``stateful.keyed_state``, the one driver of every per-key state machine
+here (counter deltas, SCD2 and interpolation below too). Out-of-order
+ACROSS micro-batches (an observation older than the open bucket) is
+dropped like a watermark-expired row; within a batch order doesn't matter
+(buckets are aggregated once per hash bucket of keys, then walked in
+order).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+import math
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from insight_de_smart_grid_spark.streaming.stateful import keyed_state
 
 OUT_SCHEMA = ("key long, bucket_ts timestamp, value double, "
               "is_observed boolean")
@@ -30,61 +33,49 @@ STATE_SCHEMA = ("open_bucket long, open_sum double, open_cnt long, "
                 "last_value double, has_last boolean")
 
 
+def _bucket_sums(bucket_seconds: int):
+    """``prepare`` for ``keyed_state``: one (key, bucket) sum/count pass
+    over a hash bucket's rows; buckets are microsecond timestamps."""
+    def prepare(pdf: pd.DataFrame) -> pd.DataFrame:
+        b = pdf["ts"] // 10**6 // bucket_seconds * bucket_seconds * 10**6
+        return (pdf.assign(b=b)
+                .groupby(["user_id", "b"], sort=False, dropna=False)["value"]
+                .agg(["sum", "count"]).reset_index())
+    return prepare
+
+
 def gap_fill_stream(events_stream: DataFrame,
                     bucket_seconds: int = 3600) -> DataFrame:
     """Watermark-free stateful gap fill; see module docstring for the
     closed-bucket contract."""
+    step_us = bucket_seconds * 10**6
 
-    def fn(key: tuple, pdfs: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        rows = [p for p in pdfs if not p.empty]
-        if not rows:
-            return
-        pdf = pd.concat(rows, ignore_index=True)
-        uid = key[0]
-        epoch_s = pdf["ts"].astype("int64") // 10**9
-        buckets = (epoch_s // bucket_seconds) * bucket_seconds
-        agg = (pd.DataFrame({"b": buckets, "v": pdf["value"]})
-               .groupby("b")["v"].agg(["sum", "count"]).sort_index())
-
-        if state.exists:
-            ob, osum, ocnt, lastv, haslast = state.get
-        else:
-            ob, osum, ocnt, lastv, haslast = -1, 0.0, 0, 0.0, False
-
+    def step(cols: dict, state: tuple) -> tuple:
+        ob, osum, ocnt, lastv, haslast = state
         out: list[tuple] = []
-        for b, row in agg.iterrows():
-            b = int(b)
+        for b, bsum, bcnt in zip(cols["b"], cols["sum"], cols["count"]):
             if ob == -1:
-                ob, osum, ocnt = b, float(row["sum"]), int(row["count"])
+                ob, osum, ocnt = b, bsum, bcnt
                 continue
             if b == ob:
-                osum += float(row["sum"])
-                ocnt += int(row["count"])
+                osum += bsum
+                ocnt += bcnt
                 continue
             if b < ob:  # late across batches: expired, dropped
                 continue
             val = round(osum / ocnt, 6)
-            out.append((uid, ob, val, True))
+            out.append((ob, val, True))
             lastv, haslast = val, True
-            g = ob + bucket_seconds
+            g = ob + step_us
             while g < b:
-                out.append((uid, g, lastv, False))
-                g += bucket_seconds
-            ob, osum, ocnt = b, float(row["sum"]), int(row["count"])
+                out.append((g, lastv, False))
+                g += step_us
+            ob, osum, ocnt = b, bsum, bcnt
+        return (ob, osum, ocnt, lastv, haslast), out
 
-        state.update((int(ob), float(osum), int(ocnt),
-                      float(lastv), bool(haslast)))
-        if out:
-            res = pd.DataFrame(
-                out, columns=["key", "bucket_ts", "value", "is_observed"])
-            res["bucket_ts"] = pd.to_datetime(res["bucket_ts"], unit="s")
-            yield res
-
-    prepared = events_stream.select(
-        events_stream["user_id"].alias("key"), "ts", "value")
-    return prepared.groupBy("key").applyInPandasWithState(
-        fn, OUT_SCHEMA, STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout)
+    return keyed_state(events_stream, ("user_id",), ("ts", "value"), ("b",),
+                       STATE_SCHEMA, OUT_SCHEMA, (-1, 0.0, 0, 0.0, False),
+                       step, prepare=_bucket_sums(bucket_seconds))
 
 
 def gap_fill_stream_oracle_sql(bucket: str = "hour") -> str:
@@ -129,39 +120,22 @@ def counter_deltas_stream(events_stream: DataFrame) -> DataFrame:
     Readings older than the carried state are expired duplicates/laggards
     and drop."""
 
-    def fn(key: tuple, pdfs: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        rows = [p for p in pdfs if not p.empty]
-        if not rows:
-            return
-        pdf = (pd.concat(rows, ignore_index=True)
-               .sort_values("ts").reset_index(drop=True))
-        uid = key[0]
-        if state.exists:
-            last_us, last_v, has = state.get
-        else:
-            last_us, last_v, has = 0, 0.0, False
-
+    def step(cols: dict, state: tuple) -> tuple:
+        last_us, last_v, has = state
         out: list[tuple] = []
-        for ts, v in zip(pdf["ts"], pdf["value"]):
-            us = ts.value // 1000  # pandas ns -> micros
+        for us, v in zip(cols["ts"], cols["value"]):
             if has and us < last_us:
                 continue  # late arrival behind the carried state
             if has:
-                delta = round(float(v) - last_v, 6)
-                consumed = round(float(v) if delta < 0 else delta, 6)
-                out.append((uid, ts, float(v), delta, delta < 0, consumed))
-            last_us, last_v, has = us, float(v), True
-        state.update((int(last_us), float(last_v), bool(has)))
-        if out:
-            yield pd.DataFrame(out, columns=[
-                "key", "ts", "value", "delta", "is_reset", "consumed"])
+                delta = round(v - last_v, 6)
+                consumed = round(v if delta < 0 else delta, 6)
+                out.append((us, v, delta, delta < 0, consumed))
+            last_us, last_v, has = us, v, True
+        return (last_us, last_v, has), out
 
-    prepared = events_stream.select(
-        events_stream["user_id"].alias("key"), "ts", "value")
-    return prepared.groupBy("key").applyInPandasWithState(
-        fn, DELTA_OUT_SCHEMA, DELTA_STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout)
+    return keyed_state(events_stream, ("user_id",), ("ts", "value"), ("ts",),
+                       DELTA_STATE_SCHEMA, DELTA_OUT_SCHEMA, (0, 0.0, False),
+                       step)
 
 
 SCD2_OUT_SCHEMA = ("key long, state string, valid_from timestamp, "
@@ -183,22 +157,10 @@ def scd2_stream(events_stream: DataFrame) -> DataFrame:
     (ts, state) order — the same deterministic tie order the batch
     operator and oracle use — so same-instant bursts count identically."""
 
-    def fn(key: tuple, pdfs: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        rows = [p for p in pdfs if not p.empty]
-        if not rows:
-            return
-        pdf = (pd.concat(rows, ignore_index=True)
-               .sort_values(["ts", "event_type"]).reset_index(drop=True))
-        uid = key[0]
-        if state.exists:
-            cur, vf_us, n, last_us, has = state.get
-        else:
-            cur, vf_us, n, last_us, has = "", 0, 0, -1, False
-
+    def step(cols: dict, state: tuple) -> tuple:
+        cur, vf_us, n, last_us, has = state
         out: list[tuple] = []
-        for ts, st in zip(pdf["ts"], pdf["event_type"]):
-            us = ts.value // 1000
+        for us, st in zip(cols["ts"], cols["event_type"]):
             if has and us < last_us:
                 continue
             if not has:
@@ -206,21 +168,14 @@ def scd2_stream(events_stream: DataFrame) -> DataFrame:
             elif st == cur:
                 n += 1
             else:
-                out.append((uid, cur,
-                            pd.Timestamp(vf_us * 1000),
-                            pd.Timestamp(us * 1000), int(n)))
+                out.append((cur, vf_us, us, n))
                 cur, vf_us, n = st, us, 1
             last_us = us
-        state.update((str(cur), int(vf_us), int(n), int(last_us), True))
-        if out:
-            yield pd.DataFrame(out, columns=[
-                "key", "state", "valid_from", "valid_to", "n_events"])
+        return (cur, vf_us, n, last_us, has), out
 
-    prepared = events_stream.select(
-        events_stream["user_id"].alias("key"), "ts", "event_type")
-    return prepared.groupBy("key").applyInPandasWithState(
-        fn, SCD2_OUT_SCHEMA, SCD2_STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout)
+    return keyed_state(events_stream, ("user_id",), ("ts", "event_type"),
+                       ("ts", "event_type"), SCD2_STATE_SCHEMA,
+                       SCD2_OUT_SCHEMA, ("", 0, 0, -1, False), step)
 
 
 INTERP_OUT_SCHEMA = ("key long, bucket_ts timestamp, value double, "
@@ -245,65 +200,40 @@ def interpolate_stream(events_stream: DataFrame,
     State per key is five scalars; fills truncate (floor on the scaled
     double) exactly like batch — see interpolate_gaps on engine round()
     tie divergence."""
-    import math
+    step_us = bucket_seconds * 10**6
 
-    def fn(key: tuple, pdfs: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        rows = [p for p in pdfs if not p.empty]
-        if not rows:
-            return
-        pdf = pd.concat(rows, ignore_index=True)
-        uid = key[0]
-        epoch_s = pdf["ts"].astype("int64") // 10**9
-        buckets = (epoch_s // bucket_seconds) * bucket_seconds
-        agg = (pd.DataFrame({"b": buckets, "v": pdf["value"]})
-               .groupby("b")["v"].agg(["sum", "count"]).sort_index())
-
-        if state.exists:
-            ob, osum, ocnt, prevb, prevv = state.get
-        else:
-            ob, osum, ocnt, prevb, prevv = -1, 0.0, 0, -1, 0.0
-
+    def step(cols: dict, state: tuple) -> tuple:
+        ob, osum, ocnt, prevb, prevv = state
         out: list[tuple] = []
-        for b, row in agg.iterrows():
-            b = int(b)
+        for b, bsum, bcnt in zip(cols["b"], cols["sum"], cols["count"]):
             if ob == -1:
-                ob, osum, ocnt = b, float(row["sum"]), int(row["count"])
+                ob, osum, ocnt = b, bsum, bcnt
                 continue
             if b == ob:
-                osum += float(row["sum"])
-                ocnt += int(row["count"])
+                osum += bsum
+                ocnt += bcnt
                 continue
             if b < ob:  # late across batches: expired, dropped
                 continue
             vc = round(osum / ocnt, 6)
             if prevb != -1:
                 span = ob - prevb
-                g = prevb + bucket_seconds
+                g = prevb + step_us
                 while g < ob:
                     frac = (g - prevb) / span
                     fill = math.floor(
                         (prevv + (vc - prevv) * frac) * 1e6) / 1e6
-                    out.append((uid, g, fill, False))
-                    g += bucket_seconds
-            out.append((uid, ob, vc, True))
+                    out.append((g, fill, False))
+                    g += step_us
+            out.append((ob, vc, True))
             prevb, prevv = ob, vc
-            ob, osum, ocnt = b, float(row["sum"]), int(row["count"])
+            ob, osum, ocnt = b, bsum, bcnt
+        return (ob, osum, ocnt, prevb, prevv), out
 
-        state.update((int(ob), float(osum), int(ocnt),
-                      int(prevb), float(prevv)))
-        if out:
-            res = pd.DataFrame(
-                out, columns=["key", "bucket_ts", "value", "is_observed"])
-            res["bucket_ts"] = pd.to_datetime(res["bucket_ts"], unit="s")
-            res = res.sort_values(["bucket_ts"]).reset_index(drop=True)
-            yield res
-
-    prepared = events_stream.select(
-        events_stream["user_id"].alias("key"), "ts", "value")
-    return prepared.groupBy("key").applyInPandasWithState(
-        fn, INTERP_OUT_SCHEMA, INTERP_STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout)
+    return keyed_state(events_stream, ("user_id",), ("ts", "value"), ("b",),
+                       INTERP_STATE_SCHEMA, INTERP_OUT_SCHEMA,
+                       (-1, 0.0, 0, -1, 0.0), step,
+                       prepare=_bucket_sums(bucket_seconds))
 
 
 def interpolate_stream_oracle_sql(bucket: str = "hour") -> str:

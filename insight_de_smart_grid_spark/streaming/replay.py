@@ -103,7 +103,6 @@ def parquet_stream_source(spark: SparkSession, parquet_path: str,
     them."""
     from insight_de_smart_grid_spark.sources.pq import parquet_schema
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # resolve the schema from the ORIGINAL path (round-11 optimization):
     # the staged dir is symlinks to the same files plus sentinels built
     # from them, so the schema is identical — and the original path is

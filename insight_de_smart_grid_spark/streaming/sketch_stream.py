@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_SCALE = float(2 ** 60)
+from insight_de_smart_grid_spark.operators.sketches import _KMV_SCALE
 
 OUT_SCHEMA = "day timestamp, est_distinct double, retained int"
 STATE_SCHEMA = "kmv array<long>"
@@ -56,7 +56,7 @@ def kmv_daily_stream(events_stream: DataFrame, k: int = 64,
             if len(kmv) < k:
                 est = float(len(kmv))
             else:
-                est = float(k - 1) * _SCALE / float(kmv[k - 1])
+                est = float(k - 1) * _KMV_SCALE / float(kmv[k - 1])
             yield pd.DataFrame(
                 [(day, est, len(kmv))],
                 columns=["day", "est_distinct", "retained"])
@@ -113,7 +113,7 @@ WITH {kmv_sketches_sql("events", "user_id",
                        "CAST(date_trunc('day', ts) AS TIMESTAMP)", k)}
 SELECT dim AS day,
        CASE WHEN sz < {k} THEN CAST(sz AS DOUBLE)
-            ELSE {float(k - 1)} * {_SCALE} / CAST(kmv[{k}] AS DOUBLE)
+            ELSE {float(k - 1)} * {_KMV_SCALE} / CAST(kmv[{k}] AS DOUBLE)
        END AS est_distinct,
        CAST(sz AS INT) AS retained
 FROM sk

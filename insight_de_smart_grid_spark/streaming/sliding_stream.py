@@ -95,7 +95,6 @@ def run_sliding_stats_stream(spark: SparkSession, parquet_path: str,
     pre = pre or (lambda s: s)
 
     def probe():
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return pre(normalize_event_ts(read_parquet(spark, parquet_path)))
 
     # fallbacks from the plan's own signature defaults (advisory): the

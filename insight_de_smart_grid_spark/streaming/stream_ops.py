@@ -28,6 +28,7 @@ from insight_de_smart_grid_spark.streaming.replay import (
     parquet_stream_source,
     state_width,
 )
+from insight_de_smart_grid_spark.streaming.stateful import keyed_state
 
 DEDUP_KEY = ("user_id", "event_type", "ts", "value")
 
@@ -327,31 +328,15 @@ def sequence_detect_stream(events_stream, gap_minutes: int = 30):
     the state accumulated so far, never on future events — so the streamed
     output equals the batch query EXACTLY (no open-bucket holdback; the
     oracle is the identical chain set). State is four scalar timestamps
-    per user. Events at or before the carried last timestamp are expired
-    laggards and drop (same contract as every stateful op here)."""
-    from collections.abc import Iterable, Iterator
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    per user, carried by ``stateful.keyed_state``. Events at or before
+    the carried last timestamp are expired laggards and drop (same
+    contract as every stateful op here)."""
     gap_us = gap_minutes * 60 * 1_000_000
 
-    def fn(key: tuple, pdfs: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        rows = [p for p in pdfs if not p.empty]
-        if not rows:
-            return
-        pdf = (pd.concat(rows, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
-        uid = key[0]
-        if state.exists:
-            last_click, armed_view, armed_click, last_us = state.get
-        else:
-            last_click, armed_view, armed_click, last_us = -1, -1, -1, -1
-
+    def step(cols: dict, state: tuple) -> tuple:
+        last_click, armed_view, armed_click, last_us = state
         out: list[tuple] = []
-        for ts, et in zip(pdf["ts"], pdf["event_type"]):
-            us = ts.value // 1000
+        for us, et in zip(cols["ts"], cols["event_type"]):
             if us <= last_us:
                 continue
             last_us = us
@@ -362,20 +347,13 @@ def sequence_detect_stream(events_stream, gap_minutes: int = 30):
                     armed_view, armed_click = us, last_click
             elif et == "purchase":
                 if armed_view != -1 and us - armed_view <= gap_us:
-                    out.append((uid, pd.Timestamp(us * 1000),
-                                pd.Timestamp(armed_view * 1000),
-                                pd.Timestamp(armed_click * 1000)))
-        state.update((int(last_click), int(armed_view),
-                      int(armed_click), int(last_us)))
-        if out:
-            yield pd.DataFrame(out, columns=[
-                "user_id", "purchase_ts", "view_ts", "click_ts"])
+                    out.append((us, armed_view, armed_click))
+        return (last_click, armed_view, armed_click, last_us), out
 
-    prepared = events_stream.select(
-        "user_id", "ts", "event_id", "event_type")
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        fn, SEQ_OUT_SCHEMA, SEQ_STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout)
+    return keyed_state(events_stream, ("user_id",),
+                       ("ts", "event_id", "event_type"), ("ts", "event_id"),
+                       SEQ_STATE_SCHEMA, SEQ_OUT_SCHEMA, (-1, -1, -1, -1),
+                       step)
 
 
 def purchase_click_full_stream_plan(events_stream: DataFrame,

@@ -14,9 +14,9 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb
-from pyspark.sql import SparkSession
 
 from insight_de_smart_grid_spark.plans.registry import QUERIES
+from insight_de_smart_grid_spark.session import get_spark
 from tests.oracle import check_query
 
 TABLES = (
@@ -28,15 +28,7 @@ TABLES = (
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.ansi.enabled", "false")
-        .appName("run_all_oracle")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="run_all_oracle")
     spark.sparkContext.setLogLevel("ERROR")
     duck = duckdb.connect()
     for t in TABLES:

@@ -208,60 +208,6 @@ def test_sessionize_matches_python_reference(spark):
     assert got == want
 
 
-def test_ewma_state_survives_checkpointed_restart(spark):
-    """GroupState must carry the running EWMA across two availableNow runs
-    sharing a checkpoint: run 2 sees only the new file, and its output must
-    equal the batch EWMA over the concatenated input."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql import functions as F2
-
-    from insight_de_smart_grid_spark.streaming.replay import (
-        replay_parquet_stream,
-    )
-    from insight_de_smart_grid_spark.streaming.stateful import (
-        ewma_batch,
-        ewma_stream,
-    )
-
-    data_dir = tempfile.mkdtemp(prefix="ewma_data_")
-    ckpt = tempfile.mkdtemp(prefix="ewma_ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="ewma_out_") + "/sink"
-    try:
-        def readings(rows):
-            return spark.createDataFrame(
-                pd.DataFrame(rows, columns=[
-                    "house_id", "appliance_id", "ts", "power"])
-            ).withColumn("ts", F2.to_timestamp("ts"))
-
-        first = readings([("h1", "a1", "2024-01-01 10:00:00", 1.0),
-                          ("h1", "a1", "2024-01-01 10:00:10", 2.0),
-                          ("h2", "a2", "2024-01-01 10:00:05", 8.0)])
-        first.write.mode("overwrite").parquet(data_dir)
-        replay_parquet_stream(
-            spark, data_dir, lambda s: ewma_stream(s),
-            query_name="unused", checkpoint_dir=ckpt, out_dir=out_dir)
-
-        second = readings([("h1", "a1", "2024-01-01 10:00:20", 3.0),
-                           ("h2", "a2", "2024-01-01 10:00:25", 4.0)])
-        second.write.mode("append").parquet(data_dir)
-        out = replay_parquet_stream(
-            spark, data_dir, lambda s: ewma_stream(s),
-            query_name="unused", checkpoint_dir=ckpt, out_dir=out_dir)
-
-        got = {(r.house_id, r.ts, round(r.ewma, 9)) for r in out.collect()}
-        want = {(r.house_id, r.ts, round(r.ewma, 9))
-                for r in ewma_batch(
-                    spark.read.parquet(data_dir)).collect()}
-        assert got == want
-    finally:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out_dir.rsplit("/", 1)[0], ignore_errors=True)
-
-
 def test_ewma_batch_boundary_carry_with_tiny_arrow_batches(spark):
     """ewma_batch seeds the one group that spans an Arrow batch boundary;
     force 3-row batches so every partition splits mid-group and compare
