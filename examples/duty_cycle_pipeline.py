@@ -81,8 +81,9 @@ def main() -> None:
 
     if "--stream" in sys.argv:
         print("== 5. the SAME duty cycle as a streaming replay ==")
-        import uuid
-
+        from insight_de_smart_grid_spark.operators.staging import (
+            checkpoint_scope,
+        )
         from insight_de_smart_grid_spark.sources.tables import (
             events_to_readings,
         )
@@ -90,11 +91,13 @@ def main() -> None:
             run_stream_over_parquet,
         )
 
-        streamed = run_stream_over_parquet(
-            spark, f"{sf_dir}/events.parquet", events_to_readings,
-            query_name=f"ex_{uuid.uuid4().hex[:8]}", panes="auto",
-            window="10 minutes", slide="2 minutes", watermark="2 seconds")
-        streamed.orderBy("time_end", "house_id", "appliance_id").show(5)
+        # the scope removes the replay's sink and checkpoint after show()
+        with checkpoint_scope(spark):
+            streamed = run_stream_over_parquet(
+                spark, f"{sf_dir}/events.parquet", events_to_readings,
+                panes="auto", window="10 minutes", slide="2 minutes",
+                watermark="2 seconds")
+            streamed.orderBy("time_end", "house_id", "appliance_id").show(5)
 
     spark.stop()
 

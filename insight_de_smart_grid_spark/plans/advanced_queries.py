@@ -27,7 +27,6 @@ from insight_de_smart_grid_spark.operators.text import (
     BPE_TOKENS_SQL,
     with_bpe_token_stats,
 )
-from insight_de_smart_grid_spark.operators.staging import scratch_dir
 from insight_de_smart_grid_spark.plans.registry import register
 from insight_de_smart_grid_spark.sources.tables import (
     READINGS_SQL_VIEW,
@@ -299,12 +298,9 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from insight_de_smart_grid_spark.streaming.stateful import ewma_stream
 
-    base = scratch_dir("ewma_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
-        lambda stream: ewma_stream(events_to_readings(stream)),
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink")
+        lambda stream: ewma_stream(events_to_readings(stream)))
 
 
 # ---------------------------------------------------------------------------
@@ -368,12 +364,10 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_parquet_stream,
     )
 
-    base = scratch_dir("sess_")
     out = replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda stream: session_stream_plan(normalize_event_ts(stream)),
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink", flush_sentinel=True)
+        flush_sentinel=True)
     # sentinel sessions never finalize (end > watermark); filter is defense
     return (out.filter(F.col("user_id") != -1)
             .select("user_id", "session_start", "session_end", "n_events",
@@ -462,8 +456,6 @@ WHERE p.event_type = 'purchase' AND c.event_type = 'click'
 
 @register("streaming_interval_join", STREAM_INTERVAL_JOIN_SQL)
 def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
@@ -472,8 +464,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return replay_parquet_stream(
-        spark, f"{sf_dir}/events.parquet", purchase_click_stream_plan,
-        query_name=f"ssj_{uuid.uuid4().hex[:8]}")
+        spark, f"{sf_dir}/events.parquet", purchase_click_stream_plan)
 
 
 @register("streaming_range_join_bucketed", STREAM_INTERVAL_JOIN_SQL)
@@ -488,8 +479,6 @@ def q_streaming_range_join_bucketed(spark: SparkSession,
     condition are unchanged, so the replay registers against the SAME
     oracle SQL as the plain stream-stream join
     (`streaming/stream_ops.py::purchase_click_bucketed_stream_plan`)."""
-    import uuid
-
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
@@ -499,8 +488,7 @@ def q_streaming_range_join_bucketed(spark: SparkSession,
 
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
-        purchase_click_bucketed_stream_plan,
-        query_name=f"ssjb_{uuid.uuid4().hex[:8]}")
+        purchase_click_bucketed_stream_plan)
 
 
 # The streamed dedup projects ONLY the business-key columns, so its result
@@ -519,11 +507,8 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_stream_plan,
     )
 
-    base = scratch_dir("sdd_")
     return replay_parquet_stream(
-        spark, f"{sf_dir}/events.parquet", dedup_stream_plan,
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink")
+        spark, f"{sf_dir}/events.parquet", dedup_stream_plan)
 
 
 # ---------------------------------------------------------------------------
@@ -542,13 +527,15 @@ from insight_de_smart_grid_spark.sources.tables import (  # noqa: E402
 
 @register("streaming_topk", _topk_sql(_READINGS, "appliance_name"))
 def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from insight_de_smart_grid_spark.sources.tables import events_to_readings
+    from insight_de_smart_grid_spark.streaming.replay import (
+        replay_parquet_stream,
+    )
     from insight_de_smart_grid_spark.streaming.stream_ops import (
-        run_complete_mode_topk,
+        top_appliances_stream_plan,
     )
 
-    return run_complete_mode_topk(
-        spark, f"{sf_dir}/events.parquet", events_to_readings,
-        query_name=f"topk_{uuid.uuid4().hex[:8]}")
+    return replay_parquet_stream(
+        spark, f"{sf_dir}/events.parquet",
+        lambda s: top_appliances_stream_plan(events_to_readings(s)),
+        output_mode="complete")

@@ -236,8 +236,6 @@ LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
  AND c.ts <= p.ts
 """)
 def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
@@ -260,8 +258,7 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet", purchase_click_left_stream_plan,
-        query_name=f"slj_{uuid.uuid4().hex[:8]}", flush_sentinel=True,
-        sentinel_all_types=True)
+        flush_sentinel=True, sentinel_all_types=True)
     return out.where(_F.col("user_id") != -1)
 
 
@@ -568,24 +565,20 @@ FROM events e LEFT JOIN labels l ON e.event_type = l.appliance_name
 GROUP BY 1
 """)
 def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
+    from insight_de_smart_grid_spark.sources.local_rows import local_rows_df
+    from insight_de_smart_grid_spark.streaming.replay import (
+        replay_parquet_stream,
+    )
     from insight_de_smart_grid_spark.streaming.stream_ops import (
         static_enrich_totals_plan,
     )
 
-    from insight_de_smart_grid_spark.sources.local_rows import local_rows_df
-
     labels = local_rows_df(spark, _ENRICH_LABELS,
                            "appliance_name string, label string")
-    from insight_de_smart_grid_spark.streaming.stream_ops import (
-        run_complete_mode,
-    )
-
-    return run_complete_mode(
+    return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda s: static_enrich_totals_plan(s, labels),
-        query_name=f"sse_{uuid.uuid4().hex[:8]}")
+        output_mode="complete")
 
 
 @register("streaming_upsert_compaction", """

@@ -86,11 +86,8 @@ def q_streaming_sliding_stats_panes(spark: SparkSession, sf_dir: str
         run_sliding_stats_stream,
     )
 
-    base = scratch_dir("sssp_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink",
         aggs=_SLIDING_AGGS, keys=("user_id",),
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
     return (out.filter(F.col("user_id") != -1)
@@ -162,11 +159,8 @@ def q_streaming_sliding_distinct_panes(spark: SparkSession, sf_dir: str
         run_sliding_stats_stream,
     )
 
-    base = scratch_dir("ssdp_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink",
         aggs=_SLIDING_DISTINCT_AGGS, keys=("event_type",),
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
     # no marker filter needed: the sentinel's own windows end past the
@@ -216,11 +210,8 @@ def q_streaming_sliding_stddev_panes(spark: SparkSession, sf_dir: str
         run_sliding_stats_stream,
     )
 
-    base = scratch_dir("ssvp_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink",
         aggs=_SLIDING_STDDEV_AGGS, keys=("user_id",),
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
     return (out.filter(F.col("user_id") != -1)
@@ -282,11 +273,8 @@ def q_streaming_sliding_hll_panes(spark: SparkSession, sf_dir: str
         run_sliding_stats_stream,
     )
 
-    base = scratch_dir("sshp_")
     est = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink",
         aggs=(("approx_users", "approx_distinct", "user_id"),),
         keys=("event_type",),
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
@@ -354,11 +342,8 @@ def q_streaming_sliding_topk_panes(spark: SparkSession, sf_dir: str
         run_sliding_stats_stream,
     )
 
-    base = scratch_dir("sstk_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink",
         aggs=(("cnt", "count", "user_id"),),
         keys=("event_type", "user_id"),
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
@@ -449,11 +434,9 @@ def q_streaming_sliding_p95_panes(spark: SparkSession, sf_dir: str
                                     / F.lit(width)).cast("int"),
                             F.lit(bins - 1))))
 
-    base = scratch_dir("ssqp_")
     out = run_sliding_stats_stream(
         spark, f"{sf_dir}/events.parquet",
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink", pre=pre,
+        pre=pre,
         aggs=(("cnt", "count", "value"),),
         keys=("user_id", "__bin", "__lo", "__width"),
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
@@ -935,16 +918,13 @@ def q_streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     media lake uses to decode/feature new arrivals incrementally. Stateless,
     so the streamed result equals the batch decode exactly and shares its
     closed-form oracle."""
-    import uuid
-
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
 
     return replay_parquet_stream(
         spark, f"{sf_dir}/documents.parquet",
-        lambda s: mm.decode_audio(mm.attach_audio_payload(s)),
-        query_name=f"smd_{uuid.uuid4().hex[:8]}")
+        lambda s: mm.decode_audio(mm.attach_audio_payload(s)))
 
 
 @register("pipeline_model_score", tx.MODEL_QUALITY_SQL)

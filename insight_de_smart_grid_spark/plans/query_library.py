@@ -20,7 +20,6 @@ from insight_de_smart_grid_spark.operators.cleanse import (
     synth_key,
 )
 from insight_de_smart_grid_spark.operators.enrich import enrich_with_labels
-from insight_de_smart_grid_spark.operators.staging import scratch_dir
 from insight_de_smart_grid_spark.plans.registry import register
 from insight_de_smart_grid_spark.sources.tables import (
     READINGS_SQL_VIEW,
@@ -265,13 +264,9 @@ def q_streaming_duty_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_over_parquet,
     )
 
-    # parquet sink (S9): scales past the driver-memory sink and measures the
-    # production write path
-    base = scratch_dir("sdc_")
     out = run_stream_over_parquet(
         spark, f"{sf_dir}/events.parquet", events_to_readings,
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink", flush_sentinel=True,
+        flush_sentinel=True,
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
     return out.filter(F.col("house_id") != "-1")
 
@@ -294,11 +289,9 @@ def q_streaming_duty_cycle_panes(spark: SparkSession, sf_dir: str
         run_stream_over_parquet,
     )
 
-    base = scratch_dir("sdcp_")
     out = run_stream_over_parquet(
         spark, f"{sf_dir}/events.parquet", events_to_readings,
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink", flush_sentinel=True, panes=True,
+        flush_sentinel=True, panes=True,
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
     return out.filter(F.col("house_id") != "-1")
 
@@ -318,11 +311,9 @@ def q_streaming_duty_cycle_auto(spark: SparkSession, sf_dir: str
         run_stream_over_parquet,
     )
 
-    base = scratch_dir("sdca_")
     out = run_stream_over_parquet(
         spark, f"{sf_dir}/events.parquet", events_to_readings,
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink", flush_sentinel=True, panes="auto",
+        flush_sentinel=True, panes="auto",
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
     return out.filter(F.col("house_id") != "-1")
 
@@ -335,15 +326,19 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cube equals the batch ``rollup_1s`` and shares its oracle (the driver
     shape drops the (date, hour) partition columns)."""
     from insight_de_smart_grid_spark.sources.tables import events_to_readings
+    from insight_de_smart_grid_spark.streaming.replay import (
+        replay_parquet_stream,
+    )
     from insight_de_smart_grid_spark.streaming.rollup_stream import (
-        materialize_rollup_stream,
+        rollup_stream_plan,
     )
 
-    base = scratch_dir("stream_rollup_")
-    cube = materialize_rollup_stream(
-        spark, f"{sf_dir}/events.parquet", events_to_readings,
-        out_dir=f"{base}/cube", checkpoint_dir=f"{base}/ckpt",
-        flush_sentinel=True)
+    # one file per hour partition per trigger (Druid's hourly segments)
+    cube = replay_parquet_stream(
+        spark, f"{sf_dir}/events.parquet",
+        lambda s: rollup_stream_plan(events_to_readings(s))
+        .repartition("date", "hour"),
+        flush_sentinel=True, partition_by=("date", "hour"))
     return (cube.filter(F.col("house_id") != "-1")
             .select("window_start", "house_id", "appliance_id",
                     "appliance_name", "cnt", "sum_power"))

@@ -201,14 +201,18 @@ def q_streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver check fails) if the sketch survives the state store wrong. The
     flush sentinel finalizes every real window; its own far-future bucket
     drops at the inner join with the exact side."""
+    from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
+    from insight_de_smart_grid_spark.streaming.replay import (
+        replay_parquet_stream,
+    )
     from insight_de_smart_grid_spark.streaming.rollup_stream import (
-        materialize_hll_rollup_stream,
+        hll_rollup_stream_plan,
     )
 
-    base = scratch_dir("stream_hll_")
-    cube = materialize_hll_rollup_stream(
+    cube = replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
-        out_dir=f"{base}/cube", checkpoint_dir=f"{base}/ckpt")
+        lambda s: hll_rollup_stream_plan(normalize_event_ts(s)),
+        flush_sentinel=True)
     est = cube.select(
         "bucket_ts", "cnt",
         F.hll_sketch_estimate(F.col("key_hll")).alias("approx_distinct"))
@@ -575,12 +579,9 @@ def q_streaming_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_parquet_stream,
     )
 
-    base = scratch_dir("gapfill_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
-        lambda stream: gap_fill_stream(normalize_event_ts(stream)),
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink")
+        lambda stream: gap_fill_stream(normalize_event_ts(stream)))
 
 
 from insight_de_smart_grid_spark.streaming.gap_fill_stream import (  # noqa: E402
@@ -609,12 +610,9 @@ def q_streaming_counter_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_parquet_stream,
     )
 
-    base = scratch_dir("cdeltas_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
-        lambda stream: counter_deltas_stream(normalize_event_ts(stream)),
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink")
+        lambda stream: counter_deltas_stream(normalize_event_ts(stream)))
 
 
 from insight_de_smart_grid_spark.streaming.gap_fill_stream import (  # noqa: E402
@@ -656,12 +654,9 @@ def q_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_parquet_stream,
     )
 
-    base = scratch_dir("scd2s_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
-        lambda stream: scd2_stream(normalize_event_ts(stream)),
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink")
+        lambda stream: scd2_stream(normalize_event_ts(stream)))
 
 
 # ---------------------------------------------------------------------------
@@ -1002,12 +997,9 @@ def q_streaming_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_parquet_stream,
     )
 
-    base = scratch_dir("interp_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
-        lambda stream: interpolate_stream(normalize_event_ts(stream)),
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink")
+        lambda stream: interpolate_stream(normalize_event_ts(stream)))
 
 
 # ---------------------------------------------------------------------------
@@ -1098,12 +1090,9 @@ def q_streaming_sequence_detect(spark: SparkSession,
         replay_parquet_stream,
     )
 
-    base = scratch_dir("seqdet_")
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
-        lambda stream: sequence_detect_stream(normalize_event_ts(stream)),
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink")
+        lambda stream: sequence_detect_stream(normalize_event_ts(stream)))
 
 
 from insight_de_smart_grid_spark.operators.timeseries import (  # noqa: E402
@@ -1294,7 +1283,6 @@ def q_streaming_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_parquet_stream,
     )
 
-    base = scratch_dir("fulljoin_")
     # ONE PER-TYPE sentinel, all files in one micro-batch: the join sides
     # collect event-time stats AFTER their type filters, so the sentinel
     # must exist as a click AND a purchase or one side's watermark stalls
@@ -1310,8 +1298,7 @@ def q_streaming_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         purchase_click_full_stream_plan,
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink", flush_sentinel=True,
+        flush_sentinel=True,
         sentinel_all_types=True)
     return out.where(F.col("user_id") != -1)
 
@@ -1497,7 +1484,6 @@ def q_streaming_kmv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_parquet_stream,
     )
 
-    base = scratch_dir("kmvd_")
     # margin must exceed a DAY (the window granularity) for the final
     # day's event-time timeout to fire — the default 1h margin crosses the
     # last midnight only by data luck; availableNow's final commit batch
@@ -1505,8 +1491,7 @@ def q_streaming_kmv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return replay_parquet_stream(
         spark, f"{sf_dir}/events.parquet",
         lambda stream: kmv_daily_stream(normalize_event_ts(stream)),
-        query_name="unused", checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink", flush_sentinel=True,
+        flush_sentinel=True,
         sentinel_margin_s=3 * 86400).where(F.col("day") < "2100-01-01")
 
 

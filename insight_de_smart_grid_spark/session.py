@@ -24,6 +24,8 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
+# the directory holding the package, for the Python workers' import path
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _width_lock = threading.RLock()  # held by the thread inside a scope
 
 
@@ -161,6 +163,13 @@ def runtime_conf(spark: SparkSession) -> None:
     # sources.tables.normalize_event_ts folds to timestamps; without it
     # Spark refuses to read such files at all
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Python workers unpickle a pandas UDF that refers to a package-level
+    # helper by importing the package by name; put its root on their path
+    # wherever the driver was started from
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_ROOT, *paths])
 
 
 @contextmanager

@@ -132,7 +132,7 @@ def duty_cycle_stream_panes_plan(stream: DataFrame,
 
 
 def run_stream_over_parquet(spark: SparkSession, parquet_path: str,
-                            to_readings, query_name: str = "duty_stream",
+                            to_readings,
                             checkpoint_dir: str | None = None,
                             out_dir: str | None = None,
                             flush_sentinel: bool = False,
@@ -140,13 +140,13 @@ def run_stream_over_parquet(spark: SparkSession, parquet_path: str,
                             progress_out: "list | None" = None,
                             **plan_kwargs) -> DataFrame:
     """Replay a parquet table through the streaming plan with
-    ``availableNow`` + memory sink; returns the finalized (append-mode)
-    result as a batch DataFrame.
+    ``availableNow`` into the replay's parquet sink; returns the finalized
+    (append-mode) result as a batch DataFrame.
 
     ``to_readings`` maps the raw stream frame to readings shape (the
     streaming twin of ``sources.tables.readings_view``). In production the
     source would be ``readStream.format("kafka")`` (S1) and the sink Kafka or
-    partitioned Parquet (S4/S9); file-in/memory-out keeps the identical plan
+    partitioned Parquet (S4/S9); file-in/parquet-out keeps the identical plan
     testable without brokers.
 
     The shared runner ``replay_parquet_stream`` sizes the state width
@@ -181,6 +181,6 @@ def run_stream_over_parquet(spark: SparkSession, parquet_path: str,
     return replay_parquet_stream(
         spark, parquet_path,
         lambda stream: plan(to_readings(stream), **plan_kwargs),
-        query_name=query_name, checkpoint_dir=checkpoint_dir,
-        out_dir=out_dir, flush_sentinel=flush_sentinel,
+        checkpoint_dir=checkpoint_dir, out_dir=out_dir,
+        flush_sentinel=flush_sentinel,
         progress_out=progress_out)

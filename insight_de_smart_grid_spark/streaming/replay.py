@@ -2,9 +2,10 @@
 table with ``availableNow`` and collect the finalized result.
 
 In production the source is ``readStream.format("kafka")`` (SURVEY S1) and
-the sink Kafka or partitioned Parquet (S4/S9); file-in/memory-out runs the
-identical logical plan without brokers, which is what makes streaming
-operators driver-checkable and batch≡stream testable.
+the sink Kafka or partitioned Parquet (S4/S9); file-in/parquet-out runs the
+identical logical plan without brokers, through the same checkpointed
+parquet sink, which is what makes streaming operators driver-checkable and
+batch≡stream testable.
 """
 
 from __future__ import annotations
@@ -289,21 +290,35 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
     os.utime(dest, (now, now))
 
 
-def drain(spark: SparkSession, plan_fn: Callable[[], DataFrame], *,
-          query_name: str, output_mode: str = "append",
-          out_dir: str | None = None, checkpoint_dir: str | None = None,
-          partition_by: tuple[str, ...] = (),
-          state_partitions: int,
-          progress_out: "list | None" = None) -> DataFrame:
-    """The one ``trigger(availableNow=True)`` drain: build ``plan_fn()``,
-    run it to the end of its sources, and return the sink contents as a
-    batch DataFrame — a memory sink named ``query_name`` by default, a
-    fault-tolerant parquet sink (optionally ``partition_by``) when
-    ``out_dir`` is given.
+def replay_parquet_stream(spark: SparkSession, parquet_path: str,
+                          plan_fn: Callable[[DataFrame], DataFrame],
+                          query_name: str | None = None,
+                          checkpoint_dir: str | None = None,
+                          out_dir: str | None = None,
+                          flush_sentinel: bool = False,
+                          sentinel_margin_s: int = 3600,
+                          max_files_per_trigger: int | None = None,
+                          sentinel_all_types: bool = False,
+                          output_mode: str = "append",
+                          partition_by: tuple[str, ...] = (),
+                          progress_out: "list | None" = None
+                          ) -> DataFrame:
+    """The one ``trigger(availableNow=True)`` replay: run
+    ``plan_fn(stream)`` over a parquet file source (see
+    ``parquet_stream_source`` for the sentinel and trigger options) to the
+    end of its files, and return the parquet sink read back as a batch
+    DataFrame.
 
-    ``state_partitions`` sizes the stateful shuffle (= number of state
-    store instances and of sink files per trigger). Callers over a parquet
-    source compute it with ``state_width``: one store per
+    Append mode writes through the fault-tolerant file sink (optionally
+    ``partition_by``). Complete mode overwrites the sink dir with each
+    micro-batch, which holds the whole result. Without ``checkpoint_dir``
+    or ``out_dir`` both go in one ``staging.scratch_dir``, so the
+    enclosing ``checkpoint_scope`` removes them; pass both to run an
+    incremental replay that resumes where the last one stopped.
+    ``query_name`` only labels the query in its progress reports.
+
+    The stateful shuffle (= state store instances and sink files per
+    trigger) is ``state_width`` of the source: one store per
     ``ROWS_PER_STORE`` rows a micro-batch brings, at most one per core,
     because every store pays a fixed open/commit cost each batch. It only
     takes effect at first start; a restart keeps the width in its
@@ -315,41 +330,34 @@ def drain(spark: SparkSession, plan_fn: Callable[[], DataFrame], *,
     metrics (numRowsUpdated, numRowsTotal, operator name) that let tests
     assert HOW MUCH the state store ingested, not just what came out
     (the pane-vs-explode state-input contract)."""
-    with shuffle_width(spark, state_partitions):
-        writer = plan_fn().writeStream.trigger(availableNow=True)
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        q = writer.start(out_dir, format="parquet" if out_dir else "memory",
-                         outputMode=output_mode, queryName=query_name,
-                         partitionBy=list(partition_by) or None)
-        q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(p for p in q.recentProgress if p)
-    return spark.read.parquet(out_dir) if out_dir else spark.table(query_name)
-
-
-def replay_parquet_stream(spark: SparkSession, parquet_path: str,
-                          plan_fn: Callable[[DataFrame], DataFrame],
-                          query_name: str,
-                          checkpoint_dir: str | None = None,
-                          out_dir: str | None = None,
-                          flush_sentinel: bool = False,
-                          sentinel_margin_s: int = 3600,
-                          max_files_per_trigger: int | None = None,
-                          sentinel_all_types: bool = False,
-                          progress_out: "list | None" = None
-                          ) -> DataFrame:
-    """``drain`` of ``plan_fn(stream)`` over a parquet file source (see
-    ``parquet_stream_source`` for the sentinel and trigger options), at
-    the ``state_width`` of that source."""
-    return drain(
-        spark,
-        lambda: plan_fn(parquet_stream_source(
+    if not (checkpoint_dir and out_dir):
+        base = scratch_dir("replay_")
+        checkpoint_dir = checkpoint_dir or f"{base}/ck"
+        out_dir = out_dir or f"{base}/sink"
+    parts = list(partition_by) or None
+    with shuffle_width(spark, state_width(parquet_path,
+                                          max_files_per_trigger)):
+        result = plan_fn(parquet_stream_source(
             spark, parquet_path, flush_sentinel=flush_sentinel,
             sentinel_margin_s=sentinel_margin_s,
             max_files_per_trigger=max_files_per_trigger,
-            sentinel_all_types=sentinel_all_types)),
-        query_name=query_name, out_dir=out_dir,
-        checkpoint_dir=checkpoint_dir,
-        state_partitions=state_width(parquet_path, max_files_per_trigger),
-        progress_out=progress_out)
+            sentinel_all_types=sentinel_all_types))
+        writer = (result.writeStream.trigger(availableNow=True)
+                  .option("checkpointLocation", checkpoint_dir))
+        if output_mode == "complete":
+            # the file sink only appends; a complete-mode batch holds the
+            # whole result, so it replaces the sink's contents
+            q = writer.foreachBatch(
+                lambda batch, _: batch.write.parquet(
+                    out_dir, mode="overwrite", partitionBy=parts)
+            ).start(outputMode=output_mode, queryName=query_name)
+        else:
+            q = writer.start(out_dir, format="parquet",
+                             outputMode=output_mode, partitionBy=parts,
+                             queryName=query_name)
+        q.awaitTermination()
+    if progress_out is not None:
+        progress_out.extend(p for p in q.recentProgress if p)
+    # the plan's schema: a sink that got no rows reads back empty instead
+    # of failing schema inference
+    return spark.read.schema(result.schema).parquet(out_dir)

@@ -6,9 +6,9 @@ avro:20-26,117-133``) as one continuous Spark job.
 rollup_time`` — same grain (1 s tumbling window x dims), same additive
 ``cnt``/``sum_power`` metrics, so the SUM(cnt) re-aggregation contract
 (SURVEY §1.4) holds identically over the materialized table.
-``materialize_rollup_stream`` drains it into parquet partitioned by
-(date, hour) — the Spark analog of Druid's hourly segments; every
-interval-filtered query downstream gets partition pruning.
+``streaming_rollup`` replays it into parquet partitioned by (date, hour)
+— the Spark analog of Druid's hourly segments; every interval-filtered
+query downstream gets partition pruning.
 
 Scale notes: append mode + watermark bound state to ~(watermark/granularity)
 window generations per dim combination; the sink-side ``repartition(date,
@@ -20,10 +20,8 @@ live cluster the same query runs with a processing-time trigger unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from insight_de_smart_grid_spark.streaming import replay
 
 
 def rollup_stream_plan(readings_stream: DataFrame,
@@ -47,26 +45,6 @@ def rollup_stream_plan(readings_stream: DataFrame,
                 F.to_date("window.start").alias("date"),
                 F.hour("window.start").alias("hour"))
     )
-
-
-def materialize_rollup_stream(spark: SparkSession, parquet_path: str,
-                              to_readings, out_dir: str,
-                              checkpoint_dir: str,
-                              flush_sentinel: bool = False,
-                              **plan_kwargs) -> DataFrame:
-    """Replay a parquet events table through the streaming rollup and persist
-    the cube as (date, hour)-partitioned parquet; returns the table read
-    back. Incremental: a second run with the same checkpoint processes only
-    new files and appends only newly-finalized windows."""
-    return replay.drain(
-        spark,
-        lambda: rollup_stream_plan(
-            to_readings(replay.parquet_stream_source(
-                spark, parquet_path, flush_sentinel=flush_sentinel)),
-            **plan_kwargs).repartition("date", "hour"),
-        query_name="rollup_stream", out_dir=out_dir,
-        checkpoint_dir=checkpoint_dir, partition_by=("date", "hour"),
-        state_partitions=replay.state_width(parquet_path))
 
 
 def hll_rollup_stream_plan(events_stream: DataFrame,
@@ -93,22 +71,3 @@ def hll_rollup_stream_plan(events_stream: DataFrame,
              F.count(F.lit(1)).alias("cnt"))
         .select(F.col("window.start").alias("bucket_ts"), "key_hll", "cnt")
     )
-
-
-def materialize_hll_rollup_stream(spark: SparkSession, parquet_path: str,
-                                  out_dir: str, checkpoint_dir: str,
-                                  **plan_kwargs) -> DataFrame:
-    """Replay an events table through the sketch rollup (flush-sentinel
-    finalizes every real window) and persist (bucket_ts, sketch, cnt) as
-    parquet — binary sketch columns store like any other column."""
-    from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
-
-    return replay.drain(
-        spark,
-        lambda: hll_rollup_stream_plan(
-            normalize_event_ts(replay.parquet_stream_source(
-                spark, parquet_path, flush_sentinel=True)),
-            **plan_kwargs),
-        query_name="hll_rollup_stream", out_dir=out_dir,
-        checkpoint_dir=checkpoint_dir,
-        state_partitions=replay.state_width(parquet_path))

@@ -66,7 +66,6 @@ def sliding_agg_stream_plan(stream: DataFrame,
 
 
 def run_sliding_stats_stream(spark: SparkSession, parquet_path: str,
-                             query_name: str = "sliding_stream",
                              checkpoint_dir: str | None = None,
                              out_dir: str | None = None,
                              flush_sentinel: bool = True,
@@ -106,6 +105,6 @@ def run_sliding_stats_stream(spark: SparkSession, parquet_path: str,
         spark, parquet_path,
         lambda stream: sliding_agg_stream_plan(
             pre(normalize_event_ts(stream)), panes=panes, **plan_kwargs),
-        query_name=query_name, checkpoint_dir=checkpoint_dir,
-        out_dir=out_dir, flush_sentinel=flush_sentinel,
+        checkpoint_dir=checkpoint_dir, out_dir=out_dir,
+        flush_sentinel=flush_sentinel,
         progress_out=progress_out)

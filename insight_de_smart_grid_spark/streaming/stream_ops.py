@@ -23,11 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
-from insight_de_smart_grid_spark.streaming.replay import (
-    drain,
-    parquet_stream_source,
-    state_width,
-)
 from insight_de_smart_grid_spark.streaming.stateful import keyed_state
 
 DEDUP_KEY = ("user_id", "event_type", "ts", "value")
@@ -164,26 +159,6 @@ def top_appliances_stream_plan(readings_stream: DataFrame,
             .agg(F.sum(F.col("power").cast("double")).alias("sum_power"))
             .orderBy(F.desc("sum_power"))
             .limit(k))
-
-
-def run_complete_mode(spark, parquet_path: str, plan_fn,
-                      query_name: str) -> DataFrame:
-    """Drain the complete-mode plan ``plan_fn(stream)`` over a parquet
-    replay into a memory sink (it holds the last full result), at the
-    source's ``state_width``, with the session conf restored."""
-    return drain(
-        spark, lambda: plan_fn(parquet_stream_source(spark, parquet_path)),
-        query_name=query_name, output_mode="complete",
-        state_partitions=state_width(parquet_path))
-
-
-def run_complete_mode_topk(spark, parquet_path: str, to_readings,
-                           query_name: str, k: int = 10) -> DataFrame:
-    """Complete-mode top-K over a parquet replay."""
-    return run_complete_mode(
-        spark, parquet_path,
-        lambda s: top_appliances_stream_plan(to_readings(s), k=k),
-        query_name)
 
 
 def purchase_click_left_stream_plan(events_stream: DataFrame,

@@ -39,6 +39,23 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _query_scope(request):
+    """Every test that uses Spark runs inside one ``checkpoint_scope``:
+    the replay sinks and checkpoints, staged sources and index roots it
+    makes through ``scratch_dir`` are removed, and its pins released,
+    when it ends."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    from insight_de_smart_grid_spark.operators.staging import (
+        checkpoint_scope,
+    )
+
+    with checkpoint_scope(request.getfixturevalue("spark")):
+        yield
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

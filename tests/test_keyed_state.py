@@ -128,7 +128,7 @@ def test_state_carries_across_batches_and_restart(spark, duck, tmp_path,
 
     def replay():
         return replay_parquet_stream(
-            spark, str(src), PLANS[name], query_name="unused",
+            spark, str(src), PLANS[name],
             checkpoint_dir=str(tmp_path / "ck"),
             out_dir=str(tmp_path / "sink"))
 

@@ -4,13 +4,18 @@ runtime shuffle width: ``shuffle_width`` scopes
 and a structural guard keeps env knobs and hand-rolled width set/restore
 copies from coming back anywhere else in the package. A second guard
 keeps temp-dir creation in ``operators/staging.py``, the owner of a
-query's leftovers."""
+query's leftovers, and a third keeps streaming writes in the modules
+that own them. ``runtime_conf`` also gives the Python workers the
+package's import path."""
 
 from __future__ import annotations
 
 import ast
+import os
 import re
+import subprocess
 import sys
+import textwrap
 import threading
 from pathlib import Path
 
@@ -18,6 +23,7 @@ import pytest
 
 from insight_de_smart_grid_spark import session
 from insight_de_smart_grid_spark.session import shuffle_width
+from tests.conftest import REPO, SF_SMOKE
 
 SHUFFLE = "spark.sql.shuffle.partitions"
 
@@ -118,9 +124,7 @@ def test_env_knobs_and_shuffle_width_live_in_session():
     """Only ``session.py`` reads the environment, names a
     ``SPARK_GRAFT_*`` variable (just ``CPUS`` and ``DRIVER_MEM``) or sets
     ``spark.sql.shuffle.partitions`` at runtime; everything else goes
-    through ``get_spark`` and ``shuffle_width``. No module passes a
-    literal ``state_partitions=`` (a number or ``None``): the state width
-    has one source, ``streaming.replay.state_width``."""
+    through ``get_spark`` and ``shuffle_width``."""
     allowed = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
     hits = []
     for f in sorted(Path(session.__file__).parent.rglob("*.py")):
@@ -141,11 +145,6 @@ def test_env_knobs_and_shuffle_width_live_in_session():
                   and isinstance(node.args[0], ast.Constant)
                   and node.args[0].value == SHUFFLE):
                 hits.append(f"{where}:conf.set({SHUFFLE})")
-            elif isinstance(node, ast.Call):
-                hits.extend(f"{where}:state_partitions=literal"
-                            for kw in node.keywords
-                            if kw.arg == "state_partitions"
-                            and isinstance(kw.value, ast.Constant))
     assert not hits
 
 
@@ -172,3 +171,60 @@ def test_scratch_dirs_and_pins_have_one_owner():
     No function takes a ``materialize`` switch: staging always pins, and
     the scope releases."""
     assert scratch_and_pin_knob_sites(Path(session.__file__).parent) == []
+
+
+# the modules that start a streaming write, and what each one starts
+WRITE_STREAM_OWNERS = {
+    "streaming/replay.py": "the one replay and its parquet sink",
+    "streaming/stream_ops.py": "the foreachBatch upsert snapshot",
+    "operators/index_base.py": "the index ingest stream",
+    "plans/sketch_queries.py": "the mock-Kafka pipeline",
+    "sources/files.py": "the Kafka sink",
+}
+
+
+def test_streams_write_through_their_owners():
+    """No module names Spark's ``memory`` sink, which leaves a named table
+    in the session catalog; ``.writeStream`` appears only in the modules
+    of ``WRITE_STREAM_OWNERS``. Every other streaming query runs through
+    ``replay.replay_parquet_stream``."""
+    package = Path(session.__file__).parent
+    hits = []
+    for f in sorted(package.rglob("*.py")):
+        rel = f.relative_to(package).as_posix()
+        for node in ast.walk(ast.parse(f.read_text())):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if isinstance(node, ast.Constant) and node.value == "memory":
+                hits.append(f"{where}:memory")
+            elif (isinstance(node, ast.Attribute)
+                  and node.attr == "writeStream"
+                  and rel not in WRITE_STREAM_OWNERS):
+                hits.append(f"{where}:writeStream")
+    assert not hits
+
+
+def test_python_workers_import_the_package_from_any_cwd(tmp_path):
+    """A driver started outside the repo root, with the package on its own
+    ``sys.path`` only, still runs a package pandas UDF: the workers
+    unpickle its module-level helpers by importing the package, and
+    ``runtime_conf`` puts the package root on their ``PYTHONPATH``."""
+    script = tmp_path / "decode.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(REPO)!r})
+        from insight_de_smart_grid_spark.plans.registry import QUERIES
+        from insight_de_smart_grid_spark.session import get_spark
+        spark = get_spark(app_name="cwd_probe", master="local[1]")
+        rows = QUERIES["multimodal_audio_decode"].fn(
+            spark, {SF_SMOKE!r}).collect()
+        print("ROWS", len(rows))
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    # a small heap, and the child's temp files under tmp_path
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmp_path),
+               JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={tmp_path}")
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS" in out.stdout

@@ -247,7 +247,7 @@ def test_streaming_interpolate_defers_until_right_wall_closes(spark, tmp_path):
     df.coalesce(1).write.parquet(str(src))
 
     out = replay_parquet_stream(
-        spark, str(src), interpolate_stream, query_name="interp_contract",
+        spark, str(src), interpolate_stream,
         checkpoint_dir=str(tmp_path / "ck")).collect()
     got = {r.bucket_ts.hour: (r.value, r.is_observed) for r in out}
     assert got == {0: (10.0, True), 1: (15.0, False), 2: (20.0, True)}
@@ -532,8 +532,7 @@ def test_left_join_flushes_tail_unmatched_purchase(spark, tmp_path):
 
     out = replay_parquet_stream(
         spark, str(src), purchase_click_left_stream_plan,
-        query_name="stall_regression", checkpoint_dir=str(tmp_path / "ck"),
-        flush_sentinel=True, sentinel_all_types=True)
+        checkpoint_dir=str(tmp_path / "ck"), flush_sentinel=True, sentinel_all_types=True)
     got = {(r.purchase_id, r.click_id)
            for r in out.where(F.col("user_id") != -1).collect()}
     assert (2, 1) in got, got          # the matched pair

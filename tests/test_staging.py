@@ -82,20 +82,25 @@ def test_nested_scopes_release_only_inner(spark):
 
 def test_scope_removes_scratch_dirs(spark, tmp_path, monkeypatch):
     """One registered query of each scratch shape, fully consumed inside
-    one scope, leaves the temp dir empty: a sentinel replay with a
-    parquet sink, a single-file source staged for a memory sink, an index
-    root, and an ingest stream (slice staging on worker threads, commits
-    from ``foreachBatch`` on the callback thread)."""
+    one scope, leaves the temp dir empty and the session catalog as it
+    found it: a sentinel replay, a complete-mode replay and a
+    stream-stream join replay (each with its parquet sink and
+    checkpoint), an index root, and an ingest stream (slice staging on
+    worker threads, commits from ``foreachBatch`` on the callback
+    thread)."""
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp))
     names = ("streaming_duty_cycle", "streaming_topk",
-             "dedup_index_incremental", "streaming_dedup_index_ingest")
+             "streaming_interval_join", "dedup_index_incremental",
+             "streaming_dedup_index_ingest")
+    tables = spark.catalog.listTables()
     with checkpoint_scope(spark):
         for name in names:
             assert QUERIES[name].fn(spark, SF_SMOKE).collect() is not None
         assert os.listdir(tmp)  # the queries did stage into it
     assert os.listdir(tmp) == []
+    assert spark.catalog.listTables() == tables
 
 
 def test_nested_scopes_remove_only_their_own_dirs(spark, tmp_path,

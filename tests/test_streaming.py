@@ -4,10 +4,6 @@ had."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.operators.duty_cycle import duty_cycle
@@ -24,10 +20,9 @@ from tests.conftest import SF_SMOKE
 def test_batch_equals_stream_for_finalized_windows(spark):
     """The same duty-cycle computed as a batch query and as an append-mode
     streaming query must agree on every window the stream finalized."""
-    name = f"ds_{uuid.uuid4().hex[:8]}"
     stream_out = run_stream_over_parquet(
         spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
-        query_name=name, window="10 minutes", slide="2 minutes",
+        window="10 minutes", slide="2 minutes",
         watermark="2 seconds")
 
     readings = readings_view(spark, SF_SMOKE)
@@ -53,7 +48,6 @@ def test_streaming_panes_equal_explode_stream(spark):
     def run(panes):
         return {tuple(r) for r in run_stream_over_parquet(
             spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
-            query_name=f"dsp_{uuid.uuid4().hex[:8]}",
             window="10 minutes", slide="2 minutes", watermark="2 seconds",
             flush_sentinel=True, panes=panes)
             .filter(F.col("house_id") != "-1").collect()}
@@ -82,7 +76,6 @@ def test_streaming_panes_cut_state_writes(spark):
         prog = []
         run_stream_over_parquet(
             spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
-            query_name=f"dsw_{uuid.uuid4().hex[:8]}",
             window="10 minutes", slide="2 minutes", watermark="2 seconds",
             flush_sentinel=True, panes=panes, progress_out=prog)
         per_op: dict[int, int] = {}
@@ -116,7 +109,6 @@ def test_streaming_auto_picks_form_by_density(spark, tmp_path):
         prog = []
         out = run_stream_over_parquet(
             spark, path, events_to_readings,
-            query_name=f"{prefix}_{uuid.uuid4().hex[:8]}",
             window="10 minutes", slide="2 minutes", watermark="2 seconds",
             flush_sentinel=True, panes="auto", progress_out=prog)
         rows = out.filter(F.col("house_id") != "-1").count()
@@ -157,8 +149,7 @@ def test_sliding_stats_stream_auto_and_parity(spark, tmp_path):
     def run(path, panes):
         prog = []
         out = run_sliding_stats_stream(
-            spark, path, query_name=f"ss_{uuid.uuid4().hex[:8]}",
-            panes=panes, aggs=aggs, keys=("user_id",),
+            spark, path, panes=panes, aggs=aggs, keys=("user_id",),
             window="10 minutes", slide="2 minutes",
             watermark="2 seconds", progress_out=prog)
         rows = sorted(
@@ -241,7 +232,7 @@ def test_flush_sentinel_survives_null_value_max_ts_row(spark, tmp_path):
 
     base = str(tmp_path / "run")
     out = run_sliding_stats_stream(
-        spark, src, query_name="unused", checkpoint_dir=f"{base}/ck",
+        spark, src, checkpoint_dir=f"{base}/ck",
         out_dir=f"{base}/sink", pre=pre,
         aggs=(("cnt", "count", "value"),),
         keys=("user_id", "__bin", "__lo", "__width"),
@@ -258,61 +249,54 @@ def test_flush_sentinel_survives_null_value_max_ts_row(spark, tmp_path):
     assert any(t == last_end for t, *_ in got)
 
 
-def test_watermark_drops_late_rows_across_restarts(spark):
+def test_watermark_drops_late_rows_across_restarts(spark, tmp_path):
     """ST1: a row arriving after the watermark passed its window is dropped.
     Two availableNow runs share a checkpoint; the second run's input is
     entirely behind the persisted watermark."""
-    data_dir = tempfile.mkdtemp(prefix="late_data_")
-    ckpt = tempfile.mkdtemp(prefix="late_ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="late_out_") + "/sink"
-    try:
-        on_time = spark.createDataFrame(
-            [(1, "2024-01-01 10:00:01", 5, "click", 10.0, "{}"),
-             (2, "2024-01-01 10:09:59", 5, "click", 10.0, "{}"),
-             (3, "2024-01-01 10:30:00", 5, "click", 10.0, "{}")],
-            "event_id long, ts string, user_id long, event_type string,"
-            " value double, props string",
-        ).withColumn("ts", F.to_timestamp("ts"))
-        on_time.write.mode("overwrite").parquet(data_dir)
-        out1 = run_stream_over_parquet(
-            spark, data_dir, events_to_readings,
-            window="10 minutes", slide=None, watermark="2 seconds",
-            checkpoint_dir=ckpt, out_dir=out_dir)
-        first = {(r.time_end.isoformat(), r.duty_cycle)
-                 for r in out1.collect()}
-        # watermark advanced to 10:29:58 -> the 10:00 window finalized
-        assert ("2024-01-01T10:10:00", 1.0) in first
-        n_first = len(first)
+    data_dir = str(tmp_path / "data")
+    ckpt = str(tmp_path / "ck")
+    out_dir = str(tmp_path / "sink")
+    on_time = spark.createDataFrame(
+        [(1, "2024-01-01 10:00:01", 5, "click", 10.0, "{}"),
+         (2, "2024-01-01 10:09:59", 5, "click", 10.0, "{}"),
+         (3, "2024-01-01 10:30:00", 5, "click", 10.0, "{}")],
+        "event_id long, ts string, user_id long, event_type string,"
+        " value double, props string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    on_time.write.mode("overwrite").parquet(data_dir)
+    out1 = run_stream_over_parquet(
+        spark, data_dir, events_to_readings,
+        window="10 minutes", slide=None, watermark="2 seconds",
+        checkpoint_dir=ckpt, out_dir=out_dir)
+    first = {(r.time_end.isoformat(), r.duty_cycle)
+             for r in out1.collect()}
+    # watermark advanced to 10:29:58 -> the 10:00 window finalized
+    assert ("2024-01-01T10:10:00", 1.0) in first
+    n_first = len(first)
 
-        late = spark.createDataFrame(
-            [(4, "2024-01-01 10:05:00", 5, "click", 1.0, "{}")],
-            "event_id long, ts string, user_id long, event_type string,"
-            " value double, props string",
-        ).withColumn("ts", F.to_timestamp("ts"))
-        late.write.mode("append").parquet(data_dir)
-        out2 = run_stream_over_parquet(
-            spark, data_dir, events_to_readings,
-            window="10 minutes", slide=None, watermark="2 seconds",
-            checkpoint_dir=ckpt, out_dir=out_dir)
-        rows2 = out2.collect()
-        # the late row (power 1.0, below threshold -> duty would drop to 2/3)
-        # must NOT re-emit or alter the finalized 10:00 window
-        final_windows = {(r.time_end.isoformat(), r.duty_cycle)
-                         for r in rows2}
-        assert ("2024-01-01T10:10:00", 1.0) in final_windows
-        assert ("2024-01-01T10:10:00", 2 / 3) not in final_windows
-        assert len(rows2) == n_first  # nothing new finalized, nothing re-opened
-    finally:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out_dir.rsplit("/", 1)[0], ignore_errors=True)
+    late = spark.createDataFrame(
+        [(4, "2024-01-01 10:05:00", 5, "click", 1.0, "{}")],
+        "event_id long, ts string, user_id long, event_type string,"
+        " value double, props string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    late.write.mode("append").parquet(data_dir)
+    out2 = run_stream_over_parquet(
+        spark, data_dir, events_to_readings,
+        window="10 minutes", slide=None, watermark="2 seconds",
+        checkpoint_dir=ckpt, out_dir=out_dir)
+    rows2 = out2.collect()
+    # the late row (power 1.0, below threshold -> duty would drop to 2/3)
+    # must NOT re-emit or alter the finalized 10:00 window
+    final_windows = {(r.time_end.isoformat(), r.duty_cycle)
+                     for r in rows2}
+    assert ("2024-01-01T10:10:00", 1.0) in final_windows
+    assert ("2024-01-01T10:10:00", 2 / 3) not in final_windows
+    assert len(rows2) == n_first  # nothing new finalized, nothing re-opened
 
 
 def test_interval_join_batch_equals_stream(spark):
     """Stream-stream self-join (purchases x prior clicks, watermarked) must
     emit exactly the batch interval join's pairs once drained."""
-    import uuid
-
     from insight_de_smart_grid_spark.sources.tables import load_table
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
@@ -323,8 +307,7 @@ def test_interval_join_batch_equals_stream(spark):
     )
 
     streamed = replay_parquet_stream(
-        spark, f"{SF_SMOKE}/events.parquet", purchase_click_stream_plan,
-        query_name=f"ssj_{uuid.uuid4().hex[:8]}")
+        spark, f"{SF_SMOKE}/events.parquet", purchase_click_stream_plan)
     batch = purchase_click_batch(load_table(spark, SF_SMOKE, "events"))
     s_rows = {tuple(r) for r in streamed.collect()}
     b_rows = {tuple(r) for r in batch.collect()}
@@ -335,8 +318,6 @@ def test_interval_join_batch_equals_stream(spark):
 def test_streaming_dedup_matches_batch_distinct(spark):
     """dropDuplicatesWithinWatermark over a replay (duplicates arrive inside
     the horizon) must equal batch distinct on the same key."""
-    import uuid
-
     from insight_de_smart_grid_spark.sources.tables import (
         load_table,
         normalize_event_ts,
@@ -350,8 +331,7 @@ def test_streaming_dedup_matches_batch_distinct(spark):
     )
 
     streamed = replay_parquet_stream(
-        spark, f"{SF_SMOKE}/events.parquet", dedup_stream_plan,
-        query_name=f"sdd_{uuid.uuid4().hex[:8]}")
+        spark, f"{SF_SMOKE}/events.parquet", dedup_stream_plan)
     batch = dedup_batch(normalize_event_ts(
         load_table(spark, SF_SMOKE, "events")))
     s_rows = {tuple(r) for r in streamed.collect()}
@@ -361,13 +341,9 @@ def test_streaming_dedup_matches_batch_distinct(spark):
     assert streamed.count() == len(s_rows)
 
 
-def test_streaming_dedup_drops_planted_duplicate(spark):
+def test_streaming_dedup_drops_planted_duplicate(spark, tmp_path):
     """A re-delivered record (same business key, new event_id) within the
     watermark horizon is dropped; a distinct record survives."""
-    import shutil
-    import tempfile
-    import uuid
-
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
@@ -375,97 +351,90 @@ def test_streaming_dedup_drops_planted_duplicate(spark):
         dedup_stream_plan,
     )
 
-    data_dir = tempfile.mkdtemp(prefix="sdd_data_")
-    try:
-        rows = spark.createDataFrame(
-            [(1, "2024-01-01 10:00:00", 5, "click", 10.0, "{}"),
-             (2, "2024-01-01 10:00:00", 5, "click", 10.0, "{}"),  # re-delivery
-             (3, "2024-01-01 10:00:01", 5, "click", 10.0, "{}")],
-            "event_id long, ts string, user_id long, event_type string,"
-            " value double, props string",
-        ).withColumn("ts", F.to_timestamp("ts"))
-        rows.write.mode("overwrite").parquet(data_dir)
-        out = replay_parquet_stream(
-            spark, data_dir, dedup_stream_plan,
-            query_name=f"sdd_{uuid.uuid4().hex[:8]}")
-        got = {(r.user_id, r.ts.isoformat(), r.value) for r in out.collect()}
-        assert got == {(5, "2024-01-01T10:00:00", 10.0),
-                       (5, "2024-01-01T10:00:01", 10.0)}
-    finally:
-        shutil.rmtree(data_dir, ignore_errors=True)
+    data_dir = str(tmp_path / "data")
+    rows = spark.createDataFrame(
+        [(1, "2024-01-01 10:00:00", 5, "click", 10.0, "{}"),
+         (2, "2024-01-01 10:00:00", 5, "click", 10.0, "{}"),  # re-delivery
+         (3, "2024-01-01 10:00:01", 5, "click", 10.0, "{}")],
+        "event_id long, ts string, user_id long, event_type string,"
+        " value double, props string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    rows.write.mode("overwrite").parquet(data_dir)
+    out = replay_parquet_stream(spark, data_dir, dedup_stream_plan)
+    got = {(r.user_id, r.ts.isoformat(), r.value) for r in out.collect()}
+    assert got == {(5, "2024-01-01T10:00:00", 10.0),
+                   (5, "2024-01-01T10:00:01", 10.0)}
 
 
-def test_streaming_rollup_materializes_partitioned_cube(spark):
+def _rollup_replay(spark, src, **dirs):
+    """The ``streaming_rollup`` replay: the 1 s rollup into a
+    (date, hour)-partitioned parquet sink, one file per partition per
+    trigger."""
+    from insight_de_smart_grid_spark.streaming.replay import (
+        replay_parquet_stream,
+    )
+    from insight_de_smart_grid_spark.streaming.rollup_stream import (
+        rollup_stream_plan,
+    )
+
+    return replay_parquet_stream(
+        spark, src,
+        lambda s: rollup_stream_plan(events_to_readings(s))
+        .repartition("date", "hour"),
+        partition_by=("date", "hour"), **dirs)
+
+
+def test_streaming_rollup_materializes_partitioned_cube(spark, tmp_path):
     """S8 streaming form: the continuous rollup must (a) write real
     (date, hour) partitions, (b) agree with the batch rollup on every
     finalized window, and (c) satisfy the SUM(cnt) re-agg contract."""
     import pathlib
-    import shutil
-    import tempfile
 
     from insight_de_smart_grid_spark.operators.rollup import (
         reaggregate,
         rollup_time,
     )
-    from insight_de_smart_grid_spark.sources.tables import (
-        events_to_readings,
-        readings_view,
-    )
-    from insight_de_smart_grid_spark.streaming.rollup_stream import (
-        materialize_rollup_stream,
-    )
 
-    base = tempfile.mkdtemp(prefix="sr_test_")
-    try:
-        cube = materialize_rollup_stream(
-            spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
-            out_dir=f"{base}/cube", checkpoint_dir=f"{base}/ckpt")
-        parts = [p.name for p in pathlib.Path(f"{base}/cube").iterdir()
-                 if p.is_dir() and not p.name.startswith("_")]
-        assert parts and all(p.startswith("date=") for p in parts)
+    base = str(tmp_path)
+    cube = _rollup_replay(spark, f"{SF_SMOKE}/events.parquet",
+                          out_dir=f"{base}/cube",
+                          checkpoint_dir=f"{base}/ckpt")
+    parts = [p.name for p in pathlib.Path(f"{base}/cube").iterdir()
+             if p.is_dir() and not p.name.startswith("_")]
+    assert parts and all(p.startswith("date=") for p in parts)
 
-        readings = readings_view(spark, SF_SMOKE)
-        max_ts = readings.agg(F.max("ts")).collect()[0][0]
-        batch = rollup_time(readings).collect()
-        finalized = {
-            (r.window_start, r.house_id, r.appliance_id, r.appliance_name,
-             r.cnt, round(r.sum_power, 9))
-            for r in batch
-            if (max_ts - r.window_start).total_seconds() >= 3}
-        got = {(r.window_start, r.house_id, r.appliance_id, r.appliance_name,
-                r.cnt, round(r.sum_power, 9)) for r in cube.collect()}
-        assert finalized <= got and len(finalized) > 0
-        # anything extra must only be later windows the batch run also has
-        assert got <= {(r.window_start, r.house_id, r.appliance_id,
-                        r.appliance_name, r.cnt, round(r.sum_power, 9))
-                       for r in batch}
+    readings = readings_view(spark, SF_SMOKE)
+    max_ts = readings.agg(F.max("ts")).collect()[0][0]
+    batch = rollup_time(readings).collect()
+    finalized = {
+        (r.window_start, r.house_id, r.appliance_id, r.appliance_name,
+         r.cnt, round(r.sum_power, 9))
+        for r in batch
+        if (max_ts - r.window_start).total_seconds() >= 3}
+    got = {(r.window_start, r.house_id, r.appliance_id, r.appliance_name,
+            r.cnt, round(r.sum_power, 9)) for r in cube.collect()}
+    assert finalized <= got and len(finalized) > 0
+    # anything extra must only be later windows the batch run also has
+    assert got <= {(r.window_start, r.house_id, r.appliance_id,
+                    r.appliance_name, r.cnt, round(r.sum_power, 9))
+                   for r in batch}
 
-        # SUM(cnt) contract straight off the materialized cube
-        reagg = reaggregate(cube.drop("date", "hour"),
-                            group_cols=("house_id",))
-        n_by_house = {(r.house_id, r.cnt) for r in reagg.collect()}
-        direct = {(r.house_id, r["count(1)"]) for r in
-                  spark.read.parquet(f"{base}/cube")
-                  .groupBy("house_id").agg(F.sum("cnt").alias("count(1)"))
-                  .collect()}
-        assert n_by_house == direct
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    # SUM(cnt) contract straight off the materialized cube
+    reagg = reaggregate(cube.drop("date", "hour"),
+                        group_cols=("house_id",))
+    n_by_house = {(r.house_id, r.cnt) for r in reagg.collect()}
+    direct = {(r.house_id, r["count(1)"]) for r in
+              spark.read.parquet(f"{base}/cube")
+              .groupBy("house_id").agg(F.sum("cnt").alias("count(1)"))
+              .collect()}
+    assert n_by_house == direct
 
 
-def test_streaming_rollup_is_incremental_across_runs(spark):
+def test_streaming_rollup_is_incremental_across_runs(spark, tmp_path):
     """A second availableNow run sharing the checkpoint must process only the
     new file and append only newly-finalized windows, leaving run-1 output
     untouched (exactly-once file sink)."""
-    import shutil
-    import tempfile
-
-    from insight_de_smart_grid_spark.sources.tables import events_to_readings
-    from insight_de_smart_grid_spark.streaming.rollup_stream import (
-        materialize_rollup_stream,
-    )
-
-    base = tempfile.mkdtemp(prefix="sri_test_")
+    base = str(tmp_path)
     data_dir = f"{base}/data"
 
     def events(rows):
@@ -475,49 +444,44 @@ def test_streaming_rollup_is_incremental_across_runs(spark):
             " value double, props string",
         ).withColumn("ts", F.to_timestamp("ts"))
 
-    try:
-        events([(1, "2024-01-01 10:00:00", 5, "click", 10.0, "{}"),
-                (2, "2024-01-01 10:00:00", 5, "click", 20.0, "{}"),
-                (3, "2024-01-01 10:00:30", 5, "click", 30.0, "{}")]
-               ).write.mode("overwrite").parquet(data_dir)
-        run1 = materialize_rollup_stream(
-            spark, data_dir, events_to_readings,
-            out_dir=f"{base}/cube", checkpoint_dir=f"{base}/ckpt")
-        got1 = {(r.window_start.isoformat(), r.cnt, r.sum_power)
-                for r in run1.collect()}
-        # 10:00:00 window (2 readings) finalized by the 10:00:30 row
-        assert ("2024-01-01T10:00:00", 2, 30.0) in got1
+    events([(1, "2024-01-01 10:00:00", 5, "click", 10.0, "{}"),
+            (2, "2024-01-01 10:00:00", 5, "click", 20.0, "{}"),
+            (3, "2024-01-01 10:00:30", 5, "click", 30.0, "{}")]
+           ).write.mode("overwrite").parquet(data_dir)
+    run1 = _rollup_replay(spark, data_dir, out_dir=f"{base}/cube",
+                          checkpoint_dir=f"{base}/ckpt")
+    got1 = {(r.window_start.isoformat(), r.cnt, r.sum_power)
+            for r in run1.collect()}
+    # 10:00:00 window (2 readings) finalized by the 10:00:30 row
+    assert ("2024-01-01T10:00:00", 2, 30.0) in got1
 
-        events([(4, "2024-01-01 10:01:00", 5, "click", 40.0, "{}")]
-               ).write.mode("append").parquet(data_dir)
-        run2 = materialize_rollup_stream(
-            spark, data_dir, events_to_readings,
-            out_dir=f"{base}/cube", checkpoint_dir=f"{base}/ckpt")
-        got2 = {(r.window_start.isoformat(), r.cnt, r.sum_power)
-                for r in run2.collect()}
-        # run 1 rows intact, 10:00:30 window finalized by the new row
-        assert got1 <= got2
-        assert ("2024-01-01T10:00:30", 1, 30.0) in got2
-        # nothing double-counted: the 10:00:00 window still has cnt=2
-        assert sum(1 for g in got2 if g[0] == "2024-01-01T10:00:00") == 1
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    events([(4, "2024-01-01 10:01:00", 5, "click", 40.0, "{}")]
+           ).write.mode("append").parquet(data_dir)
+    run2 = _rollup_replay(spark, data_dir, out_dir=f"{base}/cube",
+                          checkpoint_dir=f"{base}/ckpt")
+    got2 = {(r.window_start.isoformat(), r.cnt, r.sum_power)
+            for r in run2.collect()}
+    # run 1 rows intact, 10:00:30 window finalized by the new row
+    assert got1 <= got2
+    assert ("2024-01-01T10:00:30", 1, 30.0) in got2
+    # nothing double-counted: the 10:00:00 window still has cnt=2
+    assert sum(1 for g in got2 if g[0] == "2024-01-01T10:00:00") == 1
 
 
 def test_complete_mode_topk_equals_batch(spark):
     """Complete output mode must refresh the full top-K table each trigger;
     after draining, it equals the batch top-K exactly (values and order)."""
-    import uuid
-
-    from insight_de_smart_grid_spark.sources.tables import readings_view
-    from insight_de_smart_grid_spark.streaming.stream_ops import (
-        run_complete_mode_topk,
+    from insight_de_smart_grid_spark.streaming.replay import (
+        replay_parquet_stream,
     )
-    from insight_de_smart_grid_spark.sources.tables import events_to_readings
+    from insight_de_smart_grid_spark.streaming.stream_ops import (
+        top_appliances_stream_plan,
+    )
 
-    got = run_complete_mode_topk(
-        spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
-        query_name=f"topk_{uuid.uuid4().hex[:8]}", k=5)
+    got = replay_parquet_stream(
+        spark, f"{SF_SMOKE}/events.parquet",
+        lambda s: top_appliances_stream_plan(events_to_readings(s), k=5),
+        output_mode="complete")
     want = (readings_view(spark, SF_SMOKE)
             .groupBy("appliance_name")
             .agg(F.sum(F.col("power").cast("double")).alias("sum_power"))
@@ -538,10 +502,9 @@ def test_rocksdb_state_store_matches_batch(spark):
              "state.RocksDBStateStoreProvider")
     spark.conf.set(key, rocks)
     try:
-        name = f"rocks_{uuid.uuid4().hex[:8]}"
         stream_out = run_stream_over_parquet(
             spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
-            query_name=name, window="10 minutes", slide="2 minutes",
+            window="10 minutes", slide="2 minutes",
             watermark="2 seconds")
         readings = readings_view(spark, SF_SMOKE)
         batch = duty_cycle(readings, window="10 minutes", slide="2 minutes")
@@ -572,7 +535,6 @@ def test_rocksdb_state_store_matches_batch_chained_panes(spark):
     try:
         stream_out = run_stream_over_parquet(
             spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
-            query_name=f"rockp_{uuid.uuid4().hex[:8]}",
             window="10 minutes", slide="2 minutes",
             watermark="2 seconds", flush_sentinel=True, panes=True)
         batch = duty_cycle(readings_view(spark, SF_SMOKE),
@@ -856,7 +818,6 @@ def test_restart_keeps_checkpointed_state_width(spark, tmp_path,
         out = rp.replay_parquet_stream(
             spark, str(src),
             lambda s: s.select("user_id", "event_type").dropDuplicates(),
-            query_name=f"rw_{uuid.uuid4().hex[:8]}",
             checkpoint_dir=str(tmp_path / "ck"),
             out_dir=str(tmp_path / "sink"), progress_out=prog)
         widths = {so["numShufflePartitions"] for p in prog

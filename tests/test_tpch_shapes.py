@@ -295,7 +295,7 @@ def test_streaming_gap_fill_closed_bucket_contract(spark, tmp_path):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     src.write.parquet(base + "/src")
     out = replay_parquet_stream(
-        spark, base + "/src", gap_fill_stream, query_name="unused",
+        spark, base + "/src", gap_fill_stream,
         checkpoint_dir=base + "/ck", out_dir=base + "/sink")
     rows = {r.bucket_ts.hour: (r.value, r.is_observed)
             for r in out.collect()}
