@@ -312,9 +312,12 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
     Append mode writes through the fault-tolerant file sink (optionally
     ``partition_by``). Complete mode overwrites the sink dir with each
     micro-batch, which holds the whole result. Without ``checkpoint_dir``
-    or ``out_dir`` both go in one ``staging.scratch_dir``, so the
+    and ``out_dir`` both go in one ``staging.scratch_dir``, so the
     enclosing ``checkpoint_scope`` removes them; pass both to run an
-    incremental replay that resumes where the last one stopped.
+    incremental replay that resumes where the last one stopped. Passing
+    only one raises ``ValueError``: a fresh checkpoint over a used sink
+    would restart at batch 0, and the file sink would skip every batch id
+    its log already holds and return the old rows.
     ``query_name`` only labels the query in its progress reports.
 
     The stateful shuffle (= state store instances and sink files per
@@ -330,10 +333,11 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
     metrics (numRowsUpdated, numRowsTotal, operator name) that let tests
     assert HOW MUCH the state store ingested, not just what came out
     (the pane-vs-explode state-input contract)."""
-    if not (checkpoint_dir and out_dir):
+    if (checkpoint_dir is None) != (out_dir is None):
+        raise ValueError("pass both checkpoint_dir and out_dir, or neither")
+    if checkpoint_dir is None:
         base = scratch_dir("replay_")
-        checkpoint_dir = checkpoint_dir or f"{base}/ck"
-        out_dir = out_dir or f"{base}/sink"
+        checkpoint_dir, out_dir = f"{base}/ck", f"{base}/sink"
     parts = list(partition_by) or None
     with shuffle_width(spark, state_width(parquet_path,
                                           max_files_per_trigger)):

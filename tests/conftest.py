@@ -44,8 +44,10 @@ def _query_scope(request):
     """Every test that uses Spark runs inside one ``checkpoint_scope``:
     the replay sinks and checkpoints, staged sources and index roots it
     makes through ``scratch_dir`` are removed, and its pins released,
-    when it ends."""
-    if "spark" not in request.fixturenames:
+    when it ends. A test marked ``no_query_scope`` runs outside any
+    scope, as a caller without one (the driver's ``queries()``) does."""
+    if ("spark" not in request.fixturenames
+            or request.node.get_closest_marker("no_query_scope")):
         yield
         return
     from insight_de_smart_grid_spark.operators.staging import (

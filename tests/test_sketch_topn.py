@@ -247,8 +247,7 @@ def test_streaming_interpolate_defers_until_right_wall_closes(spark, tmp_path):
     df.coalesce(1).write.parquet(str(src))
 
     out = replay_parquet_stream(
-        spark, str(src), interpolate_stream,
-        checkpoint_dir=str(tmp_path / "ck")).collect()
+        spark, str(src), interpolate_stream).collect()
     got = {r.bucket_ts.hour: (r.value, r.is_observed) for r in out}
     assert got == {0: (10.0, True), 1: (15.0, False), 2: (20.0, True)}
 
@@ -372,7 +371,7 @@ def test_observation_metrics_ride_the_same_pass(spark):
     assert got["null_values"] == ev.where(F.col("value").isNull()).count()
 
 
-def test_streaming_listener_captures_progress(spark, tmp_path):
+def test_streaming_listener_captures_progress(spark):
     """ProgressCapture must see every micro-batch: total numInputRows over
     the replay equals the source row count (+1 flush sentinel if staged)."""
     from insight_de_smart_grid_spark.sources.tables import (
@@ -392,8 +391,7 @@ def test_streaming_listener_captures_progress(spark, tmp_path):
             spark, f"{SF_ORACLE}/events.parquet",
             lambda s: duty_cycle_stream_plan(
                 events_to_readings(normalize_event_ts(s))),
-            query_name="monitored_dc",
-            checkpoint_dir=str(tmp_path / "ck")).count()
+            query_name="monitored_dc").count()
         progress = cap.drain()
     finally:
         spark.streams.removeListener(cap)
@@ -532,7 +530,7 @@ def test_left_join_flushes_tail_unmatched_purchase(spark, tmp_path):
 
     out = replay_parquet_stream(
         spark, str(src), purchase_click_left_stream_plan,
-        checkpoint_dir=str(tmp_path / "ck"), flush_sentinel=True, sentinel_all_types=True)
+        flush_sentinel=True, sentinel_all_types=True)
     got = {(r.purchase_id, r.click_id)
            for r in out.where(F.col("user_id") != -1).collect()}
     assert (2, 1) in got, got          # the matched pair

@@ -17,6 +17,8 @@ import sys
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
+
 from insight_de_smart_grid_spark.operators import dedup, similarity
 from insight_de_smart_grid_spark.operators.staging import (
     checkpoint_scope, pinned_rdd_ids)
@@ -103,13 +105,16 @@ def test_scope_removes_scratch_dirs(spark, tmp_path, monkeypatch):
     assert spark.catalog.listTables() == tables
 
 
+@pytest.mark.no_query_scope
 def test_nested_scopes_remove_only_their_own_dirs(spark, tmp_path,
                                                   monkeypatch):
     """An inner scope removes only the dirs made inside it; a dir made
     outside any scope belongs to its caller and survives."""
+    from insight_de_smart_grid_spark.operators import staging
     from insight_de_smart_grid_spark.operators.staging import scratch_dir
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert staging._SCOPES == []  # no scope owns what comes next
     loose = scratch_dir("loose_")
     with checkpoint_scope(spark):
         outer = scratch_dir("outer_")

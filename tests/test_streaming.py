@@ -833,3 +833,20 @@ def test_restart_keeps_checkpointed_state_width(spark, tmp_path,
     want = {tuple(r) for r in spark.read.parquet(str(src))
             .select("user_id", "event_type").distinct().collect()}
     assert {tuple(r) for r in out2.collect()} == want and len(want) == 14
+
+
+def test_replay_takes_both_dirs_or_neither(tmp_path):
+    """A checkpoint without its sink (or a sink without its checkpoint)
+    is refused: a fresh checkpoint over a used sink would restart at
+    batch 0 and read back the old run's rows."""
+    import pytest
+
+    from insight_de_smart_grid_spark.streaming.replay import (
+        replay_parquet_stream,
+    )
+
+    for dirs in ({"checkpoint_dir": str(tmp_path / "ck")},
+                 {"out_dir": str(tmp_path / "sink")}):
+        with pytest.raises(ValueError, match="both"):
+            replay_parquet_stream(None, str(tmp_path), lambda s: s, **dirs)
+    assert list(tmp_path.iterdir()) == []
