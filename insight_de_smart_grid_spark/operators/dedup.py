@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark.operators.staging import stage
 from insight_de_smart_grid_spark.operators.text import fingerprint, tokens
-from insight_de_smart_grid_spark.session import shuffle_width
+from insight_de_smart_grid_spark.session import hand_over, query_session
 
 
 # ---------------------------------------------------------------------------
@@ -316,43 +316,47 @@ def dup_clusters(pairs: DataFrame, max_rounds: int = 15) -> DataFrame:
         # narrow coalesce over the pinned blocks: every round's edge scan
         # becomes w tasks instead of the inherited post-AQE width
         edges = edges.coalesce(w)
-    with shuffle_width(spark, w):
-        # lazy checkpoint: the first round's convergence count is the
-        # materializing action, so init costs no job of its own (round-11
-        # optimization — each eager checkpoint at this scale is a whole
-        # scheduler round-trip; lineage truncation is identical either way)
-        labels = (edges.select(F.col("src").alias("node")).distinct()
-                  .withColumn("lbl", F.col("node"))
-                  .localCheckpoint(eager=False))
-        for _ in range(max_rounds):
-            nbr = (edges.join(labels, edges.src == labels.node)
-                   .groupBy(F.col("dst").alias("nbr_node"))
-                   .agg(F.min("lbl").alias("nbr_lbl")))
-            # Carry the pre-round label through the checkpoint so the
-            # convergence check is a filter over already-materialized
-            # partitions — not another join+shuffle per round. The
-            # checkpoint is LAZY and the count below is its materializing
-            # action: one job per round where eager+count paid two.
-            new = (labels.join(nbr, labels.node == nbr.nbr_node, "left")
-                   .select(F.col("node"), F.col("lbl").alias("old_lbl"),
-                           F.least(F.col("lbl"),
-                                   F.coalesce("nbr_lbl", "lbl"))
-                           .alias("lbl"))
-                   .localCheckpoint(eager=False))
-            changed = new.filter(F.col("lbl") < F.col("old_lbl")).count()
-            labels = new.select("node", "lbl")
-            if changed == 0:
-                break
-        else:
-            # silent unconverged labels would split true clusters — fail
-            # loud (near-dup components are dense; hitting this means a
-            # chain-shaped graph that needs a larger max_rounds or the
-            # large-star variant)
-            raise RuntimeError(
-                f"dup_clusters did not converge in {max_rounds} rounds "
-                f"({changed} labels still moving)")
-    return labels.select(F.col("node").alias("doc_id"),
-                         F.col("lbl").alias("cluster_id"))
+    # the loop runs in its own session at width w (the caller's conf is
+    # left alone); the labels come back to the caller's session, so the
+    # joins a caller puts them in run at the caller's width
+    edges = hand_over(edges, query_session(spark, w))
+    # lazy checkpoint: the first round's convergence count is the
+    # materializing action, so init costs no job of its own (round-11
+    # optimization — each eager checkpoint at this scale is a whole
+    # scheduler round-trip; lineage truncation is identical either way)
+    labels = (edges.select(F.col("src").alias("node")).distinct()
+              .withColumn("lbl", F.col("node"))
+              .localCheckpoint(eager=False))
+    for _ in range(max_rounds):
+        nbr = (edges.join(labels, edges.src == labels.node)
+               .groupBy(F.col("dst").alias("nbr_node"))
+               .agg(F.min("lbl").alias("nbr_lbl")))
+        # Carry the pre-round label through the checkpoint so the
+        # convergence check is a filter over already-materialized
+        # partitions — not another join+shuffle per round. The
+        # checkpoint is LAZY and the count below is its materializing
+        # action: one job per round where eager+count paid two.
+        new = (labels.join(nbr, labels.node == nbr.nbr_node, "left")
+               .select(F.col("node"), F.col("lbl").alias("old_lbl"),
+                       F.least(F.col("lbl"),
+                               F.coalesce("nbr_lbl", "lbl"))
+                       .alias("lbl"))
+               .localCheckpoint(eager=False))
+        changed = new.filter(F.col("lbl") < F.col("old_lbl")).count()
+        labels = new.select("node", "lbl")
+        if changed == 0:
+            break
+    else:
+        # silent unconverged labels would split true clusters — fail
+        # loud (near-dup components are dense; hitting this means a
+        # chain-shaped graph that needs a larger max_rounds or the
+        # large-star variant)
+        raise RuntimeError(
+            f"dup_clusters did not converge in {max_rounds} rounds "
+            f"({changed} labels still moving)")
+    return hand_over(labels.select(F.col("node").alias("doc_id"),
+                                   F.col("lbl").alias("cluster_id")),
+                     spark)
 
 
 def dup_clusters_oracle_sql(n: int = 3, threshold: float = 0.1) -> str:

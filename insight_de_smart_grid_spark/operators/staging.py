@@ -15,7 +15,20 @@ the scope unpersists every RDD pinned inside it, then removes every
 scratch dir created inside it. Lineage was truncated and the dirs hold
 the sinks a result may be read back from, so a frame used after the
 scope cannot be recomputed. Scopes nest: each releases only its own pins
-and dirs. A scratch dir made outside any scope belongs to its caller.
+and dirs.
+
+Every scratch file still has an owner outside a scope: a dir made
+outside any scope goes under the process scratch root
+(``process_root``), which also holds the driver JVM's temp dir
+(``session.get_spark``) and is removed when the process exits. A caller
+without a scope (the driver contract's ``queries()``) can read a result
+lazily for as long as the process lives, and leaves nothing behind.
+
+Scopes are process-wide, not per thread: ``scratch_dir`` registers with
+the innermost open scope whatever thread asks, and a scope unpersists
+every RDD pinned on the context since it opened. Two scopes open at once
+on two threads can therefore remove each other's dirs and pins; run
+concurrent queries inside one enclosing scope.
 
 ``tests/test_staging.py`` pins both halves (bounded
 ``getPersistentRDDs`` growth under repeated invocation; no dir left
@@ -23,6 +36,7 @@ behind by a replay, an index root or an ingest stream).
 """
 from __future__ import annotations
 
+import atexit
 import shutil
 import tempfile
 import threading
@@ -34,8 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 # Open scopes' dir lists, innermost last. Process-wide rather than
 # thread-local: slice staging runs on worker threads and ``foreachBatch``
 # on the py4j callback thread, both inside the caller's scope.
-_LOCK = threading.Lock()
+_LOCK = threading.RLock()
 _SCOPES: List[List[str]] = []
+_ROOT: List[str] = []  # the process scratch root, once made
 
 
 def stage(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -50,14 +65,26 @@ def stage(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def process_root() -> str:
+    """The process scratch root: made in the temp dir on first use,
+    removed with everything under it when the process exits."""
+    with _LOCK:
+        if not _ROOT:
+            _ROOT.append(tempfile.mkdtemp(prefix="igrid_"))
+            atexit.register(shutil.rmtree, _ROOT[0], True)
+        return _ROOT[0]
+
+
 def scratch_dir(prefix: str) -> str:
     """A fresh temp dir, owned by the innermost open ``checkpoint_scope``
-    (removed when it exits), or by the caller outside any scope."""
-    d = tempfile.mkdtemp(prefix=prefix)
+    (removed when it exits), or outside any scope made under
+    ``process_root`` (removed at exit)."""
     with _LOCK:
-        if _SCOPES:
-            _SCOPES[-1].append(d)
-    return d
+        if not _SCOPES:
+            return tempfile.mkdtemp(prefix=prefix, dir=process_root())
+        d = tempfile.mkdtemp(prefix=prefix)
+        _SCOPES[-1].append(d)
+        return d
 
 
 def pinned_rdd_ids(spark: SparkSession) -> Set[int]:

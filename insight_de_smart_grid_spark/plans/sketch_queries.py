@@ -414,7 +414,7 @@ def q_streaming_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     events, so streamed state must agree exactly with batch."""
     import time
 
-    from insight_de_smart_grid_spark.session import shuffle_width
+    from insight_de_smart_grid_spark.session import query_session
     from insight_de_smart_grid_spark.sources.avro_codec import (
         decode_avro_records,
     )
@@ -427,49 +427,53 @@ def q_streaming_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
         duty_cycle_stream_plan,
     )
+    from insight_de_smart_grid_spark.streaming.replay import state_width
 
-    register_mock_kafka(spark)
-    with shuffle_width(spark, 8):
-        env = (spark.readStream.format("mockkafka")
-               .option("path", f"{sf_dir}/events.parquet")
-               .option("flush_sentinel", "true")
-               .load())
-        # The simple stream source hands each micro-batch over as ONE
-        # partition (driver prefetch), which would serialize the
-        # Arrow-batched Python decode into a single task. Shuffling the
-        # raw envelope first is ~50 bytes/row on the wire and buys
-        # decode parallelism equal to the shuffle width — with a real
-        # Kafka source the topic's partition count does this for free.
-        decoded = decode_avro_records(env.select("value").repartition(8),
-                                      REFERENCE_AVRO_SCHEMA)
-        readings = decoded.select(
-            F.timestamp_millis(F.col("timestamp")).alias("ts"),
-            "house_id", "appliance_id",
-            F.col("power").cast("double").alias("power"))
-        plan = duty_cycle_stream_plan(readings, slide=None)
-        base = scratch_dir("stream_kafka_")
-        # Python stream sources don't support availableNow (Spark falls
-        # back to ONE batch, so the post-watermark emission batch never
-        # runs); drive with a fast processing-time trigger and stop once a
-        # no-data batch has fired after the sentinel (that empty batch is
-        # what emits the finalized windows under the advanced watermark).
-        # The cadence is dead time between the replay's few micro-batches
-        # (the aggregation is slicing-invariant and watermark-gated, so
-        # the result does not depend on it).
-        q = (plan.writeStream.outputMode("append")
-             .format("parquet").option("path", f"{base}/out")
-             .option("checkpointLocation", f"{base}/ckpt")
-             .trigger(processingTime="200 milliseconds").start())
-        deadline = time.time() + 180
-        while time.time() < deadline:
-            time.sleep(0.15)
-            seen = sum(int(p["numInputRows"]) for p in q.recentProgress)
-            last = q.lastProgress
-            if (last is not None and seen > 0
-                    and int(last["numInputRows"]) == 0):
-                break
-        q.stop()
-        q.awaitTermination()
+    path = f"{sf_dir}/events.parquet"
+    width = state_width(path)
+    # Python data sources are registered per session: on the query's own
+    qs = query_session(spark, width)
+    register_mock_kafka(qs)
+    env = (qs.readStream.format("mockkafka")
+           .option("path", path)
+           .option("flush_sentinel", "true")
+           .load())
+    # The simple stream source hands each micro-batch over as ONE
+    # partition (driver prefetch), which would serialize the
+    # Arrow-batched Python decode into a single task. Shuffling the
+    # raw envelope first is ~50 bytes/row on the wire and buys
+    # decode parallelism equal to the state width — with a real
+    # Kafka source the topic's partition count does this for free.
+    decoded = decode_avro_records(env.select("value").repartition(width),
+                                  REFERENCE_AVRO_SCHEMA)
+    readings = decoded.select(
+        F.timestamp_millis(F.col("timestamp")).alias("ts"),
+        "house_id", "appliance_id",
+        F.col("power").cast("double").alias("power"))
+    plan = duty_cycle_stream_plan(readings, slide=None)
+    base = scratch_dir("stream_kafka_")
+    # Python stream sources don't support availableNow (Spark falls
+    # back to ONE batch, so the post-watermark emission batch never
+    # runs); drive with a fast processing-time trigger and stop once a
+    # no-data batch has fired after the sentinel (that empty batch is
+    # what emits the finalized windows under the advanced watermark).
+    # The cadence is dead time between the replay's few micro-batches
+    # (the aggregation is slicing-invariant and watermark-gated, so
+    # the result does not depend on it).
+    q = (plan.writeStream.outputMode("append")
+         .format("parquet").option("path", f"{base}/out")
+         .option("checkpointLocation", f"{base}/ckpt")
+         .trigger(processingTime="200 milliseconds").start())
+    deadline = time.time() + 180
+    while time.time() < deadline:
+        time.sleep(0.15)
+        seen = sum(int(p["numInputRows"]) for p in q.recentProgress)
+        last = q.lastProgress
+        if (last is not None and seen > 0
+                and int(last["numInputRows"]) == 0):
+            break
+    q.stop()
+    q.awaitTermination()
     return (spark.read.parquet(f"{base}/out")
             .filter(F.col("house_id") != "-1"))
 

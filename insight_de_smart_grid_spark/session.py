@@ -1,4 +1,4 @@
-"""SparkSession factory and the one scoped shuffle width.
+"""SparkSession factory and the per-query session.
 
 Defaults are chosen for correctness-vs-DuckDB (UTC session timezone, ANSI off
 so divisions by zero yield NULL like the reference's tolerant pipeline) and for
@@ -11,22 +11,35 @@ environment. These are the only environment variables the package reads:
 * ``SPARK_MASTER_SET``: when set, ``get_spark`` leaves the master to the
   launcher instead of pinning ``local[cpus]``.
 
-``shuffle_width`` is the one place that changes
-``spark.sql.shuffle.partitions`` after the session is built.
+A query that needs its own ``spark.sql.shuffle.partitions`` runs in a
+``query_session``: a child of the caller's session with the engine's
+runtime confs and its own width. The caller's conf never changes, so
+queries on other threads of the same session never see another query's
+width. A child shares the SparkContext, its cached data and its pinned
+blocks, but not the session state: temp views, registered Python data
+sources and ``StreamingQueryListener``s stay with the session that made
+them. ``hand_over`` moves a frame's plan between the two sessions.
+
+Everything the driver JVM writes to its temp dir goes under the process
+scratch root (``operators/staging.py``), which is removed at exit.
 """
 
 from __future__ import annotations
 
 import os
 import threading
-from contextlib import contextmanager
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from insight_de_smart_grid_spark.operators.staging import process_root
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
 # the directory holding the package, for the Python workers' import path
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_width_lock = threading.RLock()  # held by the thread inside a scope
+# query_session's children, by (caller session, width)
+_CHILDREN: "dict[tuple[SparkSession, int], SparkSession]" = {}
+_CHILDREN_LOCK = threading.Lock()
 
 
 def default_parallelism() -> int:
@@ -76,6 +89,8 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
     we inherit it and only apply runtime-settable SQL confs.
     """
     n = shuffle_partitions or default_parallelism()
+    jvm_tmp = os.path.join(process_root(), "jvm")
+    os.makedirs(jvm_tmp, exist_ok=True)
     builder = (
         SparkSession.builder
         .appName(app_name)
@@ -98,6 +113,12 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
+        # the driver JVM's temp files (spark-*, artifacts-*, the native
+        # lz4/snappy libraries, and block managers without
+        # SPARK_LOCAL_DIRS) go under the process scratch root. Pre-JVM
+        # only, like the heap.
+        .config("spark.driver.extraJavaOptions",
+                f"-Djava.io.tmpdir={jvm_tmp}")
     )
     if master:
         builder = builder.master(master)
@@ -172,29 +193,35 @@ def runtime_conf(spark: SparkSession) -> None:
         env["PYTHONPATH"] = os.pathsep.join([_ROOT, *paths])
 
 
-@contextmanager
-def shuffle_width(spark: SparkSession, n: "int | None"):
-    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n`` and
-    restore the previous value on exit. ``None`` leaves the conf alone.
+def query_session(spark: SparkSession, shuffle: int) -> SparkSession:
+    """A child session on ``spark``'s context for a query, with the
+    engine's runtime confs and ``shuffle`` as its
+    ``spark.sql.shuffle.partitions``; ``spark`` itself is left as it was.
+    This is the only code that sets a width after a session is built.
 
-    The width is session-global conf, so a query on another thread would
-    inherit it. Same-thread nesting is fine (each scope restores what it
-    found, innermost first); a second thread entering while another thread
-    holds a scope raises ``RuntimeError`` instead of silently sharing the
-    width."""
-    if n is None:
-        yield
-        return
-    if not _width_lock.acquire(blocking=False):
-        raise RuntimeError(
-            f"shuffle_width: another thread holds a scoped {_SHUFFLE}; "
-            "concurrent queries would share its width")
+    One child per (caller, width) is made and then reused: a session that
+    runs a stream registers a listener bus on the context that is never
+    removed, so a child per query would pile them up, each holding its
+    session. Queries at one width share the child, and with it its confs,
+    temp views and registered data sources."""
+    with _CHILDREN_LOCK:
+        child = _CHILDREN.get((spark, shuffle))
+        if child is None:
+            child = spark.newSession()
+            runtime_conf(child)
+            child.conf.set(_SHUFFLE, str(shuffle))
+            _CHILDREN[(spark, shuffle)] = child
+        return child
+
+
+def hand_over(df: DataFrame, to: SparkSession) -> DataFrame:
+    """``df``'s plan as a frame of session ``to``. The plan passes through
+    a global temp view of a unique name, which is dropped as soon as
+    ``to`` has resolved it, so no view is left behind."""
+    name = f"hand_over_{uuid.uuid4().hex}"
+    df.createGlobalTempView(name)
     try:
-        prev = spark.conf.get(_SHUFFLE)
-        spark.conf.set(_SHUFFLE, str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set(_SHUFFLE, prev)
+        return to.table(
+            f"{to.conf.get('spark.sql.globalTempDatabase')}.{name}")
     finally:
-        _width_lock.release()
+        to.catalog.dropGlobalTempView(name)

@@ -194,7 +194,21 @@ class MockKafkaDataSource(DataSource):
 
 
 def register_mock_kafka(spark) -> None:
-    spark.dataSource.register(MockKafkaDataSource)
+    """Register the source on ``spark``; a session reads only the sources
+    registered on it. Spark checks the name against the thread's active
+    session, which for a ``session.query_session`` is its parent, and
+    refuses a name the parent already has, so ``spark`` is made active
+    for the call."""
+    sessions = spark.sparkContext._jvm.org.apache.spark.sql.SparkSession
+    prev = sessions.getActiveSession()
+    sessions.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(MockKafkaDataSource)
+    finally:
+        if prev.isDefined():
+            sessions.setActiveSession(prev.get())
+        else:
+            sessions.clearActiveSession()
 
 
 # session-lifetime cache of encoded backlogs, keyed by (path, topic,

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 from functools import lru_cache
 from pathlib import Path
 from typing import Callable
@@ -22,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from insight_de_smart_grid_spark.operators.staging import scratch_dir
 from insight_de_smart_grid_spark.session import (
     default_parallelism,
-    shuffle_width,
+    query_session,
 )
 
 # Source rows one state store takes per micro-batch before the stateful
@@ -99,9 +98,8 @@ def parquet_stream_source(spark: SparkSession, parquet_path: str,
     watermark-gated output (outer-join rows, closed windows) —
     regression-tested for both outer joins in tests/test_sketch_topn.py.
 
-    The staging dir and the sentinel's write dir come from
-    ``staging.scratch_dir``, so an enclosing ``checkpoint_scope`` removes
-    them."""
+    The staging dir comes from ``staging.scratch_dir``, so an enclosing
+    ``checkpoint_scope`` removes it."""
     from insight_de_smart_grid_spark.sources.pq import parquet_schema
 
     # resolve the schema from the ORIGINAL path (round-11 optimization):
@@ -119,8 +117,8 @@ def parquet_stream_source(spark: SparkSession, parquet_path: str,
             (staged / src.name).symlink_to(src)
         parquet_path = str(staged)
     if flush_sentinel:
-        _stage_flush_sentinel(spark, parquet_path, sentinel_margin_s,
-                              all_types=sentinel_all_types, schema=schema)
+        _stage_flush_sentinel(parquet_path, sentinel_margin_s,
+                              all_types=sentinel_all_types)
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger",
@@ -128,95 +126,25 @@ def parquet_stream_source(spark: SparkSession, parquet_path: str,
     return reader.load(parquet_path)
 
 
-def _stage_flush_sentinel(spark: SparkSession, staged_dir: str,
-                          margin_s: int, all_types: bool = False,
-                          schema=None) -> None:
-    """Write the watermark-flush sentinel row beside the staged source files.
+def _stage_flush_sentinel(staged_dir: str, margin_s: int,
+                          all_types: bool = False) -> None:
+    """Write the watermark-flush sentinel beside the staged source files:
+    the max-``ts`` row copied, ``ts`` bumped by ``margin_s``, ``user_id``
+    -1, a NULL ``value`` replaced by 0, and with ``all_types`` one row per
+    distinct ``event_type``. It lands in a file with a later mtime than
+    the real data, so mtime-ordered micro-batching processes it last.
 
-    ``ts`` at this layer is whatever the parquet surfaces: a nanos-since-epoch
-    long (legacy reader) gets the margin added in integer nanos; a timestamp
-    (NTZ or LTZ) gets an INTERVAL added — either way the sentinel keeps the
-    source schema bit-identical. It copies the latest real row and lands in a
-    file written AFTER the real data so mtime-ordered micro-batching can never
-    process it first.
+    ``ts`` keeps the source's type and physical encoding: a timestamp gets
+    a duration added, a nanos-since-epoch long gets integer nanos, and an
+    INT96 source (Spark's default timestamp encoding) gets an INT96
+    sentinel, so the sentinel reads back under the replay's pinned schema.
 
-    Round-11 optimization (guide §1.2 "remove passes"/§6): the max-ts row
-    is located from parquet ROW-GROUP STATISTICS and read back as one
-    bounded row-group Arrow read in the driver — replacing a full-scan
-    TakeOrdered Spark job plus a one-row write job per replay with
-    metadata work. That is also the scale-correct algorithm: footer
-    min/max stats bound the work by one row group however large the
-    table. Any surprise (missing stats, nested ts, unexpected type)
-    falls back to the Spark path."""
-    try:
-        _stage_flush_sentinel_arrow(staged_dir, margin_s, all_types)
-    except Exception:
-        _stage_flush_sentinel_spark(spark, staged_dir, margin_s, all_types,
-                                    schema)
-
-
-def _stage_flush_sentinel_spark(spark: SparkSession, staged_dir: str,
-                                margin_s: int, all_types: bool = False,
-                                schema=None) -> None:
-    """Spark-job sentinel staging (see ``_stage_flush_sentinel``): a
-    TakeOrdered scan for the max-``ts`` row plus a one-row write. The
-    fallback for inputs the Arrow path rejects, and the reference its
-    parity test compares against."""
-    from pyspark.sql import functions as F
-
-    batch = (spark.read.schema(schema).parquet(staged_dir) if schema
-             else spark.read.parquet(staged_dir))
-    ts_type = batch.schema["ts"].dataType.typeName()
-    if ts_type in ("long", "bigint"):
-        bumped = (F.col("ts") + F.lit(margin_s * 1_000_000_000)).cast("long")
-    else:
-        bumped = (F.col("ts")
-                  + F.expr(f"INTERVAL {margin_s} SECONDS")).cast(ts_type)
-    sentinel = (batch.orderBy(F.desc("ts")).limit(1)
-                .withColumn("ts", bumped)
-                .withColumn("user_id", F.lit(-1)
-                            .cast(batch.schema["user_id"].dataType)))
-    if "value" in batch.columns:
-        # the sentinel exists only to advance the watermark and is
-        # excluded from every output by the user_id != -1 convention —
-        # but if the copied max-ts row happened to carry a NULL value, a
-        # plan's pre-watermark `value IS NOT NULL` filter would silently
-        # drop the sentinel, stall the watermark at the real maximum, and
-        # lose tail windows (round-8 ADVICE). Coalesce to a constant so
-        # no NULL filter can eat it.
-        sentinel = sentinel.withColumn(
-            "value", F.coalesce(
-                F.col("value"),
-                F.lit(0).cast(batch.schema["value"].dataType)))
-    if all_types and "event_type" in batch.columns:
-        # one sentinel row PER event type: queries that split the stream by
-        # type (stream-stream joins) collect their event-time stats on the
-        # POST-filter branches, so a single-type sentinel advances only the
-        # branch whose filter it passes — the other side's watermark stalls
-        # at its own real maximum and tail outer rows never flush
-        types = batch.select("event_type").distinct()
-        sentinel = sentinel.drop("event_type").crossJoin(types)
-    tmp = scratch_dir("sentinel_")
-    sentinel.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(Path(tmp).glob("part-*.parquet"))
-    dest = Path(staged_dir) / "zz_flush_sentinel.parquet"
-    part.rename(dest)
-    shutil.rmtree(tmp, ignore_errors=True)
-    # the file source orders batches by modification time: land after
-    # every real file
-    now = os.stat(staged_dir).st_mtime + 10
-    os.utime(dest, (now, now))
-
-
-def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
-                                all_types: bool = False) -> None:
-    """Driver-side sentinel staging via parquet footer statistics (see
-    ``_stage_flush_sentinel``). Semantics are identical to the Spark
-    path: copy the max-``ts`` row, bump ``ts`` by ``margin_s``, mark
-    ``user_id`` -1, coalesce a NULL ``value`` to 0, optionally fan out
-    one row per distinct ``event_type``; write after the real files with
-    a later mtime. Raises on anything unexpected — the
-    caller falls back to ``_stage_flush_sentinel_spark``."""
+    All driver-side: the max-``ts`` row group is found from the footer
+    statistics, or, for a row group without them (Spark writes INT96
+    without statistics), from that row group's ``ts`` column; then that
+    one row group is read. No Spark job, and the work is bounded by the
+    row groups however large the table. Raises on input it cannot read
+    (no flat ``ts`` or ``user_id`` column, no rows)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -225,8 +153,9 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
                    if p.suffix == ".parquet" and p.stat().st_size > 0)
     if not files:
         raise ValueError("no parquet files staged")
-    # 1. locate the row group holding the global max ts (metadata only)
-    best = None  # (max_stat, file, rg_index)
+    # 1. locate the row group holding the global max ts
+    best = None  # (max ts, file, rg_index)
+    int96 = False
     for f in files:
         md = _footer(f)
         for rg in range(md.num_row_groups):
@@ -235,18 +164,21 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
                         if rgm.column(ci).path_in_schema == "ts"), None)
             if col is None:
                 raise ValueError("no flat ts column")
+            int96 = int96 or col.physical_type == "INT96"
             st = col.statistics
-            if st is None or not st.has_min_max:
-                raise ValueError("ts statistics missing")
-            if best is None or st.max > best[0]:
-                best = (st.max, f, rg)
+            top = (st.max if st is not None and st.has_min_max
+                   else pc.max(pq.ParquetFile(f).read_row_group(
+                       rg, columns=["ts"]).column(0)).as_py())
+            if top is not None and (best is None or top > best[0]):
+                best = (top, f, rg)
+    if best is None:
+        raise ValueError("no ts values staged")
     _, src, rg = best
     tbl = pq.ParquetFile(src).read_row_group(rg)
     names = tbl.schema.names
     if "user_id" not in names:
         raise ValueError("no user_id column")
-    # 2. one-row slice at the max ts (ties: any max row, same contract as
-    #    the Spark orderBy-desc-limit-1)
+    # 2. one-row slice at the max ts (ties: any max row)
     i = pc.sort_indices(
         tbl.select(["ts"]), sort_keys=[("ts", "descending")])[0].as_py()
     one = tbl.slice(i, 1)
@@ -269,10 +201,17 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
     one = put(one, "user_id",
               pa.array([-1], type=one.schema.field("user_id").type))
     if "value" in names:
+        # a plan's pre-watermark `value IS NOT NULL` filter would drop a
+        # sentinel copied from a NULL-value row, stall the watermark at
+        # the real maximum and lose the tail windows
         vt = one.schema.field("value").type
         one = put(one, "value",
                   pc.coalesce(one.column("value"), pa.scalar(0).cast(vt)))
     if all_types and "event_type" in names:
+        # queries that split the stream by type (stream-stream joins)
+        # track event time per post-filter branch: each branch needs a
+        # sentinel that passes its filter, or its watermark stalls and
+        # its tail outer rows never flush
         et = one.schema.field("event_type").type
         vals = set()
         has_null = False
@@ -285,7 +224,8 @@ def _stage_flush_sentinel_arrow(staged_dir: str, margin_s: int,
             [put(one, "event_type", pa.array([v], type=et)) for v in types])
     # 4. land it after the real data
     dest = Path(staged_dir) / "zz_flush_sentinel.parquet"
-    pq.write_table(one, dest, version="2.6")
+    pq.write_table(one, dest, version="2.6",
+                   use_deprecated_int96_timestamps=int96)
     now = os.stat(staged_dir).st_mtime + 10
     os.utime(dest, (now, now))
 
@@ -325,8 +265,12 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
     ``ROWS_PER_STORE`` rows a micro-batch brings, at most one per core,
     because every store pays a fixed open/commit cost each batch. It only
     takes effect at first start; a restart keeps the width in its
-    checkpoint. The plan (source staging included) is built and run inside
-    ``session.shuffle_width``, so the session conf is restored after.
+    checkpoint. The source and the plan are built and run in a
+    ``session.query_session`` at that width, so the caller's conf never
+    changes and replays on other threads keep their own widths; the sink
+    is read back through the caller's ``spark``. Static frames the plan
+    joins may come from the caller's session. Listeners registered on the
+    caller's session do not see the replay: read ``progress_out``.
 
     ``progress_out``: a caller-supplied list that receives the drained
     query's ``recentProgress`` dicts — the per-micro-batch state-operator
@@ -339,27 +283,27 @@ def replay_parquet_stream(spark: SparkSession, parquet_path: str,
         base = scratch_dir("replay_")
         checkpoint_dir, out_dir = f"{base}/ck", f"{base}/sink"
     parts = list(partition_by) or None
-    with shuffle_width(spark, state_width(parquet_path,
-                                          max_files_per_trigger)):
-        result = plan_fn(parquet_stream_source(
-            spark, parquet_path, flush_sentinel=flush_sentinel,
-            sentinel_margin_s=sentinel_margin_s,
-            max_files_per_trigger=max_files_per_trigger,
-            sentinel_all_types=sentinel_all_types))
-        writer = (result.writeStream.trigger(availableNow=True)
-                  .option("checkpointLocation", checkpoint_dir))
-        if output_mode == "complete":
-            # the file sink only appends; a complete-mode batch holds the
-            # whole result, so it replaces the sink's contents
-            q = writer.foreachBatch(
-                lambda batch, _: batch.write.parquet(
-                    out_dir, mode="overwrite", partitionBy=parts)
-            ).start(outputMode=output_mode, queryName=query_name)
-        else:
-            q = writer.start(out_dir, format="parquet",
-                             outputMode=output_mode, partitionBy=parts,
-                             queryName=query_name)
-        q.awaitTermination()
+    qs = query_session(spark, state_width(parquet_path,
+                                          max_files_per_trigger))
+    result = plan_fn(parquet_stream_source(
+        qs, parquet_path, flush_sentinel=flush_sentinel,
+        sentinel_margin_s=sentinel_margin_s,
+        max_files_per_trigger=max_files_per_trigger,
+        sentinel_all_types=sentinel_all_types))
+    writer = (result.writeStream.trigger(availableNow=True)
+              .option("checkpointLocation", checkpoint_dir))
+    if output_mode == "complete":
+        # the file sink only appends; a complete-mode batch holds the
+        # whole result, so it replaces the sink's contents
+        q = writer.foreachBatch(
+            lambda batch, _: batch.write.parquet(
+                out_dir, mode="overwrite", partitionBy=parts)
+        ).start(outputMode=output_mode, queryName=query_name)
+    else:
+        q = writer.start(out_dir, format="parquet",
+                         outputMode=output_mode, partitionBy=parts,
+                         queryName=query_name)
+    q.awaitTermination()
     if progress_out is not None:
         progress_out.extend(p for p in q.recentProgress if p)
     # the plan's schema: a sink that got no rows reads back empty instead

@@ -1084,8 +1084,10 @@ def test_kmeans_portable_recovers_separated_groups(spark):
 def test_dup_clusters_loop_width_is_data_sized_and_scoped(spark):
     """Round-12 (VERDICT r11 item 1): the convergence loop's shuffle width
     derives from edge count, not core count — a KB-scale pair graph must
-    not schedule core-count tasks per round — and the scoped
-    ``spark.sql.shuffle.partitions`` override is restored afterwards,
+    not schedule core-count tasks per round. The loop runs in its own
+    query session, so the caller's ``spark.sql.shuffle.partitions`` never
+    changes, the labels come back as a frame of the caller's session, and
+    the global temp views that carry the frames across are gone —
     including on a chain-shaped graph that needs several propagation
     rounds."""
     # chain 0-1-2-...-9 (worst-case diameter) plus a dense triangle
@@ -1093,7 +1095,11 @@ def test_dup_clusters_loop_width_is_data_sized_and_scoped(spark):
     tri = [(20, 21), (21, 22), (20, 22)]
     pairs = spark.createDataFrame(chain + tri, "doc_a long, doc_b long")
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    got = sorted(map(tuple, dd.dup_clusters(pairs).collect()))
+    out = dd.dup_clusters(pairs)
+    assert out._jdf.sparkSession().equals(spark._jsparkSession)
+    assert not spark.catalog.listTables(
+        spark.conf.get("spark.sql.globalTempDatabase"))
+    got = sorted(map(tuple, out.collect()))
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert got == [(i, 0) for i in range(10)] + [(i, 20) for i in
                                                  (20, 21, 22)]

@@ -1,12 +1,12 @@
-"""The session module is the one owner of environment reads and of the
-runtime shuffle width: ``shuffle_width`` scopes
-``spark.sql.shuffle.partitions`` (LIFO on one thread, loud on a second),
-and a structural guard keeps env knobs and hand-rolled width set/restore
-copies from coming back anywhere else in the package. A second guard
-keeps temp-dir creation in ``operators/staging.py``, the owner of a
-query's leftovers, and a third keeps streaming writes in the modules
-that own them. ``runtime_conf`` also gives the Python workers the
-package's import path."""
+"""The session module is the one owner of environment reads and of
+session conf: a query that needs its own shuffle width runs in a
+``query_session``, so two replays on two threads keep their own widths
+and the caller's conf never changes. Structural guards keep env knobs,
+conf writes, child sessions and global temp views in ``session.py``. A
+further guard keeps temp-dir creation in ``operators/staging.py``, the
+owner of a query's leftovers, and another keeps streaming writes in the
+modules that own them. ``runtime_conf`` also gives the Python workers
+the package's import path."""
 
 from __future__ import annotations
 
@@ -16,136 +16,132 @@ import re
 import subprocess
 import sys
 import textwrap
-import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
+import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark import session
-from insight_de_smart_grid_spark.session import shuffle_width
-from tests.conftest import REPO, SF_SMOKE
+from insight_de_smart_grid_spark.plans.registry import QUERIES
+from insight_de_smart_grid_spark.sources.tables import events_to_readings
+from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
+    run_stream_over_parquet,
+)
+from insight_de_smart_grid_spark.streaming.replay import state_width
+from tests.conftest import REPO, SF_ORACLE, SF_SMOKE
+from tests.oracle import compare
 
 SHUFFLE = "spark.sql.shuffle.partitions"
 
 
-def _in_thread(fn):
-    """Run ``fn`` on a second thread; return what it raised (or None)."""
-    out = {}
-
-    def run():
-        try:
-            fn()
-        except Exception as exc:  # reported to the caller
-            out["exc"] = exc
-
-    t = threading.Thread(target=run)
-    t.start()
-    t.join(timeout=60)
-    assert not t.is_alive()
-    return out.get("exc")
-
-
-def _enter(spark, n):
-    with shuffle_width(spark, n):
-        pass
-
-
-def test_second_thread_cannot_enter_a_held_scope(spark):
+def test_query_session_leaves_the_caller_alone(spark):
+    """A query session has the engine's runtime confs and its own width;
+    the caller's width stays as it was. Queries at one width reuse one
+    child, so the listener bus each streaming session leaves on the
+    context does not pile up."""
     before = spark.conf.get(SHUFFLE)
-    with shuffle_width(spark, 3):
-        exc = _in_thread(lambda: _enter(spark, 5))
-        assert isinstance(exc, RuntimeError)
-        assert spark.conf.get(SHUFFLE) == "3"  # the holder's width stands
-    assert spark.conf.get(SHUFFLE) == before
-    # released: the other thread may scope the width now
-    assert _in_thread(lambda: _enter(spark, 5)) is None
+    qs = session.query_session(spark, 3)
+    assert session.query_session(spark, 3) is qs
+    assert qs is not spark
+    assert qs.sparkContext is spark.sparkContext
+    assert qs.conf.get(SHUFFLE) == "3"
+    for key in ("spark.sql.ansi.enabled",
+                "spark.sql.legacy.parquet.nanosAsLong",
+                "spark.sql.adaptive.coalescePartitions.minPartitionSize"):
+        assert qs.conf.get(key) == spark.conf.get(key)
     assert spark.conf.get(SHUFFLE) == before
 
 
-def test_contending_threads_never_see_a_foreign_width(spark):
-    """More threads than cores race for the scope: each one that gets in
-    sees only its own width for the whole scope, every other entry fails
-    loudly, and the session width is restored at the end."""
+def test_two_replays_run_at_their_own_widths_at_once(spark):
+    """Two replays of ``streaming_duty_cycle`` on two threads at once,
+    inside the one enclosing ``checkpoint_scope`` of the test: inputs
+    whose state widths differ on this host each run their state at their
+    own width, both equal the oracle, and the caller's width holds during
+    and after."""
+    paths = [f"{sf}/events.parquet"
+             for sf in (SF_ORACLE, Path(SF_ORACLE).with_name("sf0.1"))]
+    widths = [state_width(p) for p in paths]
+    if widths[0] == widths[1]:
+        pytest.skip(f"both inputs take width {widths[0]} on this host")
     before = spark.conf.get(SHUFFLE)
-    held, refused, foreign = [], [], []
+    seen = set()
 
-    def worker(n):
-        for _ in range(20):
-            try:
-                with shuffle_width(spark, n):
-                    held.append(n)
-                    for _ in range(3):
-                        if spark.conf.get(SHUFFLE) != str(n):
-                            foreign.append(n)
-            except RuntimeError:
-                refused.append(n)
+    def replay(path):
+        progress = []
+        out = run_stream_over_parquet(
+            spark, path, events_to_readings, flush_sentinel=True,
+            window="10 minutes", slide="2 minutes", watermark="2 seconds",
+            progress_out=progress)
+        return out.filter(F.col("house_id") != "-1"), progress
 
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-5)
-    try:
-        threads = [threading.Thread(target=worker, args=(n,))
-                   for n in range(2, 18)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=120)
-    finally:
-        sys.setswitchinterval(old)
-    assert not any(t.is_alive() for t in threads)
-    assert not foreign
-    assert len(held) + len(refused) == 16 * 20 and held
-    assert spark.conf.get(SHUFFLE) == before
+    with ThreadPoolExecutor(2) as pool:
+        futures = [pool.submit(replay, p) for p in paths]
+        while not all(f.done() for f in futures):
+            seen.add(spark.conf.get(SHUFFLE))
+            time.sleep(0.05)
+        results = [f.result() for f in futures]
+    assert seen == {before} and spark.conf.get(SHUFFLE) == before
+    for path, width, (out, progress) in zip(paths, widths, results):
+        ops = [op for p in progress for op in p["stateOperators"]]
+        assert ops and {op["numShufflePartitions"] for op in ops} == {width}
+        con = duckdb.connect()
+        con.execute("SET TimeZone='UTC'")
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+        compare(out, con, QUERIES["streaming_duty_cycle"].sql)
+        con.close()
 
 
-def test_nested_scopes_restore_lifo_and_none_is_a_noop(spark):
-    before = spark.conf.get(SHUFFLE)
-    with shuffle_width(spark, 3):
-        with shuffle_width(spark, 5):
-            assert spark.conf.get(SHUFFLE) == "5"
-            with shuffle_width(spark, None):
-                assert spark.conf.get(SHUFFLE) == "5"
-        assert spark.conf.get(SHUFFLE) == "3"
-    assert spark.conf.get(SHUFFLE) == before
-    with shuffle_width(spark, None):
-        # a no-op scope claims nothing another thread could trip on
-        assert _in_thread(lambda: _enter(spark, 5)) is None
-
-
-def test_scope_restores_on_error(spark):
-    before = spark.conf.get(SHUFFLE)
-    with pytest.raises(ValueError):
-        with shuffle_width(spark, 3):
-            raise ValueError("boom")
-    assert spark.conf.get(SHUFFLE) == before
-    assert _in_thread(lambda: _enter(spark, 5)) is None
-
-
-def test_env_knobs_and_shuffle_width_live_in_session():
-    """Only ``session.py`` reads the environment, names a
-    ``SPARK_GRAFT_*`` variable (just ``CPUS`` and ``DRIVER_MEM``) or sets
-    ``spark.sql.shuffle.partitions`` at runtime; everything else goes
-    through ``get_spark`` and ``shuffle_width``."""
-    allowed = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+def _package_hits(visit) -> list:
+    """``visit(node, rel)`` over every AST node of every package module,
+    ``rel`` its path inside the package; the non-empty results."""
+    package = Path(session.__file__).parent
     hits = []
-    for f in sorted(Path(session.__file__).parent.rglob("*.py")):
-        own = f == Path(session.__file__)
+    for f in sorted(package.rglob("*.py")):
+        rel = f.relative_to(package).as_posix()
         for node in ast.walk(ast.parse(f.read_text())):
-            where = f"{f.name}:{getattr(node, 'lineno', '?')}"
-            if isinstance(node, ast.Constant) and isinstance(node.value,
-                                                             str):
-                for name in re.findall(r"SPARK_GRAFT_\w*", node.value):
-                    if not (own and name in allowed):
-                        hits.append(f"{where}:{name}")
-            elif (isinstance(node, ast.Attribute)
-                  and node.attr in ("environ", "getenv") and not own):
-                hits.append(f"{where}:os.{node.attr}")
-            elif (isinstance(node, ast.Call) and not own
-                  and isinstance(node.func, ast.Attribute)
-                  and node.func.attr == "set" and node.args
-                  and isinstance(node.args[0], ast.Constant)
-                  and node.args[0].value == SHUFFLE):
-                hits.append(f"{where}:conf.set({SHUFFLE})")
-    assert not hits
+            hit = visit(node, rel)
+            if hit:
+                hits.append(f"{rel}:{getattr(node, 'lineno', '?')}:{hit}")
+    return hits
+
+
+def test_env_knobs_and_session_conf_live_in_session():
+    """Only ``session.py`` reads the environment, names a
+    ``SPARK_GRAFT_*`` variable (just ``CPUS`` and ``DRIVER_MEM``), sets
+    session conf, makes a child session or touches a global temp view;
+    everything else goes through ``get_spark``, ``query_session`` and
+    ``hand_over``. No module names a ``shuffle_width``: a scope that sets
+    the shared session's width is gone for good."""
+    allowed = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+    owned = {"environ", "getenv", "newSession", "createGlobalTempView",
+             "dropGlobalTempView"}
+
+    def visit(node, rel):
+        if "shuffle_width" in (getattr(node, "id", None),
+                               getattr(node, "attr", None),
+                               getattr(node, "name", None)):
+            return "shuffle_width"
+        if rel == "session.py":
+            return None
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return ",".join(re.findall(r"SPARK_GRAFT_\w*", node.value))
+        if isinstance(node, ast.Attribute) and node.attr in owned:
+            return node.attr
+        if (isinstance(node, ast.Attribute) and node.attr == "set"
+                and isinstance(node.value, ast.Attribute)
+                and node.value.attr == "conf"):
+            return "conf.set"
+        return None
+
+    assert _package_hits(visit) == []
+    own = ast.parse(Path(session.__file__).read_text())
+    names = {n for node in ast.walk(own) if isinstance(node, ast.Constant)
+             and isinstance(node.value, str)
+             for n in re.findall(r"SPARK_GRAFT_\w*", node.value)}
+    assert names <= allowed
 
 
 def scratch_and_pin_knob_sites(package: Path) -> list:
@@ -188,19 +184,15 @@ def test_streams_write_through_their_owners():
     in the session catalog; ``.writeStream`` appears only in the modules
     of ``WRITE_STREAM_OWNERS``. Every other streaming query runs through
     ``replay.replay_parquet_stream``."""
-    package = Path(session.__file__).parent
-    hits = []
-    for f in sorted(package.rglob("*.py")):
-        rel = f.relative_to(package).as_posix()
-        for node in ast.walk(ast.parse(f.read_text())):
-            where = f"{rel}:{getattr(node, 'lineno', '?')}"
-            if isinstance(node, ast.Constant) and node.value == "memory":
-                hits.append(f"{where}:memory")
-            elif (isinstance(node, ast.Attribute)
-                  and node.attr == "writeStream"
-                  and rel not in WRITE_STREAM_OWNERS):
-                hits.append(f"{where}:writeStream")
-    assert not hits
+    def visit(node, rel):
+        if isinstance(node, ast.Constant) and node.value == "memory":
+            return "memory"
+        if (isinstance(node, ast.Attribute) and node.attr == "writeStream"
+                and rel not in WRITE_STREAM_OWNERS):
+            return "writeStream"
+        return None
+
+    assert _package_hits(visit) == []
 
 
 def test_python_workers_import_the_package_from_any_cwd(tmp_path):

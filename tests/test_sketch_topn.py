@@ -371,9 +371,13 @@ def test_observation_metrics_ride_the_same_pass(spark):
     assert got["null_values"] == ev.where(F.col("value").isNull()).count()
 
 
-def test_streaming_listener_captures_progress(spark):
-    """ProgressCapture must see every micro-batch: total numInputRows over
-    the replay equals the source row count (+1 flush sentinel if staged)."""
+def test_streaming_listener_captures_progress(spark, tmp_path):
+    """A replay runs in its own query session, where listeners on the
+    caller's session cannot see it, so its progress comes from
+    ``progress_out``: every micro-batch's input rows (the source plus the
+    flush sentinel) and the state rows of its aggregation.
+    ``ProgressCapture`` still sees every micro-batch of a stream started
+    in the caller's session, such as the upsert compaction."""
     from insight_de_smart_grid_spark.sources.tables import (
         events_to_readings, normalize_event_ts)
     from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
@@ -383,25 +387,34 @@ def test_streaming_listener_captures_progress(spark):
     from insight_de_smart_grid_spark.streaming.replay import (
         replay_parquet_stream,
     )
+    from insight_de_smart_grid_spark.streaming.stream_ops import (
+        upsert_compaction_stream,
+    )
+
+    src = f"{SF_ORACLE}/events.parquet"
+    n_src = spark.read.parquet(src).count()
+    progress = []
+    replay_parquet_stream(
+        spark, src,
+        lambda s: duty_cycle_stream_plan(
+            events_to_readings(normalize_event_ts(s))),
+        query_name="monitored_dc", flush_sentinel=True,
+        progress_out=progress).count()
+    assert sum(p["numInputRows"] for p in progress) >= n_src
+    assert any(op["numRowsTotal"] > 0
+               for p in progress for op in p["stateOperators"]), \
+        "stateful aggregation should report state rows"
 
     cap = ProgressCapture()
     spark.streams.addListener(cap)
     try:
-        replay_parquet_stream(
-            spark, f"{SF_ORACLE}/events.parquet",
-            lambda s: duty_cycle_stream_plan(
-                events_to_readings(normalize_event_ts(s))),
-            query_name="monitored_dc").count()
-        progress = cap.drain()
+        upsert_compaction_stream(spark, src, str(tmp_path / "snap"),
+                                 str(tmp_path / "ck"))
+        captured = cap.drain()
     finally:
         spark.streams.removeListener(cap)
-
-    assert progress, "no progress events captured"
-    n_src = spark.read.parquet(f"{SF_ORACLE}/events.parquet").count()
-    total_in = sum(p["num_input_rows"] for p in progress)
-    assert total_in >= n_src  # sentinel may add one row
-    assert any((p["state_rows"] or 0) > 0 for p in progress), \
-        "stateful aggregation should report state rows"
+    assert captured, "no progress events captured"
+    assert sum(p["num_input_rows"] for p in captured) >= n_src
 
 
 def test_fuzzy_match_matches_oracle(spark, duck):

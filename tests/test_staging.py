@@ -9,12 +9,17 @@
 - every scratch dir (replay checkpoints and sinks, staged sources, index
   roots, ingest slices) created inside it is removed, so a query leaves
   nothing in the temp dir.
+
+Outside any scope the process scratch root owns the dirs, and the driver
+JVM's temp files, until the process exits.
 """
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 import tempfile
+import textwrap
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -23,7 +28,7 @@ from insight_de_smart_grid_spark.operators import dedup, similarity
 from insight_de_smart_grid_spark.operators.staging import (
     checkpoint_scope, pinned_rdd_ids)
 from insight_de_smart_grid_spark.plans.registry import QUERIES
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
 
 def _docs(spark):
@@ -109,13 +114,15 @@ def test_scope_removes_scratch_dirs(spark, tmp_path, monkeypatch):
 def test_nested_scopes_remove_only_their_own_dirs(spark, tmp_path,
                                                   monkeypatch):
     """An inner scope removes only the dirs made inside it; a dir made
-    outside any scope belongs to its caller and survives."""
+    outside any scope goes under the process scratch root and survives
+    both scopes."""
     from insight_de_smart_grid_spark.operators import staging
     from insight_de_smart_grid_spark.operators.staging import scratch_dir
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     assert staging._SCOPES == []  # no scope owns what comes next
     loose = scratch_dir("loose_")
+    assert os.path.dirname(loose) == staging.process_root()
     with checkpoint_scope(spark):
         outer = scratch_dir("outer_")
         with checkpoint_scope(spark):
@@ -145,3 +152,35 @@ def test_scope_owns_dirs_from_contending_threads(spark, tmp_path,
     finally:
         sys.setswitchinterval(interval)
     assert os.listdir(tmp_path) == []
+
+
+def test_queries_without_a_scope_leave_an_empty_temp_dir(tmp_path):
+    """A process that collects two replays through the driver contract's
+    ``queries()``, with no ``checkpoint_scope``, and exits leaves its temp
+    dir empty: the replay dirs, the staged sources and the driver JVM's
+    temp files all went under the process scratch root."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    script = tmp_path / "collect.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(REPO)!r})
+        import __spark_entry__ as entry
+        from insight_de_smart_grid_spark.session import get_spark
+        spark = get_spark(app_name="scratch_root_probe", master="local[1]")
+        print("JVM_TMP", spark.sparkContext._jvm.System.getProperty(
+            "java.io.tmpdir"))
+        for name in ("streaming_topk", "streaming_interval_join"):
+            print(name, len(entry.queries()[name](spark, {SF_SMOKE!r})
+                            .collect()))
+    """))
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("JAVA_TOOL_OPTIONS", "SPARK_LOCAL_DIRS")}
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmp))
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert f"JVM_TMP {tmp}/" in out.stdout
+    assert "streaming_topk" in out.stdout
+    assert os.listdir(tmp) == []
