@@ -318,7 +318,10 @@ def dup_clusters(pairs: DataFrame, max_rounds: int = 15) -> DataFrame:
         edges = edges.coalesce(w)
     # the loop runs in its own session at width w (the caller's conf is
     # left alone); the labels come back to the caller's session, so the
-    # joins a caller puts them in run at the caller's width
+    # joins a caller puts them in run at the caller's width. Explicit
+    # repartition(w, key) calls in the caller's session do not hold the
+    # width: a join re-shuffles a side narrower than the session's width
+    # to that width (and measured slower)
     edges = hand_over(edges, query_session(spark, w))
     # lazy checkpoint: the first round's convergence count is the
     # materializing action, so init costs no job of its own (round-11

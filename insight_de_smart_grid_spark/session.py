@@ -12,8 +12,8 @@ environment. These are the only environment variables the package reads:
   launcher instead of pinning ``local[cpus]``.
 
 A query that needs its own ``spark.sql.shuffle.partitions`` runs in a
-``query_session``: a child of the caller's session with the engine's
-runtime confs and its own width. The caller's conf never changes, so
+``query_session``: a child of the caller's session with the caller's
+current conf and its own width. The caller's conf never changes, so
 queries on other threads of the same session never see another query's
 width. A child shares the SparkContext, its cached data and its pinned
 blocks, but not the session state: temp views, registered Python data
@@ -21,15 +21,18 @@ sources and ``StreamingQueryListener``s stay with the session that made
 them. ``hand_over`` moves a frame's plan between the two sessions.
 
 Everything the driver JVM writes to its temp dir goes under the process
-scratch root (``operators/staging.py``), which is removed at exit.
+scratch root (``operators/staging.py``), which is removed at exit, unless
+the deployment picks the JVM's temp dir itself (``driver_java_options``).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import threading
 import uuid
 
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 
 from insight_de_smart_grid_spark.operators.staging import process_root
@@ -37,8 +40,9 @@ from insight_de_smart_grid_spark.operators.staging import process_root
 _SHUFFLE = "spark.sql.shuffle.partitions"
 # the directory holding the package, for the Python workers' import path
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# query_session's children, by (caller session, width)
-_CHILDREN: "dict[tuple[SparkSession, int], SparkSession]" = {}
+# query_session's children, by (caller session, width), each with the
+# conf last written to it
+_CHILDREN: "dict[tuple[SparkSession, int], tuple[SparkSession, dict]]" = {}
 _CHILDREN_LOCK = threading.Lock()
 
 
@@ -89,8 +93,6 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
     we inherit it and only apply runtime-settable SQL confs.
     """
     n = shuffle_partitions or default_parallelism()
-    jvm_tmp = os.path.join(process_root(), "jvm")
-    os.makedirs(jvm_tmp, exist_ok=True)
     builder = (
         SparkSession.builder
         .appName(app_name)
@@ -113,13 +115,10 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        # the driver JVM's temp files (spark-*, artifacts-*, the native
-        # lz4/snappy libraries, and block managers without
-        # SPARK_LOCAL_DIRS) go under the process scratch root. Pre-JVM
-        # only, like the heap.
-        .config("spark.driver.extraJavaOptions",
-                f"-Djava.io.tmpdir={jvm_tmp}")
     )
+    java_opts = driver_java_options()
+    if java_opts is not None:
+        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     if master:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER_SET"):
@@ -128,6 +127,38 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
     runtime_conf(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_java_options() -> "str | None":
+    """The driver JVM options ``get_spark`` starts the JVM with: the
+    deployment's ``spark.driver.extraJavaOptions`` from the launcher's
+    ``spark-defaults.conf``, then ``-Djava.io.tmpdir`` under the process
+    scratch root, so the JVM's temp files (spark-*, artifacts-*, the
+    native lz4/snappy libraries, and block managers without
+    ``SPARK_LOCAL_DIRS``) are removed at exit. A builder option replaces
+    the file's value, which is why the file's options are carried over.
+    None, leaving the options to the deployment, when it already picks
+    the JVM's temp dir there or in ``JAVA_TOOL_OPTIONS``. Options in
+    ``PYSPARK_SUBMIT_ARGS`` come later on the launcher's command line and
+    still win. Pre-JVM only, like the heap."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__),
+        "conf")
+    opts = ""
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            for line in f:
+                m = re.match(r"spark\.driver\.extraJavaOptions\s*[=:\s]\s*"
+                             r"(.*)", line.strip())
+                if m:
+                    opts = m.group(1)
+    except OSError:
+        pass  # no defaults file: no deployment options to keep
+    if "-Djava.io.tmpdir=" in opts + os.environ.get("JAVA_TOOL_OPTIONS", ""):
+        return None
+    jvm_tmp = os.path.join(process_root(), "jvm")
+    os.makedirs(jvm_tmp, exist_ok=True)
+    return f"{opts} -Djava.io.tmpdir={jvm_tmp}".strip()
 
 
 def runtime_conf(spark: SparkSession) -> None:
@@ -194,23 +225,34 @@ def runtime_conf(spark: SparkSession) -> None:
 
 
 def query_session(spark: SparkSession, shuffle: int) -> SparkSession:
-    """A child session on ``spark``'s context for a query, with the
-    engine's runtime confs and ``shuffle`` as its
-    ``spark.sql.shuffle.partitions``; ``spark`` itself is left as it was.
-    This is the only code that sets a width after a session is built.
+    """A child session on ``spark``'s context for a query: ``spark``'s
+    current conf with ``shuffle`` as its ``spark.sql.shuffle.partitions``;
+    ``spark`` itself is left as it was. This is the only code that sets a
+    width after a session is built.
 
-    One child per (caller, width) is made and then reused: a session that
-    runs a stream registers a listener bus on the context that is never
-    removed, so a child per query would pile them up, each holding its
-    session. Queries at one width share the child, and with it its confs,
-    temp views and registered data sources."""
+    The conf is copied on every call, so what the caller has set by then
+    (a state store provider, say) reaches the query, and what it has
+    unset is unset. One child per (caller, width) is made and then
+    reused: a session that runs a stream registers a listener bus on the
+    context that is never removed, so a child per query would pile them
+    up, each holding its session. Queries at one width share the child,
+    and with it its temp views and registered data sources."""
+    want = {**spark.conf.getAll, _SHUFFLE: str(shuffle)}
     with _CHILDREN_LOCK:
-        child = _CHILDREN.get((spark, shuffle))
+        child, have = _CHILDREN.get((spark, shuffle), (None, None))
         if child is None:
             child = spark.newSession()
-            runtime_conf(child)
-            child.conf.set(_SHUFFLE, str(shuffle))
-            _CHILDREN[(spark, shuffle)] = child
+            have = child.conf.getAll
+        # written as the session builder writes an inherited session's
+        # options: ``conf.set`` refuses a core conf (spark.driver.memory)
+        # that a builder wrote onto the caller
+        jconf = child._jsparkSession.sessionState().conf()
+        for key in have.keys() - want.keys():
+            jconf.unsetConf(key)
+        for key, value in want.items():
+            if have.get(key) != value:
+                jconf.setConfString(key, value)
+        _CHILDREN[(spark, shuffle)] = (child, want)
         return child
 
 

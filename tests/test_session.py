@@ -25,6 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from insight_de_smart_grid_spark import session
+from insight_de_smart_grid_spark.operators.staging import process_root
 from insight_de_smart_grid_spark.plans.registry import QUERIES
 from insight_de_smart_grid_spark.sources.tables import events_to_readings
 from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
@@ -38,13 +39,13 @@ SHUFFLE = "spark.sql.shuffle.partitions"
 
 
 def test_query_session_leaves_the_caller_alone(spark):
-    """A query session has the engine's runtime confs and its own width;
-    the caller's width stays as it was. Queries at one width reuse one
-    child, so the listener bus each streaming session leaves on the
-    context does not pile up."""
+    """A query session has the caller's current conf and its own width;
+    the caller's width stays as it was. A conf the caller sets or unsets
+    after the child was made reaches the child on the next call. Queries
+    at one width reuse one child, so the listener bus each streaming
+    session leaves on the context does not pile up."""
     before = spark.conf.get(SHUFFLE)
     qs = session.query_session(spark, 3)
-    assert session.query_session(spark, 3) is qs
     assert qs is not spark
     assert qs.sparkContext is spark.sparkContext
     assert qs.conf.get(SHUFFLE) == "3"
@@ -52,7 +53,39 @@ def test_query_session_leaves_the_caller_alone(spark):
                 "spark.sql.legacy.parquet.nanosAsLong",
                 "spark.sql.adaptive.coalescePartitions.minPartitionSize"):
         assert qs.conf.get(key) == spark.conf.get(key)
+    key = "spark.sql.streaming.stateStore.providerClass"
+    assert spark.conf.get(key, None) is None
+    spark.conf.set(key, "org.apache.spark.sql.execution.streaming."
+                        "state.RocksDBStateStoreProvider")
+    try:
+        assert session.query_session(spark, 3) is qs
+        assert qs.conf.get(key) == spark.conf.get(key)
+    finally:
+        spark.conf.unset(key)
+    assert session.query_session(spark, 3) is qs
+    assert qs.conf.get(key, None) is None
     assert spark.conf.get(SHUFFLE) == before
+
+
+def test_driver_java_options_keep_the_deployments(tmp_path, monkeypatch):
+    """``get_spark`` starts the driver JVM with the deployment's
+    ``spark.driver.extraJavaOptions`` from ``spark-defaults.conf`` and the
+    scratch tmpdir after them; a deployment that picks the JVM's temp dir
+    itself keeps its options as they are."""
+    defaults = tmp_path / "spark-defaults.conf"
+    defaults.write_text("# deployment\nspark.driver.extraJavaOptions  "
+                        "-XX:+UseG1GC -Dlog4j.configurationFile=l.xml\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    monkeypatch.delenv("JAVA_TOOL_OPTIONS", raising=False)
+    assert session.driver_java_options() == (
+        "-XX:+UseG1GC -Dlog4j.configurationFile=l.xml "
+        f"-Djava.io.tmpdir={process_root()}/jvm")
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-Djava.io.tmpdir=/elsewhere")
+    assert session.driver_java_options() is None
+    monkeypatch.delenv("JAVA_TOOL_OPTIONS")
+    defaults.write_text(
+        "spark.driver.extraJavaOptions=-Djava.io.tmpdir=/elsewhere\n")
+    assert session.driver_java_options() is None
 
 
 def test_two_replays_run_at_their_own_widths_at_once(spark):

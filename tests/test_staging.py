@@ -158,9 +158,14 @@ def test_queries_without_a_scope_leave_an_empty_temp_dir(tmp_path):
     """A process that collects two replays through the driver contract's
     ``queries()``, with no ``checkpoint_scope``, and exits leaves its temp
     dir empty: the replay dirs, the staged sources and the driver JVM's
-    temp files all went under the process scratch root."""
+    temp files all went under the process scratch root. The driver JVM
+    also keeps the deployment's options from ``spark-defaults.conf``."""
     tmp = tmp_path / "tmp"
     tmp.mkdir()
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text(
+        "spark.driver.extraJavaOptions -Digrid.defaults=kept\n")
     script = tmp_path / "collect.py"
     script.write_text(textwrap.dedent(f"""
         import sys
@@ -170,17 +175,21 @@ def test_queries_without_a_scope_leave_an_empty_temp_dir(tmp_path):
         spark = get_spark(app_name="scratch_root_probe", master="local[1]")
         print("JVM_TMP", spark.sparkContext._jvm.System.getProperty(
             "java.io.tmpdir"))
+        print("DEFAULTS", spark.sparkContext._jvm.System.getProperty(
+            "igrid.defaults"))
         for name in ("streaming_topk", "streaming_interval_join"):
             print(name, len(entry.queries()[name](spark, {SF_SMOKE!r})
                             .collect()))
     """))
     env = {k: v for k, v in os.environ.items()
            if k not in ("JAVA_TOOL_OPTIONS", "SPARK_LOCAL_DIRS")}
-    env.update(SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmp))
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmp),
+               SPARK_CONF_DIR=str(conf))
     out = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
                          env=env, capture_output=True, text=True,
                          timeout=600)
     assert out.returncode == 0, out.stderr[-3000:]
     assert f"JVM_TMP {tmp}/" in out.stdout
+    assert "DEFAULTS kept" in out.stdout
     assert "streaming_topk" in out.stdout
     assert os.listdir(tmp) == []

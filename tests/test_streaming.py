@@ -491,6 +491,16 @@ def test_complete_mode_topk_equals_batch(spark):
     assert g == w and len(g) == 5
 
 
+def ran_on_rocksdb(progress) -> bool:
+    """Every state operator in a replay's progress reports the RocksDB
+    provider's own metrics: the provider set on the caller's session
+    reached the replay."""
+    ops = [op for p in progress for op in p["stateOperators"]]
+    return bool(ops) and all(
+        any(k.startswith("rocksdb") for k in op["customMetrics"])
+        for op in ops)
+
+
 def test_rocksdb_state_store_matches_batch(spark):
     """The 100 TB state-store path: the same duty-cycle stream runs under
     the RocksDB provider (bounded-memory, spill-to-disk state — the provider
@@ -501,11 +511,13 @@ def test_rocksdb_state_store_matches_batch(spark):
     rocks = ("org.apache.spark.sql.execution.streaming."
              "state.RocksDBStateStoreProvider")
     spark.conf.set(key, rocks)
+    progress = []
     try:
         stream_out = run_stream_over_parquet(
             spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
             window="10 minutes", slide="2 minutes",
-            watermark="2 seconds")
+            watermark="2 seconds", progress_out=progress)
+        assert ran_on_rocksdb(progress)
         readings = readings_view(spark, SF_SMOKE)
         batch = duty_cycle(readings, window="10 minutes", slide="2 minutes")
         max_ts = readings.agg(F.max("ts")).collect()[0][0]
@@ -532,11 +544,14 @@ def test_rocksdb_state_store_matches_batch_chained_panes(spark):
     rocks = ("org.apache.spark.sql.execution.streaming."
              "state.RocksDBStateStoreProvider")
     spark.conf.set(key, rocks)
+    progress = []
     try:
         stream_out = run_stream_over_parquet(
             spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
             window="10 minutes", slide="2 minutes",
-            watermark="2 seconds", flush_sentinel=True, panes=True)
+            watermark="2 seconds", flush_sentinel=True, panes=True,
+            progress_out=progress)
+        assert ran_on_rocksdb(progress)
         batch = duty_cycle(readings_view(spark, SF_SMOKE),
                            window="10 minutes", slide="2 minutes",
                            panes=True)
