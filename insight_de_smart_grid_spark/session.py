@@ -85,18 +85,16 @@ def default_driver_mem(avail_mb: "int | None" = None) -> str:
 
 
 def get_spark(app_name: str = "insight_de_smart_grid_spark",
-              master: str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+              master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
     ``getOrCreate`` semantics: if the driver harness already created a session
     we inherit it and only apply runtime-settable SQL confs.
     """
-    n = shuffle_partitions or default_parallelism()
     builder = (
         SparkSession.builder
         .appName(app_name)
-        .config(_SHUFFLE, str(n))
+        .config(_SHUFFLE, str(default_parallelism()))
         # local mode runs driver+executors in ONE JVM: the 1g default heap
         # divided by 32 task slots starves sort/window buffers long before
         # the machine does (measured: UNABLE_TO_ACQUIRE_MEMORY on a 1M-row
@@ -132,7 +130,7 @@ def get_spark(app_name: str = "insight_de_smart_grid_spark",
 def driver_java_options() -> "str | None":
     """The driver JVM options ``get_spark`` starts the JVM with: the
     deployment's ``spark.driver.extraJavaOptions`` from the launcher's
-    ``spark-defaults.conf``, then ``-Djava.io.tmpdir`` under the process
+    ``spark-defaults.conf``, then ``-Djava.io.tmpdir`` set to the process
     scratch root, so the JVM's temp files (spark-*, artifacts-*, the
     native lz4/snappy libraries, and block managers without
     ``SPARK_LOCAL_DIRS``) are removed at exit. A builder option replaces
@@ -144,21 +142,16 @@ def driver_java_options() -> "str | None":
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
         os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__),
         "conf")
+    defaults = os.path.join(conf_dir, "spark-defaults.conf")
     opts = ""
-    try:
-        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
-            for line in f:
-                m = re.match(r"spark\.driver\.extraJavaOptions\s*[=:\s]\s*"
-                             r"(.*)", line.strip())
-                if m:
-                    opts = m.group(1)
-    except OSError:
-        pass  # no defaults file: no deployment options to keep
+    if os.path.isfile(defaults):
+        with open(defaults) as f:
+            for m in re.finditer(r"^\s*spark\.driver\.extraJavaOptions"
+                                 r"[=:\s]\s*(.*?)\s*$", f.read(), re.M):
+                opts = m.group(1)  # the last one wins, as in the launcher
     if "-Djava.io.tmpdir=" in opts + os.environ.get("JAVA_TOOL_OPTIONS", ""):
         return None
-    jvm_tmp = os.path.join(process_root(), "jvm")
-    os.makedirs(jvm_tmp, exist_ok=True)
-    return f"{opts} -Djava.io.tmpdir={jvm_tmp}".strip()
+    return f"{opts} -Djava.io.tmpdir={process_root()}".strip()
 
 
 def runtime_conf(spark: SparkSession) -> None:

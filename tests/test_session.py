@@ -79,7 +79,7 @@ def test_driver_java_options_keep_the_deployments(tmp_path, monkeypatch):
     monkeypatch.delenv("JAVA_TOOL_OPTIONS", raising=False)
     assert session.driver_java_options() == (
         "-XX:+UseG1GC -Dlog4j.configurationFile=l.xml "
-        f"-Djava.io.tmpdir={process_root()}/jvm")
+        f"-Djava.io.tmpdir={process_root()}")
     monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-Djava.io.tmpdir=/elsewhere")
     assert session.driver_java_options() is None
     monkeypatch.delenv("JAVA_TOOL_OPTIONS")
