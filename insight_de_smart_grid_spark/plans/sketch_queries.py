@@ -430,33 +430,26 @@ def q_streaming_kafka_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from insight_de_smart_grid_spark.streaming.replay import state_width
 
     path = f"{sf_dir}/events.parquet"
-    width = state_width(path)
     # Python data sources are registered per session: on the query's own
-    qs = query_session(spark, width)
+    qs = query_session(spark, state_width(path))
     register_mock_kafka(qs)
     env = (qs.readStream.format("mockkafka")
            .option("path", path)
            .option("flush_sentinel", "true")
            .load())
-    # The simple stream source hands each micro-batch over as ONE
-    # partition (driver prefetch), which would serialize the
-    # Arrow-batched Python decode into a single task. Shuffling the
-    # raw envelope first is ~50 bytes/row on the wire and buys
-    # decode parallelism equal to the state width — with a real
-    # Kafka source the topic's partition count does this for free.
-    decoded = decode_avro_records(env.select("value").repartition(width),
-                                  REFERENCE_AVRO_SCHEMA)
+    decoded = decode_avro_records(env.select("value"), REFERENCE_AVRO_SCHEMA)
     readings = decoded.select(
         F.timestamp_millis(F.col("timestamp")).alias("ts"),
         "house_id", "appliance_id",
         F.col("power").cast("double").alias("power"))
     plan = duty_cycle_stream_plan(readings, slide=None)
     base = scratch_dir("stream_kafka_")
-    # Python stream sources don't support availableNow (Spark falls
-    # back to ONE batch, so the post-watermark emission batch never
-    # runs); drive with a fast processing-time trigger and stop once a
-    # no-data batch has fired after the sentinel (that empty batch is
-    # what emits the finalized windows under the advanced watermark).
+    # availableNow would stop at the offset latest at the start, which
+    # holds the data but not the sentinel that follows it, so the
+    # post-watermark emission batch would never run; drive with a fast
+    # processing-time trigger instead and stop once a no-data batch has
+    # fired after the sentinel (that empty batch is what emits the
+    # finalized windows under the advanced watermark).
     # The cadence is dead time between the replay's few micro-batches
     # (the aggregation is slicing-invariant and watermark-gated, so
     # the result does not depend on it).

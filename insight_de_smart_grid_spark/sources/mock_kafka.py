@@ -16,27 +16,28 @@ Fidelity choices mirroring the producer (``ingestion/producer_REDD_avro.py``):
 - ``value``: raw Avro datum bytes of schema.avsc (same pure-Python codec the
   roundtrip query proves against the spec).
 - ``key``: house_id bytes; messages assigned to partitions by
-  ``hash(house_id) % n`` — Kafka's keyed-produce contract (SURVEY ST7), so
+  ``md5(house_id) % n`` — Kafka's keyed-produce contract (SURVEY ST7), so
   per-house ordering holds within a partition.
 - ``offset``: contiguous per-partition, in source row order per partition.
 - ``timestamp``: the event time (epoch millis, like the producer sets).
 
-Each Spark input partition maps to one simulated Kafka partition; rows are
-read from the events parquet with pyarrow inside the partition (no driver
-materialization, no JVM round-trip).
+Batch and stream read alike: each Spark input partition is one simulated
+Kafka partition's offset range, read from the events parquet with pyarrow
+and Avro-encoded inside its task (no driver materialization, no JVM
+round-trip). The stream's driver side only counts each partition's
+messages from the ``user_id`` column.
 """
 
 from __future__ import annotations
 
-import os
 from datetime import datetime, timezone
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     DataSourceWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import (
@@ -61,8 +62,45 @@ KAFKA_SOURCE_SCHEMA = StructType([
 
 
 class MockKafkaPartition(InputPartition):
-    def __init__(self, idx: int):
+    """Messages ``[start, end)`` of Kafka partition ``idx``; ``end=None``
+    reads to the end of the log, ``idx=None`` is the flush sentinel."""
+
+    def __init__(self, idx: "int | None", start: int = 0,
+                 end: "int | None" = None):
         self.idx = idx
+        self.start = start
+        self.end = end
+
+
+def _kafka_partitions(uid, n: int):
+    """Each row's Kafka partition: ``md5(house_id) % n``, the keyed produce
+    (SURVEY ST7), hashed once per distinct house. md5, not Python's
+    ``hash()``, which is randomized per process."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    houses = pc.unique(uid)
+    part = pa.array([int(hashlib.md5(str(h).encode()).hexdigest()[:8], 16) % n
+                     for h in houses.to_pylist()], pa.int32())
+    return pc.take(part, pc.index_in(uid, value_set=houses))
+
+
+def _epoch_ms(ts) -> list:
+    """Whole epoch millis of an events ``ts`` column: folded to micros with
+    integer division (matches ``tables.normalize_event_ts``'s ``ts DIV
+    1000`` for nanos), then to ms via the double recipe every oracle uses
+    (``floor(epoch * 1000)``), so both engines round identically."""
+    import math
+
+    import pyarrow as pa
+
+    unit = ts.type.unit if pa.types.is_timestamp(ts.type) else "ns"
+    to_us = {"s": 1_000_000, "ms": 1_000, "us": 1, "ns": None}[unit]
+    return [math.floor((r // 1000 if to_us is None else r * to_us) / 1e6
+                       * 1000)
+            for r in ts.cast(pa.int64()).to_pylist()]
 
 
 class MockKafkaReader(DataSourceReader):
@@ -75,12 +113,6 @@ class MockKafkaReader(DataSourceReader):
         return [MockKafkaPartition(i) for i in range(self.n_partitions)]
 
     def read(self, partition):
-        import hashlib
-        import math
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from insight_de_smart_grid_spark.sources.avro_codec import (
             encode_record,
             parse_flat_record_schema,
@@ -90,42 +122,91 @@ class MockKafkaReader(DataSourceReader):
         )
 
         fields = parse_flat_record_schema(REFERENCE_AVRO_SCHEMA)
+        for house, etype, ms, power, part, offset in self._messages(partition):
+            record = {"house_id": house, "appliance_name": etype,
+                      "appliance_id": f"{house}_{etype}", "timestamp": ms,
+                      "power": power}
+            yield (house.encode(), encode_record(record, fields), self.topic,
+                   part, offset,
+                   datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc), 0)
+
+    def _messages(self, partition):
+        """(house, appliance, epoch ms, power, partition, offset) of each
+        message in ``partition``, in offset order."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if partition.idx is None:
+            # one day beyond the last real event, on partition 0 at
+            # offset -1, keyed by the house "-1" that consumers filter
+            ts = pq.read_table(self.path, columns=["ts"]).column("ts")
+            yield ("-1", "__flush", max(_epoch_ms(ts), default=0) + 86_400_000,
+                   0.0, 0, -1)
+            return
         tbl = pq.read_table(self.path,
                             columns=["ts", "user_id", "event_type", "value"])
-        ts_t = tbl.schema.field("ts").type
-        raw = tbl.column("ts").cast(pa.int64()).to_pylist()
-        unit = ts_t.unit if pa.types.is_timestamp(ts_t) else "ns"
-        # fold to micros with integer division (matches
-        # tables.normalize_event_ts's `ts DIV 1000` for nanos), then to ms
-        # via the double recipe every oracle uses (floor(epoch * 1000)) so
-        # both engines round identically
-        to_us = {"s": 1_000_000, "ms": 1_000, "us": 1, "ns": None}[unit]
-        uid = tbl.column("user_id").to_pylist()
-        etype = tbl.column("event_type").to_pylist()
-        val = tbl.column("value").to_pylist()
+        mine = pc.equal(_kafka_partitions(tbl.column("user_id"),
+                                          self.n_partitions), partition.idx)
+        tbl = tbl.filter(mine)
+        end = tbl.num_rows if partition.end is None else partition.end
+        tbl = tbl.slice(partition.start, end - partition.start)
+        cols = zip(tbl.column("user_id").to_pylist(),
+                   tbl.column("event_type").to_pylist(),
+                   _epoch_ms(tbl.column("ts")),
+                   tbl.column("value").to_pylist())
+        for offset, (uid, etype, ms, val) in enumerate(cols, partition.start):
+            yield str(uid), etype, ms, float(val), partition.idx, offset
 
-        offset = 0
-        for i in range(len(uid)):
-            house = str(uid[i])
-            # deterministic keyed produce (Python's builtin hash() is
-            # per-process randomized — never use it for partitioning)
-            h = int(hashlib.md5(house.encode()).hexdigest()[:8], 16)
-            if h % self.n_partitions != partition.idx:
-                continue
-            us = raw[i] // 1000 if to_us is None else raw[i] * to_us
-            ms = math.floor(us / 1e6 * 1000)
-            record = {
-                "house_id": house,
-                "appliance_name": etype[i],
-                "appliance_id": f"{house}_{etype[i]}",
-                "timestamp": ms,
-                "power": float(val[i]),
-            }
-            yield (house.encode(), encode_record(record, fields),
-                   self.topic, partition.idx, offset,
-                   datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc),
-                   0)
-            offset += 1
+
+class MockKafkaStreamReader(MockKafkaReader, DataSourceStreamReader):
+    """The stream over the same log: an offset is one end offset per Kafka
+    partition plus a ``sentinel`` flag, and each micro-batch reads one
+    partition per Kafka partition that advanced, through the batch
+    reader's ``read``.
+
+    The whole backlog arrives in one micro-batch (the events fixture is
+    not time-ordered; chunked delivery would race the watermark exactly
+    like a real unordered topic). With ``flush_sentinel=true`` the next
+    micro-batch, once the log stops growing, adds one far-future sentinel
+    message that advances the watermark so every real window finalizes,
+    the same replay convention as ``streaming/replay.py``. The sentinel
+    carries house_id "-1"; consumers filter it from RESULTS (never before
+    the watermark, or the flush never happens).
+
+    ``latestOffset`` raises the flag once the last offset planned (by this
+    reader, or the checkpointed one Spark re-plans on a restart) already
+    holds the current ends, so a restart after the flush sends no second
+    sentinel."""
+
+    def __init__(self, options):
+        super().__init__(options)
+        self.flush = options.get("flush_sentinel", "false").lower() == "true"
+        self._planned: "dict | None" = None
+
+    def initialOffset(self):
+        return {"ends": [0] * self.n_partitions, "sentinel": False}
+
+    def latestOffset(self):
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        uid = pq.read_table(self.path, columns=["user_id"]).column("user_id")
+        ends = np.bincount(
+            _kafka_partitions(uid, self.n_partitions).to_numpy(),
+            minlength=self.n_partitions).tolist()
+        prev = self._planned
+        sentinel = self.flush and prev is not None and (
+            prev["sentinel"] or prev["ends"] == ends)
+        self._planned = {"ends": ends, "sentinel": sentinel}
+        return self._planned
+
+    def partitions(self, start, end):
+        self._planned = end
+        parts = [MockKafkaPartition(i, s, e) for i, (s, e)
+                 in enumerate(zip(start["ends"], end["ends"])) if e > s]
+        if end["sentinel"] and not start["sentinel"]:
+            parts.append(MockKafkaPartition(None))
+        return parts
 
 
 class MockKafkaWriter(DataSourceWriter):
@@ -189,7 +270,7 @@ class MockKafkaDataSource(DataSource):
     def writer(self, schema, overwrite):
         return MockKafkaWriter(self.options, schema)
 
-    def simpleStreamReader(self, schema):
+    def streamReader(self, schema):
         return MockKafkaStreamReader(self.options)
 
 
@@ -209,204 +290,3 @@ def register_mock_kafka(spark) -> None:
             sessions.setActiveSession(prev.get())
         else:
             sessions.clearActiveSession()
-
-
-# session-lifetime cache of encoded backlogs, keyed by (path, topic,
-# partitions, fixture content hash) — see MockKafkaStreamReader._rows
-_ENCODED_BACKLOGS: dict[tuple, list] = {}
-
-
-def _private_cache_dir() -> "str | None":
-    """Per-user 0700 cache dir for the encoded backlog, or None (caller
-    skips disk caching) when a safe one can't be guaranteed: the dir must
-    be OWNED by this uid with no group/other access, else another local
-    user could pre-plant or read cache entries."""
-    import stat
-    import tempfile
-
-    uid = os.getuid() if hasattr(os, "getuid") else None
-    if uid is None:
-        return None
-    d = os.path.join(tempfile.gettempdir(), f"mockkafka-{uid}")
-    try:
-        os.makedirs(d, mode=0o700, exist_ok=True)
-        st = os.stat(d)
-        if (st.st_uid != uid or not stat.S_ISDIR(st.st_mode)
-                or (st.st_mode & 0o077)):
-            return None
-        return d
-    except OSError:
-        return None
-
-
-def _write_backlog_parquet(rows: list, path: str) -> None:
-    """Persist the encoded backlog as plain-data parquet (bytes/str/int
-    columns only — unlike pickle, loading it can't execute anything)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = pa.table({
-        "key": pa.array([r[0] for r in rows], pa.binary()),
-        "value": pa.array([r[1] for r in rows], pa.binary()),
-        "topic": pa.array([r[2] for r in rows], pa.string()),
-        "partition": pa.array([r[3] for r in rows], pa.int32()),
-        "offset": pa.array([r[4] for r in rows], pa.int64()),
-        # whole-ms epoch: reconstructed with the same fromtimestamp(ms /
-        # 1000.0) expression the batch reader uses, so the tuples are
-        # value-identical either way
-        "ts_ms": pa.array([round(r[5].timestamp() * 1000) for r in rows],
-                          pa.int64()),
-        "ts_type": pa.array([r[6] for r in rows], pa.int32()),
-    })
-    pq.write_table(tbl, path)
-
-
-def _read_backlog_parquet(path: str) -> list:
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(path)
-    cols = [t.column(c).to_pylist() for c in
-            ("key", "value", "topic", "partition", "offset", "ts_ms",
-             "ts_type")]
-    return [(k, v, tp, p, o,
-             datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc), tt)
-            for k, v, tp, p, o, ms, tt in zip(*cols)]
-
-
-class MockKafkaStreamReader(SimpleDataSourceStreamReader):
-    """Streaming form (SimpleDataSourceStreamReader): Kafka-style positional
-    offsets, checkpoint-restartable. By default one micro-batch delivers the
-    whole backlog (the events fixture is not time-ordered; chunked delivery
-    would race the watermark exactly like a real unordered topic) followed,
-    when ``flush_sentinel=true``, by one far-future sentinel message that
-    advances the watermark so every real window finalizes — the same
-    replay convention as ``streaming/replay.py``. The sentinel carries
-    house_id "-1"; consumers filter it from RESULTS (never before the
-    watermark, or the flush never happens).
-
-    Runs on the driver by API contract (simulation feed, like the REDD
-    stream reader); the batch reader is the parallel path.
-    """
-
-    def __init__(self, options):
-        self.options = options
-        self._cache: list | None = None
-
-    def _rows(self) -> list:
-        if self._cache is None:
-            # The encoded backlog is deterministic in (fixture content,
-            # topic, partition count); cache it across stream starts so
-            # each invocation pays the pure-Python avro encode once per
-            # fixture — a real broker already holds the produced
-            # messages, so re-encoding per query start measured harness,
-            # not engine (latestOffset 1.77 s -> ~0.15 s on the sf0.1
-            # fixture). Spark 4 runs this reader in a fresh Python worker
-            # process per query, so the cache must live on DISK (an
-            # in-process dict never survives to the next invocation).
-            #
-            # Trust boundary: the cache dir is USER-PRIVATE (0700, owner-
-            # checked — a world-writable shared path would let another
-            # local user pre-plant the cache), the on-disk format is
-            # parquet (pure data — never unpickle from a shared tmpfs),
-            # and the key is a CONTENT hash of the fixture bytes (an
-            # in-place rewrite with preserved mtime still misses).
-            key = self._cache_key()
-            if key not in _ENCODED_BACKLOGS:
-                cache_dir = _private_cache_dir()
-                cache = (os.path.join(cache_dir, f"backlog_{key}.parquet")
-                         if cache_dir else None)
-                if cache and os.path.exists(cache):
-                    _ENCODED_BACKLOGS[key] = _read_backlog_parquet(cache)
-                else:
-                    batch = MockKafkaReader(self.options)
-                    rows = []
-                    for p in batch.partitions():
-                        rows.extend(batch.read(p))
-                    _ENCODED_BACKLOGS[key] = rows
-                    if cache:
-                        tmp = cache + f".tmp{os.getpid()}"
-                        _write_backlog_parquet(rows, tmp)
-                        os.replace(tmp, cache)  # atomic vs concurrent
-            self._cache = _ENCODED_BACKLOGS[key]
-        return self._cache
-
-    def _cache_key(self) -> str:
-        import hashlib
-
-        path = self.options["path"]
-        h = hashlib.md5()
-        if os.path.isfile(path):
-            with open(path, "rb") as f:
-                for chunk in iter(lambda: f.read(1 << 20), b""):
-                    h.update(chunk)
-        elif os.path.isdir(path):
-            # Directory-shaped parquet datasets (Spark-written) get a
-            # freshness component too (round-7 advisory): fold every
-            # entry's (relpath, size, mtime_ns) so a rewritten fixture at
-            # the same path misses the stale cache. Content-hashing the
-            # files would be exact but costs a full re-read per session;
-            # size+mtime_ns is the same contract filesystems/rsync use.
-            # determinism comes from sorting the fully-exhausted walk list
-            # (mutating `dirs` after sorted() has drained the generator
-            # cannot reorder anything — round-8 advisory removed it); the
-            # NUL terminator makes the fold injective even for pathological
-            # filenames containing '|'
-            for root, dirs, files in sorted(os.walk(path)):
-                for name in sorted(files):
-                    fp = os.path.join(root, name)
-                    try:
-                        st = os.stat(fp)
-                        h.update(f"{os.path.relpath(fp, path)}|{st.st_size}"
-                                 f"|{st.st_mtime_ns}".encode() + b"\x00")
-                    except OSError:
-                        continue
-        key_src = "|".join((
-            path, self.options.get("topic", "power-raw"),
-            self.options.get("partitions", "4"), h.hexdigest(),
-        ))
-        return hashlib.md5(key_src.encode()).hexdigest()
-
-    def _sentinel_row(self):
-        from insight_de_smart_grid_spark.sources.avro_codec import (
-            encode_record,
-            parse_flat_record_schema,
-        )
-        from insight_de_smart_grid_spark.sources.files import (
-            REFERENCE_AVRO_SCHEMA,
-        )
-
-        rows = self._rows()
-        max_ms = max((int(r[5].timestamp() * 1000) for r in rows),
-                     default=0)
-        ms = max_ms + 86_400_000  # one day beyond the last real event
-        fields = parse_flat_record_schema(REFERENCE_AVRO_SCHEMA)
-        record = {"house_id": "-1", "appliance_name": "__flush",
-                  "appliance_id": "-1___flush", "timestamp": ms,
-                  "power": 0.0}
-        return (b"-1", encode_record(record, fields),
-                self.options.get("topic", "power-raw"), 0, -1,
-                datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc), 0)
-
-    def initialOffset(self):
-        return {"pos": 0, "sentinel": False}
-
-    def read(self, start):
-        rows = self._rows()
-        i = int(start["pos"])
-        if i < len(rows):
-            # data batches return LISTS: the prefetch cache copy.copy()s
-            # the value for checkpoint replay (generator state can't copy)
-            return rows[i:], {"pos": len(rows), "sentinel": False}
-        want_sentinel = (self.options.get("flush_sentinel", "false").lower()
-                         == "true")
-        if want_sentinel and not start.get("sentinel"):
-            return [self._sentinel_row()], {"pos": i, "sentinel": True}
-        # the idle branch must be an ITERATOR: with no offset advance the
-        # wrapper probes emptiness via next(), which a list doesn't support
-        return iter(()), start
-
-    def readBetweenOffsets(self, start, end):
-        rows = self._rows()[int(start["pos"]):int(end["pos"])]
-        if end.get("sentinel") and not start.get("sentinel"):
-            rows = rows + [self._sentinel_row()]
-        return rows

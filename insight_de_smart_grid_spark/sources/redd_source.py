@@ -7,8 +7,9 @@ a first-class source: ``spark.read.format("redd").load(dir)`` scans every
 ``house_*/channel_*.dat`` in parallel (one input partition per file — file-
 level parallelism is the natural unit; a 1000-executor cluster reads 1000
 files at once), and ``spark.readStream.format("redd")`` replays the same
-files incrementally with checkpointable offsets (pending files drain per
-micro-batch — the event-time replay source, SURVEY ST6, as a real source
+files incrementally with checkpointable offsets (each micro-batch reads the
+files that arrived since the last one, one partition per file, through the
+batch reader — the event-time replay source, SURVEY ST6, as a real source
 instead of a harness helper).
 
 Dirty-data policy matches the producer exactly (non-numeric power -> 0.0,
@@ -27,8 +28,8 @@ from pathlib import Path
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import (
     DoubleType,
@@ -105,47 +106,29 @@ class ReddBatchReader(DataSourceReader):
         yield from _parse_file(partition.path)
 
 
-class ReddStreamReader(SimpleDataSourceStreamReader):
+class ReddStreamReader(ReddBatchReader, DataSourceStreamReader):
     """Incremental replay with BY-NAME offsets: the offset records the
-    sorted list of consumed file paths (relative to the root), so a
+    sorted list of files (relative to the root) read so far, so a
     late-arriving file is picked up on the next trigger regardless of where
     it sorts — a count-based offset would silently skip a file that sorts
     into the consumed prefix and re-emit ones after it. Offsets are plain
     JSON; checkpoints restart exactly where they stopped.
 
-    Scale note: SimpleDataSourceStreamReader runs on the driver by API
-    contract (Spark ships rows from here), so this replay path is for
-    low-volume simulation feeds — the reference's producer role. The
-    partition-per-file BATCH reader is the parallel scale path."""
-
-    def __init__(self, options):
-        self.root = options.get("path")
-        if not self.root:
-            raise ValueError("redd source requires a path")
-
-    def _rel(self, p: str) -> str:
-        return str(Path(p).relative_to(self.root))
+    A micro-batch reads one partition per file named in its end offset
+    but not in its start, through the batch reader's ``read``, so new
+    files are parsed in parallel; the driver only lists names."""
 
     def initialOffset(self):
         return {"consumed": []}
 
-    def read(self, start):
-        # materialized list, not a generator: the prefetch cache copies the
-        # returned iterator (copy.copy) for checkpoint replay
-        seen = set(start["consumed"])
-        pending = [p for p in _list_channel_files(self.root)
-                   if self._rel(p) not in seen]
-        if not pending:
-            return [], start
-        rows = [r for p in pending for r in _parse_file(p)]
-        consumed = sorted(seen | {self._rel(p) for p in pending})
-        return rows, {"consumed": consumed}
+    def latestOffset(self):
+        return {"consumed": [str(Path(p).relative_to(self.root))
+                             for p in _list_channel_files(self.root)]}
 
-    def readBetweenOffsets(self, start, end):
-        new = set(end["consumed"]) - set(start["consumed"])
-        for p in _list_channel_files(self.root):
-            if self._rel(p) in new:
-                yield from _parse_file(p)
+    def partitions(self, start, end):
+        seen = set(start["consumed"])
+        return [_ReddFilePartition(str(Path(self.root) / rel))
+                for rel in end["consumed"] if rel not in seen]
 
 
 class ReddDataSource(DataSource):
@@ -159,5 +142,5 @@ class ReddDataSource(DataSource):
     def reader(self, schema):
         return ReddBatchReader(self.options)
 
-    def simpleStreamReader(self, schema):
+    def streamReader(self, schema):
         return ReddStreamReader(self.options)

@@ -25,6 +25,10 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from insight_de_smart_grid_spark.operators.timeseries import (
+    gap_fill_oracle_sql,
+    interpolate_gaps_oracle_sql,
+)
 from insight_de_smart_grid_spark.streaming.stateful import keyed_state
 
 OUT_SCHEMA = ("key long, bucket_ts timestamp, value double, "
@@ -81,29 +85,10 @@ def gap_fill_stream(events_stream: DataFrame,
 def gap_fill_stream_oracle_sql(bucket: str = "hour") -> str:
     """Batch gap fill minus each key's final (still-open) bucket."""
     return f"""
-WITH observed AS (
-  SELECT user_id AS key, date_trunc('{bucket}', ts) AS bucket_ts,
-         round(avg(value), 6) AS obs_value
-  FROM events GROUP BY 1, 2
-), spans AS (
-  SELECT key, min(bucket_ts) AS first_ts, max(bucket_ts) AS last_ts
-  FROM observed GROUP BY 1
-), grid AS (
-  SELECT key, unnest(generate_series(first_ts, last_ts,
-                                     INTERVAL 1 {bucket})) AS bucket_ts
-  FROM spans
-), filled AS (
-  SELECT g.key, CAST(g.bucket_ts AS TIMESTAMP) AS bucket_ts,
-         last_value(o.obs_value IGNORE NULLS)
-             OVER (PARTITION BY g.key ORDER BY g.bucket_ts
-                   ROWS UNBOUNDED PRECEDING) AS value,
-         o.obs_value IS NOT NULL AS is_observed
-  FROM grid g LEFT JOIN observed o
-    ON g.key = o.key AND g.bucket_ts = o.bucket_ts
+WITH filled AS ({gap_fill_oracle_sql(bucket)}), cut AS (
+  SELECT *, max(bucket_ts) OVER (PARTITION BY key) AS last_ts FROM filled
 )
-SELECT f.* FROM filled f
-JOIN spans s ON f.key = s.key
-WHERE f.bucket_ts < s.last_ts
+SELECT key, bucket_ts, value, is_observed FROM cut WHERE bucket_ts < last_ts
 """
 
 
@@ -240,55 +225,14 @@ def interpolate_stream_oracle_sql(bucket: str = "hour") -> str:
     """Batch linear interpolation cut at each key's second-largest observed
     bucket (the last one the stream can close)."""
     return f"""
-WITH observed AS (
-  SELECT user_id AS key, date_trunc('{bucket}', ts) AS bucket_ts,
-         round(avg(value), 6) AS obs_value
-  FROM events GROUP BY 1, 2
-), spans AS (
-  SELECT key, min(bucket_ts) AS first_ts, max(bucket_ts) AS last_ts
-  FROM observed GROUP BY 1
+WITH filled AS ({interpolate_gaps_oracle_sql(bucket)}), observed AS (
+  SELECT key, bucket_ts,
+         max(bucket_ts) OVER (PARTITION BY key) AS last_ts
+  FROM filled WHERE is_observed
 ), cutoff AS (
   SELECT key, max(bucket_ts) AS second_last
-  FROM observed o
-  WHERE bucket_ts < (SELECT max(bucket_ts) FROM observed o2
-                     WHERE o2.key = o.key)
-  GROUP BY 1
-), grid AS (
-  SELECT key, unnest(generate_series(first_ts, last_ts,
-                                     INTERVAL 1 {bucket})) AS bucket_ts
-  FROM spans
-), joined AS (
-  SELECT g.key, g.bucket_ts, o.obs_value,
-         CASE WHEN o.obs_value IS NOT NULL THEN g.bucket_ts END AS obs_ts
-  FROM grid g LEFT JOIN observed o
-    ON g.key = o.key AND g.bucket_ts = o.bucket_ts
-), walls AS (
-  SELECT key, bucket_ts, obs_value,
-         last_value(obs_value IGNORE NULLS)
-             OVER (PARTITION BY key ORDER BY bucket_ts
-                   ROWS UNBOUNDED PRECEDING) AS prev_v,
-         last_value(obs_ts IGNORE NULLS)
-             OVER (PARTITION BY key ORDER BY bucket_ts
-                   ROWS UNBOUNDED PRECEDING) AS prev_t,
-         first_value(obs_value IGNORE NULLS)
-             OVER (PARTITION BY key ORDER BY bucket_ts
-                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-             AS next_v,
-         first_value(obs_ts IGNORE NULLS)
-             OVER (PARTITION BY key ORDER BY bucket_ts
-                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-             AS next_t
-  FROM joined
+  FROM observed WHERE bucket_ts < last_ts GROUP BY 1
 )
-SELECT w.key, CAST(w.bucket_ts AS TIMESTAMP) AS bucket_ts,
-       CASE WHEN obs_value IS NOT NULL THEN obs_value
-            ELSE floor((prev_v + (next_v - prev_v)
-                        * (CAST(epoch(w.bucket_ts) - epoch(prev_t) AS DOUBLE)
-                           / CAST(epoch(next_t) - epoch(prev_t) AS DOUBLE)))
-                       * 1000000.0) / 1000000.0
-       END AS value,
-       obs_value IS NOT NULL AS is_observed
-FROM walls w
-JOIN cutoff c ON w.key = c.key
-WHERE w.bucket_ts <= c.second_last
+SELECT f.* FROM filled f JOIN cutoff c ON f.key = c.key
+WHERE f.bucket_ts <= c.second_last
 """

@@ -10,13 +10,12 @@ from __future__ import annotations
 from insight_de_smart_grid_spark.plans.registry import QUERIES
 
 NO_TEST = "no test value-checks it on planted rows"
+ORDERLESS = ("every sf0.01 customer has an order; tests/test_star_queries.py"
+             "::test_orderless_customer_oracles_on_planted_rows plants two")
 EMPTY_AT_SF001 = {
-    "star_customers_without_orders_anti":
-        f"every sf0.01 customer has an order; {NO_TEST}",
-    "star_setops_except":
-        f"every sf0.01 customer has an order; {NO_TEST}",
-    "star_sales_opportunity":
-        f"every sf0.01 customer has an order; {NO_TEST}",
+    "star_customers_without_orders_anti": ORDERLESS,
+    "star_setops_except": ORDERLESS,
+    "star_sales_opportunity": ORDERLESS,
     "dedup_embedding_cosine":
         "no sf0.01 pair reaches cosine 0.95; tests/test_extensions.py::"
         "test_embedding_cosine_pairs_find_planted_dups checks the blocked "

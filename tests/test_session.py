@@ -177,29 +177,48 @@ def test_env_knobs_and_session_conf_live_in_session():
     assert names <= allowed
 
 
+TEMP_DIR_CALLS = {"mkdtemp", "gettempdir"}
+
+
 def scratch_and_pin_knob_sites(package: Path) -> list:
-    """``mkdtemp`` references outside ``operators/staging.py`` and
-    ``materialize`` parameters anywhere in ``package``."""
+    """``mkdtemp`` and ``gettempdir`` references outside
+    ``operators/staging.py`` and ``materialize`` parameters anywhere in
+    ``package``."""
     hits = []
     for f in sorted(package.rglob("*.py")):
         own = f == package / "operators" / "staging.py"
         for node in ast.walk(ast.parse(f.read_text())):
             where = f"{f.name}:{getattr(node, 'lineno', '?')}"
-            if not own and (
-                    isinstance(node, ast.Attribute) and node.attr == "mkdtemp"
-                    or isinstance(node, ast.alias) and node.name == "mkdtemp"):
-                hits.append(f"{where}:mkdtemp")
+            name = (node.attr if isinstance(node, ast.Attribute)
+                    else node.name if isinstance(node, ast.alias) else None)
+            if not own and name in TEMP_DIR_CALLS:
+                hits.append(f"{where}:{name}")
             elif isinstance(node, ast.arg) and node.arg == "materialize":
                 hits.append(f"{where}:materialize")
     return hits
 
 
 def test_scratch_dirs_and_pins_have_one_owner():
-    """Only ``operators/staging.py`` makes temp dirs: everything else asks
-    ``scratch_dir``, which hands the dir to the open ``checkpoint_scope``.
-    No function takes a ``materialize`` switch: staging always pins, and
-    the scope releases."""
+    """Only ``operators/staging.py`` makes temp dirs or names the system
+    temp dir: everything else asks ``scratch_dir``, which hands the dir to
+    the open ``checkpoint_scope``. No function takes a ``materialize``
+    switch: staging always pins, and the scope releases."""
     assert scratch_and_pin_knob_sites(Path(session.__file__).parent) == []
+
+
+def test_python_sources_stream_through_partitions():
+    """No package source subclasses ``SimpleDataSourceStreamReader``,
+    which builds every micro-batch on the driver and hands Spark one
+    partition: a Python stream reader plans partitions like its batch
+    reader and reads them in tasks."""
+    def visit(node, rel):
+        if "SimpleDataSourceStreamReader" in (getattr(node, "id", None),
+                                              getattr(node, "attr", None),
+                                              getattr(node, "name", None)):
+            return "SimpleDataSourceStreamReader"
+        return None
+
+    assert _package_hits(visit) == []
 
 
 # the modules that start a streaming write, and what each one starts

@@ -192,28 +192,65 @@ def test_redd_datasource_batch(spark, tmp_path):
     assert df.rdd.getNumPartitions() == 3
 
 
+def _replay_to_sink(spark, fmt, path, base, **options):
+    """Start a stream of ``fmt`` over ``path`` into the parquet sink and
+    checkpoint under ``base``, run it until the source has nothing new,
+    and return the input rows of each micro-batch it ran."""
+    reader = spark.readStream.format(fmt)
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    q = (reader.load(path).writeStream.format("parquet")
+         .option("path", f"{base}/out")
+         .option("checkpointLocation", f"{base}/ckpt")
+         .trigger(processingTime="100 milliseconds").start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return [int(p["numInputRows"]) for p in q.recentProgress]
+
+
 def test_redd_datasource_stream_replays_incrementally(spark, tmp_path):
-    import uuid
+    """The stream reads what the batch reader reads; a file that arrives
+    later is read alone on the next start, and a restart from the
+    checkpointed offset re-reads nothing."""
+    import os
 
     from insight_de_smart_grid_spark.sources.redd_source import ReddDataSource
 
-    _write_redd_fixture(str(tmp_path))
+    root = str(tmp_path / "redd")
+    _write_redd_fixture(root)
     spark.dataSource.register(ReddDataSource)
-    name = f"redd_{uuid.uuid4().hex[:8]}"
-    q = (spark.readStream.format("redd").load(str(tmp_path))
-         .writeStream.format("memory").queryName(name)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.table(name).collect()
-    batch = spark.read.format("redd").load(str(tmp_path)).collect()
-    assert {tuple(r) for r in got} == {tuple(r) for r in batch}
-    assert len(got) == 6
-    # a restart from the checkpointed offset re-reads nothing
-    q2 = (spark.readStream.format("redd").load(str(tmp_path))
-          .writeStream.format("memory").queryName(name + "_b")
-          .trigger(availableNow=True).start())
-    q2.awaitTermination()
-    assert spark.table(name + "_b").count() in (0, 6)
+    base = str(tmp_path / "run")
+    assert sum(_replay_to_sink(spark, "redd", root, base)) == 6
+    got = spark.read.parquet(f"{base}/out").collect()
+    batch = spark.read.format("redd").load(root).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, batch))
+
+    with open(os.path.join(root, "house_2", "channel_2.dat"), "w") as fh:
+        fh.write("1303132929 3.5\n1303132930 4.5\n")
+    assert sum(_replay_to_sink(spark, "redd", root, base)) == 2
+    assert sum(_replay_to_sink(spark, "redd", root, base)) == 0
+    assert spark.read.parquet(f"{base}/out").count() == 8
+
+
+def test_redd_stream_plans_one_partition_per_new_file(tmp_path):
+    """A micro-batch's partitions are the files its end offset names and
+    its start does not, whatever order they sort in."""
+    from insight_de_smart_grid_spark.sources.redd_source import (
+        ReddStreamReader,
+    )
+
+    _write_redd_fixture(str(tmp_path))
+    r = ReddStreamReader({"path": str(tmp_path)})
+    first = r.latestOffset()
+    assert len(r.partitions(r.initialOffset(), first)) == 3
+    (tmp_path / "house_0").mkdir()
+    (tmp_path / "house_0" / "channel_1.dat").write_text("1303132929 1.0\n")
+    second = r.latestOffset()
+    assert [p.path for p in r.partitions(first, second)] == [
+        str(tmp_path / "house_0" / "channel_1.dat")]
+    assert r.partitions(second, r.latestOffset()) == []
 
 
 def test_redd_datasource_matches_csv_reader_on_dirty_file(spark, tmp_path):
@@ -346,106 +383,72 @@ def test_kafka_batch_produce_roundtrip_via_mock(spark, tmp_path):
          .option("capture_dir", cap).mode("append").save())
 
 
-def test_mockkafka_backlog_cache_is_private_and_non_executable(tmp_path,
-                                                               monkeypatch):
-    """The stream reader's disk cache contract (round-6 advisory): the
-    cache dir is per-user 0700 and OWNERSHIP-checked (a pre-planted dir
-    owned by another uid, or one with group/other access, disables disk
-    caching entirely rather than trusting it), the format is parquet
-    (pure data — loading it cannot execute anything, unlike pickle), and
-    the roundtrip preserves the envelope tuples exactly, including the
-    whole-ms UTC timestamps."""
-    import os
-    import stat
-    from datetime import datetime, timezone
-
-    from insight_de_smart_grid_spark.sources import mock_kafka as mk
-
-    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
-    d = mk._private_cache_dir()
-    assert d is not None and d.startswith(str(tmp_path))
-    st = os.stat(d)
-    assert stat.S_ISDIR(st.st_mode)
-    assert st.st_uid == os.getuid()
-    assert st.st_mode & 0o077 == 0  # no group/other access
-
-    # loosened permissions must disable disk caching, not be trusted
-    os.chmod(d, 0o755)
-    assert mk._private_cache_dir() is None
-    os.chmod(d, 0o700)
-    assert mk._private_cache_dir() == d
-
-    rows = [
-        (b"1", b"\x02abc", "power-raw", 0, 0,
-         datetime.fromtimestamp(1_700_000_000_123 / 1000.0,
-                                tz=timezone.utc), 0),
-        (b"2", b"", "power-raw", 3, 17,
-         datetime.fromtimestamp(1 / 1000.0, tz=timezone.utc), 0),
-    ]
-    p = os.path.join(d, "roundtrip.parquet")
-    mk._write_backlog_parquet(rows, p)
-    assert mk._read_backlog_parquet(p) == rows
+KAFKA_COLUMNS = ("key", "value", "topic", "partition", "offset",
+                 "timestamp", "timestampType")
 
 
-def test_mockkafka_cache_key_tracks_fixture_content(tmp_path):
-    """The cache key hashes fixture CONTENT: rewriting the file in place
-    (even with a preserved mtime) changes the key; topic/partition options
-    are part of the key too."""
-    import os
+def _kafka_rows(df):
+    return sorted(tuple(r[c] for c in KAFKA_COLUMNS) for r in df.collect())
 
+
+def test_mockkafka_stream_reads_what_the_batch_reads(spark, tmp_path):
+    """The stream's messages are the batch read's, column for column; the
+    flush sentinel comes only with ``flush_sentinel=true``, alone, in the
+    micro-batch after the data; and a restart on the same checkpoint and
+    sink adds nothing, the sentinel included."""
+    from pyspark.sql import functions as F
+
+    from insight_de_smart_grid_spark.sources.mock_kafka import (
+        register_mock_kafka,
+    )
+    from tests.conftest import SF_SMOKE
+
+    register_mock_kafka(spark)
+    path = f"{SF_SMOKE}/events.parquet"
+    batch = _kafka_rows(spark.read.format("mockkafka")
+                        .option("path", path).load())
+    assert len(batch) == 1000
+
+    plain = str(tmp_path / "plain")
+    assert _replay_to_sink(spark, "mockkafka", path, plain)[0] == 1000
+    assert _kafka_rows(spark.read.parquet(f"{plain}/out")) == batch
+
+    flush = str(tmp_path / "flush")
+    rows = _replay_to_sink(spark, "mockkafka", path, flush,
+                           flush_sentinel="true")
+    assert [n for n in rows if n] == [1000, 1]
+    out = spark.read.parquet(f"{flush}/out")
+    sentinel = out.where(F.col("key") == F.lit(b"-1"))
+    assert sentinel.count() == 1
+    assert _kafka_rows(out.where(F.col("key") != F.lit(b"-1"))) == batch
+    s = sentinel.first()
+    assert (s.partition, s.offset) == (0, -1)
+    assert s.timestamp > max(r[5] for r in batch)
+
+    assert sum(_replay_to_sink(spark, "mockkafka", path, flush,
+                               flush_sentinel="true")) == 0
+    assert spark.read.parquet(f"{flush}/out").count() == 1001
+
+
+def test_mockkafka_stream_plans_one_partition_per_kafka_partition():
+    """The data micro-batch has one input partition per Kafka partition,
+    each the offset range its log advanced by; the sentinel's micro-batch
+    has the sentinel alone, and after it nothing is planned."""
     from insight_de_smart_grid_spark.sources.mock_kafka import (
         MockKafkaStreamReader,
     )
+    from tests.conftest import SF_SMOKE
 
-    f = tmp_path / "events.parquet"
-    f.write_bytes(b"one")
-    st = os.stat(f)
-
-    def key(**over):
-        opts = {"path": str(f), "topic": "t", "partitions": "4", **over}
-        return MockKafkaStreamReader(opts)._cache_key()
-
-    k1 = key()
-    assert k1 == key()  # deterministic
-    f.write_bytes(b"two")
-    os.utime(f, (st.st_atime, st.st_mtime))  # preserve mtime
-    assert key() != k1
-    assert key(topic="other") != key()
-    assert key(partitions="8") != key()
-
-
-def test_mockkafka_cache_key_tracks_directory_fixtures(tmp_path):
-    """Round-7 advisory: directory-shaped parquet datasets (Spark-written)
-    must carry a freshness component too — a rewritten fixture at the
-    same path must MISS the cached backlog. The key folds every entry's
-    (relpath, size, mtime_ns), so adding a part-file, changing bytes
-    (size), or a same-size rewrite (mtime_ns) all change the key."""
-    import os
-
-    from insight_de_smart_grid_spark.sources.mock_kafka import (
-        MockKafkaStreamReader,
-    )
-
-    d = tmp_path / "events.parquet"
-    d.mkdir()
-    part = d / "part-00000.parquet"
-    part.write_bytes(b"aaaa")
-
-    def key():
-        opts = {"path": str(d), "topic": "t", "partitions": "4"}
-        return MockKafkaStreamReader(opts)._cache_key()
-
-    k1 = key()
-    assert k1 == key()  # deterministic on an unchanged directory
-    (d / "part-00001.parquet").write_bytes(b"bb")  # new part-file
-    k2 = key()
-    assert k2 != k1
-    part.write_bytes(b"aaaaaa")  # size change
-    k3 = key()
-    assert k3 != k2
-    # same-size rewrite: Spark's overwrite always creates fresh files, so
-    # mtime_ns moves even when bytes/size collide
-    part.write_bytes(b"cccccc")
-    os.utime(part, ns=(os.stat(part).st_atime_ns,
-                       os.stat(part).st_mtime_ns + 1))
-    assert key() != k3
+    r = MockKafkaStreamReader({"path": f"{SF_SMOKE}/events.parquet",
+                               "flush_sentinel": "true"})
+    start = r.initialOffset()
+    data = r.latestOffset()
+    assert not data["sentinel"] and sum(data["ends"]) == 1000
+    parts = r.partitions(start, data)
+    assert [(p.idx, p.start, p.end) for p in parts] == [
+        (i, 0, e) for i, e in enumerate(data["ends"])]
+    flush = r.latestOffset()
+    assert flush == {"ends": data["ends"], "sentinel": True}
+    assert [p.idx for p in r.partitions(data, flush)] == [None]
+    assert r.latestOffset() == flush
+    assert r.partitions(flush, flush) == []

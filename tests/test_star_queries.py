@@ -43,3 +43,59 @@ def test_nation_volume_broadcasts_all_dims(spark):
     assert plan.count("BroadcastHashJoin") >= 4
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+# sf0.01 customer 1500 and 1501 do not exist; neither gets an order
+PLANTED_CUSTOMERS = [
+    {"c_custkey": 1500, "c_name": "Customer#000001500", "c_nationkey": 2,
+     "c_acctbal": 9000.0, "c_mktsegment": "BUILDING"},
+    {"c_custkey": 1501, "c_name": "Customer#000001501", "c_nationkey": 3,
+     "c_acctbal": 100.0, "c_mktsegment": "MACHINERY"},
+]
+
+
+@pytest.fixture(scope="module")
+def planted_star_dir(tmp_path_factory):
+    """The sf0.01 ``customer`` and ``orders`` tables plus two customers
+    without orders: 1500 far above the average positive balance, 1501
+    below it."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_ORACLE
+
+    d = tmp_path_factory.mktemp("planted_star")
+    cust = pq.read_table(f"{SF_ORACLE}/customer.parquet")
+    planted = pa.Table.from_pylist(PLANTED_CUSTOMERS, schema=cust.schema)
+    pq.write_table(pa.concat_tables([cust, planted]), d / "customer.parquet")
+    shutil.copy(f"{SF_ORACLE}/orders.parquet", d / "orders.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name, want", [
+    ("star_customers_without_orders_anti",
+     {("BUILDING", 1), ("MACHINERY", 1)}),
+    ("star_setops_except", {(1500,), (1501,)}),
+    ("star_sales_opportunity", {("BUILDING", 1, 9000.0)}),
+])
+def test_orderless_customer_oracles_on_planted_rows(spark, planted_star_dir,
+                                                    name, want):
+    """Every sf0.01 customer has an order, so these oracles are empty
+    there; on planted order-less customers the query returns exactly them
+    and equals its oracle."""
+    import duckdb
+
+    from insight_de_smart_grid_spark.plans.registry import QUERIES
+    from tests.oracle import compare
+
+    q = QUERIES[name]
+    got = q.fn(spark, planted_star_dir)
+    assert {tuple(r) for r in got.collect()} == want
+    con = duckdb.connect()
+    for t in ("customer", "orders"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{planted_star_dir}/{t}.parquet'")
+    compare(got, con, q.sql)
+    con.close()
