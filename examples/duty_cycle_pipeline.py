@@ -88,15 +88,20 @@ def main() -> None:
             events_to_readings,
         )
         from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
-            run_stream_over_parquet,
+            duty_cycle_stream_plan,
+        )
+        from insight_de_smart_grid_spark.streaming.sliding_stream import (
+            run_sliding_stream,
         )
 
-        # the scope removes the replay's sink and checkpoint after show()
+        # the flush sentinel finalizes every window, so the streamed table
+        # holds the batch table's complete window set; the scope removes
+        # the replay's sink and checkpoint after show()
         with checkpoint_scope(spark):
-            streamed = run_stream_over_parquet(
-                spark, f"{sf_dir}/events.parquet", events_to_readings,
-                panes="auto", window="10 minutes", slide="2 minutes",
-                watermark="2 seconds")
+            streamed = run_sliding_stream(
+                spark, f"{sf_dir}/events.parquet", duty_cycle_stream_plan,
+                events_to_readings, panes="auto", window="10 minutes",
+                slide="2 minutes", watermark="2 seconds")
             streamed.orderBy("time_end", "house_id", "appliance_id").show(5)
 
     spark.stop()

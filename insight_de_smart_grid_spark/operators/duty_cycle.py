@@ -12,6 +12,13 @@ SURVEY operators covered: A1 (grouped count), A2 (conditional count), P3
 (conditional expression), P4 (derived ratio), P5 (column prune), P6
 (struct-field extraction), ST2 (window; tumbling = slide==width special case).
 
+Both counts are sliding aggregates, so the duty cycle builds no window of
+its own: ``duty_of`` hands them to the one pane engine —
+``operators/sliding.py::sliding_agg`` in batch,
+``streaming/sliding_stream.py::sliding_agg_stream_plan`` in a stream — and
+divides. The engine owns the tumbling, explode and pane forms, the spread
+before the explode, and the ``panes="auto"`` density probe.
+
 Scale notes: one shuffle on (window, house_id, appliance_id); Catalyst plans
 partial+final HashAggregate so the map side combines before the exchange. The
 grouping key includes the window, so cardinality is bounded by
@@ -22,165 +29,33 @@ in whole-stage codegen.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from insight_de_smart_grid_spark.operators.sliding import sliding_agg
 
 DEFAULT_THRESHOLD = 5.0  # watts — reference `example config/config.ini:8`
 
-_UNIT_SECONDS = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60,
-                 "hour": 3600, "hours": 3600, "day": 86400, "days": 86400}
 
-
-def _interval_seconds(spec: str) -> "int | None":
-    """Whole seconds of a simple '<n> <unit>' interval string, else None
-    (callers fall back to the generic window path)."""
-    parts = spec.strip().lower().split()
-    if len(parts) == 2 and parts[0].isdigit() and parts[1] in _UNIT_SECONDS:
-        return int(parts[0]) * _UNIT_SECONDS[parts[1]]
-    return None
-
-
-# Measured crossover (SCALE.md, round-6 stress sweep): the pane form wins
-# at ~10 events per (key, pane) (3.28 vs 3.80 s at x10 density; gap grows
-# with density) and loses at ~1 (the pre-agg collapses nothing and pays a
-# second shuffle). 4.0 sits between the two measured points: above it the
-# hash-agg input cut pays for the extra combine with margin.
-PANE_DENSITY_CROSSOVER = 4.0
-
-# Default Bernoulli fraction the ``panes="auto"`` call sites hand the
-# density probe (round-9, VERDICT r8 item 8: the sampled probe existed
-# but auto still full-scanned). 0.05 keeps f*rho >= 0.1 at the 4.0
-# crossover — the bound the Poisson inversion needs (pane_density
-# docstring) — with 2x margin; a sample landing under
-# ``min_sample_rows`` falls back to the full scan, so small corpora
-# (where the full probe is cheaper than modeling) are unaffected.
-PROBE_SAMPLE_FRACTION = 0.05
-
-# Catalyst size estimate of the probe's NARROW projection below which
-# the sampled path isn't attempted at all: under it, the 5% sample could
-# not reach min_sample_rows, so trying would just pay a wasted sample
-# job before the full-scan fallback (measured +0.5 s per auto query at
-# sf0.1). 2 MiB of (ts, keys) columns is ~330k rows at the fixtures'
-# ~6 B/row estimate — comfortably past min_sample_rows / fraction =
-# 200k, and an order of magnitude under the stress corpora where the
-# sampled probe earns its keep. The gate reads optimizedPlan().stats()
-# (file-size based) — zero jobs.
-SAMPLED_PROBE_MIN_BYTES = 2 * 1024 * 1024
-
-
-def probe_kwargs(plan_fn, plan_kwargs: dict,
-                 names: tuple[str, ...] = ("window", "slide", "time_col",
-                                           "keys")) -> dict:
-    """Resolve the probe's view of ``names`` from ``plan_kwargs``, falling
-    back to ``plan_fn``'s OWN signature defaults — round-8 advisory: the
-    streaming runners used to re-duplicate the plan functions' default
-    window/slide literals, so a changed plan default would silently make
-    the ``panes="auto"`` probe measure density for a different pane width
-    than the plan executes."""
-    import inspect
-
-    params = inspect.signature(plan_fn).parameters
-    return {n: plan_kwargs.get(n, params[n].default) for n in names}
-
-
-def pane_density(readings: DataFrame, slide_seconds: int,
-                 time_col: str = "ts",
-                 keys: tuple[str, ...] = ("house_id", "appliance_id"),
-                 sample_fraction: "float | None" = None,
-                 min_sample_rows: int = 10_000) -> float:
-    """One cheap probe job: average events per occupied (key, pane) —
-    the quantity that decides explode-vs-pane (the hash-agg input cut is
-    exactly this density). Same pattern as ``knn_graph``'s duplicate
-    probe: a narrow plan-build-time aggregation whose cost is one corpus
-    scan with an HLL sketch, no shuffle of the wide rows.
-
-    ``approx_count_distinct`` (HLL++, ~2% rse) estimates the occupied
-    (key, pane) group count; the pane index is integer epoch arithmetic,
-    not ``window()``, so nothing explodes in the probe itself.
-
-    ``sample_fraction`` (round-8, the docstring's own cluster-scale
-    fallback made real): probe a Bernoulli row sample instead of the
-    full corpus. A row sample BIASES the naive n/g ratio — unsampled
-    events shrink n proportionally but a group only leaves g when ALL
-    its events are unsampled — so the observed sample density m relates
-    to the true density rho by m = f*rho / (1 - exp(-f*rho)) under a
-    Poisson group-size model; the probe inverts that (fixed point
-    x = m*(1 - e^-x), x = f*rho), which is exact in expectation for
-    Poisson-sized cells and errs toward the TRUE side of the crossover
-    for the two measured regimes (pinned at 19.1 and 0.94 events/cell
-    in tests/test_scale_stress.py). Error bound: the inversion needs
-    f*rho >~ 0.1 at the decision point to separate m from 1, i.e.
-    sample_fraction >= ~0.025 for the measured crossover of 4.0 — and a
-    sample landing under ``min_sample_rows`` rows falls back to the
-    full probe (a corpus that small is cheaper to scan than to model)."""
-    if sample_fraction and 0.0 < sample_fraction < 1.0 \
-            and _probe_input_bytes(readings, time_col, keys) \
-            >= SAMPLED_PROBE_MIN_BYTES:
-        import math
-
-        st = _probe_frame(readings, slide_seconds, time_col, keys,
-                          sample_fraction).first()
-        if st.n >= min_sample_rows:
-            m = st.n / max(st.g, 1)
-            x = m  # f*rho; fixed point of x = m*(1 - e^-x)
-            for _ in range(60):
-                x = m * (1.0 - math.exp(-x))
-            return x / sample_fraction
-        # sample too small to invert reliably -> full probe below
-    stats = _probe_frame(readings, slide_seconds, time_col, keys).first()
-    return stats.n / max(stats.g, 1)
-
-
-def _probe_input_bytes(readings: DataFrame, time_col: str,
-                       keys: tuple[str, ...]) -> int:
-    """Catalyst's size estimate of the probe's narrow projection — the
-    zero-job corpus-size gate for the sampled probe. File-size based
-    (CBO row counts are usually absent), so it's a coarse bound; the
-    in-probe min_sample_rows fallback remains the exact guard."""
-    try:
-        proj = readings.select(time_col, *keys)
-        return int(str(proj._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes()))
-    except Exception:
-        # no stats (e.g. a local relation) -> let the sampled path try;
-        # the min_sample_rows fallback still protects correctness
-        return SAMPLED_PROBE_MIN_BYTES
-
-
-def _probe_frame(readings: DataFrame, slide_seconds: int, time_col: str,
-                 keys: tuple[str, ...],
-                 sample_fraction: "float | None" = None) -> DataFrame:
-    """The density probe's one-row aggregation, built lazily so plan
-    tests can pin its shape: a narrow projection, optionally through a
-    Bernoulli Sample node (never a shuffle of the wide rows), into
-    count + HLL group estimate."""
-    pane_idx = F.floor(F.unix_timestamp(F.col(time_col)) /
-                       F.lit(slide_seconds))
-    g_expr = F.approx_count_distinct(
-        F.struct(pane_idx.alias("p"), *[F.col(k) for k in keys])).alias("g")
-    base = readings.select(time_col, *keys)
-    if sample_fraction:
-        base = base.sample(fraction=sample_fraction, seed=7)
-    return base.agg(F.count("*").alias("n"), g_expr)
-
-
-def use_panes(panes: "bool | str", window: str, slide: "str | None",
-              probe_frame: Callable[[], DataFrame], time_col: str,
-              keys: tuple[str, ...]) -> bool:
-    """The one explode-vs-panes decision, batch and streaming: panes
-    only when the window splits into more than one whole slide pane, and
-    for ``panes="auto"`` only when ``pane_density`` over
-    ``probe_frame()`` reaches ``PANE_DENSITY_CROSSOVER``. The probe frame
-    is built only when that measurement runs."""
-    w_s = _interval_seconds(window)
-    s_s = _interval_seconds(slide) if slide else None
-    if not (panes and w_s and s_s and w_s % s_s == 0 and w_s != s_s):
-        return False
-    return panes != "auto" or pane_density(
-        probe_frame(), s_s, time_col, keys,
-        sample_fraction=PROBE_SAMPLE_FRACTION) >= PANE_DENSITY_CROSSOVER
+def duty_of(sliding: Callable[..., DataFrame], keys: tuple[str, ...],
+            threshold: float, power_col: str) -> DataFrame:
+    """The duty cycle over a sliding aggregate: ``sliding(aggs=, keys=)``
+    counts the readings and those above ``threshold`` per (window,
+    *keys), and the duty cycle is their ratio. The flag is a Column
+    input, so it is evaluated inside the partial aggregate, after the
+    window expansion — count(when(power > thres, True)), reference
+    duty_cycle_avro.py:77."""
+    power = F.col(power_col)
+    counts = sliding(aggs=(("c_all", "count", power_col),
+                           ("c_duty", "count",
+                            F.when(power > F.lit(threshold), True))),
+                     keys=keys)
+    return counts.select("time_end", *keys,
+                         (F.col("c_duty") / F.col("c_all"))
+                         .alias("duty_cycle"))
 
 
 def duty_cycle(readings: DataFrame,
@@ -196,107 +71,17 @@ def duty_cycle(readings: DataFrame,
     ``slide=None`` -> tumbling (the oracle-checkable variant); pass a slide for
     the reference's sliding 10min/2min semantics (``duty_cycle_avro.py:58-59``).
 
-    PANE DECOMPOSITION (``panes=True``, sliding form only): Spark's sliding
-    ``window()`` EXPLODES every event into window/slide copies before the
-    partial aggregate, so the hash-aggregate touches 5x the input for the
-    reference's 10min/2min shape. Both counts are sums, so the window
-    splits into epoch-aligned SLIDE-width panes ("No pane, no gain",
-    Li et al. SIGMOD Record '05): one tumbling pane aggregate (no explode
-    — the hash-agg touches each event once), then the explode runs over
-    the AGGREGATED pane cardinality (bounded by #keys x #panes, orders of
-    magnitude below event count at 100 TB) and a second tiny combine sums
-    window/slide panes per window. Pane [b, b+S) belongs to exactly the
-    windows starting at b - k*S, k in [0, W/S) — the same epoch-aligned
-    window set Spark's explode assigns each event, so the output is
-    row-identical (integer counts sum exactly; the ratio divides the same
-    longs — pinned by ``test_duty_cycle_pane_decomposition_is_invariant``
-    and the ``duty_cycle_sliding_panes`` oracle row, same SQL as the
-    explode form). Applies when W divides into whole-second panes;
-    anything else falls back to the explode form.
-
-    WHEN IT PAYS: the win is the events-per-(key, pane) density — dense
-    telemetry (the reference's 1 Hz meters: ~120 events per 2-minute
-    pane) cuts the hash-aggregate input ~density x; the sparse bench
-    fixture (~1 event per pane) gains nothing and pays the second tiny
-    shuffle, so the EXPLODE form stays the registered default and the
-    pane form is the registered scale twin — the stress sweep measures
-    the crossover on its x10/x30 same-timestamp corpora.
-
-    ``panes="auto"`` (round-7, the knn-graph dup-probe pattern): one
-    cheap probe job (``pane_density``) estimates events per occupied
-    (key, pane) and picks the pane form at or above the measured
-    crossover (``PANE_DENSITY_CROSSOVER``), the explode form below —
-    dense 1 Hz telemetry gets the decomposition automatically, the
-    sparse fixture keeps the single-shuffle plan. Registered as
-    ``duty_cycle_sliding_auto`` against the same oracle SQL; the choice
-    is plan-asserted on both corpora in the stress sweep."""
-    panes = use_panes(panes, window, slide, lambda: readings, time_col,
-                      keys)
-    if slide is not None and not panes:
-        # spread the raw readings before the window/slide EXPLOSION
-        # (round-11, guide §2.2/§3.3): a single-split scan otherwise
-        # runs the w/s-fold explode and the partial aggregate serially
-        # in one task (interleaved A/B: duty_cycle_sliding 1.07 ->
-        # 0.85 s). Keyed by (ts, keys) for deterministic placement;
-        # no-op when the scan already has enough splits. Neither the
-        # tumbling form (slide=None — no explosion) nor the pane form
-        # (pre-aggregate touches each event once) is spread: the A/B
-        # read the added exchange as a small net loss there.
-        from insight_de_smart_grid_spark.operators.layout import spread
-
-        readings = spread(readings, time_col, *keys)
-    if panes:
-        w_s, s_s = _interval_seconds(window), _interval_seconds(slide)
-        n_panes = w_s // s_s
-        pane = (
-            readings
-            .groupBy(F.window(F.col(time_col), slide).alias("pane"),
-                     *[F.col(k) for k in keys])
-            .agg(F.count(F.col(power_col)).alias("p_all"),
-                 F.count(F.when(F.col(power_col) > F.lit(threshold),
-                                True)).alias("p_duty"))
-        )
-        agg = (
-            pane
-            .select(F.col("pane.start").alias("pane_start"), *keys,
-                    "p_all", "p_duty",
-                    F.explode(F.sequence(
-                        F.lit(0), F.lit(n_panes - 1))).alias("k"))
-            # window start = pane_start - k*S; emit its END directly
-            .select((F.col("pane_start")
-                     + F.expr(f"make_interval(0,0,0,0,0,0, {w_s})")
-                     - F.col("k")
-                     * F.expr(f"make_interval(0,0,0,0,0,0, {s_s})"))
-                    .alias("time_end"),
-                    *keys, "p_all", "p_duty")
-            .groupBy("time_end", *[F.col(k) for k in keys])
-            .agg(F.sum("p_all").alias("c_all"),
-                 F.sum("p_duty").alias("c_duty"))
-        )
-        return (agg
-                .withColumn("duty_cycle", F.col("c_duty") / F.col("c_all"))
-                .select("time_end", *keys, "duty_cycle"))
-
-    win: Column = (F.window(F.col(time_col), window, slide) if slide
-                   else F.window(F.col(time_col), window))
-    agg = (
-        readings
-        .groupBy(win.alias("window"), *[F.col(k) for k in keys])
-        .agg(
-            F.count(F.col(power_col)).alias("c_all"),
-            # count-if: count(when(cond, True)) — reference duty_cycle_avro.py:77
-            F.count(F.when(F.col(power_col) > F.lit(threshold), True)).alias("c_duty"),
-        )
-    )
-    return (
-        agg
-        .withColumn("duty_cycle", F.col("c_duty") / F.col("c_all"))
-        .select(
-            F.col("window.end").alias("time_end"),
-            *keys,
-            "duty_cycle",
-        )
-    )
+    ``panes`` picks the sliding form, as in ``sliding.sliding_agg``:
+    ``True`` aggregates epoch-aligned slide-width panes and sums them per
+    window (integer counts, so the rows equal the explode form's —
+    pinned by ``test_duty_cycle_pane_decomposition_is_invariant`` and the
+    ``duty_cycle_sliding_panes`` oracle row); ``"auto"`` probes the
+    events per (key, pane) and takes panes at or above the measured
+    crossover, so the sparse fixture keeps the single-shuffle explode
+    plan and dense 1 Hz telemetry gets the decomposition."""
+    return duty_of(partial(sliding_agg, readings, window, slide,
+                           time_col=time_col, panes=panes),
+                   keys, threshold, power_col)
 
 
 def duty_cycle_oracle_sql(readings_cte: str,

@@ -156,7 +156,7 @@ def pick_join_mode(delta: DataFrame,
 
     Round-10 (VERDICT r9 item 5): with no explicit ``row_threshold`` the
     pick is ZERO jobs — Catalyst's optimizedPlan statistics, the same
-    gate the sampled pane probe uses (``duty_cycle._probe_input_bytes``).
+    gate the sampled pane probe uses (``sliding._probe_input_bytes``).
     An exact rowCount estimate (in-memory relations, CBO) compares
     against ``default_rows``; otherwise the file-size-based sizeInBytes
     compares against ``BROADCAST_DELTA_MAX_BYTES`` — a coarse bound, but

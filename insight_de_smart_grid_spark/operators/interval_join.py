@@ -104,7 +104,7 @@ def interval_join_bucketed(left: DataFrame, right: DataFrame, on: str,
 def _interval_seconds_ij(spec: str) -> int:
     """Whole seconds of a '<n> <unit>' lookback (hour/minute/second/day);
     bucketed blocking needs an integer bucket width."""
-    from insight_de_smart_grid_spark.operators.duty_cycle import (
+    from insight_de_smart_grid_spark.operators.sliding import (
         _interval_seconds,
     )
 

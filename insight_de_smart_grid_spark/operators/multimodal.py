@@ -24,22 +24,11 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Real image decode/resize are env-gated on pillow: when PIL is importable
 # the fake=False paths run actual decoders; otherwise they raise the same
 # NotImplementedError as before (this container ships no media libs).
 HAS_PIL = importlib.util.find_spec("PIL") is not None
-
-# Typed metadata carried beside the payload (parquet-friendly struct).
-MEDIA_META_SCHEMA = T.StructType([
-    T.StructField("media_type", T.StringType()),   # image|audio|video
-    T.StructField("format", T.StringType()),       # jpeg|png|wav|...
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("n_frames", T.IntegerType()),
-    T.StructField("sample_rate", T.IntegerType()),
-])
 
 DECODED_SCHEMA = (
     "doc_id long, n_bytes long, sha256 string, "

@@ -1,7 +1,8 @@
-"""Generic sliding-window aggregation with optional pane decomposition —
-the duty-cycle flagship's scale trick (operators/duty_cycle.py, reference
-``stream_processing/duty_cycle_avro.py:75-79``) generalized to ANY
-algebraic aggregate.
+"""Generic sliding-window aggregation with optional pane decomposition,
+for ANY algebraic aggregate: the one pane engine. The duty-cycle flagship
+(operators/duty_cycle.py, reference
+``stream_processing/duty_cycle_avro.py:75-79``) is two of its counts and
+their ratio.
 
 Spark's sliding ``window()`` explodes every event into window/slide
 copies before the partial aggregate. Any aggregate that is a semigroup
@@ -39,20 +40,19 @@ every remaining mergeable-partial aggregate the repo ships:
   ``within_tol`` pattern (``rollup_hll_distinct``), never a raw-value
   oracle.
 
-The pane choice is the duty-cycle one (``duty_cycle.use_panes``):
-``panes="auto"`` takes the pane form above the measured density
-crossover, explode below.
+The pane choice lives here too, one decision for batch and stream
+(``use_panes``): ``panes=True`` takes the pane form whenever the window
+splits into whole slide panes, ``panes="auto"`` only at or above the
+measured density crossover (``pane_density``), explode below.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from insight_de_smart_grid_spark.operators.duty_cycle import (
-    _interval_seconds,
-    use_panes,
-)
 from insight_de_smart_grid_spark.operators.sketches import (
     _KMV_SCALE,
     kmv_estimate,
@@ -60,6 +60,159 @@ from insight_de_smart_grid_spark.operators.sketches import (
 
 SLIDING_KMV_K = 64     # k-minimum-values sketch size for kmv_distinct
 SLIDING_HLL_LGK = 12   # DataSketches lg_k for approx_distinct
+
+_UNIT_SECONDS = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60,
+                 "hour": 3600, "hours": 3600, "day": 86400, "days": 86400}
+
+
+def _interval_seconds(spec: str) -> "int | None":
+    """Whole seconds of a simple '<n> <unit>' interval string, else None
+    (callers fall back to the generic window path)."""
+    parts = spec.strip().lower().split()
+    if len(parts) == 2 and parts[0].isdigit() and parts[1] in _UNIT_SECONDS:
+        return int(parts[0]) * _UNIT_SECONDS[parts[1]]
+    return None
+
+
+# Measured crossover (SCALE.md, round-6 stress sweep): the pane form wins
+# at ~10 events per (key, pane) (3.28 vs 3.80 s at x10 density; gap grows
+# with density) and loses at ~1 (the pre-agg collapses nothing and pays a
+# second shuffle). 4.0 sits between the two measured points: above it the
+# hash-agg input cut pays for the extra combine with margin.
+PANE_DENSITY_CROSSOVER = 4.0
+
+# Default Bernoulli fraction the ``panes="auto"`` call sites hand the
+# density probe (round-9, VERDICT r8 item 8: the sampled probe existed
+# but auto still full-scanned). 0.05 keeps f*rho >= 0.1 at the 4.0
+# crossover — the bound the Poisson inversion needs (pane_density
+# docstring) — with 2x margin; a sample landing under
+# ``min_sample_rows`` falls back to the full scan, so small corpora
+# (where the full probe is cheaper than modeling) are unaffected.
+PROBE_SAMPLE_FRACTION = 0.05
+
+# Catalyst size estimate of the probe's NARROW projection below which
+# the sampled path isn't attempted at all: under it, the 5% sample could
+# not reach min_sample_rows, so trying would just pay a wasted sample
+# job before the full-scan fallback (measured +0.5 s per auto query at
+# sf0.1). 2 MiB of (ts, keys) columns is ~330k rows at the fixtures'
+# ~6 B/row estimate — comfortably past min_sample_rows / fraction =
+# 200k, and an order of magnitude under the stress corpora where the
+# sampled probe earns its keep. The gate reads optimizedPlan().stats()
+# (file-size based) — zero jobs.
+SAMPLED_PROBE_MIN_BYTES = 2 * 1024 * 1024
+
+
+def probe_kwargs(plan_fn, plan_kwargs: dict,
+                 names: tuple[str, ...] = ("window", "slide", "time_col",
+                                           "keys")) -> dict:
+    """Resolve the probe's view of ``names`` from ``plan_kwargs``, falling
+    back to ``plan_fn``'s OWN signature defaults — round-8 advisory: the
+    streaming runners used to re-duplicate the plan functions' default
+    window/slide literals, so a changed plan default would silently make
+    the ``panes="auto"`` probe measure density for a different pane width
+    than the plan executes."""
+    import inspect
+
+    params = inspect.signature(plan_fn).parameters
+    return {n: plan_kwargs.get(n, params[n].default) for n in names}
+
+
+def pane_density(readings: DataFrame, slide_seconds: int,
+                 time_col: str = "ts",
+                 keys: tuple[str, ...] = ("house_id", "appliance_id"),
+                 sample_fraction: "float | None" = None,
+                 min_sample_rows: int = 10_000) -> float:
+    """One cheap probe job: average events per occupied (key, pane) —
+    the quantity that decides explode-vs-pane (the hash-agg input cut is
+    exactly this density). Same pattern as ``knn_graph``'s duplicate
+    probe: a narrow plan-build-time aggregation whose cost is one corpus
+    scan with an HLL sketch, no shuffle of the wide rows.
+
+    ``approx_count_distinct`` (HLL++, ~2% rse) estimates the occupied
+    (key, pane) group count; the pane index is integer epoch arithmetic,
+    not ``window()``, so nothing explodes in the probe itself.
+
+    ``sample_fraction`` (round-8, the docstring's own cluster-scale
+    fallback made real): probe a Bernoulli row sample instead of the
+    full corpus. A row sample BIASES the naive n/g ratio — unsampled
+    events shrink n proportionally but a group only leaves g when ALL
+    its events are unsampled — so the observed sample density m relates
+    to the true density rho by m = f*rho / (1 - exp(-f*rho)) under a
+    Poisson group-size model; the probe inverts that (fixed point
+    x = m*(1 - e^-x), x = f*rho), which is exact in expectation for
+    Poisson-sized cells and errs toward the TRUE side of the crossover
+    for the two measured regimes (pinned at 19.1 and 0.94 events/cell
+    in tests/test_scale_stress.py). Error bound: the inversion needs
+    f*rho >~ 0.1 at the decision point to separate m from 1, i.e.
+    sample_fraction >= ~0.025 for the measured crossover of 4.0 — and a
+    sample landing under ``min_sample_rows`` rows falls back to the
+    full probe (a corpus that small is cheaper to scan than to model)."""
+    if sample_fraction and 0.0 < sample_fraction < 1.0 \
+            and _probe_input_bytes(readings, time_col, keys) \
+            >= SAMPLED_PROBE_MIN_BYTES:
+        import math
+
+        st = _probe_frame(readings, slide_seconds, time_col, keys,
+                          sample_fraction).first()
+        if st.n >= min_sample_rows:
+            m = st.n / max(st.g, 1)
+            x = m  # f*rho; fixed point of x = m*(1 - e^-x)
+            for _ in range(60):
+                x = m * (1.0 - math.exp(-x))
+            return x / sample_fraction
+        # sample too small to invert reliably -> full probe below
+    stats = _probe_frame(readings, slide_seconds, time_col, keys).first()
+    return stats.n / max(stats.g, 1)
+
+
+def _probe_input_bytes(readings: DataFrame, time_col: str,
+                       keys: tuple[str, ...]) -> int:
+    """Catalyst's size estimate of the probe's narrow projection — the
+    zero-job corpus-size gate for the sampled probe. File-size based
+    (CBO row counts are usually absent), so it's a coarse bound; the
+    in-probe min_sample_rows fallback remains the exact guard."""
+    try:
+        proj = readings.select(time_col, *keys)
+        return int(str(proj._jdf.queryExecution().optimizedPlan()
+                       .stats().sizeInBytes()))
+    except Exception:
+        # no stats (e.g. a local relation) -> let the sampled path try;
+        # the min_sample_rows fallback still protects correctness
+        return SAMPLED_PROBE_MIN_BYTES
+
+
+def _probe_frame(readings: DataFrame, slide_seconds: int, time_col: str,
+                 keys: tuple[str, ...],
+                 sample_fraction: "float | None" = None) -> DataFrame:
+    """The density probe's one-row aggregation, built lazily so plan
+    tests can pin its shape: a narrow projection, optionally through a
+    Bernoulli Sample node (never a shuffle of the wide rows), into
+    count + HLL group estimate."""
+    pane_idx = F.floor(F.unix_timestamp(F.col(time_col)) /
+                       F.lit(slide_seconds))
+    g_expr = F.approx_count_distinct(
+        F.struct(pane_idx.alias("p"), *[F.col(k) for k in keys])).alias("g")
+    base = readings.select(time_col, *keys)
+    if sample_fraction:
+        base = base.sample(fraction=sample_fraction, seed=7)
+    return base.agg(F.count("*").alias("n"), g_expr)
+
+
+def use_panes(panes: "bool | str", window: str, slide: "str | None",
+              probe_frame: Callable[[], DataFrame], time_col: str,
+              keys: tuple[str, ...]) -> bool:
+    """The one explode-vs-panes decision, batch and streaming: panes
+    only when the window splits into more than one whole slide pane, and
+    for ``panes="auto"`` only when ``pane_density`` over
+    ``probe_frame()`` reaches ``PANE_DENSITY_CROSSOVER``. The probe frame
+    is built only when that measurement runs."""
+    w_s = _interval_seconds(window)
+    s_s = _interval_seconds(slide) if slide else None
+    if not (panes and w_s and s_s and w_s % s_s == 0 and w_s != s_s):
+        return False
+    return panes != "auto" or pane_density(
+        probe_frame(), s_s, time_col, keys,
+        sample_fraction=PROBE_SAMPLE_FRACTION) >= PANE_DENSITY_CROSSOVER
 
 
 def _kmv_hash(col: Column) -> Column:
@@ -118,9 +271,6 @@ _DERIVED = {
     "approx_distinct": ("hll",),
 }
 
-# kept for round-7 call sites / docs: the original four plus their merge
-_ALGEBRAIC = {k: _PARTIALS[k] for k in ("sum", "count", "min", "max")}
-
 
 def _var_expr(partial_of, col: str) -> Column:
     """Sample variance from (sum, sumsq, count) partials: the combine is
@@ -153,37 +303,49 @@ def _final_expr(fn: str, partial_of, col: str) -> Column:
     return partial_of(fn, col)
 
 
+def _label(name: str, col: "str | Column") -> str:
+    """A partial's column label: its input column's name, or for a Column
+    input (an expression such as the duty cycle's ``power > threshold``
+    flag) the output's own name."""
+    return col if isinstance(col, str) else name
+
+
 def expand_needed(aggs: tuple) -> list:
-    """Distinct (kind, col) partials the requested aggregates need,
-    deterministically ordered. Raises on an aggregate with no algebraic
+    """Distinct (kind, label, input) partials the requested aggregates
+    need, deterministically ordered. An input is a column name or a
+    Column; a Column is evaluated inside the partial aggregate, after the
+    window expansion. Raises on an aggregate with no algebraic
     decomposition (median, exact percentile, ...)."""
-    needed = set()
+    needed = {}
     for name, fn, col in aggs:
         if fn not in _DERIVED:
             raise ValueError(f"unsupported aggregate {fn!r} for {name!r} — "
                              "pane decomposition needs an algebraic fold "
                              f"({'/'.join(sorted(_DERIVED))})")
-        needed.update((kind, col) for kind in _DERIVED[fn])
-    return sorted(needed)
+        for kind in _DERIVED[fn]:
+            needed[kind, _label(name, col)] = (
+                F.col(col) if isinstance(col, str) else col)
+    return [(kind, label, needed[kind, label])
+            for kind, label in sorted(needed)]
 
 
 def partial_exprs(needed: list, alias: str = "__p") -> list:
-    """Pane/window partial aggregate expressions, one per (kind, col)."""
-    return [_PARTIALS[kind][0](F.col(col)).alias(f"{alias}_{kind}_{col}")
-            for kind, col in needed]
+    """Pane/window partial aggregate expressions, one per (kind, label)."""
+    return [_PARTIALS[kind][0](col).alias(f"{alias}_{kind}_{label}")
+            for kind, label, col in needed]
 
 
 def combine_exprs(needed: list, src: str = "__p",
                   alias: str = "__c") -> list:
     """Pane-merge aggregate expressions over the partial columns."""
-    return [_PARTIALS[kind][1](F.col(f"{src}_{kind}_{col}"))
-            .alias(f"{alias}_{kind}_{col}") for kind, col in needed]
+    return [_PARTIALS[kind][1](F.col(f"{src}_{kind}_{label}"))
+            .alias(f"{alias}_{kind}_{label}") for kind, label, _ in needed]
 
 
 def final_exprs(aggs: tuple, alias: str = "__c") -> list:
     """Output expressions over the combined partials."""
     partial_of = lambda kind, col: F.col(f"{alias}_{kind}_{col}")  # noqa: E731
-    return [_final_expr(fn, partial_of, col).alias(name)
+    return [_final_expr(fn, partial_of, _label(name, col)).alias(name)
             for name, fn, col in aggs]
 
 
@@ -196,7 +358,8 @@ def sliding_agg(df: DataFrame,
                 panes: "bool | str" = False) -> DataFrame:
     """Sliding aggregation over ``aggs`` = ((out_name, fn, col), ...) with
     fn in ``_DERIVED`` (sum/count/min/max/avg, var_samp/stddev_samp,
-    kmv_distinct/approx_distinct). Returns (time_end, *keys, *outs);
+    kmv_distinct/approx_distinct) and col a column name or a Column.
+    ``slide=None`` is the tumbling window. Returns (time_end, *keys, *outs);
     every derived final (avg, variance, the distinct estimates) is
     computed from the SAME partials in both forms (never an average of
     averages / variance of variances)."""
@@ -209,9 +372,10 @@ def sliding_agg(df: DataFrame,
                            *[F.col(k) for k in keys])
                 .agg(*partial_exprs(needed)))
         n_panes = w_s // s_s
+        partials = [f"__p_{kind}_{label}" for kind, label, _ in needed]
         exploded = (pane
                     .select(F.col("pane.start").alias("pane_start"), *keys,
-                            *[f"__p_{kind}_{col}" for kind, col in needed],
+                            *partials,
                             F.explode(F.sequence(
                                 F.lit(0), F.lit(n_panes - 1))).alias("k"))
                     .select((F.col("pane_start")
@@ -219,14 +383,12 @@ def sliding_agg(df: DataFrame,
                              - F.col("k")
                              * F.expr(f"make_interval(0,0,0,0,0,0, {s_s})"))
                             .alias("time_end"),
-                            *keys,
-                            *[f"__p_{kind}_{col}" for kind, col in needed]))
+                            *keys, *partials))
         agg = (exploded.groupBy("time_end", *[F.col(k) for k in keys])
                .agg(*combine_exprs(needed)))
         return agg.select("time_end", *keys, *final_exprs(aggs))
 
-    win = (F.window(F.col(time_col), window, slide) if slide
-           else F.window(F.col(time_col), window))
+    win = F.window(F.col(time_col), window, slide)
     if slide and w_s and s_s and w_s != s_s:
         # spread the raw events before the window/slide EXPLOSION
         # (round-11, guide §2.2/§3.3 — the word_ngrams treatment): a

@@ -248,6 +248,25 @@ def q_synth_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 # check; tests/test_streaming.py proves batch≡stream equivalence instead.
 # ---------------------------------------------------------------------------
 
+def _streaming_duty_cycle(spark: SparkSession, sf_dir: str, panes
+                          ) -> DataFrame:
+    """The events replayed as readings through the streaming duty cycle,
+    flush sentinel on, sentinel marker rows filtered out."""
+    from insight_de_smart_grid_spark.sources.tables import events_to_readings
+    from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
+        duty_cycle_stream_plan,
+    )
+    from insight_de_smart_grid_spark.streaming.sliding_stream import (
+        run_sliding_stream,
+    )
+
+    out = run_sliding_stream(
+        spark, f"{sf_dir}/events.parquet", duty_cycle_stream_plan,
+        events_to_readings, panes=panes,
+        window="10 minutes", slide="2 minutes", watermark="2 seconds")
+    return out.filter(F.col("house_id") != "-1")
+
+
 @register("streaming_duty_cycle", _SLIDING_ORACLE)
 def q_streaming_duty_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's continuous query (duty_cycle_avro.py:63-91) replayed
@@ -259,16 +278,7 @@ def q_streaming_duty_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — checkable against the same oracle as the batch
     ``duty_cycle_sliding``. Sentinel windows are never finalized (their end
     lies past the watermark); the marker filter is defense in depth."""
-    from insight_de_smart_grid_spark.sources.tables import events_to_readings
-    from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
-        run_stream_over_parquet,
-    )
-
-    out = run_stream_over_parquet(
-        spark, f"{sf_dir}/events.parquet", events_to_readings,
-        flush_sentinel=True,
-        window="10 minutes", slide="2 minutes", watermark="2 seconds")
-    return out.filter(F.col("house_id") != "-1")
+    return _streaming_duty_cycle(spark, sf_dir, panes=False)
 
 
 @register("streaming_duty_cycle_panes", _SLIDING_ORACLE)
@@ -283,17 +293,8 @@ def q_streaming_duty_cycle_panes(spark: SparkSession, sf_dir: str
     window/slide = 5x state rows per event under the explode form),
     registered against the identical oracle SQL so both streaming forms
     are value-checked row-identical. See
-    ``streaming/duty_cycle_stream.py::duty_cycle_stream_panes_plan``."""
-    from insight_de_smart_grid_spark.sources.tables import events_to_readings
-    from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
-        run_stream_over_parquet,
-    )
-
-    out = run_stream_over_parquet(
-        spark, f"{sf_dir}/events.parquet", events_to_readings,
-        flush_sentinel=True, panes=True,
-        window="10 minutes", slide="2 minutes", watermark="2 seconds")
-    return out.filter(F.col("house_id") != "-1")
+    ``streaming/sliding_stream.py::sliding_agg_stream_plan``."""
+    return _streaming_duty_cycle(spark, sf_dir, panes=True)
 
 
 @register("streaming_duty_cycle_auto", _SLIDING_ORACLE)
@@ -306,16 +307,7 @@ def q_streaming_duty_cycle_auto(spark: SparkSession, sf_dir: str
     the pane-decomposed chained-stateful plan above the crossover, the
     explode plan below. Same oracle SQL as every other sliding form —
     whichever plan runs must emit identical rows."""
-    from insight_de_smart_grid_spark.sources.tables import events_to_readings
-    from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
-        run_stream_over_parquet,
-    )
-
-    out = run_stream_over_parquet(
-        spark, f"{sf_dir}/events.parquet", events_to_readings,
-        flush_sentinel=True, panes="auto",
-        window="10 minutes", slide="2 minutes", watermark="2 seconds")
-    return out.filter(F.col("house_id") != "-1")
+    return _streaming_duty_cycle(spark, sf_dir, panes="auto")
 
 
 @register("streaming_rollup", ru.rollup_oracle_sql(READINGS_SQL_VIEW, 1))

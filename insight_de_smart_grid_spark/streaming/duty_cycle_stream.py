@@ -12,12 +12,21 @@ Operator coverage:
   reference's Airflow DAG (``batch/airflow_DAG.py``) with a Spark-native
   incremental batch.
 
-The same logical plan builder is shared with the batch operator
-(`operators/duty_cycle.py`), which is what makes the batch≡stream contract
-testable: one definition, two execution modes.
+The duty cycle is one definition in two execution modes:
+``operators/duty_cycle.py::duty_of`` over the batch ``sliding_agg`` or, here,
+over ``streaming/sliding_stream.py::sliding_agg_stream_plan``. The engine
+owns the watermark, the windows and the panes:
+
+    form      batch                          stream
+    tumbling  duty_cycle(slide=None)         duty_cycle_stream_plan(slide=None)
+    explode   duty_cycle(slide=S)            duty_cycle_stream_plan
+    panes     duty_cycle(panes=True)         duty_cycle_stream_panes_plan
+    auto      duty_cycle(panes="auto")       run_sliding_stream(panes="auto")
 
 Scale notes: state is keyed by (window, house, appliance); the watermark
 bounds state size to (window/slide + late-bound) generations per key. The
+pane form's event-ingesting state is keyed by (pane, house, appliance), so
+the store ingests each event once instead of window/slide times. The
 number of state stores is sized from the input, not fixed: one per
 ``ROWS_PER_STORE`` source rows a micro-batch brings, clamped to
 [1, cores] (``streaming.replay.state_width``, read from parquet footers at
@@ -31,11 +40,17 @@ here the HDFS-backed store is cheaper).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from functools import partial
 
-from insight_de_smart_grid_spark.operators.duty_cycle import DEFAULT_THRESHOLD
-from insight_de_smart_grid_spark.streaming.replay import replay_parquet_stream
+from pyspark.sql import DataFrame
+
+from insight_de_smart_grid_spark.operators.duty_cycle import (
+    DEFAULT_THRESHOLD,
+    duty_of,
+)
+from insight_de_smart_grid_spark.streaming.sliding_stream import (
+    sliding_agg_stream_plan,
+)
 
 
 def duty_cycle_stream_plan(stream: DataFrame,
@@ -46,141 +61,22 @@ def duty_cycle_stream_plan(stream: DataFrame,
                            time_col: str = "ts",
                            keys: tuple[str, ...] = ("house_id",
                                                     "appliance_id"),
-                           power_col: str = "power") -> DataFrame:
+                           power_col: str = "power",
+                           panes: bool = False) -> DataFrame:
     """Streaming logical plan: watermark -> sliding window group ->
-    count/count-if -> ratio (duty_cycle_avro.py:75-79)."""
-    win = (F.window(F.col(time_col), window, slide) if slide
-           else F.window(F.col(time_col), window))
-    agg = (
-        stream
-        .withWatermark(time_col, watermark)
-        .groupBy(win.alias("window"), *[F.col(k) for k in keys])
-        .agg(F.count(F.col(power_col)).alias("c_all"),
-             F.count(F.when(F.col(power_col) > F.lit(threshold), True))
-             .alias("c_duty"))
-    )
-    return (
-        agg.withColumn("duty_cycle", F.col("c_duty") / F.col("c_all"))
-        .select(F.col("window.end").alias("time_end"), *keys, "duty_cycle")
-    )
+    count/count-if -> ratio (duty_cycle_avro.py:75-79), over
+    ``sliding_agg_stream_plan``: the explode form by default, the
+    chained-stateful pane form with ``panes=True``."""
+    return duty_of(partial(sliding_agg_stream_plan, stream, window, slide,
+                           watermark, time_col=time_col, panes=panes),
+                   keys, threshold, power_col)
 
 
 def duty_cycle_stream_panes_plan(stream: DataFrame,
-                                 window: str = "10 minutes",
-                                 slide: str = "2 minutes",
-                                 watermark: str = "2 seconds",
-                                 threshold: float = DEFAULT_THRESHOLD,
-                                 time_col: str = "ts",
-                                 keys: tuple[str, ...] = ("house_id",
-                                                          "appliance_id"),
-                                 power_col: str = "power") -> DataFrame:
-    """Pane-decomposed STREAMING sliding duty cycle — the scale twin of
-    ``duty_cycle_stream_plan`` (round-6 batch twin:
-    ``operators/duty_cycle.py`` ``panes=True``), now in the execution mode
-    the reference actually runs (duty_cycle_avro.py:75-89 is a continuous
-    query over 1 Hz meters).
-
-    WHY: Spark's sliding ``window()`` explodes every event into
-    window/slide copies BEFORE the stateful aggregation, so the state
-    store ingests 5x the stream for the reference's 10min/2min shape —
-    at 1 Hz meter density that is ~5x state-store writes, checkpoint
-    bytes, and shuffle volume, all pure overhead because both counts are
-    sums and therefore pane-decomposable ("No pane, no gain", Li et al.
-    SIGMOD Record '05).
-
-    HOW: two CHAINED stateful aggregations in append mode (multiple
-    stateful operators, Spark 3.4+ / SPARK-40925):
-
-    1. tumbling slide-width PANE aggregate — the state store ingests
-       each event exactly ONCE (keyed (pane, house, appliance));
-    2. sliding window over the pane's window column — Spark assigns the
-       pane's event-time (``window_time`` = pane end - 1 microsecond) to
-       the window/slide containing sliding windows, exactly the
-       epoch-aligned window set the explode form assigns each event, and
-       sums the pane partials. Its state input is bounded by #keys x
-       #panes — aggregated cardinality, not event cardinality.
-
-    Append-mode flush cascades through both operators in the final
-    no-data micro-batch: stage 1 emits every pane whose end <= final
-    watermark, stage 2 consumes them in the same batch and emits every
-    window whose end <= that watermark; a window's panes all end at or
-    before the window end, so a finalized window always has its full
-    pane set — the emitted rows are identical to the explode form's
-    (pinned by ``test_streaming_panes_equal_explode_stream`` and the
-    ``streaming_duty_cycle_panes`` oracle row, same SQL as
-    ``streaming_duty_cycle``)."""
-    pane = (
-        stream
-        .withWatermark(time_col, watermark)
-        .groupBy(F.window(F.col(time_col), slide).alias("pane"),
-                 *[F.col(k) for k in keys])
-        .agg(F.count(F.col(power_col)).alias("p_all"),
-             F.count(F.when(F.col(power_col) > F.lit(threshold), True))
-             .alias("p_duty"))
-    )
-    agg = (
-        pane
-        .groupBy(F.window(F.col("pane"), window, slide).alias("window"),
-                 *[F.col(k) for k in keys])
-        .agg(F.sum("p_all").alias("c_all"),
-             F.sum("p_duty").alias("c_duty"))
-    )
-    return (
-        agg.withColumn("duty_cycle", F.col("c_duty") / F.col("c_all"))
-        .select(F.col("window.end").alias("time_end"), *keys, "duty_cycle")
-    )
-
-
-def run_stream_over_parquet(spark: SparkSession, parquet_path: str,
-                            to_readings,
-                            checkpoint_dir: str | None = None,
-                            out_dir: str | None = None,
-                            flush_sentinel: bool = False,
-                            panes: "bool | str" = False,
-                            progress_out: "list | None" = None,
-                            **plan_kwargs) -> DataFrame:
-    """Replay a parquet table through the streaming plan with
-    ``availableNow`` into the replay's parquet sink; returns the finalized
-    (append-mode) result as a batch DataFrame.
-
-    ``to_readings`` maps the raw stream frame to readings shape (the
-    streaming twin of ``sources.tables.readings_view``). In production the
-    source would be ``readStream.format("kafka")`` (S1) and the sink Kafka or
-    partitioned Parquet (S4/S9); file-in/parquet-out keeps the identical plan
-    testable without brokers.
-
-    The shared runner ``replay_parquet_stream`` sizes the state width
-    from the input (``streaming.replay.state_width``). The plan choice is
-    ``operators.duty_cycle.use_panes``, the same as the batch form:
-    ``panes=True`` routes through the pane-decomposed chained-stateful
-    plan (``duty_cycle_stream_panes_plan``) when the window splits into
-    whole slide panes; ``panes="auto"`` runs the batch density probe over
-    the SAME parquet input before starting the stream — an unbounded live
-    stream can't be probed, but this runner is the ST5 scheduled
-    micro-batch mode (availableNow over a bounded replay source), where
-    the input is exactly the history the probe should read; a live
-    deployment would probe yesterday's table the same way.
-    ``progress_out`` collects the drained query's progress objects
-    (state-operator metrics)."""
-    from insight_de_smart_grid_spark.operators.duty_cycle import (
-        probe_kwargs,
-        use_panes,
-    )
-    from insight_de_smart_grid_spark.sources.pq import read_parquet
-
-    def probe():
-        return to_readings(read_parquet(spark, parquet_path))
-
-    # fallbacks come from the pane plan's OWN signature defaults, so a
-    # changed plan default can never desynchronize the probe (advisory)
-    pk = probe_kwargs(duty_cycle_stream_panes_plan, plan_kwargs)
-    plan = (duty_cycle_stream_panes_plan
-            if use_panes(panes, pk["window"], pk["slide"], probe,
-                         pk["time_col"], pk["keys"])
-            else duty_cycle_stream_plan)
-    return replay_parquet_stream(
-        spark, parquet_path,
-        lambda stream: plan(to_readings(stream), **plan_kwargs),
-        checkpoint_dir=checkpoint_dir, out_dir=out_dir,
-        flush_sentinel=flush_sentinel,
-        progress_out=progress_out)
+                                 **plan_kwargs) -> DataFrame:
+    """The pane-decomposed streaming duty cycle — the scale twin of
+    ``duty_cycle_stream_plan`` for the reference's 1 Hz meters, where the
+    explode form writes window/slide = 5x state rows per event (pinned
+    equal by ``test_streaming_panes_equal_explode_stream`` and the
+    ``streaming_duty_cycle_panes`` oracle row)."""
+    return duty_cycle_stream_plan(stream, panes=True, **plan_kwargs)

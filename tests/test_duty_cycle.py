@@ -313,7 +313,7 @@ def test_duty_cycle_auto_probe_picks_by_density(spark):
     the sparse fixture (~1 event per (key, pane) — the pre-agg collapses
     nothing) and the PANE plan on a dense corpus (many events per pane),
     and both choices must return rows identical to the fixed forms."""
-    from insight_de_smart_grid_spark.operators.duty_cycle import (
+    from insight_de_smart_grid_spark.operators.sliding import (
         PANE_DENSITY_CROSSOVER,
         pane_density,
     )
@@ -355,30 +355,29 @@ def test_auto_probe_is_sampled_with_small_corpus_fallback(
     rows, never a shuffle below the one-row agg) — and a corpus whose
     sample lands under min_sample_rows falls back to the exact full-scan
     probe, so the tiny-fixture choices above are unchanged."""
-    from insight_de_smart_grid_spark.operators import duty_cycle as dc
     from insight_de_smart_grid_spark.operators import sliding as sl
 
     readings = readings_view(spark, SF_ORACLE)
-    sampled = dc._probe_frame(readings, 120, "ts",
+    sampled = sl._probe_frame(readings, 120, "ts",
                               ("house_id", "appliance_id"),
-                              dc.PROBE_SAMPLE_FRACTION)
+                              sl.PROBE_SAMPLE_FRACTION)
     plan = sampled._jdf.queryExecution().executedPlan().toString()
     assert "Sample" in plan
-    full = dc._probe_frame(readings, 120, "ts",
+    full = sl._probe_frame(readings, 120, "ts",
                            ("house_id", "appliance_id"))
     assert "Sample" not in (full._jdf.queryExecution().executedPlan()
                             .toString())
 
-    # the shared auto decision (duty_cycle.use_panes) threads the fraction
+    # the shared auto decision (sliding.use_panes) threads the fraction
     seen = []
-    real = dc.pane_density
+    real = sl.pane_density
 
     def spy(df, s_s, time_col="ts", keys=("house_id", "appliance_id"),
             **kw):
         seen.append(kw.get("sample_fraction"))
         return real(df, s_s, time_col, keys, **kw)
 
-    monkeypatch.setattr(dc, "pane_density", spy)
+    monkeypatch.setattr(sl, "pane_density", spy)
     ev = spark.read.parquet(f"{SF_ORACLE}/events.parquet")
     from insight_de_smart_grid_spark.sources.tables import (
         normalize_event_ts,
@@ -386,11 +385,11 @@ def test_auto_probe_is_sampled_with_small_corpus_fallback(
     sl.sliding_agg(normalize_event_ts(ev), window="10 minutes",
                    slide="2 minutes", aggs=(("n", "count", "value"),),
                    keys=("user_id",), panes="auto")
-    assert seen == [dc.PROBE_SAMPLE_FRACTION]
+    assert seen == [sl.PROBE_SAMPLE_FRACTION]
 
     # the sf0.01 fixture's 5% sample is far below min_sample_rows, so the
     # probe fell back to the exact scan: same density as the unsampled
     # call, same choice on the tiny regime
     assert (real(readings, 120,
-                 sample_fraction=dc.PROBE_SAMPLE_FRACTION)
+                 sample_fraction=sl.PROBE_SAMPLE_FRACTION)
             == real(readings, 120))

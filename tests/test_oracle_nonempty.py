@@ -2,14 +2,12 @@
 check of its query compares something. An oracle that returns no rows
 turns that check into a comparison of two empty sets; each such query is
 named in ``EMPTY_AT_SF001`` with the test that value-checks its behaviour
-on planted rows, or the statement that no test does (ROADMAP lists
-those)."""
+on planted rows."""
 
 from __future__ import annotations
 
 from insight_de_smart_grid_spark.plans.registry import QUERIES
 
-NO_TEST = "no test value-checks it on planted rows"
 ORDERLESS = ("every sf0.01 customer has an order; tests/test_star_queries.py"
              "::test_orderless_customer_oracles_on_planted_rows plants two")
 EMPTY_AT_SF001 = {
@@ -21,11 +19,15 @@ EMPTY_AT_SF001 = {
         "test_embedding_cosine_pairs_find_planted_dups checks the blocked "
         "pairs and their cosines on planted near-duplicates",
     "sim_ann_index_cosine_pairs":
-        f"no sf0.01 pair reaches cosine 0.95; {NO_TEST}",
+        "no sf0.01 pair reaches cosine 0.95; tests/test_planted_rows.py::"
+        "test_ann_index_pairs_on_planted_near_duplicates plants three",
     "sim_ann_index_deleted":
-        f"no sf0.01 pair reaches cosine 0.95; {NO_TEST}",
+        "no sf0.01 pair reaches cosine 0.95; tests/test_planted_rows.py::"
+        "test_ann_index_pairs_on_planted_near_duplicates plants three, one "
+        "with an endpoint in the deleted slice",
     "events_seasonal_anomaly":
-        f"no sf0.01 reading lies 2.5 sd off its calendar cell; {NO_TEST}",
+        "no sf0.01 reading lies 2.5 sd off its calendar cell; "
+        "tests/test_planted_rows.py::test_seasonal_anomaly_on_planted_cell",
     "events_sequence_detect":
         "the sf0.01 events hold no click-view-purchase chain; "
         "tests/test_sketch_topn.py::test_sequence_detect_on_planted_chain",

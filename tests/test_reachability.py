@@ -10,6 +10,10 @@ mentions, to a fixed point.
 Names resolve by bare name (an ``ast.Name`` id or an ``ast.Attribute``
 attr), not by module. Two defs that share a name are both reached when one
 is, so a collision can only hide a dead def; it never flags a live one.
+
+Module-level constants get the same guard: a name a package module
+assigns at top level must be read by some package code or some root, by
+the same bare-name rule.
 """
 
 from __future__ import annotations
@@ -84,13 +88,16 @@ def _defs_and_roots(repo: Path) -> "tuple[dict, set]":
                 defs[f"{where}:{st.name}"] = _names(st)
             else:
                 roots |= _names(st)
-    files = [repo / "bench.py", repo / "__spark_entry__.py",
-             *sorted((repo / "examples").rglob("*.py")),
-             *[f for f in sorted((repo / "perfbench").rglob("*.py"))
-               if not f.name.startswith("test_")]]
-    for f in files:
+    for f in _root_files(repo):
         roots |= _names(ast.parse(f.read_text()))
     return defs, roots
+
+
+def _root_files(repo: Path) -> list:
+    return [repo / "bench.py", repo / "__spark_entry__.py",
+            *sorted((repo / "examples").rglob("*.py")),
+            *[f for f in sorted((repo / "perfbench").rglob("*.py"))
+              if not f.name.startswith("test_")]]
 
 
 def _closure(defs: dict, roots: set) -> set:
@@ -113,6 +120,33 @@ def unreachable(repo: Path) -> list:
     return sorted(k for k in defs if k.rsplit(":", 1)[1] not in reached)
 
 
+def unread_constants(repo: Path) -> list:
+    """``"module.py:NAME"`` of every top-level package assignment whose
+    name no package code and no root reads (dunders aside)."""
+    consts, reads = [], set()
+    for f in sorted((repo / PACKAGE).rglob("*.py")):
+        where = f.relative_to(repo / PACKAGE).as_posix()
+        tree = ast.parse(f.read_text())
+        for st in tree.body:
+            if isinstance(st, (ast.Assign, ast.AnnAssign)):
+                consts += [f"{where}:{n.id}" for n in ast.walk(st)
+                           if isinstance(n, ast.Name)
+                           and isinstance(n.ctx, ast.Store)]
+        reads |= _reads(tree)
+    for f in _root_files(repo):
+        reads |= _reads(ast.parse(f.read_text()))
+    return sorted(k for k in consts
+                  if k.rsplit(":", 1)[1] not in reads
+                  and not k.rsplit(":", 1)[1].startswith("__"))
+
+
+def _reads(tree: ast.AST) -> set:
+    return {n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute)
+            or (isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store))}
+
+
 def test_every_package_def_is_reachable():
     dead = unreachable(REPO)
     assert not dead, ("no root reaches these defs; delete them or allow "
@@ -127,3 +161,9 @@ def test_allow_list_names_only_unreached_defs():
     names = {k.rsplit(":", 1)[1] for k in defs}
     assert sorted(n for n in ALLOWED if n not in names) == []
     assert sorted(n for n in ALLOWED if n in reached) == []
+
+
+def test_every_module_constant_is_read():
+    unread = unread_constants(REPO)
+    assert not unread, ("no package code or root reads these module-level "
+                        "names; delete them: " + ", ".join(unread))

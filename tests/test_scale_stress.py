@@ -271,7 +271,7 @@ def test_duty_cycle_auto_form_selection(spark, stress_dir):
     pane) must select the pane decomposition, the sparse base fixture
     (~1 event per (key, pane)) must keep the single-shuffle explode
     plan. Plan-asserted via the pane form's make_interval marker."""
-    from insight_de_smart_grid_spark.operators.duty_cycle import (
+    from insight_de_smart_grid_spark.operators.sliding import (
         PANE_DENSITY_CROSSOVER,
         pane_density,
     )
@@ -305,7 +305,7 @@ def test_sampled_pane_density_agrees_on_both_regimes(spark, stress_dir):
     (~1). The timing pair is the SCALE.md evidence that the probe's
     aggregation cost stops scaling with corpus size; a sample smaller
     than min_sample_rows must fall back to the (exact) full probe."""
-    from insight_de_smart_grid_spark.operators.duty_cycle import (
+    from insight_de_smart_grid_spark.operators.sliding import (
         PANE_DENSITY_CROSSOVER,
         pane_density,
     )

@@ -29,9 +29,12 @@ from insight_de_smart_grid_spark.operators.staging import process_root
 from insight_de_smart_grid_spark.plans.registry import QUERIES
 from insight_de_smart_grid_spark.sources.tables import events_to_readings
 from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
-    run_stream_over_parquet,
+    duty_cycle_stream_plan,
 )
 from insight_de_smart_grid_spark.streaming.replay import state_width
+from insight_de_smart_grid_spark.streaming.sliding_stream import (
+    run_sliding_stream,
+)
 from tests.conftest import REPO, SF_ORACLE, SF_SMOKE
 from tests.oracle import compare
 
@@ -104,8 +107,9 @@ def test_two_replays_run_at_their_own_widths_at_once(spark):
 
     def replay(path):
         progress = []
-        out = run_stream_over_parquet(
-            spark, path, events_to_readings, flush_sentinel=True,
+        out = run_sliding_stream(
+            spark, path, duty_cycle_stream_plan, events_to_readings,
+            flush_sentinel=True,
             window="10 minutes", slide="2 minutes", watermark="2 seconds",
             progress_out=progress)
         return out.filter(F.col("house_id") != "-1"), progress
@@ -245,6 +249,64 @@ def test_streams_write_through_their_owners():
         return None
 
     assert _package_hits(visit) == []
+
+
+# the one pane engine: the only modules that build a slid or paned window
+PANE_ENGINE = {"operators/sliding.py", "streaming/sliding_stream.py"}
+
+
+def _is_window(node) -> bool:
+    return (isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "window")
+
+
+def _names_pane(node) -> bool:
+    """``"pane"`` or ``F.col("pane")``."""
+    if isinstance(node, ast.Call) and node.args:
+        node = node.args[0]
+    return isinstance(node, ast.Constant) and node.value == "pane"
+
+
+def pane_engine_sites(package: Path) -> list:
+    """Windows with a slide, windows over or aliased as a ``pane``, and
+    ``make_interval`` pane-end arithmetic under ``operators/`` and
+    ``streaming/`` outside ``PANE_ENGINE``; and any import of the duty
+    cycle into ``operators/sliding.py``."""
+    hits = []
+    for f in sorted([*(package / "operators").rglob("*.py"),
+                     *(package / "streaming").rglob("*.py")]):
+        rel = f.relative_to(package).as_posix()
+        for node in ast.walk(ast.parse(f.read_text())):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if (rel == "operators/sliding.py"
+                    and isinstance(node, ast.ImportFrom)
+                    and "duty_cycle" in (node.module or "")):
+                hits.append(f"{where}:imports duty_cycle")
+            if rel in PANE_ENGINE:
+                continue
+            if _is_window(node) and (
+                    len(node.args) > 2 or _names_pane(node.args[0])
+                    or any(k.arg == "slideDuration"
+                           for k in node.keywords)):
+                hits.append(f"{where}:window")
+            elif (isinstance(node, ast.Call)
+                  and getattr(node.func, "attr", None) == "alias"
+                  and _is_window(node.func.value)
+                  and _names_pane(node)):
+                hits.append(f"{where}:pane")
+            elif (isinstance(node, ast.Constant)
+                  and isinstance(node.value, str)
+                  and "make_interval" in node.value):
+                hits.append(f"{where}:make_interval")
+    return hits
+
+
+def test_one_pane_engine():
+    """Slid and paned windows are built in one place, the pane engine
+    (``operators/sliding.py`` and ``streaming/sliding_stream.py``); the
+    duty cycle and every other sliding query aggregate over it, and the
+    engine depends on no query module."""
+    assert pane_engine_sites(Path(session.__file__).parent) == []
 
 
 def test_python_workers_import_the_package_from_any_cwd(tmp_path):

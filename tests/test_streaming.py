@@ -12,7 +12,10 @@ from insight_de_smart_grid_spark.sources.tables import (
     readings_view,
 )
 from insight_de_smart_grid_spark.streaming.duty_cycle_stream import (
-    run_stream_over_parquet,
+    duty_cycle_stream_plan,
+)
+from insight_de_smart_grid_spark.streaming.sliding_stream import (
+    run_sliding_stream,
 )
 from tests.conftest import SF_SMOKE
 
@@ -20,10 +23,11 @@ from tests.conftest import SF_SMOKE
 def test_batch_equals_stream_for_finalized_windows(spark):
     """The same duty-cycle computed as a batch query and as an append-mode
     streaming query must agree on every window the stream finalized."""
-    stream_out = run_stream_over_parquet(
-        spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
+    stream_out = run_sliding_stream(
+        spark, f"{SF_SMOKE}/events.parquet", duty_cycle_stream_plan,
+        events_to_readings,
         window="10 minutes", slide="2 minutes",
-        watermark="2 seconds")
+        watermark="2 seconds", flush_sentinel=False)
 
     readings = readings_view(spark, SF_SMOKE)
     batch = duty_cycle(readings, window="10 minutes", slide="2 minutes")
@@ -46,8 +50,9 @@ def test_streaming_panes_equal_explode_stream(spark):
     (``duty_cycle(panes=True)``), closing the batch≡stream contract for
     the decomposition."""
     def run(panes):
-        return {tuple(r) for r in run_stream_over_parquet(
-            spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
+        return {tuple(r) for r in run_sliding_stream(
+            spark, f"{SF_SMOKE}/events.parquet", duty_cycle_stream_plan,
+            events_to_readings,
             window="10 minutes", slide="2 minutes", watermark="2 seconds",
             flush_sentinel=True, panes=panes)
             .filter(F.col("house_id") != "-1").collect()}
@@ -74,8 +79,9 @@ def test_streaming_panes_cut_state_writes(spark):
     updated-state rows stay well under the explode plan's."""
     def updated_rows(panes):
         prog = []
-        run_stream_over_parquet(
-            spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
+        run_sliding_stream(
+            spark, f"{SF_SMOKE}/events.parquet", duty_cycle_stream_plan,
+            events_to_readings,
             window="10 minutes", slide="2 minutes", watermark="2 seconds",
             flush_sentinel=True, panes=panes, progress_out=prog)
         per_op: dict[int, int] = {}
@@ -107,8 +113,9 @@ def test_streaming_auto_picks_form_by_density(spark, tmp_path):
     correct window set."""
     def n_state_ops(path, prefix):
         prog = []
-        out = run_stream_over_parquet(
-            spark, path, events_to_readings,
+        out = run_sliding_stream(
+            spark, path, duty_cycle_stream_plan,
+            events_to_readings,
             window="10 minutes", slide="2 minutes", watermark="2 seconds",
             flush_sentinel=True, panes="auto", progress_out=prog)
         rows = out.filter(F.col("house_id") != "-1").count()
@@ -137,9 +144,12 @@ def test_sliding_stats_stream_auto_and_parity(spark, tmp_path):
     form's finalized rows equal the batch sliding_agg's on the same data
     (rounded like the registered twins)."""
     from insight_de_smart_grid_spark.operators.sliding import sliding_agg
-    from insight_de_smart_grid_spark.sources.tables import load_table
+    from insight_de_smart_grid_spark.sources.tables import (
+        load_table,
+        normalize_event_ts,
+    )
     from insight_de_smart_grid_spark.streaming.sliding_stream import (
-        run_sliding_stats_stream,
+        sliding_agg_stream_plan,
     )
 
     aggs = (("sum_value", "sum", "value"), ("n_vals", "count", "value"),
@@ -148,8 +158,9 @@ def test_sliding_stats_stream_auto_and_parity(spark, tmp_path):
 
     def run(path, panes):
         prog = []
-        out = run_sliding_stats_stream(
-            spark, path, panes=panes, aggs=aggs, keys=("user_id",),
+        out = run_sliding_stream(
+            spark, path, sliding_agg_stream_plan, normalize_event_ts,
+            panes=panes, aggs=aggs, keys=("user_id",),
             window="10 minutes", slide="2 minutes",
             watermark="2 seconds", progress_out=prog)
         rows = sorted(
@@ -192,8 +203,9 @@ def test_flush_sentinel_survives_null_value_max_ts_row(spark, tmp_path):
     sprinkled through) and pin: the streaming binned-histogram p95 equals
     the batch pane form row-for-row, including the final window."""
     from insight_de_smart_grid_spark.operators import sliding as sl
+    from insight_de_smart_grid_spark.sources.tables import normalize_event_ts
     from insight_de_smart_grid_spark.streaming.sliding_stream import (
-        run_sliding_stats_stream,
+        sliding_agg_stream_plan,
     )
 
     src = str(tmp_path / "nulltail")
@@ -231,9 +243,10 @@ def test_flush_sentinel_survives_null_value_max_ts_row(spark, tmp_path):
                             F.lit(bins - 1))))
 
     base = str(tmp_path / "run")
-    out = run_sliding_stats_stream(
-        spark, src, checkpoint_dir=f"{base}/ck",
-        out_dir=f"{base}/sink", pre=pre,
+    out = run_sliding_stream(
+        spark, src, sliding_agg_stream_plan,
+        lambda s: pre(normalize_event_ts(s)), panes=True,
+        checkpoint_dir=f"{base}/ck", out_dir=f"{base}/sink",
         aggs=(("cnt", "count", "value"),),
         keys=("user_id", "__bin", "__lo", "__width"),
         window="10 minutes", slide="2 minutes", watermark="2 seconds")
@@ -264,10 +277,11 @@ def test_watermark_drops_late_rows_across_restarts(spark, tmp_path):
         " value double, props string",
     ).withColumn("ts", F.to_timestamp("ts"))
     on_time.write.mode("overwrite").parquet(data_dir)
-    out1 = run_stream_over_parquet(
-        spark, data_dir, events_to_readings,
+    out1 = run_sliding_stream(
+        spark, data_dir, duty_cycle_stream_plan,
+        events_to_readings,
         window="10 minutes", slide=None, watermark="2 seconds",
-        checkpoint_dir=ckpt, out_dir=out_dir)
+        checkpoint_dir=ckpt, out_dir=out_dir, flush_sentinel=False)
     first = {(r.time_end.isoformat(), r.duty_cycle)
              for r in out1.collect()}
     # watermark advanced to 10:29:58 -> the 10:00 window finalized
@@ -280,10 +294,11 @@ def test_watermark_drops_late_rows_across_restarts(spark, tmp_path):
         " value double, props string",
     ).withColumn("ts", F.to_timestamp("ts"))
     late.write.mode("append").parquet(data_dir)
-    out2 = run_stream_over_parquet(
-        spark, data_dir, events_to_readings,
+    out2 = run_sliding_stream(
+        spark, data_dir, duty_cycle_stream_plan,
+        events_to_readings,
         window="10 minutes", slide=None, watermark="2 seconds",
-        checkpoint_dir=ckpt, out_dir=out_dir)
+        checkpoint_dir=ckpt, out_dir=out_dir, flush_sentinel=False)
     rows2 = out2.collect()
     # the late row (power 1.0, below threshold -> duty would drop to 2/3)
     # must NOT re-emit or alter the finalized 10:00 window
@@ -513,10 +528,12 @@ def test_rocksdb_state_store_matches_batch(spark):
     spark.conf.set(key, rocks)
     progress = []
     try:
-        stream_out = run_stream_over_parquet(
-            spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
+        stream_out = run_sliding_stream(
+            spark, f"{SF_SMOKE}/events.parquet", duty_cycle_stream_plan,
+            events_to_readings,
             window="10 minutes", slide="2 minutes",
-            watermark="2 seconds", progress_out=progress)
+            watermark="2 seconds", flush_sentinel=False,
+            progress_out=progress)
         assert ran_on_rocksdb(progress)
         readings = readings_view(spark, SF_SMOKE)
         batch = duty_cycle(readings, window="10 minutes", slide="2 minutes")
@@ -546,8 +563,9 @@ def test_rocksdb_state_store_matches_batch_chained_panes(spark):
     spark.conf.set(key, rocks)
     progress = []
     try:
-        stream_out = run_stream_over_parquet(
-            spark, f"{SF_SMOKE}/events.parquet", events_to_readings,
+        stream_out = run_sliding_stream(
+            spark, f"{SF_SMOKE}/events.parquet", duty_cycle_stream_plan,
+            events_to_readings,
             window="10 minutes", slide="2 minutes",
             watermark="2 seconds", flush_sentinel=True, panes=True,
             progress_out=progress)
@@ -583,10 +601,12 @@ def test_chained_panes_drop_late_rows_across_restarts(spark, tmp_path):
         " value double, props string",
     ).withColumn("ts", F.to_timestamp("ts"))
     on_time.write.mode("overwrite").parquet(data_dir)
-    out1 = run_stream_over_parquet(
-        spark, data_dir, events_to_readings,
+    out1 = run_sliding_stream(
+        spark, data_dir, duty_cycle_stream_plan,
+        events_to_readings,
         window="10 minutes", slide="2 minutes", watermark="2 seconds",
-        checkpoint_dir=ckpt, out_dir=out_dir, panes=True)
+        checkpoint_dir=ckpt, out_dir=out_dir, panes=True,
+        flush_sentinel=False)
     first = {(r.time_end.isoformat(), r.house_id, r.appliance_id,
               r.duty_cycle) for r in out1.collect()}
     # watermark reached 10:29:58: every sliding window ending by then is
@@ -599,10 +619,12 @@ def test_chained_panes_drop_late_rows_across_restarts(spark, tmp_path):
         " value double, props string",
     ).withColumn("ts", F.to_timestamp("ts"))
     late.write.mode("append").parquet(data_dir)
-    out2 = run_stream_over_parquet(
-        spark, data_dir, events_to_readings,
+    out2 = run_sliding_stream(
+        spark, data_dir, duty_cycle_stream_plan,
+        events_to_readings,
         window="10 minutes", slide="2 minutes", watermark="2 seconds",
-        checkpoint_dir=ckpt, out_dir=out_dir, panes=True)
+        checkpoint_dir=ckpt, out_dir=out_dir, panes=True,
+        flush_sentinel=False)
     rows2 = {(r.time_end.isoformat(), r.house_id, r.appliance_id,
               r.duty_cycle) for r in out2.collect()}
     assert ("2024-01-01T10:10:00", "5", "5_click", 1.0) in rows2
